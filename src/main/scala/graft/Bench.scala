@@ -83,11 +83,11 @@ object Bench {
     // ask: q302's median spanned 4.8-13.0 s on IDENTICAL code depending
     // on what ran before it; the plan was right, the measurement
     // protocol wasn't). Every trial of a head listed here is preceded
-    // by a full session-state reset: all operator session caches are
-    // dropped, every persistent RDD block (the caches' localCheckpoint
-    // blocks and any straggler) is unpersisted BLOCKING, and a full GC
-    // runs — releasing the block-manager/heap occupancy a 300-query
-    // prefix accretes, so the head measures its plan, not its
+    // by a full session-state reset: `SessionArtifacts.clearAll()` drops
+    // every session artifact, every persistent RDD block (the artifacts'
+    // localCheckpoint blocks and any straggler) is unpersisted BLOCKING,
+    // and a full GC runs — releasing the block-manager/heap occupancy a
+    // 300-query prefix accretes, so the head measures its plan, not its
     // predecessors' leftovers. Eligibility: the head must ride NO
     // shared session artifact (q302 consumes nothing), and no LATER
     // query in bench order may ride a PRE-reset artifact (true today:
@@ -98,12 +98,7 @@ object Bench {
     // q302's solo/subset/full-sitting spread into a single band.
     val isolated = Seq("q302_containment_heaps")
     def resetSessionState(): Unit = {
-      graft.operators.Similarity.clearEmbeddingIndexCaches()
-      graft.operators.Similarity.clearPqModelCache()
-      graft.operators.Similarity.clearAbttModelCache()
-      graft.operators.Dedup.clearPairIndexCache()
-      graft.operators.Curation.clearWeightsCache()
-      graft.operators.TextAnalysis.clearBpeMergeCache()
+      graft.operators.SessionArtifacts.clearAll()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       spark.catalog.clearCache()

@@ -1288,17 +1288,10 @@ object Curation {
     * far its dominant cost, so it runs once per (corpus plan, targetLang,
     * buckets, rounds, lr) per session (the driver-value analog of
     * `Dedup.pairIndex`; the cached value is just the (buckets+1)-row
-    * weight vector, so cache memory is trivially bounded — the LRU cap
+    * weight vector, so cache memory is trivially bounded — the cap
     * guards entry COUNT, not size).
     */
-  private val WeightsCacheMax = 8
-  private val weightsCache =
-    new java.util.LinkedHashMap[(String, String, String, Int, Int, Double),
-        Seq[(Long, Long)]](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String, Int, Int, Double),
-            Seq[(Long, Long)]]): Boolean = size() > WeightsCacheMax
-    }
+  private val Weights = new SessionArtifacts.Kind[Seq[(Long, Long)]]
 
   /** Session-scoped PERSISTED feature-frame cache, keyed by (session,
     * corpus plan, buckets) — coarser than the weights key because the
@@ -1306,49 +1299,14 @@ object Curation {
     * means a weights-cache hit (q144/q145 after q143) scores against the
     * already-tokenized, already-persisted frame instead of re-scanning
     * the corpus: the whole family pays ONE tokenize+hash pass per
-    * (corpus, buckets) per session. Entries are persist()-backed (lineage
-    * intact, unlike the checkpoint-backed index caches), so the eldest
-    * entry IS eagerly unpersisted on eviction: a consumer still holding
-    * an evicted frame silently recomputes from lineage — a cache miss,
-    * never a failure.
+    * (corpus, buckets) per session. Entries are persist()-backed, so the
+    * registry unpersists them on eviction (see [[SessionArtifacts]]).
     */
-  private val FeatureFrameCacheMax = 8
-  private val featureFrameCache =
-    new java.util.LinkedHashMap[(String, String, Int), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int), DataFrame]): Boolean = {
-        val evict = size() > FeatureFrameCacheMax
-        if (evict) {
-          try e.getValue.unpersist(blocking = false)
-          catch { case _: Throwable => () } // best-effort; session may be gone
-        }
-        evict
-      }
-    }
+  private val FeatureFrames = new SessionArtifacts.Kind[DataFrame]
 
-  private def cachedFeatureFrame(documents: DataFrame, buckets: Int): DataFrame = {
-    val key = (System.identityHashCode(documents.sparkSession).toString,
-      PlanFingerprint(documents), buckets)
-    featureFrameCache.synchronized {
-      val hit = featureFrameCache.get(key)
-      if (hit != null) hit
-      else {
-        val built = featureFrame(documents, buckets).persist()
-        featureFrameCache.put(key, built)
-        built
-      }
-    }
-  }
-
-  def clearWeightsCache(): Unit = {
-    weightsCache.synchronized(weightsCache.clear())
-    featureFrameCache.synchronized {
-      featureFrameCache.values.forEach { df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      }
-      featureFrameCache.clear()
-    }
-  }
+  private def cachedFeatureFrame(documents: DataFrame, buckets: Int): DataFrame =
+    SessionArtifacts.getOrBuild(FeatureFrames, documents, buckets)(
+      featureFrame(documents, buckets).persist())
 
   /** Hashed feature frame: (doc_id, bucket, count) token counts in
     * `buckets` md5-slice bins plus the bias feature at bucket -1.
@@ -1380,75 +1338,67 @@ object Curation {
       lr: Double): (DataFrame, Seq[(Long, Long)]) = {
     // the folded first round below assumes at least one training step
     require(rounds >= 1, s"trainQualityWeights: rounds=$rounds must be >= 1")
-    val spark = documents.sparkSession
-    val key = (System.identityHashCode(spark).toString,
-      PlanFingerprint(documents),
-      targetLang, buckets, rounds, lr)
-    val cached = weightsCache.synchronized(Option(weightsCache.get(key)))
-    cached match {
-      case Some(w) => (cachedFeatureFrame(documents, buckets), w)
-      case None =>
-        val fx = cachedFeatureFrame(documents, buckets)
-        // (doc_id, y) label projection — corpus-linear, the Lloyd bound.
-        // Co-partitioned with fx so the pivot join below is exchange-free.
-        val labels = documents.select($"doc_id",
-          when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
-          .repartition(documents.sparkSession.sparkContext
-            .defaultParallelism, $"doc_id")
-        // r15 (§2.4): pivot the co-partitioned frame ONCE to one row per
-        // doc — (doc_id, feats: array<(b,c)>, y) — and checkpoint it.
-        // Each training round used to be a 3-way doc_id join over the
-        // 64-partition cached frame (margin pass + gradient join +
-        // label join = 3 stages and a broadcast per round); with the
-        // features and label in the SAME row, a round is one narrow
-        // pass: per-doc margin from the array against the broadcast-ish
-        // weight-map literal, explode, one (buckets+1)-key map-side-
-        // combined rollup. Zero joins, zero doc-dimension shuffles per
-        // round, at any scale. The pivot itself rides fx's doc_id
-        // partitioning (the groupBy and the label join are exchange-free).
-        val perDoc = fx
-          .groupBy($"doc_id")
-          .agg(collect_list(struct($"b", $"c")).as("feats"))
-          .join(labels, Seq("doc_id"))
-          .localCheckpoint()
-        def gradient(err: Column): Array[org.apache.spark.sql.Row] = perDoc
-          .select(explode($"feats").as("f"), err.as("err"))
-          .groupBy($"f.b".as("b"))
-          .agg(sum($"f.c" * $"err").as("gm"), count(lit(1)).as("n"))
-          .collect()
-        // Round 1 folded: with every observed bucket initialized to
-        // weight 0 (the oracle's `SELECT DISTINCT b, 0 FROM fx`), zm = 0
-        // and pm = round(1e6·sigmoid(0)) = 500000 for EVERY doc, so the
-        // first gradient needs no weight lookup at all — and its groupBy
-        // keys are exactly the observed-bucket set, which used to cost a
-        // separate distinct(b) job to initialize. nDocs rides the same
-        // collect (used to be its own count job): the bias bucket holds
-        // exactly one row per document.
-        val g1 = gradient(lit(500000L) - $"y" * lit(1000000L))
-        val nDocs: Long =
-          g1.find(_.getLong(0) == -1L).map(_.getLong(2)).getOrElse(0L)
-        def step(w: Map[Long, Long],
-            g: Array[org.apache.spark.sql.Row]): Map[Long, Long] =
-          w ++ g.map { r =>
-            val (b, gm) = (r.getLong(0), r.getLong(1))
-            b -> (w.getOrElse(b, 0L) - math.floor(lr * gm / nDocs).toLong)
-          }
-        var w: Map[Long, Long] = step(Map.empty, g1)
-        for (_ <- 2 to rounds) {
-          // single MapType literal (not per-entry lit()s): the weight
-          // values land in the codegen references array instead of the
-          // generated source, so every round reuses one compiled plan
-          val wMap = typedlit(w)
-          val zm = aggregate($"feats", lit(0L),
-            (acc, f) => acc + f.getField("c") * element_at(wMap, f.getField("b")))
-          val pm = round(lit(1e6) / (lit(1.0) + exp(-(zm / lit(1e6)))), 0)
-            .cast("long")
-          w = step(w, gradient(pm - $"y" * lit(1000000L)))
+    val fx = cachedFeatureFrame(documents, buckets)
+    val ws = SessionArtifacts.getOrBuild(Weights, documents, targetLang, buckets, rounds, lr) {
+      // (doc_id, y) label projection — corpus-linear, the Lloyd bound.
+      // Co-partitioned with fx so the pivot join below is exchange-free.
+      val labels = documents.select($"doc_id",
+        when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
+        .repartition(documents.sparkSession.sparkContext
+          .defaultParallelism, $"doc_id")
+      // r15 (§2.4): pivot the co-partitioned frame ONCE to one row per
+      // doc — (doc_id, feats: array<(b,c)>, y) — and checkpoint it.
+      // Each training round used to be a 3-way doc_id join over the
+      // 64-partition cached frame (margin pass + gradient join +
+      // label join = 3 stages and a broadcast per round); with the
+      // features and label in the SAME row, a round is one narrow
+      // pass: per-doc margin from the array against the broadcast-ish
+      // weight-map literal, explode, one (buckets+1)-key map-side-
+      // combined rollup. Zero joins, zero doc-dimension shuffles per
+      // round, at any scale. The pivot itself rides fx's doc_id
+      // partitioning (the groupBy and the label join are exchange-free).
+      val perDoc = fx
+        .groupBy($"doc_id")
+        .agg(collect_list(struct($"b", $"c")).as("feats"))
+        .join(labels, Seq("doc_id"))
+        .localCheckpoint()
+      def gradient(err: Column): Array[org.apache.spark.sql.Row] = perDoc
+        .select(explode($"feats").as("f"), err.as("err"))
+        .groupBy($"f.b".as("b"))
+        .agg(sum($"f.c" * $"err").as("gm"), count(lit(1)).as("n"))
+        .collect()
+      // Round 1 folded: with every observed bucket initialized to
+      // weight 0 (the oracle's `SELECT DISTINCT b, 0 FROM fx`), zm = 0
+      // and pm = round(1e6·sigmoid(0)) = 500000 for EVERY doc, so the
+      // first gradient needs no weight lookup at all — and its groupBy
+      // keys are exactly the observed-bucket set, which used to cost a
+      // separate distinct(b) job to initialize. nDocs rides the same
+      // collect (used to be its own count job): the bias bucket holds
+      // exactly one row per document.
+      val g1 = gradient(lit(500000L) - $"y" * lit(1000000L))
+      val nDocs: Long =
+        g1.find(_.getLong(0) == -1L).map(_.getLong(2)).getOrElse(0L)
+      def step(w: Map[Long, Long],
+          g: Array[org.apache.spark.sql.Row]): Map[Long, Long] =
+        w ++ g.map { r =>
+          val (b, gm) = (r.getLong(0), r.getLong(1))
+          b -> (w.getOrElse(b, 0L) - math.floor(lr * gm / nDocs).toLong)
         }
-        val ws = w.toSeq.sortBy(_._1)
-        weightsCache.synchronized(weightsCache.put(key, ws))
-        (fx, ws)
+      var w: Map[Long, Long] = step(Map.empty, g1)
+      for (_ <- 2 to rounds) {
+        // single MapType literal (not per-entry lit()s): the weight
+        // values land in the codegen references array instead of the
+        // generated source, so every round reuses one compiled plan
+        val wMap = typedlit(w)
+        val zm = aggregate($"feats", lit(0L),
+          (acc, f) => acc + f.getField("c") * element_at(wMap, f.getField("b")))
+        val pm = round(lit(1e6) / (lit(1.0) + exp(-(zm / lit(1e6)))), 0)
+          .cast("long")
+        w = step(w, gradient(pm - $"y" * lit(1000000L)))
+      }
+      w.toSeq.sortBy(_._1)
     }
+    (fx, ws)
   }
 
   /** Trained classifier weights (q143): the (buckets+1)-row weight table
@@ -1500,7 +1450,7 @@ object Curation {
       .join(labels, Seq("doc_id"))
       .select($"y", when($"zm" >= 0L, 1L).otherwise(0L).as("pred"))
       .groupBy($"y", $"pred").agg(count(lit(1)).as("n_docs"))
-    // fx stays session-cached (featureFrameCache owns its lifecycle) —
+    // fx stays session-cached (SessionArtifacts owns its lifecycle) —
     // the scoring pass below reads the persisted frame, not a rebuild
     val byLabel = Window.partitionBy($"y")
     scored
@@ -1590,7 +1540,7 @@ object Curation {
       .select($"doc_id",
         round(lit(1e6) / (lit(1.0) + exp(-($"zm" / lit(1e6)))), 0)
           .cast("long").as("pm"))
-    // fx stays session-cached (featureFrameCache owns its lifecycle)
+    // fx stays session-cached (SessionArtifacts owns its lifecycle)
     scored
       .join(documents.select($"doc_id", $"source"), Seq("doc_id"))
       .select($"source", $"pm",

@@ -111,58 +111,22 @@ object Dedup {
   def minhashLshPairs(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame =
     pairIndex(documents, n, threshold).orderBy($"id1", $"id2")
 
+  private val PairIndexes = new SessionArtifacts.Kind[DataFrame]
+
   /** Session-scoped materialized pair index: the verified near-dup pairs of
     * a corpus, computed once per (corpus plan, n, threshold) per session and
     * reused by every consumer — q27's pair listing, q53's survivor
     * selection, q83's source matrix, and q84's capstone all analyze the SAME
     * pair set, and a production curation run materializes it once for
     * exactly this reason (it is the in-session analog of the persisted
-    * `bandBuckets`/`shingleIndex` incremental-ingest index). The cache key
-    * is the CANONICALIZED analyzed plan of the input, so two frames that
-    * merely alias differently share an entry while any semantic difference
-    * (different path, filter, projection) misses; entries hold
+    * `bandBuckets`/`shingleIndex` incremental-ingest index). Entries hold
     * localCheckpointed near-linear pair sets, so cache memory is
-    * pair-proportional, never corpus-proportional.
+    * pair-proportional, never corpus-proportional; keys and eviction follow
+    * [[SessionArtifacts]].
     */
-  private val PairIndexCacheMax = 8
-
-  /** Insertion-ordered and bounded: a long-lived session analyzing many
-    * corpora must not accumulate checkpointed pair sets forever — past
-    * `PairIndexCacheMax` entries the eldest REFERENCE is dropped. The
-    * blocks are NOT eagerly unpersisted: a consumer still holding an
-    * evicted frame must stay usable, and a localCheckpointed frame has no
-    * lineage to recompute from — an eager unpersist would turn its next
-    * action into a hard "checkpoint block not found" failure. Spark's
-    * ContextCleaner reclaims the blocks once the frame is
-    * garbage-collected, so the cap still bounds LIVE cache memory.
-    */
-  private val pairIndexCache =
-    new java.util.LinkedHashMap[(String, String, Int, Double), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int, Double), DataFrame]): Boolean =
-        size() > PairIndexCacheMax
-    }
-
-  def clearPairIndexCache(): Unit = {
-    pairIndexCache.synchronized(pairIndexCache.clear())
-    componentsCache.synchronized(componentsCache.clear())
-  }
-
-  def pairIndex(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame = {
-    // session identity via identityHashCode: checkpointed RDDs die with
-    // their session, so a cache entry must never cross sessions
-    val key = (System.identityHashCode(documents.sparkSession).toString,
-      PlanFingerprint(documents), n, threshold)
-    pairIndexCache.synchronized {
-      val hit = pairIndexCache.get(key)
-      if (hit != null) hit
-      else {
-        val built = minhashLshPairsUnordered(documents, n, threshold).localCheckpoint()
-        pairIndexCache.put(key, built)
-        built
-      }
-    }
-  }
+  def pairIndex(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame =
+    SessionArtifacts.getOrBuild(PairIndexes, documents, n, threshold)(
+      minhashLshPairsUnordered(documents, n, threshold).localCheckpoint())
 
   /** Restrict a corpus pair index to a sub-corpus: near-dup pairs of a
     * SUBSET equal the full-corpus pairs with both endpoints in the subset —
@@ -398,29 +362,11 @@ object Dedup {
     * loop's own final checkpointed frame (node/label rows — pair-
     * proportional, the Lloyd-rule bound). Restricted pair sets (q84/
     * q147) key on their own checkpointed-plan identity and simply miss.
-    * Eviction relies on ContextCleaner, as the pair-index cache does.
     */
-  private val ComponentsCacheMax = 8
-  private val componentsCache =
-    new java.util.LinkedHashMap[(String, String), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), DataFrame]): Boolean =
-        size() > ComponentsCacheMax
-    }
+  private val Components = new SessionArtifacts.Kind[DataFrame]
 
-  private[graft] def componentLabels(pairSet: DataFrame): DataFrame = {
-    val key = (System.identityHashCode(pairSet.sparkSession).toString,
-      PlanFingerprint(pairSet))
-    componentsCache.synchronized {
-      val hit = componentsCache.get(key)
-      if (hit != null) hit
-      else {
-        val built = buildComponentLabels(pairSet)
-        componentsCache.put(key, built)
-        built
-      }
-    }
-  }
+  private[graft] def componentLabels(pairSet: DataFrame): DataFrame =
+    SessionArtifacts.getOrBuild(Components, pairSet)(buildComponentLabels(pairSet))
 
   /** One pointer-jumping components pass; returns the final checkpointed
     * (node, label) frame. See [[survivorsOverPairs]] for the contract.

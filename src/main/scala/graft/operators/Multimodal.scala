@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -195,9 +196,11 @@ object Multimodal {
     * (q35 for `bmp` — documented beside the other index carriers in
     * `Bench.scala`); the WAV stores cover only the audio rotation and
     * cost well under a second to build at sf0.1.
+    * Not a SessionArtifacts kind, so `clearAll` keeps it: q306/q308/q310
+    * ride q35's `bmp` store after q302's isolation reset.
     */
   private val storePaths =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+    new java.util.concurrent.ConcurrentHashMap[(LogicalPlan, String), String]()
 
   /** kind -> (doc_id filter, encoder). `bmp` spans the whole corpus with
     * the q35 media-type rotation; the WAV kinds cover the audio rotation
@@ -216,8 +219,8 @@ object Multimodal {
       s"assetStore: unknown kind '$kind' (valid: ${storeEncoders.keys.toSeq.sorted.mkString(", ")})"))
     val spark = documents.sparkSession
     val ids = documents.select($"doc_id")
-    val planKey = PlanFingerprint(ids)
-    val path = storePaths.computeIfAbsent((planKey, kind), _ => {
+    val plan = ids.queryExecution.analyzed.canonicalized
+    val path = storePaths.computeIfAbsent((plan, kind), _ => {
       import spark.implicits.{newLongEncoder, newProductEncoder}
       val dir = graft.sources.Scratch.dir(s"graft_assets_$kind")
       ids.as[Long]

@@ -230,9 +230,8 @@ object Similarity {
   private[graft] def cellKnnGraph(embeddings: DataFrame, k: Int,
       kCells: Int): DataFrame = {
     val cells = resolveCells(embeddings, kCells)
-    val (sid, plan) = planKey(embeddings)
-    knnGraphCache.getOrBuild((sid, plan, k, cells))(
-      buildCellKnnGraph(embeddings, k, cells))
+    SessionArtifacts.getOrBuild(KnnGraphs, embeddings, k, cells)(
+      buildCellKnnGraph(embeddings, k, cells).localCheckpoint())
   }
 
   private def buildCellKnnGraph(embeddings: DataFrame, k: Int,
@@ -957,8 +956,6 @@ object Similarity {
     * q148 is the training carrier, q149 and repeat calls ride. The code
     * table is checkpointed because it IS the stored serving artifact
     * (the thing a production system writes once and scans forever).
-    * Eviction follows the embedding-index cache rule below: drop the
-    * reference only, ContextCleaner reclaims blocks on GC.
     */
   /** A trained PQ model: checkpointed corpus, encoded code table, the
     * per-query ADC tables, and the raw per-subspace codebooks (the
@@ -967,34 +964,16 @@ object Similarity {
   private case class PqModel(corpus: DataFrame, codesLong: DataFrame,
       adcTables: DataFrame, books: Array[Array[(Long, Array[Double])]])
 
-  private val pqModelCache =
-    new java.util.LinkedHashMap[(String, String, Int, Int, Int, Int), PqModel](
-        16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int, Int, Int, Int), PqModel])
-          : Boolean =
-        size() > EmbIndexCacheMax
-    }
-
-  def clearPqModelCache(): Unit = pqModelCache.synchronized(pqModelCache.clear())
+  private val PqModels = new SessionArtifacts.Kind[PqModel]
 
   private def pqModelFor(embeddings: DataFrame, m: Int, codes: Int,
-      iters: Int, nQueries: Int): PqModel = {
-    val (sid, plan) = planKey(embeddings)
-    val key = (sid, plan, m, codes, iters, nQueries)
-    pqModelCache.synchronized {
-      val hit = pqModelCache.get(key)
-      if (hit != null) hit
-      else {
-        val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-          .localCheckpoint() // scanned per Lloyd round + encode + re-rank
-        val (codesLong, adcTables, books) = pqModel(corpus, m, codes, iters, nQueries)
-        val built = PqModel(corpus, codesLong.localCheckpoint(), adcTables, books)
-        pqModelCache.put(key, built)
-        built
-      }
+      iters: Int, nQueries: Int): PqModel =
+    SessionArtifacts.getOrBuild(PqModels, embeddings, m, codes, iters, nQueries) {
+      val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
+        .localCheckpoint() // scanned per Lloyd round + encode + re-rank
+      val (codesLong, adcTables, books) = pqModel(corpus, m, codes, iters, nQueries)
+      PqModel(corpus, codesLong.localCheckpoint(), adcTables, books)
     }
-  }
 
   /** One trained PQ model over `corpus` (which the caller should have
     * localCheckpointed — it is scanned once per Lloyd round, once to
@@ -1704,12 +1683,11 @@ object Similarity {
     */
   private def kmeansAssignments(embeddings: DataFrame, k: Int, iters: Int,
       init: String): DataFrame = {
-    val (sid, plan) = planKey(embeddings)
-    assignCache.getOrBuild((sid, plan, k, iters, init)) {
+    SessionArtifacts.getOrBuild(Assignments, embeddings, k, iters, init) {
       val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
         .localCheckpoint() // scanned once per Lloyd round + final report
       val cents = trainCentroids(embeddings, corpus, k, iters, init)
-      assignCells(corpus, cents, wide = cents.length > WideDial)
+      assignCells(corpus, cents, wide = cents.length > WideDial).localCheckpoint()
     }
   }
 
@@ -1770,32 +1748,28 @@ object Similarity {
     // per corpus per session — the trained model is k×dim DRIVER-side
     // doubles (the Lloyd's-on-Spark contract), so the cache holds
     // values, not frames, and `iters` full corpus scans are paid once.
-    val key = (planKey(embeddings), k, iters, init)
-    centroidCache.synchronized {
-      val hit = centroidCache.get(key)
-      if (hit != null) return hit
-    }
-    def round6(x: Double): Double = graft.functions.Rounding.halfUp(x, 6)
-    val vecSum = udaf(new graft.functions.Aggregators.VectorSum)
-    var cents = init match {
-      case "parallel" => kmeansParallelInit(embeddings, k)
-      case _ => md5Coreset(corpus, k)
-    }
-    for (_ <- 1 to iters) {
-      val stats = assignCells(corpus, cents, wide = cents.length > WideDial)
-        .groupBy($"cid")
-        .agg(vecSum($"v").as("s"), count(lit(1)).as("n"))
-        .collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[Double](1), r.getLong(2)))).toMap
-      cents = cents.map { case (cid, old) =>
-        stats.get(cid) match {
-          case Some((s, n)) => (cid, s.map(x => round6(x / n)).toArray)
-          case None => (cid, old) // empty cluster: centroid unchanged
+    SessionArtifacts.getOrBuild(Centroids, embeddings, k, iters, init) {
+      def round6(x: Double): Double = graft.functions.Rounding.halfUp(x, 6)
+      val vecSum = udaf(new graft.functions.Aggregators.VectorSum)
+      var cents = init match {
+        case "parallel" => kmeansParallelInit(embeddings, k)
+        case _ => md5Coreset(corpus, k)
+      }
+      for (_ <- 1 to iters) {
+        val stats = assignCells(corpus, cents, wide = cents.length > WideDial)
+          .groupBy($"cid")
+          .agg(vecSum($"v").as("s"), count(lit(1)).as("n"))
+          .collect()
+          .map(r => r.getLong(0) -> ((r.getSeq[Double](1), r.getLong(2)))).toMap
+        cents = cents.map { case (cid, old) =>
+          stats.get(cid) match {
+            case Some((s, n)) => (cid, s.map(x => round6(x / n)).toArray)
+            case None => (cid, old) // empty cluster: centroid unchanged
+          }
         }
       }
+      cents
     }
-    centroidCache.synchronized(centroidCache.put(key, cents))
-    cents
   }
 
   /** Submodular (facility-location) coreset selection — the data-selection
@@ -2049,79 +2023,30 @@ object Similarity {
     * `hyperplaneBucketRows` writes) and the verified PAIR index (what
     * q48's listing and q110's positives both analyze). One corpus, many
     * consumers: q48, q95, q110 and the threshold/QA family all ride one
-    * build per (canonical corpus plan, params) per session. Keys are the
-    * CANONICALIZED analyzed plan (aliases share, semantic differences
-    * miss); entries are localCheckpointed and bounded-LRU-evicted, so
-    * cache memory is index/pair-proportional, never corpus-squared.
+    * build per (canonical corpus plan, params) per session (keys and
+    * eviction follow [[SessionArtifacts]]); entries are localCheckpointed,
+    * so cache memory is index/pair-proportional, never corpus-squared.
     */
-  private val EmbIndexCacheMax = 8
-
-  private final class BoundedCache[K] {
-    private val m = new java.util.LinkedHashMap[K, DataFrame](16, 0.75f, false) {
-      // Eviction drops only the cache's REFERENCE. The blocks are NOT
-      // eagerly unpersisted: a consumer still holding an evicted frame
-      // must stay usable, and a localCheckpointed frame has no lineage to
-      // recompute from — an eager unpersist would turn its next action
-      // into a hard "checkpoint block not found" failure. Spark's
-      // ContextCleaner reclaims the blocks once the frame is
-      // garbage-collected (the same lifecycle as any unreferenced
-      // checkpoint), so the cap still bounds LIVE cache memory.
-      override def removeEldestEntry(e: java.util.Map.Entry[K, DataFrame]): Boolean =
-        size() > EmbIndexCacheMax
-    }
-    def getOrBuild(k: K)(build: => DataFrame): DataFrame = m.synchronized {
-      val hit = m.get(k)
-      if (hit != null) hit
-      else { val built = build.localCheckpoint(); m.put(k, built); built }
-    }
-    def clear(): Unit = m.synchronized(m.clear())
-  }
-
-  private val bucketIndexCache = new BoundedCache[(String, String, Int, Int)]
-  private val pairIndexCache   = new BoundedCache[(String, String, Double, Int, Int)]
-  // (session, corpus plan, k, resolved kCells) -> checkpointed kNN graph
-  private val knnGraphCache    = new BoundedCache[(String, String, Int, Int)]
-  // (session, corpus plan, k, iters, init) -> checkpointed Lloyd assignments
-  private val assignCache      = new BoundedCache[(String, String, Int, Int, String)]
-  // ((session, corpus plan), k, iters, init) -> trained centroids
-  // (k x dim DRIVER-side doubles, bounded like the frame caches)
-  private val centroidCache =
-    new java.util.LinkedHashMap[((String, String), Int, Int, String),
-        Array[(Long, Array[Double])]](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[((String, String), Int, Int, String),
-            Array[(Long, Array[Double])]]): Boolean = size() > EmbIndexCacheMax
-    }
-
-  def clearEmbeddingIndexCaches(): Unit = {
-    bucketIndexCache.clear(); pairIndexCache.clear(); knnGraphCache.clear()
-    assignCache.clear()
-    centroidCache.synchronized(centroidCache.clear())
-  }
-
-  /** Plan-keyed session identity of a frame (identityHashCode of the
-    * session: checkpointed RDDs die with their session, so an entry must
-    * never cross sessions).
-    */
-  private def planKey(df: DataFrame): (String, String) =
-    (System.identityHashCode(df.sparkSession).toString,
-      PlanFingerprint(df))
+  private val BucketIndexes = new SessionArtifacts.Kind[DataFrame]
+  private val PairIndexes = new SessionArtifacts.Kind[DataFrame]
+  // (corpus, k, resolved kCells) -> checkpointed kNN graph
+  private val KnnGraphs = new SessionArtifacts.Kind[DataFrame]
+  // (corpus, k, iters, init) -> checkpointed Lloyd assignments
+  private val Assignments = new SessionArtifacts.Kind[DataFrame]
+  // (corpus, k, iters, init) -> trained centroids (k x dim DRIVER-side doubles)
+  private val Centroids = new SessionArtifacts.Kind[Array[(Long, Array[Double])]]
 
   /** The session-cached hyperplane bucket index of a corpus. */
   def hyperplaneIndex(embeddings: DataFrame, tables: Int = NeardupTables,
-      bits: Int = NeardupBits): DataFrame = {
-    val (sid, plan) = planKey(embeddings)
-    bucketIndexCache.getOrBuild((sid, plan, tables, bits))(
-      hyperplaneBucketRows(embeddings, tables, bits))
-  }
+      bits: Int = NeardupBits): DataFrame =
+    SessionArtifacts.getOrBuild(BucketIndexes, embeddings, tables, bits)(
+      hyperplaneBucketRows(embeddings, tables, bits).localCheckpoint())
 
   /** The session-cached verified near-dup pair set of a corpus. */
   def embeddingPairIndex(embeddings: DataFrame, threshold: Double = 0.9,
-      tables: Int = NeardupTables, bits: Int = NeardupBits): DataFrame = {
-    val (sid, plan) = planKey(embeddings)
-    pairIndexCache.getOrBuild((sid, plan, threshold, tables, bits))(
-      embeddingNearDupUnordered(embeddings, threshold, tables, bits))
-  }
+      tables: Int = NeardupTables, bits: Int = NeardupBits): DataFrame =
+    SessionArtifacts.getOrBuild(PairIndexes, embeddings, threshold, tables, bits)(
+      embeddingNearDupUnordered(embeddings, threshold, tables, bits).localCheckpoint())
 
   /** The pair pipeline without the final canonical sort (consumers that
     * re-shuffle immediately would pay the global sort for nothing).
@@ -2389,14 +2314,7 @@ object Similarity {
   private case class AbttModel(mu: Array[Long], vs: Array[Long],
       vn2: Long, trace: Long, dim: Int)
 
-  private val abttModelCache =
-    new java.util.LinkedHashMap[(String, String, Int), AbttModel](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int), AbttModel]): Boolean =
-        size() > EmbIndexCacheMax
-    }
-
-  def clearAbttModelCache(): Unit = abttModelCache.synchronized(abttModelCache.clear())
+  private val AbttModels = new SessionArtifacts.Kind[AbttModel]
 
   /** Micro-unit quantized embedding: `round(1e6 * x)` per dimension as
     * LONG — every downstream moment/projection is exact integer
@@ -2430,15 +2348,8 @@ object Similarity {
     * to n ~ 4e5 micro-mean offsets; past that the same pass runs with
     * decimal(38,0) sums — a type widening, not a plan change.
     */
-  private def abttModelFor(embeddings: DataFrame, iters: Int): AbttModel = {
-    val (sid, plan) = planKey(embeddings)
-    val key = (sid, plan, iters)
-    abttModelCache.synchronized {
-      val hit = abttModelCache.get(key)
-      if (hit != null) hit
-      else { val built = fitAbttModel(embeddings, iters); abttModelCache.put(key, built); built }
-    }
-  }
+  private def abttModelFor(embeddings: DataFrame, iters: Int): AbttModel =
+    SessionArtifacts.getOrBuild(AbttModels, embeddings, iters)(fitAbttModel(embeddings, iters))
 
   private def fitAbttModel(embeddings: DataFrame, iters: Int): AbttModel = {
     def halfUp(x: Double, s: Int): Double = graft.functions.Rounding.halfUp(x, s)

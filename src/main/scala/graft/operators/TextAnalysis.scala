@@ -532,20 +532,9 @@ object TextAnalysis {
     * with per-round checkpoints and collects, and q104 (the merge list)
     * and q105 (fertility, which re-encodes the vocabulary with the SAME
     * merges) used to each pay the full loop. Keyed by (session, corpus
-    * plan, nMerges); bounded; holds no executor blocks.
+    * plan, nMerges); holds no executor blocks.
     */
-  private val BpeMergeCacheMax = 16
-  private val bpeMergeCache =
-    new java.util.LinkedHashMap[(String, String, Int),
-        (Seq[(Int, String, String, Long)], Int)](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int),
-            (Seq[(Int, String, String, Long)], Int)]): Boolean =
-        size() > BpeMergeCacheMax
-    }
-
-  def clearBpeMergeCache(): Unit =
-    bpeMergeCache.synchronized(bpeMergeCache.clear())
+  private val BpeMergeTables = new SessionArtifacts.Kind[(Seq[(Int, String, String, Long)], Int)]
 
   /** [[bpeMerges]] plus the number of rounds the batched training took —
     * the sub-linearity evidence ProfileScaling reports (nMerges merges in
@@ -555,11 +544,8 @@ object TextAnalysis {
     val spark = documents.sparkSession
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
-    val cacheKey = (System.identityHashCode(spark).toString,
-      PlanFingerprint(documents), nMerges)
-    val cached = bpeMergeCache.synchronized(Option(bpeMergeCache.get(cacheKey)))
-    val (mergeRows, roundsTaken) = cached.getOrElse(
-      trainBpeMerges(documents, nMerges, cacheKey))
+    val (mergeRows, roundsTaken) = SessionArtifacts.getOrBuild(
+      BpeMergeTables, documents, nMerges)(trainBpeMerges(documents, nMerges))
     val out = spark.createDataFrame(
       spark.sparkContext.parallelize(mergeRows.map {
         case (rk, p, m, c) => Row(rk, p, m, c) }, 1),
@@ -571,8 +557,8 @@ object TextAnalysis {
     (out, roundsTaken)
   }
 
-  private def trainBpeMerges(documents: DataFrame, nMerges: Int,
-      cacheKey: (String, String, Int)): (Seq[(Int, String, String, Long)], Int) = {
+  private def trainBpeMerges(documents: DataFrame,
+      nMerges: Int): (Seq[(Int, String, String, Long)], Int) = {
     var seqs = documents
       .select(explode(split($"text", " ")).as("w"))
       .filter(length($"w") > 0)
@@ -629,9 +615,7 @@ object TextAnalysis {
           .localCheckpoint()
       }
     }
-    val result = (merges.toSeq, rounds)
-    bpeMergeCache.synchronized(bpeMergeCache.put(cacheKey, result))
-    result
+    (merges.toSeq, rounds)
   }
 
   /** Per-source quality-distribution drift vs the corpus baseline —

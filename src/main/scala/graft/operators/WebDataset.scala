@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 /** WebDataset-style tar-shard container source (round 14 — SURVEY §2.2's
@@ -176,8 +177,9 @@ object WebDataset {
     s"""{"id":$id,"w":$w,"h":$h}"""
   }
 
+  // JVM-scoped, not a SessionArtifacts kind: the shard files outlive a session
   private val shardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    new java.util.concurrent.ConcurrentHashMap[(LogicalPlan, Int), String]()
 
   /** Build (once per corpus plan per JVM) and serve the shard directory:
     * real `.tar` files named `shard-<id>.tar`, each holding the image
@@ -191,9 +193,8 @@ object WebDataset {
     require(shardAssets > 0, s"shardDir: shardAssets=$shardAssets must be > 0")
     val spark = documents.sparkSession
     val ids = documents.select($"doc_id")
-    val planKey =
-      PlanFingerprint(ids) + s"|wds$shardAssets"
-    shardDirs.computeIfAbsent(planKey, _ => {
+    val plan = ids.queryExecution.analyzed.canonicalized
+    shardDirs.computeIfAbsent((plan, shardAssets), _ => {
       import spark.implicits.{newLongEncoder, newProductEncoder}
       val dir = graft.sources.Scratch.dir("graft_wds")
       val span = 3L * shardAssets

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Dedup, Events, Governance, Matching, Sampling}
+import graft.operators.{Curation, Dedup, Events, Governance, Matching, Sampling,
+  SessionArtifacts}
 import graft.sources.Tables
 
 /** Round-4 matching/release additions: fuzzy ER join, sparse lexical
@@ -707,12 +708,12 @@ class MatchingSpec extends GraftSuite {
     // planted 3-clique: three identical docs -> 3 edges, 3 wedges,
     // 1 triangle, clustering exactly 1.0
     import spark.implicits._
-    Dedup.clearPairIndexCache()
+    SessionArtifacts.clearAll()
     val clique = Seq((1L, "aaaaa bbbbb ccccc ddddd"), (2L, "aaaaa bbbbb ccccc ddddd"),
       (3L, "aaaaa bbbbb ccccc ddddd")).toDF("doc_id", "text")
     val cq = Dedup.dupGraphShape(clique).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).head
-    Dedup.clearPairIndexCache()
+    SessionArtifacts.clearAll()
     assert(cq === ((3L, 3L, 3L, 1L, 1.0)))
   }
 
@@ -769,7 +770,7 @@ class MatchingSpec extends GraftSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!banded.contains((1L, 2L)),
       "if the band finds it, the discovery op is redundant on this fixture")
-    Dedup.clearPairIndexCache()
+    SessionArtifacts.clearAll()
     // fixture law: equals the JVM exact all-ordered-pairs brute force on
     // distinct char-5-gram STRINGS (independent of the engine's hashing
     // and blocking; collisions in the 64-bit shingle hash would surface)

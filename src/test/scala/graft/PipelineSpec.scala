@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Events, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Events, Multimodal, SessionArtifacts, Similarity, TextAnalysis}
 import graft.sources.Tables
 
 class PipelineSpec extends GraftSuite {
@@ -43,7 +43,7 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("pair index cache: same canonical plan hits, different params miss") {
-    Dedup.clearPairIndexCache()
+    SessionArtifacts.clearAll()
     // two distinct DataFrame objects over the same source must share the
     // materialized index (the q27/q53/q83/q84 reuse path)...
     val a = Dedup.pairIndex(Tables.documents(spark, sf))
@@ -57,6 +57,28 @@ class PipelineSpec extends GraftSuite {
     // and the cached set is the verified pair set
     assert(a.select($"id1", $"id2").collect().toSet ===
       Dedup.minhashLshPairs(docs).select($"id1", $"id2").collect().toSet)
+    // Keys are exact: the canonical plan STRING elides LocalRelation rows
+    // and truncates nodes wider than maxToStringFields, so each case below
+    // first pins that the strings collide, then that the entries do not.
+    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
+    def canon(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.canonicalized
+    val rows = Seq((1L, "aaaaa bbbbb ccccc ddddd"), (2L, "aaaaa bbbbb ccccc ddddd"))
+    val lit1 = rows.toDF("doc_id", "text")
+    val lit2 = rows.updated(1, (2L, "eeeee fffff ggggg hhhhh")).toDF("doc_id", "text")
+    assert(canon(lit1).toString === canon(lit2).toString)
+    val p1 = Dedup.pairIndex(lit1)
+    val p2 = Dedup.pairIndex(lit2)
+    assert(!(p1 eq p2), "corpora differing in one row's text must not share an entry")
+    assert(p1.count() === 1L && p2.count() === 0L)
+    // the same rows built twice share one entry
+    assert(Dedup.pairIndex(rows.toDF("doc_id", "text")) eq p1)
+    // a frame wider than maxToStringFields, differing only in its trailing column
+    val maxFields = spark.conf.get("spark.sql.debug.maxToStringFields").toInt
+    def wide(last: Int) = lit1.select(Seq($"doc_id", $"text") ++
+      (1 to maxFields).map(i => lit(if (i == maxFields) last else 0).as(s"c$i")): _*)
+    assert(canon(wide(0)).toString === canon(wide(1)).toString)
+    assert(!(Dedup.pairIndex(wide(0)) eq Dedup.pairIndex(wide(1))),
+      "frames differing only in a column past maxToStringFields must not share an entry")
   }
 
   test("exact dedup collapses a self-unioned corpus: unique == n, copies == 2n") {
@@ -901,7 +923,7 @@ class PipelineSpec extends GraftSuite {
 
   test("embedding index caches: same canonical plan hits, params miss; probe == from-scratch") {
     import graft.operators.Similarity
-    Similarity.clearEmbeddingIndexCaches()
+    SessionArtifacts.clearAll()
     // two distinct DataFrame objects over the same source share the
     // materialized bucket index and pair index (the q48/q95/q110 reuse path)
     val a = Similarity.hyperplaneIndex(Tables.embeddings(spark, sf))
@@ -995,12 +1017,12 @@ class PipelineSpec extends GraftSuite {
 
   test("PQ ANN: deterministic, well-formed recall report, codes compress the corpus") {
     import graft.operators.Similarity
-    Similarity.clearPqModelCache()
+    SessionArtifacts.clearAll()
     val r1 = Similarity.pqAnnRecall(embs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // cache cleared between runs: the SECOND run retrains from scratch,
     // so this asserts training determinism, not cache identity
-    Similarity.clearPqModelCache()
+    SessionArtifacts.clearAll()
     val r2 = Similarity.pqAnnRecall(embs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(r1 === r2, "training + ADC ranking must be exactly reproducible")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Curation
+import graft.operators.{Curation, SessionArtifacts}
 import graft.sources.Tables
 
 /** Dev-only classifier PRODUCTION-dial experiment
@@ -74,7 +74,7 @@ object ProfileClassifierDial {
           (0 until s).map(replica).reduce(_ union _), g)
         .repartition(32).persist()
       val nDocs = docs.count()
-      Curation.clearWeightsCache()
+      SessionArtifacts.clearAll()
       System.gc()
       val (wv, tWarm) = time {
         Curation.qualityClassifierWeights(docs, buckets = prodBuckets, rounds = 1).count()
@@ -86,7 +86,7 @@ object ProfileClassifierDial {
         Curation.qualityClassifierWeights(docs, buckets = prodBuckets, rounds = 16).count()
       }
       docs.unpersist()
-      Curation.clearWeightsCache()
+      SessionArtifacts.clearAll()
       val perRound = (t16 - t8) / 8.0
       println(f"[clsdial] x$s%-2d g=$g $nDocs%6d $wv%6d $tWarm%8.2f $t8%8.2f $t16%8.2f $perRound%8.2f")
     }

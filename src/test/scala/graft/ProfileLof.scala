@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.Similarity
+import graft.operators.{SessionArtifacts, Similarity}
 import graft.sources.Tables
 
 /** Dev-only stage profile for q290 (round-13 ask #4): where does the
@@ -39,7 +39,7 @@ object ProfileLof {
     println(s"[lof] graph edges=${graph.count()}")
     // stage 2: LOF end-to-end with a COLD graph cache (the pre-round-13
     // behavior: every consumer rebuilt the graph)
-    Similarity.clearEmbeddingIndexCaches()
+    SessionArtifacts.clearAll()
     time("lofOutliers total (fresh graph)")(noop(Similarity.lofOutliers(embs)))
     // stage 3: LOF riding the session-cached graph (the round-13 path
     // q207/q208/q231/q290 take after q194 builds it)

@@ -11,7 +11,7 @@ package graft
   */
 object ProfileResidualPq {
   def main(args: Array[String]): Unit = {
-    import graft.operators.Similarity
+    import graft.operators.{SessionArtifacts, Similarity}
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession
       .builder(appName = "graft-profile-residual-pq", master = "local[32]",
@@ -29,7 +29,7 @@ object ProfileResidualPq {
     }
     println(s"[profile] corpus=${embs.count()} vectors, nQueries=$nQueries, k=$k")
     for (coarse <- Seq(0, 2); nProbe <- Seq(2, 4); shortlist <- Seq(k, 15, 50)) {
-      Similarity.clearPqModelCache()
+      SessionArtifacts.clearAll()
       val (rawR, rawT) = meanRecall(Similarity.ivfPqAnnRecall(embs,
         nCentroids = 16, nProbe = nProbe, shortlist = shortlist,
         nQueries = nQueries, k = k, coarseIters = coarse))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Dedup}
+import graft.operators.{Curation, Dedup, SessionArtifacts}
 import graft.sources.Tables
 
 /** Dev-only LSH-family scaling experiment (Test/runMain graft.ProfileScaling).
@@ -75,14 +75,14 @@ object ProfileScaling {
     if (want("core")) {
     // warm the JIT/codegen on the smallest corpus before measuring —
     // both halves, so the x1 measurement isn't charged one-time compile
-    Dedup.clearPairIndexCache()
+    SessionArtifacts.clearAll()
     Dedup.survivorsOverPairs(Dedup.pairIndex(spark.read.parquet(s"$outRoot/x1"))).count()
 
     println("[scaling] scale docs candidates pairs t_pairs_s t_components_s")
     val rows = scales.map { s =>
       val docs = spark.read.parquet(s"$outRoot/x$s")
       val nDocs = docs.count()
-      Dedup.clearPairIndexCache()
+      SessionArtifacts.clearAll()
       System.gc()
       // candidate count via the same bucket pipeline (measured separately
       // so the pair timing below stays a single clean pipeline run)
@@ -242,7 +242,7 @@ object ProfileScaling {
     scales.foreach { s =>
       val embs = spark.read.parquet(s"$outRoot/emb_x$s")
       val n = embs.count()
-      Similarity.clearEmbeddingIndexCaches()
+      SessionArtifacts.clearAll()
       System.gc()
       val c86 = candCount(embs, 8, 6)
       val c2412 = candCount(embs, 24, 12)
@@ -298,7 +298,7 @@ object ProfileScaling {
     Seq((1, 8, 6), (1, 24, 12), (10, 24, 12)).foreach { case (s, tables, bits) =>
       val embs = spark.read.parquet(s"$outRoot/emb_x$s")
       val withPlanted = embs.unionByName(planted(embs)).localCheckpoint()
-      Similarity.clearEmbeddingIndexCaches()
+      SessionArtifacts.clearAll()
       System.gc()
       // exact truth over the 100 planted (i, i+9e7) pairs only
       val truth = withPlanted.filter($"vec_id" < 100).as("a")
@@ -399,7 +399,7 @@ object ProfileScaling {
       val docs = (0 until s).map(replica4).reduce(_ union _)
         .repartition(32).persist()
       val nDocs = docs.count()
-      Curation.clearWeightsCache()
+      SessionArtifacts.clearAll()
       System.gc()
       val (wvRows, tWarm) = time {
         Curation.qualityClassifierWeights(docs, buckets = prodBuckets, rounds = 1).count()
@@ -411,7 +411,7 @@ object ProfileScaling {
         Curation.qualityClassifierWeights(docs, buckets = prodBuckets, rounds = 16).count()
       }
       docs.unpersist()
-      Curation.clearWeightsCache()
+      SessionArtifacts.clearAll()
       val perRound = (t16 - t8) / 8.0
       println(f"[scaling] clsdial x$s%-2d $nDocs%6d $wvRows%6d $tWarm%8.2f $t8%8.2f $t16%8.2f $perRound%8.2f")
     }
@@ -427,12 +427,12 @@ object ProfileScaling {
     if (want("pq")) {
       // warm JIT/codegen on x1 first — otherwise the x1 row is charged
       // the one-time compile of the whole train/encode/ADC plan family
-      Similarity.clearPqModelCache()
+      SessionArtifacts.clearAll()
       Similarity.ivfPqAnnRecall(spark.read.parquet(s"$outRoot/emb_x1")).count()
       println("[scaling] pq: scale nvecs t_pq_carrier_s t_ivfpq_rider_s")
       scales.foreach { s =>
         val embs = spark.read.parquet(s"$outRoot/emb_x$s")
-        Similarity.clearPqModelCache()
+        SessionArtifacts.clearAll()
         System.gc()
         val (_, tPq) = time(Similarity.pqAnnRecall(embs).count())
         val (_, tIvf) = time(Similarity.ivfPqAnnRecall(embs).count())
@@ -468,7 +468,7 @@ object ProfileScaling {
       // JIT/codegen warmup on x1 (the core section's convention): the
       // first pair-pipeline + window-plan compile otherwise lands on
       // whichever scale row runs first
-      Dedup.clearPairIndexCache()
+      SessionArtifacts.clearAll()
       Dedup.kcoreDecomposition(spark.read.parquet(s"$outRoot/x1")).count()
       Curation.bootstrapCi(b4).count()
       println("[scaling] r7new: scale docs t_bootstrap_s t_pairs_s t_kcore_s t_profile_s nvecs t_fl16_s t_fl16s_s")
@@ -480,7 +480,7 @@ object ProfileScaling {
         val (_, tBoot) = time(Curation.bootstrapCi(docsL).count())
         docsL.unpersist()
         val docs = spark.read.parquet(s"$outRoot/x$s")
-        Dedup.clearPairIndexCache()
+        SessionArtifacts.clearAll()
         System.gc()
         val (_, tPairs) = time(Dedup.pairIndex(docs).count())
         val (_, tKcore) = time(Dedup.kcoreDecomposition(docs).count())
@@ -499,7 +499,7 @@ object ProfileScaling {
       println("[scaling] chunk-pagerank: scale docs chunks t_chunk_s t_pairs_s nodes t_pr_s")
       scales.foreach { s =>
         val docs = spark.read.parquet(s"$outRoot/x$s")
-        Dedup.clearPairIndexCache()
+        SessionArtifacts.clearAll()
         System.gc()
         val (nCh, tCh) = time(Curation.chunkDocuments(docs).count())
         val (_, tPairs) = time(Dedup.pairIndex(docs).count())

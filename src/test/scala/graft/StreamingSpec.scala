@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.Events
+import graft.operators.{Events, SessionArtifacts}
 import graft.sources.Tables
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
@@ -834,7 +834,7 @@ class StreamingSpec extends GraftSuite {
     assert(streamed.nonEmpty)
     assert(queries.map(_._1).toSet === streamed.map(_._1),
       "every streamed query must be answered")
-    Similarity.clearPqModelCache()
+    SessionArtifacts.clearAll()
   }
 
   test("streaming A/B monitor == batch abValueTest once drained; cold start emits, not crashes") {
