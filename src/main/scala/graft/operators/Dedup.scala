@@ -841,14 +841,13 @@ object Dedup {
     * on degenerate data the cost is the exactness, not the plan.
     */
   def containmentDiscover(documents: DataFrame, n: Int = 5,
-      tau: Double = 0.9, explodeVerify: Boolean = false): DataFrame = {
+      tau: Double = 0.9): DataFrame = {
     import graft.functions.MinHashFunctions.{shingle_hashes, sorted_intersect_count}
     val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
     val sh = documents
       .repartition(parts, $"doc_id") // AQE-blindness guard (see above)
       .select($"doc_id", shingle_hashes($"text", n).as("hs"))
       .localCheckpoint() // probes + postings + two verify joins
-    val postings = sh.select($"doc_id".as("container_id"), explode($"hs").as("h"))
     // k_A probes: floor((1-τ+ε)·|A|) + 1 rarest — ε covers the rounded
     // filter's boundary (round6(i/|A|) ≥ τ admits i/|A| ≥ τ − 5e-7).
     // df rides a count() window over the SAME exchange that used to
@@ -912,42 +911,11 @@ object Dedup {
         dir($"id2", $"id1", $"sz2", $"sz1"))).as("r"))
       .select($"r.contained_id", $"r.container_id", $"r.containment", $"r.jaccard")
       .filter($"containment" >= tau)
-    // POSTING-EXPLOSION intersection — A/B'd in round 12 and REJECTED
-    // by measurement (kept as the measured record + re-test hook, the
-    // waves-dial discipline): no shingle array is ever resident per
-    // pair — candidates explode through id1's posting rows and
-    // inner-join (id2, h) back onto the posting index, so the
-    // intersection is a streaming shuffle+count instead of 6M in-heap
-    // array pairs (~3.3 KB × 2 each). The hypothesis (removing the
-    // resident pair-arrays kills the 2.2× same-commit spill noise)
-    // LOST decisively: interleaved same-box A/B at sf0.1 ×2 reps
-    // measured arrays 12.4–57.5 s vs explode 132.6–260.0 s — the
-    // Σ_pairs|A| row volume (~6M pairs × ~170 grams ≈ 1G rows through
-    // two shuffles) costs 5–20× more than the resident arrays save,
-    // at HIGHER heap (7–12 GiB vs 1–4). Protocol: ProfileQ178 with
-    // SPARK_GRAFT_Q178_AB=1; table in SURVEY §6.11. The bench-noise
-    // fix is the Heaps fixture (q302) + Bench's median-of-3 instead.
-    // i ≥ 1 for every candidate (pairs enter via a shared probe
-    // shingle), so the inner-join groupBy loses no pair.
-    def verifyExplode(slice: DataFrame): DataFrame = {
-      val sizes = sh.select($"doc_id", size($"hs").as("sz"))
-      val inter = slice
-        .join(postings.select($"container_id".as("id1"), $"h")
-          .hint("shuffle_hash"), Seq("id1"))
-        .join(postings.select($"container_id".as("id2"), $"h")
-          .hint("shuffle_hash"), Seq("id2", "h"))
-        .groupBy($"id1", $"id2").agg(count(lit(1)).as("i"))
-      inter
-        .join(sizes.select($"doc_id".as("id1"), $"sz".as("sz1"))
-          .hint("shuffle_hash"), Seq("id1"))
-        .join(sizes.select($"doc_id".as("id2"), $"sz".as("sz2"))
-          .hint("shuffle_hash"), Seq("id2"))
-        .select(explode(array(
-          dir($"id1", $"id2", $"sz1", $"sz2"),
-          dir($"id2", $"id1", $"sz2", $"sz1"))).as("r"))
-        .select($"r.contained_id", $"r.container_id", $"r.containment", $"r.jaccard")
-        .filter($"containment" >= tau)
-    }
+    // A POSTING-EXPLOSION intersection (candidates explode through the
+    // posting index and count (id2, h) matches — no resident shingle
+    // arrays) was A/B'd against this verify in round 12 and LOST
+    // decisively: arrays 12.4–57.5 s vs explode 132.6–260.0 s at sf0.1,
+    // at HIGHER heap (SURVEY §6.20; code at 56418f6).
     // A sequential "verify wave" dial (hash-partition the candidates,
     // materialize one slice's post-filter result before the next) was
     // built and MEASURED here in rounds 8–9 as the suspect fix for
@@ -956,10 +924,9 @@ object Dedup {
     // inside the box's ±40% run-to-run band, and at ×10 data waves=4
     // measured 1.6× SLOWER than the single join (133 s vs 85 s — the
     // extra scans of the checkpointed candidate set cost more than the
-    // reduced peak live array volume saves at a 32g heap). Protocol and
-    // tables: ProfileQ178/ProfileScale + SURVEY §6.11.
-    (if (explodeVerify) verifyExplode(cands) else verify(cands))
-      .orderBy($"contained_id", $"container_id")
+    // reduced peak live array volume saves at a 32g heap). Tables:
+    // SURVEY §6.11; code at 56418f6.
+    verify(cands).orderBy($"contained_id", $"container_id")
   }
 
   /** Heaps-law containment fixture (q302): a deterministic synthetic

@@ -268,15 +268,7 @@ object Matching {
     * hash equi-joins on term/doc_id. Nothing is ever all-pairs.
     */
   def tfidfCosinePairs(documents: DataFrame, k: Int = 8, dfCapPerMille: Int = 64,
-      tau: Double = 0.7, dfCapAbsolute: Option[Long] = None): DataFrame = {
-    // dfCapAbsolute overrides the corpus-relative per-mille cap with a
-    // fixed document count — the ProfileScale yardstick needs it because
-    // replica-disjoint inflation freezes every term's df while n_docs
-    // grows, so the relative cap would re-admit whole-replica-common
-    // terms as "rare" and manufacture quadratic candidates the real
-    // corpus (whose df grows WITH n_docs) never sees. Production tuning
-    // can also pin the cap absolutely when the pipeline's vocabulary is
-    // versioned independently of corpus growth.
+      tau: Double = 0.7): DataFrame = {
     val tf = documents
       .select($"doc_id", explode(split($"text", " ")).as("term"))
       .groupBy($"doc_id", $"term")
@@ -288,8 +280,7 @@ object Matching {
       .crossJoin(broadcast(nDocs))
       .select($"doc_id", $"term", $"df",
         round($"tf" * log($"n_docs" / $"df"), 4).as("w"),
-        dfCapAbsolute.map(lit(_).cast("long"))
-          .getOrElse(expr(s"n_docs * $dfCapPerMille div 1000")).as("df_cap"))
+        expr(s"n_docs * $dfCapPerMille div 1000").as("df_cap"))
     // r14 (guide §2.4/§5): topw is consumed FIVE times below (the rare
     // self-join's two branches, norms, and the two dot-product probes);
     // without materialization the final DAG re-runs the corpus explode +

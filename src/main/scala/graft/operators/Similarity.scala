@@ -698,13 +698,14 @@ object Similarity {
     * made every plane a SHIFTED COPY of one base sequence, so planes were
     * linearly correlated across j — sign-bucket occupancy skewed far off
     * uniform and OR-amplification ran over effectively-correlated tables.
-    * Measured on the ProfileScaling x1 embedding corpus (+100 planted
+    * Measured on the x1 replica embedding corpus (+100 planted
     * pairs at cos≈0.92): additive 8x6 = 1.05M candidates / 94% planted
     * recall, additive 24x12 = 309k / 69%; multiplicative 8x6 = 312k /
     * 100%, multiplicative 24x12 = 18k / 100% — i.e. the decorrelated
     * family restores both the ~tables·2^-bits candidate-rate math (17x
     * reduction at the production dial, vs 3.4x with correlated planes)
-    * AND the OR-amplified recall the banding design predicts.
+    * AND the OR-amplified recall the banding design predicts (SURVEY
+    * §6.4; code at 56418f6).
     */
   private def coef(j: Int, i: Column): Column =
     ((((i + 17) * lit((j + 1).toLong * 104729L) + lit(j.toLong * 7919L)) % 2001L - 1000L)
@@ -1131,14 +1132,14 @@ object Similarity {
     * trainings to the coarse assignment; raw-vector PQ keeps the code
     * table cell-independent (one stored table serves any probe dial) —
     * the trade FAISS ships as `IVFFlat`-style scanning with `PQ`
-    * storage. MEASURED, not fiat (`ProfileResidualPq`, SURVEY §6.7):
+    * storage. MEASURED, not fiat (SURVEY §6.7; code at 56418f6):
     * against this library's deterministic md5-coreset coarse quantizer
-    * the residual form (`ivfPqResidualRecall`) LOSES 0.06–0.23 recall@5
-    * at every dial — coreset "centroids" are corpus vectors, so
-    * residuals are larger than the raw vectors and quantize worse; with
-    * a 2-round Lloyd-trained coarse quantizer (`coarseIters = 2`) the
-    * two forms are within ±0.04 recall of each other. Raw-vector PQ is
-    * therefore the honest default here, not a concession. Determinism
+    * the residual form LOSES 0.06–0.23 recall@5 at every dial —
+    * coreset "centroids" are corpus vectors, so residuals are larger
+    * than the raw vectors and quantize worse; with a 2-round
+    * Lloyd-trained coarse quantizer the two forms are within ±0.04
+    * recall of each other. Raw-vector PQ is therefore the honest
+    * default here, not a concession. Determinism
     * and the recall report are exactly `pqAnnRecall`'s; the coarse
     * stage is exactly `ivfCosineTopK`'s (md5-coreset centroids,
     * rounded-cosine argmin, sorted-struct probe list).
@@ -1148,9 +1149,9 @@ object Similarity {
     */
   def ivfPqAnnRecall(embeddings: DataFrame, nCentroids: Int = 16, nProbe: Int = 4,
       m: Int = 8, codes: Int = 16, iters: Int = 2, shortlist: Int = 50,
-      nQueries: Int = 5, k: Int = 3, coarseIters: Int = 0): DataFrame = {
+      nQueries: Int = 5, k: Int = 3): DataFrame = {
     val mdl = pqModelFor(embeddings, m, codes, iters, nQueries)
-    val cents = lloydRefine(mdl.corpus, md5Coreset(mdl.corpus, nCentroids), coarseIters)
+    val cents = md5Coreset(mdl.corpus, nCentroids)
     val assigned = mdl.corpus
       .withColumn("a", least(cellStructs(cents, $"v"): _*))
       .select($"vec_id", $"a.cid".as("centroid_id"))
@@ -1355,67 +1356,6 @@ object Similarity {
     recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
   }
 
-  /** IVF-PQ with FAISS-style per-cell RESIDUAL encoding — the measured
-    * alternative to `ivfPqAnnRecall`'s raw-vector simplification.
-    * Codebooks are trained on r = v − centroid(cell(v)) and the stored
-    * codes quantize residuals; at query time the candidate score
-    * recomposes dot(q, ĉ + r̂) = dot(q, centroid) + Σ_s ADC(q_s, code_s),
-    * where the per-(query, cell) centroid offsets are a driver-built
-    * nQueries×nCentroids broadcast and the ADC half is the same
-    * broadcast table join as the raw form. The price of the accuracy
-    * gain: every code is meaningful only relative to its cell, so the
-    * code table is welded to the coarse quantizer (re-cluster ⇒
-    * re-encode), and training sees the residual corpus (one extra
-    * corpus-linear join against the broadcast centroid table).
-    * `ProfileResidualPq` measures the recall@k delta of the two forms
-    * at shared dials; the decision and numbers live in SURVEY §6.7.
-    */
-  def ivfPqResidualRecall(embeddings: DataFrame, nCentroids: Int = 16, nProbe: Int = 4,
-      m: Int = 8, codes: Int = 16, iters: Int = 2, shortlist: Int = 50,
-      nQueries: Int = 5, k: Int = 3, coarseIters: Int = 0): DataFrame = {
-    def round6(x: Double): Double = graft.functions.Rounding.halfUp(x, 6)
-    def ddot(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
-    val spark = embeddings.sparkSession
-    val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-      .localCheckpoint()
-    val cents = lloydRefine(corpus, md5Coreset(corpus, nCentroids), coarseIters)
-    val centDf = spark.createDataFrame(cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) })
-      .toDF("centroid_id", "cv")
-    val assigned = corpus
-      .withColumn("a", least(cellStructs(cents, $"v"): _*))
-      .select($"vec_id", $"v", $"a.cid".as("centroid_id"))
-    val residCorpus = assigned.join(broadcast(centDf), Seq("centroid_id"))
-      .select($"vec_id", zip_with($"v", $"cv", (x, c) => x - c).as("v"))
-      .localCheckpoint()
-    val (codesLong, _, books) = pqModel(residCorpus, m, codes, iters, nQueries = 0)
-    val adcTables = buildAdcTables(corpus, books, nQueries) // RAW query vectors
-    val qVecs = corpus.filter($"vec_id" < nQueries).select($"vec_id", $"v")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val qcDf = spark.createDataFrame(for {
-      (qid, qv) <- qVecs.toSeq; (cid, cv) <- cents.toSeq
-    } yield (qid, cid, round6(ddot(qv, cv)))).toDF("query_id", "centroid_id", "qc")
-    val probes = corpus.filter($"vec_id" < nQueries)
-      .select($"vec_id".as("query_id"),
-        explode(probeCellsExpr(cents, $"v", nProbe)).as("centroid_id"))
-    val candPairs = assigned
-      .join(broadcast(probes), Seq("centroid_id"))
-      .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id", $"centroid_id")
-    val adcScores = codesLong
-      .join(candPairs, Seq("vec_id"))
-      .join(broadcast(adcTables), Seq("query_id", "s", "cid"))
-      .groupBy($"query_id", $"vec_id".as("neighbor_id"), $"centroid_id")
-      .agg(round(sum($"t"), 6).as("r"))
-      .join(broadcast(qcDf), Seq("query_id", "centroid_id"))
-      .select($"query_id", $"neighbor_id", round($"r" + $"qc", 6).as("adc"))
-    val approx = pqShortlistRerank(corpus, adcScores, shortlist, nQueries, k)
-    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
-  }
-
   /** IVF (inverted-file) ANN — the second scale path beside LSH: partition
     * the corpus into `nCentroids` cells by nearest centroid, then scan only
     * the `nProbe` cells nearest each query. Candidate volume is
@@ -1449,12 +1389,8 @@ object Similarity {
 
   /** Lloyd refinement of a coarse-centroid set (the `kmeansClusters`
     * update rule: rounded-cosine argmin assignment, per-dimension means
-    * rounded half-up at 6; empty cells keep their centroid). `iters = 0`
-    * returns the input unchanged — the md5-coreset default every
-    * registered query uses. Non-zero iters is the measurement dial for
-    * the residual-PQ trade (SURVEY §6.7): residual encoding is only
-    * meaningful against a TRAINED coarse quantizer, where residuals are
-    * actually small.
+    * rounded half-up at 6; empty cells keep their centroid) —
+    * `clusterStability`'s second, differently-seeded training.
     */
   private def lloydRefine(corpus: DataFrame,
       cents0: Array[(Long, Array[Double])], iters: Int): Array[(Long, Array[Double])] = {
@@ -1581,7 +1517,8 @@ object Similarity {
     * k×dim centroid table between rounds — exactly what it must broadcast
     * anyway. Output: per-cluster size and mean member cosine (cohesion).
     *
-    * Known codegen ceiling (measured, ProfileScaling semdedup x3/x10):
+    * Known codegen ceiling (measured on the x3/x10 semdedup replicas,
+    * SURVEY §6.4; code at 56418f6):
     * the broadcast-literal argmin stops whole-stage-codegenning around
     * k·dim ≈ 10^4 (Janino's 64 KB method limit — k=160 at dim=64 falls
     * back to interpreted evaluation: correct, logged, slower). A run
@@ -1932,8 +1869,8 @@ object Similarity {
     *     32x16 = 0.05%.
     *   - recall at cos 0.9 (p = 0.856): 8x6 = 98%, 24x12 = 98%,
     *     32x16 = 94%.
-    * MEASURED (ProfileScaling lsh-dial, x1 corpus + 100 planted pairs at
-    * cos ~0.92, the decorrelated coef family): 8x6 = 312k candidates /
+    * MEASURED (SURVEY §6.4, code at 56418f6; x1 corpus + 100 planted
+    * pairs at cos ~0.92, the decorrelated coef family): 8x6 = 312k candidates /
     * 100 of 100 planted recovered; 24x12 = 18k / 100 of 100 — a 17x
     * candidate cut at equal recall, confirming the independent-plane
     * math. (The same experiment run against the earlier ADDITIVE coef
@@ -1958,7 +1895,7 @@ object Similarity {
     * check would be vacuous. The slice plants a deterministic near-dup
     * twin for each `vec_id < nPlanted`: u_j = 0.92·v_j + s_j·0.39·
     * v_((j+dim/2) mod dim) with s_j the (j·7919+3) parity sign — the
-    * ProfileScaling round-5 construction, norm-preserving
+    * round-5 lsh-dial construction (SURVEY §6.4), norm-preserving
     * (0.92²+0.39² ≈ 1) so the planted cosine sits at ~0.92 regardless
     * of fixture norms. A correct 24×12 banding MUST recover those pairs
     * (per-pair recall 1-(1-p¹²)²⁴ ≈ 0.99 at p(0.92) = 0.87) and a
@@ -2108,10 +2045,11 @@ object Similarity {
       // K² in-bucket expansion, so at a loose dial the planner picked
       // BroadcastHashJoin with the QUADRATIC candidate set as build side —
       // fine by luck at fixture scale, a hard driver-side failure at ×30
-      // (maxResultSize, then broadcast-build OOM; reproduced by
-      // ProfileNeardupPlan). The hint pins a shuffled hash join built on
-      // the corpus side: per-partition builds, nothing ever collected to
-      // the driver, no sort of the (possibly huge) candidate side.
+      // (maxResultSize, then broadcast-build OOM; reproduction in
+      // SURVEY §6.11, code at 56418f6). The hint pins a shuffled hash
+      // join built on the corpus side: per-partition builds, nothing ever
+      // collected to the driver, no sort of the (possibly huge) candidate
+      // side.
       candidates
         .join(corpus.select($"vec_id".as("id1"), $"v".as("v1")).hint("shuffle_hash"), Seq("id1"))
         .join(corpus.select($"vec_id".as("id2"), $"v".as("v2")).hint("shuffle_hash"), Seq("id2"))

@@ -523,8 +523,21 @@ object TextAnalysis {
     * kmeans pattern), and a codegen'd chain of `replace` rewrites,
     * localCheckpointed so round plans stay flat.
     */
-  def bpeMerges(documents: DataFrame, nMerges: Int = 5): DataFrame =
-    bpeMergesWithRounds(documents, nMerges)._1
+  def bpeMerges(documents: DataFrame, nMerges: Int = 5): DataFrame = {
+    val spark = documents.sparkSession
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+    val mergeRows = SessionArtifacts.getOrBuild(
+      BpeMergeTables, documents, nMerges)(trainBpeMerges(documents, nMerges))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(mergeRows.map {
+        case (rk, p, m, c) => Row(rk, p, m, c) }, 1),
+      StructType(Seq(StructField("rank", IntegerType, nullable = false),
+        StructField("pair", StringType, nullable = false),
+        StructField("merged", StringType, nullable = false),
+        StructField("freq", LongType, nullable = false))))
+      .orderBy($"rank")
+  }
 
   /** Session-scoped cache of trained BPE merge tables — the centroid-
     * cache pattern (r14): the table is nMerges DRIVER-side rows, but
@@ -534,31 +547,10 @@ object TextAnalysis {
     * merges) used to each pay the full loop. Keyed by (session, corpus
     * plan, nMerges); holds no executor blocks.
     */
-  private val BpeMergeTables = new SessionArtifacts.Kind[(Seq[(Int, String, String, Long)], Int)]
-
-  /** [[bpeMerges]] plus the number of rounds the batched training took —
-    * the sub-linearity evidence ProfileScaling reports (nMerges merges in
-    * far fewer than nMerges rounds).
-    */
-  def bpeMergesWithRounds(documents: DataFrame, nMerges: Int): (DataFrame, Int) = {
-    val spark = documents.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
-    val (mergeRows, roundsTaken) = SessionArtifacts.getOrBuild(
-      BpeMergeTables, documents, nMerges)(trainBpeMerges(documents, nMerges))
-    val out = spark.createDataFrame(
-      spark.sparkContext.parallelize(mergeRows.map {
-        case (rk, p, m, c) => Row(rk, p, m, c) }, 1),
-      StructType(Seq(StructField("rank", IntegerType, nullable = false),
-        StructField("pair", StringType, nullable = false),
-        StructField("merged", StringType, nullable = false),
-        StructField("freq", LongType, nullable = false))))
-      .orderBy($"rank")
-    (out, roundsTaken)
-  }
+  private val BpeMergeTables = new SessionArtifacts.Kind[Seq[(Int, String, String, Long)]]
 
   private def trainBpeMerges(documents: DataFrame,
-      nMerges: Int): (Seq[(Int, String, String, Long)], Int) = {
+      nMerges: Int): Seq[(Int, String, String, Long)] = {
     var seqs = documents
       .select(explode(split($"text", " ")).as("w"))
       .filter(length($"w") > 0)
@@ -566,10 +558,8 @@ object TextAnalysis {
       .select($"freq", concat(regexp_replace($"w", "(.)", "$1 "), lit("</w>")).as("seq"))
       .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rounds = 0
     var exhausted = false
     while (merges.size < nMerges && !exhausted) {
-      rounds += 1
       val remaining = nMerges - merges.size
       val counts = seqs
         .select($"freq", split($"seq", " ").as("ss"))
@@ -577,7 +567,7 @@ object TextAnalysis {
         // be filtered before the transform: Spark's sequence(1, 0) is the
         // DESCENDING [1, 0], so element_at(ss, 2) on a 1-symbol word is an
         // ANSI index error (latent until a 64-merge training run collapsed
-        // a word; caught by the ProfileScaling bpe64 point)
+        // a word; SURVEY §6.4, code at 56418f6)
         .filter(size($"ss") >= 2)
         .select($"freq", explode(expr(
           "transform(sequence(1, size(ss) - 1), i -> concat(element_at(ss, i), ' ', element_at(ss, i + 1)))")).as("p"))
@@ -615,7 +605,7 @@ object TextAnalysis {
           .localCheckpoint()
       }
     }
-    (merges.toSeq, rounds)
+    merges.toSeq
   }
 
   /** Per-source quality-distribution drift vs the corpus baseline —

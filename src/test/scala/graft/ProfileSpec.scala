@@ -1,0 +1,58 @@
+package graft
+
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import org.apache.spark.SparkContext
+
+/** `Profile.profile` on the shared session: one JSON line per query, a
+  * failing query does not stop the run, the executed plan lands on disk,
+  * and the listeners it adds are gone afterwards.
+  */
+class ProfileSpec extends GraftSuite {
+
+  /** Every Spark and query-execution listener on the session (both
+    * registries are Spark-private, hence the reflection).
+    */
+  private def listeners(): Seq[AnyRef] = {
+    val bus = classOf[SparkContext].getMethod("listenerBus").invoke(spark.sparkContext)
+    val sparkListeners = bus.getClass.getMethod("listeners").invoke(bus)
+      .asInstanceOf[java.util.List[AnyRef]].asScala.toSeq
+    val manager = spark.listenerManager
+    val qeListeners = manager.getClass.getMethod("listListeners").invoke(manager)
+      .asInstanceOf[Array[AnyRef]].toSeq
+    sparkListeners ++ qeListeners
+  }
+
+  test("profile prints one line per query, survives a failure, writes the plan and removes its listeners") {
+    val out = Files.createTempDirectory("graft_profile")
+    spark.range(1).collect() // the session registers its own listeners lazily
+    val before = listeners()
+    val lines = Profile.profile(spark, sf, Seq("q00_not_registered", "q01_sum_by_group"), out)
+    assert(lines.length === 2) // the failure comes first and the run goes on
+    val Seq(failed, ok) = lines.map(new ObjectMapper().readTree(_))
+
+    assert(failed.get("query").asText === "q00_not_registered")
+    assert(failed.get("status").asText !== "ok")
+    assert(failed.get("plan").isNull)
+
+    assert(ok.get("query").asText === "q01_sum_by_group")
+    assert(ok.get("status").asText === "ok")
+    assert(ok.get("jobs").asInt >= 1)
+    assert(ok.get("job_sum_s").asDouble >= 0.0)
+    assert(ok.get("driver_gap_s").asDouble <= ok.get("wall_s").asDouble)
+    val plan = out.resolve("q01.txt")
+    assert(ok.get("plan").asText === plan.toString)
+    assert(Files.readString(plan).contains("== Physical Plan =="))
+
+    assert(!listeners().exists(_.getClass.getName.startsWith("graft.Profile")))
+    // Spark creates the session's query-execution listener bus on the
+    // first registration and keeps it; nothing else may stay behind
+    val added = listeners().filterNot(before.contains)
+    assert(added.forall(_.getClass.getName == "org.apache.spark.sql.util.ExecutionListenerBus"),
+      added)
+  }
+}

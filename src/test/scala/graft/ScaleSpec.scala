@@ -589,9 +589,10 @@ class ScaleSpec extends GraftSuite {
     // below EXACTLY, so a new site (even one sitting over a
     // corpus-proportional aggregate like groupBy(user_id), which rule 1
     // cannot distinguish from a domain-keyed one) fails until a human
-    // audits it and updates the list. Inventory tool:
-    // `Test/runMain graft.ProfileWindows`; the audit of all 95 current
-    // sites (every one bounded) is recorded in SURVEY §6.
+    // audits it and updates the list. Inventory: the executed plan that
+    // `runMain graft.Profile` writes to target/profile/<qNN>.txt; the
+    // audit of all 95 current sites (every one bounded) is recorded in
+    // SURVEY §6.
     import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.SparkPlan
@@ -686,7 +687,7 @@ class ScaleSpec extends GraftSuite {
               if (wins.size != allowedWindows.getOrElse(name, 0))
                 Seq(s"$name: ${wins.size} unpartitioned windows, allowlist says " +
                   s"${allowedWindows.getOrElse(name, 0)} — audit the new site " +
-                  "(Test/runMain graft.ProfileWindows) and update allowedWindows")
+                  "(runMain graft.Profile, target/profile/<qNN>.txt) and update allowedWindows")
               else Seq.empty
             broadcastHits ++ unbounded ++ countHit
           }
