@@ -25,7 +25,7 @@ object FidelityMain {
       val result =
         if (strict) Fidelity.donationTotalByStateStrict(donors, donations)
         else Fidelity.donationTotalByState(donors, donations)
-      CsvSource.writeResultCsv(result.coalesce(1), "donor_state", "total", outPath)
+      CsvSource.writeResultCsv(result, "donor_state", "total", outPath)
       println(s"[graft] wrote ${outPath}")
     } finally spark.stop()
   }

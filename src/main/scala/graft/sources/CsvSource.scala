@@ -65,8 +65,13 @@ object CsvSource {
     * files carrying the ORIGINAL header, unprojected columns blank —
     * the reference's chunk-file sink (`D/Program.cs:496-504` writes
     * `{id},,{state},,` under the full donors header). One file per range
-    * partition, ranges key-disjoint (the cutoff-vector property, proven in
-    * FidelitySpec's co-partition test).
+    * partition, ranges key-disjoint within this side.
+    *
+    * Not the reference's cutoff vector: each writer samples its own range
+    * bounds, so donor chunk i and donation chunk i need not cover the same
+    * keys. The reference routes donations by the donor cutoffs
+    * (`D/Program.cs:121-127`), which pairs chunk i with chunk i (SURVEY
+    * §7.4).
     */
   def writeDonorChunks(donors: DataFrame, partitions: Int, path: String): Unit =
     donors
@@ -78,7 +83,8 @@ object CsvSource {
       .write.mode("overwrite").option("header", "true").option("emptyValue", "").csv(path)
 
   /** O16, donation side (`D/Program.cs:486-494`: `,,{id},,{amount F2},`
-    * under the full donations header).
+    * under the full donations header), range-partitioned on its own sampled
+    * bounds (see `writeDonorChunks`).
     */
   def writeDonationChunks(donations: DataFrame, partitions: Int, path: String): Unit =
     donations

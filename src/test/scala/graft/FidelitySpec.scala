@@ -2,6 +2,11 @@ package graft
 
 import org.apache.spark.SparkException
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Fidelity
@@ -10,7 +15,7 @@ import graft.sources.CsvSource
 /** Golden-file fidelity against the reference's exact input/output format
   * (FIXTURES.md §1; golden role = `/root/reference/D/bin/Debug/result.csv`).
   */
-class FidelitySpec extends GraftSuite {
+class FidelitySpec extends GraftSuite with AdaptiveSparkPlanHelper {
 
   private def res(name: String): String =
     getClass.getResource(s"/fidelity/$name").getPath
@@ -111,20 +116,61 @@ class FidelitySpec extends GraftSuite {
     assert(donationsBack === donations.collect().map(r => (r.getString(0), r.getDouble(1))).toSet)
   }
 
-  test("range co-partition preserves totals and co-locates keys (O8/O9)") {
-    for (parts <- Seq(1, 3)) {
-      val (d, dn) = Fidelity.rangeCoPartition(donors, donations, parts)
-      val got = Fidelity.donationTotalByState(d, dn)
-        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      assert(got === Seq(("California", 125.75), ("New York", 10.10), ("Texas", 56.00)))
+  /** A skewed donor/donation pair written in the reference's CSV layout:
+    * one hot donor with 400 donations, a donor with a blank state, and
+    * donations with an empty amount.
+    */
+  private lazy val skewedDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_skewed")
+    val rnd = new scala.util.Random(7)
+    val states = Seq("Alaska", "Ohio", "Texas", "Utah")
+    val ids = (0 until 40).map(i => f"K$i%03d")
+    val donorLines = ids.zipWithIndex.map { case (id, i) =>
+      val state = if (i == 39) "" else states(i % states.size)
+      s"$id,City,$state,No,00000"
     }
-    // range partitions are key-disjoint: each donor_id maps to one partition
-    val (_, dn3) = Fidelity.rangeCoPartition(donors, donations, 3)
-    val spread = dn3.withColumn("pid", spark_partition_id())
-      .groupBy($"donor_id").agg(countDistinct($"pid").as("nparts"))
-      .agg(max($"nparts")).collect()(0).getLong(0)
-    assert(spread === 1L)
+    val donationLines = ids.zipWithIndex.flatMap { case (id, i) =>
+      Seq.fill(if (i == 0) 400 else rnd.nextInt(3) + 1) {
+        val amount = if (rnd.nextInt(10) == 0) "" else f"${rnd.nextInt(100000) / 100.0}%.2f"
+        s"P,X,$id,No,$amount,1"
+      }
+    }
+    java.nio.file.Files.writeString(dir.resolve("donors.csv"),
+      ("Donor ID,Donor City,Donor State,Donor Is Teacher,Donor Zip" +: donorLines)
+        .mkString("", "\n", "\n"))
+    val donationHeader = "Project ID,Donation ID,Donor ID,Donation Included Optional Donation," +
+      "Donation Amount,Donor Cart Sequence"
+    java.nio.file.Files.writeString(dir.resolve("donations.csv"),
+      (donationHeader +: donationLines).mkString("", "\n", "\n"))
+    dir.toString
   }
+
+  for ((name, strict) <- Seq("donationTotalByState" -> false, "donationTotalByStateStrict" -> true))
+    test(s"$name is a shuffled hash join building donors, with no range exchange, " +
+        "and equals its sort-merge build") {
+      val skewedDonors = CsvSource.donors(spark, s"$skewedDir/donors.csv")
+      val skewedDonations = CsvSource.donations(spark, s"$skewedDir/donations.csv")
+      assert(skewedDonors.filter($"donor_state".isNull).count() === 1)
+      assert(skewedDonations.filter($"amount" === 0.0).count() > 0)
+      for ((d, dn) <- Seq((donors, donations), (skewedDonors, skewedDonations))) {
+        val hashed =
+          if (strict) Fidelity.donationTotalByStateStrict(d, dn)
+          else Fidelity.donationTotalByState(d, dn)
+        val merged = Fidelity.totalByState(d, dn, strict, "merge")
+        assert(hashed.collect().toSeq === merged.collect().toSeq)
+        val plan = hashed.queryExecution.executedPlan
+        assert(plan.toString.contains("isFinalPlan=true"), plan)
+        assert(collect(plan) { case j: ShuffledHashJoinExec => j.buildSide } === Seq(BuildRight),
+          plan)
+        assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, plan)
+        assert(collect(plan) {
+          case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+        }.isEmpty, plan)
+        // the merge build is a sort-merge join, so two different plans agree
+        assert(collect(merged.queryExecution.executedPlan) { case j: SortMergeJoinExec => j }
+          .size === 1)
+      }
+    }
 
   private implicit class Interp(private val sc: StringContext) {
     def $(args: Any*): org.apache.spark.sql.Column = col(sc.s(args: _*))

@@ -42,24 +42,6 @@ class PropertySpec extends GraftSuite {
       }
   }
 
-  test("property: repartitionByRange co-partitions build and probe consistently (O8/O9)") {
-    import spark.implicits._
-    samples(donorGen, 6).filter(_.length >= 2).foreach { donors =>
-      val donations = donors.map { case (id, _) => (id, 1.0) }
-      val (d, dn) = Fidelity.rangeCoPartition(
-        donors.toDF("donor_id", "donor_state"),
-        donations.toDF("donor_id", "amount"), 3)
-      // each donor_id lands in the same partition on both sides (the
-      // cutoff-routing invariant the reference requires of its binary
-      // search, D/Program.cs:121-127)
-      val dParts = d.select($"donor_id", spark_partition_id().as("p"))
-        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-      val dnParts = dn.select($"donor_id", spark_partition_id().as("p"))
-        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-      dnParts.foreach { case (id, p) => assert(dParts(id) === p, s"donor $id split across sides") }
-    }
-  }
-
   test("property: simhash pigeonhole banding finds EVERY pair within the hamming budget") {
     import spark.implicits._
     // adversarial near-dup corpora: clusters of texts derived from a base by
