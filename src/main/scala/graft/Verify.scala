@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.reflect.io.Directory
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -38,6 +40,23 @@ object Verify {
     }
   }
 
+  /** Writes each kept query's result to `$outDir/$name` and returns the
+    * names that failed. A query's output dir is deleted before the query
+    * runs, so a failure leaves no earlier run's parquet for the oracle
+    * compare to read.
+    */
+  private[graft] def dumpQueries(spark: SparkSession, sfDir: String, outDir: String,
+      keep: String => Boolean): Seq[String] =
+    SparkEntry.queries.toSeq.filter { case (name, _) => keep(name) }.flatMap { case (name, fn) =>
+      val out = s"$outDir/$name"
+      new Directory(new java.io.File(out)).deleteRecursively()
+      try { stableSingleFile(fn(spark, sfDir)).write.parquet(out); None }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -52,15 +71,7 @@ object Verify {
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_VERIFY_QUERIES").map(_.split(",").map(_.trim).toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name)) {
-        try stableSingleFile(fn(spark, sfDir)).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-      }
-    }
+    dumpQueries(spark, sfDir, outDir, keep)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

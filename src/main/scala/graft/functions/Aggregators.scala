@@ -29,40 +29,6 @@ object Rounding {
   */
 object Aggregators {
 
-  /** Welford/Chan parallel mean+variance: numerically stable one-pass
-    * moments that merge associatively across partitions — the shape every
-    * distributive sketch at 100 TB follows (partial per partition, merge at
-    * the reducer).
-    */
-  case class Moments(n: Long, mean: Double, m2: Double) {
-    def variance: Double = if (n < 2) 0.0 else m2 / (n - 1)
-    def stddev: Double = math.sqrt(variance)
-  }
-
-  class MomentsAgg extends Aggregator[Double, Moments, Moments] {
-    override def zero: Moments = Moments(0L, 0.0, 0.0)
-    override def reduce(b: Moments, x: Double): Moments = {
-      val n = b.n + 1
-      val delta = x - b.mean
-      val mean = b.mean + delta / n
-      Moments(n, mean, b.m2 + delta * (x - mean))
-    }
-    override def merge(a: Moments, b: Moments): Moments = {
-      if (a.n == 0) b
-      else if (b.n == 0) a
-      else {
-        val n = a.n + b.n
-        val delta = b.mean - a.mean
-        Moments(n,
-          a.mean + delta * b.n / n,
-          a.m2 + b.m2 + delta * delta * a.n * b.n / n)
-      }
-    }
-    override def finish(r: Moments): Moments = r
-    override def bufferEncoder: Encoder[Moments] = Encoders.product[Moments]
-    override def outputEncoder: Encoder[Moments] = Encoders.product[Moments]
-  }
-
   /** The reference's two-level sum as an explicit Aggregator: `reduce` is
     * the per-worker running sum (D/Program.cs:312-315), `merge` the
     * master's AddOrUpdate fold (D/Program.cs:162). Functionally identical
@@ -78,8 +44,6 @@ object Aggregators {
     override def bufferEncoder: Encoder[Double] = Encoders.scalaDouble
     override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
-
-  class TwoLevelSum extends TwoLevelSumOf[Double](identity)
 
   /** Element-wise vector sum over `array<double>` columns — the aggregation
     * that keeps k-means centroid updates shuffle-light: per-partition

@@ -177,9 +177,8 @@ object Curation {
     * parallel, the right shape for a 100 TB scrub pass.
     *
     * The fixtures contain no structural PII (the oracle verifies the
-    * zeros); the redaction mechanics are proven in CurationSpec on
-    * planted emails/phones/SSNs via `redactText`, which rewrites matches
-    * to `<pii>` / `<redacted>` tokens.
+    * zeros); CurationSpec plants emails/phones/SSNs and denylist terms
+    * to prove the counting.
     */
   val EmailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
   val PhoneRe = "\\b[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}\\b"
@@ -189,13 +188,6 @@ object Curation {
     regexp_count(lower(text), lit(EmailRe)) +
       regexp_count(lower(text), lit(PhoneRe)) +
       regexp_count(lower(text), lit(SsnRe))
-
-  def redactText(text: Column, denyTerms: Seq[String]): Column = {
-    val piiClean = Seq(EmailRe, PhoneRe, SsnRe)
-      .foldLeft(lower(text))((t, re) => regexp_replace(t, re, "<pii>"))
-    denyTerms.foldLeft(piiClean)((t, term) =>
-      regexp_replace(t, s"\\b${java.util.regex.Pattern.quote(term)}\\b", "<redacted>"))
-  }
 
   def redactionReport(documents: DataFrame,
       denyTerms: Seq[String] = Seq("customer", "vector")): DataFrame = {
@@ -904,10 +896,9 @@ object Curation {
   }
 
   /** Persist one slice's datasheet partials — the production write each
-    * ingest batch performs (the BM25/PQ persisted-index pattern,
-    * `TextAnalysis.writeBm25Index`). Shard dirs must be doc-disjoint for
-    * the same reason BM25 shards must be: partials are additive masses,
-    * and an overlapping doc would be counted once per shard.
+    * ingest batch performs. Shard dirs must be doc-disjoint: partials are
+    * additive masses, and an overlapping doc would be counted once per
+    * shard.
     */
   def writeDatasheetPartials(documents: DataFrame, dir: String): Unit = {
     datasheetPartials(documents).write.mode("overwrite").parquet(dir)
@@ -1430,19 +1421,8 @@ object Curation {
     */
   def qualityClassifierEval(documents: DataFrame, targetLang: String = "en",
       buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625): DataFrame = {
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
-    evalCore(documents, fx, w, targetLang)
-  }
-
-  /** The q144 confusion pass given an already-built feature frame and
-    * weight vector — the ONE scoring code path behind both the session
-    * route (`qualityClassifierEval`) and the persisted-model route
-    * (`qualityClassifierEvalFromModel`), so the round-trip law tests the
-    * model artifact, not two scorers.
-    */
-  private def evalCore(documents: DataFrame, fx: DataFrame,
-      w: Seq[(Long, Long)], targetLang: String): DataFrame = {
     val spark = documents.sparkSession
+    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
     val labels = documents.select($"doc_id",
       when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
     val scored = fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
@@ -1457,44 +1437,6 @@ object Curation {
       .select($"y", $"pred", $"n_docs",
         round($"n_docs" / sum($"n_docs").over(byLabel), 6).as("frac_of_label"))
       .orderBy($"y", $"pred")
-  }
-
-  /** Persist the trained quality-classifier model — the (buckets+1)-row
-    * micro-unit weight table plus its training dial, self-describing so
-    * the serving side reads the hash-bucket count and target language
-    * from the artifact instead of trusting a caller to repeat them (a
-    * mismatched bucket dial would score garbage silently). Training
-    * rides the session weights cache (q143 the carrier), so persisting
-    * after a training run costs only the ~65-row write. The model twin
-    * of the BM25/hyperplane/PQ index laws: serving from the artifact
-    * equals the session path bit-for-bit (spec'd).
-    */
-  def writeClassifierModel(documents: DataFrame, dir: String,
-      targetLang: String = "en", buckets: Int = 64, rounds: Int = 4,
-      lr: Double = 0.0009765625): Unit = {
-    val spark = documents.sparkSession
-    val (_, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
-    spark.createDataFrame(w.map { case (b, wm) => (b, wm, targetLang, buckets) })
-      .toDF("b", "w_micro", "target_lang", "buckets")
-      .write.mode("overwrite").parquet(s"$dir/weights")
-  }
-
-  private def readClassifierModel(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Seq[(Long, Long)], String, Int) = {
-    val rows = spark.read.parquet(s"$dir/weights").collect()
-    require(rows.nonEmpty, s"empty classifier model at $dir/weights")
-    val w = rows.map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
-    (w, rows.head.getAs[String]("target_lang"), rows.head.getAs[Int]("buckets"))
-  }
-
-  /** q144's confusion matrix served from a persisted model: weights,
-    * target language, and the bucket dial all come off the artifact; the
-    * batch pays one tokenize+hash pass (the session feature-frame cache
-    * still applies) and one corpus-linear scoring pass.
-    */
-  def qualityClassifierEvalFromModel(documents: DataFrame, dir: String): DataFrame = {
-    val (w, lang, buckets) = readClassifierModel(documents.sparkSession, dir)
-    evalCore(documents, cachedFeatureFrame(documents, buckets), w, lang)
   }
 
   /** Classifier-guided acceptance sampling (q145) — the GPT-3 curation
@@ -1515,26 +1457,8 @@ object Curation {
     */
   def classifierSample(documents: DataFrame, targetLang: String = "en",
       buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625): DataFrame = {
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
-    sampleCore(documents, fx, w)
-  }
-
-  /** q145's acceptance sampling served from a persisted model — the
-    * production filter shape: train once, persist, filter every
-    * subsequent ingest batch from the artifact.
-    */
-  def classifierSampleFromModel(documents: DataFrame, dir: String): DataFrame = {
-    val (w, _, buckets) = readClassifierModel(documents.sparkSession, dir)
-    sampleCore(documents, cachedFeatureFrame(documents, buckets), w)
-  }
-
-  /** The q145 scoring + acceptance pass given a feature frame and weight
-    * vector — shared by the session and persisted-model routes (see
-    * `evalCore`).
-    */
-  private def sampleCore(documents: DataFrame, fx: DataFrame,
-      w: Seq[(Long, Long)]): DataFrame = {
     val spark = documents.sparkSession
+    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
     val scored = fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
       .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
       .select($"doc_id",

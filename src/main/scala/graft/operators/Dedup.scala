@@ -96,7 +96,6 @@ object Dedup {
     */
   val NumHashes = 126
   val BandRows  = 6
-  val NumBands: Int = NumHashes / BandRows // 21
 
   /** Candidate pairs from LSH banding, verified with exact Jaccard.
     * Signatures come from one fused codegen'd pass per document (native

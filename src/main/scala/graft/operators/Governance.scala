@@ -14,20 +14,19 @@ import org.apache.spark.sql.functions._
   *      corpus-dependent statistic (df, N, avgdl for BM25) recomputes
   *      from SURVIVING rows, so tombstone serving is bit-for-bit the
   *      ranking a re-ingest of the filtered corpus would produce (the
-  *      law q163's oracle checks, and GovernanceSpec checks against the
-  *      persisted index); and
-  *   2. periodic COMPACTION — physically drop tombstoned rows and merge
-  *      shards, after which serving the compacted index with an empty
-  *      delete list equals tombstone serving of the originals (spec'd).
+  *      law q163's oracle checks); and
+  *   2. periodic COMPACTION — physically drop tombstoned rows, after
+  *      which serving with an empty delete list equals tombstone serving
+  *      of the originals. No registered query compacts, so this module
+  *      implements the tombstone half only.
   *
   * The reference engine (D/Program.cs) has no deletion story at all —
-  * this family is part of the pipeline-scale extension surface, like the
-  * persisted BM25/PQ indexes it rides on.
+  * this family is part of the pipeline-scale extension surface.
   *
   * Scale shape: the delete list is requests-proportional (thousands of
   * rows against billions), so every anti-join here broadcasts it; no new
   * shuffle is introduced anywhere — tombstoning adds one broadcast hash
-  * join per index scan, and compaction is a copy-through write.
+  * join per index scan.
   */
 object Governance {
 
@@ -47,9 +46,9 @@ object Governance {
     * tf) frame and the doclen frame, NOT the raw text, exactly as a
     * serving tier would treat a persisted index it cannot rebuild. The
     * ranking core is `TextAnalysis.bm25Rank` — the same code path as q79
-    * and the persisted-index route — so df/N/avgdl recompute from
-    * surviving rows and the result is bit-identical to re-ingesting the
-    * filtered corpus (which is what the DuckDB oracle computes).
+    * — so df/N/avgdl recompute from surviving rows and the result is
+    * bit-identical to re-ingesting the filtered corpus (which is what the
+    * DuckDB oracle computes).
     */
   def erasureBm25(documents: DataFrame, deletes: DataFrame,
       query: Seq[String] = Seq("table", "data", "row"),
@@ -65,42 +64,6 @@ object Governance {
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("tf"))
     TextAnalysis.bm25Rank(tf, dl, k1, b, topk)
-  }
-
-  /** Tombstone serving against the PERSISTED index (`writeBm25Index`
-    * shards): postings are term-pruned by pushdown first, then both index
-    * frames anti-join the broadcast delete list before the shared q79
-    * ranking core. Query-proportional compute plus one broadcast join —
-    * the corpus is never re-tokenized and the index files are untouched.
-    */
-  def bm25ServeWithTombstones(spark: SparkSession, dirs: Seq[String],
-      deletes: DataFrame, query: Seq[String] = Seq("table", "data", "row"),
-      k1: Double = 1.2, b: Double = 0.75, topk: Int = 20): DataFrame = {
-    require(dirs.nonEmpty, "bm25ServeWithTombstones: no index shard dirs")
-    val del = broadcast(deletes.select($"doc_id"))
-    val tf = spark.read.parquet(dirs.map(d => s"$d/postings"): _*)
-      .filter($"term".isin(query: _*))
-      .join(del, Seq("doc_id"), "left_anti")
-    val dl = spark.read.parquet(dirs.map(d => s"$d/doclen"): _*)
-      .join(del, Seq("doc_id"), "left_anti")
-    TextAnalysis.bm25Rank(tf, dl, k1, b, topk)
-  }
-
-  /** Physical compaction: apply the tombstones and merge shards into one
-    * index dir. After this, `bm25FromIndex(Seq(outDir))` with no delete
-    * list equals `bm25ServeWithTombstones(dirs, deletes)` (spec'd law) —
-    * i.e. compaction is an optimization, never a semantics change. A
-    * copy-through columnar write: no shuffle, no re-tokenization.
-    */
-  def compactBm25Index(spark: SparkSession, dirs: Seq[String],
-      deletes: DataFrame, outDir: String): Unit = {
-    val del = broadcast(deletes.select($"doc_id"))
-    spark.read.parquet(dirs.map(d => s"$d/postings"): _*)
-      .join(del, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$outDir/postings")
-    spark.read.parquet(dirs.map(d => s"$d/doclen"): _*)
-      .join(del, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$outDir/doclen")
   }
 
   /** q165: near-dup survivor selection under erasure — tombstones applied
@@ -500,9 +463,9 @@ object Governance {
   }
 
   /** Read-time enforcement: throw unless the artifact at `dir` was
-    * built from exactly the given current slice. The serve paths take
-    * this as an opt-in precondition (a production deployment runs it on
-    * artifact publish and on a schedule, not per query).
+    * built from exactly the given current slice. No query serves from a
+    * persisted artifact, so no query calls it; a deployment runs it on
+    * artifact publish and on a schedule, not per query.
     */
   def requireFresh(spark: SparkSession, dir: String, current: DataFrame,
       canonical: Column, label: String = "artifact"): Unit = {

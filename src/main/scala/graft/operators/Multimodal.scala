@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing (SURVEY.md §2.2 ➕): image/audio/video as
   * opaque `binary` columns with typed metadata, plus the decode /
@@ -20,19 +19,6 @@ import org.apache.spark.sql.types._
   * real byte work by construction.
   */
 object Multimodal {
-
-  /** Media asset schema: opaque payload + typed metadata, the layout a
-    * 100 TB multimodal lake uses (payload in parquet binary or pointers to
-    * object storage; metadata filterable without touching bytes).
-    */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType),
-      StructField("n_bytes", LongType),
-      StructField("checksum", StringType))), nullable = true)))
 
   /** Synthesize a binary asset table from `documents` (the driver fixtures
     * carry no real media): payload = UTF-8 bytes of the text. Deterministic,
@@ -152,23 +138,6 @@ object Multimodal {
       }
       (w, h, px)
     }
-  }
-
-  /** Real binary assets: one deterministic BMP per document id, tagged
-    * with the q35 media-type rotation. Encoding runs per-partition (the
-    * batch shape a real media pipeline uses). Since round 14 this is the
-    * GENERATOR behind the `bmp` kind of `assetStore` — queries consume
-    * the parquet-backed store, not this in-flight frame.
-    */
-  def bmpAssets(documents: DataFrame): DataFrame = {
-    import documents.sparkSession.implicits.{newLongEncoder, newProductEncoder}
-    documents.select($"doc_id").as[Long]
-      .mapPartitions(_.map(d => (d, BmpCodec.encode(d))))
-      .toDF("asset_id", "payload")
-      .select($"asset_id",
-        when($"asset_id" % 3 === 0, "image").when($"asset_id" % 3 === 1, "audio")
-          .otherwise("video").as("media_type"),
-        $"payload")
   }
 
   /** Parquet-BINARY-backed media asset store (round 14 — closes the r13

@@ -208,26 +208,6 @@ object Sampling {
       .agg(count(lit(1)).as("n_docs"), sum($"tok").as("total_tokens"))
       .orderBy($"bin")
 
-  /** Materialize the corpus as training shards: every document lands in
-    * its token-budget bin (same rule as q58), written as bin-partitioned
-    * parquet — downstream trainers read one shard directory per step and
-    * partition pruning serves shard-range reads without touching the
-    * rest. Returns the written manifest (bin, n_docs, total_tokens) read
-    * back from the files, so the caller verifies the sink, not the plan.
-    */
-  def writeTrainingShards(documents: DataFrame, outDir: String,
-      budget: Long = 2048L): DataFrame = {
-    documents
-      .join(tokenBins(documents, budget).select($"doc_id", $"bin"), Seq("doc_id"))
-      .write.mode("overwrite").partitionBy("bin").parquet(outDir)
-    documents.sparkSession.read.parquet(outDir)
-      // partition-directory columns come back as int; restore the contract
-      .groupBy($"bin".cast("long").as("bin"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(size(split($"text", " "))).cast("bigint").as("total_tokens"))
-      .orderBy($"bin")
-  }
-
   /** Sliding-window document chunking: cut each document into
     * `chunkSize`-token windows advancing by `stride` tokens (the
     * context-window preparation step before tokenizer packing). Chunk

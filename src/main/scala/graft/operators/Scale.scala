@@ -346,12 +346,6 @@ object Scale {
       .toDF("n_kmin", "jaccard_est", "union_est", "intersect_est", "n_exact")
   }
 
-  /** Salted equi-join for a skewed fact side: the dim side is replicated
-    * `salts` times (explode over the salt range — dim must be small enough
-    * to replicate, which is exactly the skewed-join regime), the fact side
-    * gets a deterministic salt, and the join key becomes (key, salt). The
-    * hot fact key now lands on `salts` reducers instead of one.
-    */
   /** Shuffle-key skew audit: the histogram of per-key row counts for a
     * prospective shuffle/join key, binned by power of two — the
     * introspection that decides between a plain shuffle, `saltedSumByKey`,
@@ -375,16 +369,6 @@ object Scale {
       .select($"log2_bucket", $"n_keys", $"n_rows", $"max_rows_per_key",
         round($"n_rows" / $"n_rows_total", 4).as("row_share"))
       .orderBy($"log2_bucket")
-  }
-
-  def saltedJoin(
-      fact: DataFrame, dim: DataFrame, key: String, factSaltSource: String,
-      salts: Int = 16): DataFrame = {
-    val saltedFact = fact.withColumn("_salt", pmod(xxhash64(col(factSaltSource)), lit(salts)))
-    val saltedDim = dim
-      .withColumn("_salt", explode(sequence(lit(0), lit(salts - 1))))
-      .withColumn("_salt", col("_salt").cast("bigint"))
-    saltedFact.join(saltedDim, Seq(key, "_salt")).drop("_salt")
   }
 
   /** Keyed compaction planner (q313; round 13 — the shape real

@@ -935,21 +935,16 @@ object Similarity {
   def pqAnnRecall(embeddings: DataFrame, m: Int = 8, codes: Int = 16,
       iters: Int = 2, shortlist: Int = 50, nQueries: Int = 5, k: Int = 3): DataFrame = {
     val mdl = pqModelFor(embeddings, m, codes, iters, nQueries)
-    val approx = pqShortlistRerank(mdl.corpus,
-      pqAdcScores(mdl.codesLong, mdl.adcTables), shortlist, nQueries, k)
-    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
-  }
-
-  /** The full-scan ADC ranking: every stored code row meets its query's
-    * broadcast dot-table; sum of m grid-multiple terms is exact under
-    * round 6 (scaladoc on `pqAnnRecall`).
-    */
-  private def pqAdcScores(codesLong: DataFrame, adcTables: DataFrame): DataFrame =
-    codesLong
-      .join(broadcast(adcTables), Seq("s", "cid"))
+    // the full-scan ADC ranking: every stored code row meets its query's
+    // broadcast dot-table
+    val adcScores = mdl.codesLong
+      .join(broadcast(mdl.adcTables), Seq("s", "cid"))
       .filter($"vec_id" =!= $"query_id")
       .groupBy($"query_id", $"vec_id".as("neighbor_id"))
       .agg(round(sum($"t"), 6).as("adc"))
+    val approx = pqShortlistRerank(mdl.corpus, adcScores, shortlist, nQueries, k)
+    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
+  }
 
   /** Session-cached trained PQ model — (checkpointed corpus, encoded
     * code table, ADC tables) keyed by (session, corpus plan, dial):
@@ -1065,8 +1060,6 @@ object Similarity {
 
   /** Driver-side ADC tables from the bounded query set → broadcast frame:
     * t = round₆(dot(q_s, codeword_{s,cid})) per (query, subspace, code).
-    * Shared by the session path (`pqModel`) and the persisted-index path
-    * (`pqAnnRecallFromIndex`) so both serve bit-identical rankings.
     */
   private def buildAdcTables(corpus: DataFrame,
       books: Array[Array[(Long, Array[Double])]], nQueries: Int): DataFrame = {
@@ -1155,32 +1148,22 @@ object Similarity {
     val assigned = mdl.corpus
       .withColumn("a", least(cellStructs(cents, $"v"): _*))
       .select($"vec_id", $"a.cid".as("centroid_id"))
-    val approx = pqShortlistRerank(mdl.corpus,
-      ivfAdcScores(mdl.corpus, mdl.codesLong, mdl.adcTables, assigned, cents, nProbe, nQueries),
-      shortlist, nQueries, k)
-    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
-  }
-
-  /** The cell-pruned ADC ranking: probe the nProbe nearest cells per
-    * query over the inverted lists (`assigned`), then code-rank only the
-    * probed candidates. Shared by the session and persisted-index paths.
-    */
-  private def ivfAdcScores(corpus: DataFrame, codesLong: DataFrame,
-      adcTables: DataFrame, assigned: DataFrame,
-      cents: Array[(Long, Array[Double])], nProbe: Int, nQueries: Int): DataFrame = {
-    val probes = corpus.filter($"vec_id" < nQueries)
+    val probes = mdl.corpus.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"),
         explode(probeCellsExpr(cents, $"v", nProbe)).as("centroid_id"))
-    // the inverted-list probe: (query, candidate) pairs from probed cells
+    // the inverted-list probe: (query, candidate) pairs from probed cells,
+    // then code-rank only the probed candidates
     val candPairs = assigned
       .join(broadcast(probes), Seq("centroid_id"))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id")
-    codesLong
+    val adcScores = mdl.codesLong
       .join(candPairs, Seq("vec_id"))
-      .join(broadcast(adcTables), Seq("query_id", "s", "cid"))
+      .join(broadcast(mdl.adcTables), Seq("query_id", "s", "cid"))
       .groupBy($"query_id", $"vec_id".as("neighbor_id"))
       .agg(round(sum($"t"), 6).as("adc"))
+    val approx = pqShortlistRerank(mdl.corpus, adcScores, shortlist, nQueries, k)
+    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
   }
 
   /** Persist the trained PQ/IVF-PQ serving bundle — the artifacts a
@@ -1191,11 +1174,9 @@ object Similarity {
     *  - `centroids(cid, cv)`       — the IVF coarse quantizer;
     *  - `ivflists(vec_id, centroid_id)` — the inverted-list assignment.
     * Training rides the session model cache (q148 the carrier), so
-    * persisting after a served query costs only the writes. The
-    * round-trip law (spec'd, the vector twin of the BM25 sharded-
-    * postings law): `pqAnnRecallFromIndex` / `ivfPqAnnRecallFromIndex`
-    * over this directory equal the session-cache paths bit-for-bit —
-    * codeword doubles and code ids survive parquet exactly.
+    * persisting after a served query costs only the writes. q242
+    * fingerprints the directory for its staleness report, and
+    * `pqServingStatic` reads it back for the streaming serve.
     */
   def writePqIndex(embeddings: DataFrame, dir: String, m: Int = 8,
       codes: Int = 16, iters: Int = 2, nQueries: Int = 5,
@@ -1218,18 +1199,6 @@ object Similarity {
     // the longest-lived artifact in the family — codes built from a
     // previous corpus silently serve wrong neighbors otherwise
     Governance.writeFingerprint(embeddings, Governance.embCanonical, dir)
-  }
-
-  /** The persisted codebooks, re-shaped for `buildAdcTables` — a bounded
-    * m×codes collect (the model, not data).
-    */
-  private def readPqBooks(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Array[Array[(Long, Array[Double])]] = {
-    val rows = spark.read.parquet(s"$dir/codebooks").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    val m = rows.map(_._1).max + 1
-    Array.tabulate(m)(s =>
-      rows.filter(_._1 == s).map(t => (t._2, t._3)).sortBy(_._1))
   }
 
   /** Static half of the STREAMING PQ serving path (see
@@ -1258,103 +1227,6 @@ object Similarity {
       nProbe: Int): Column =
     transform(slice(array_sort(array(cellStructs(cents, v): _*)), 1, nProbe),
       p => p.getField("cid"))
-
-  /** q148's ADC ranking served from a persisted index: codebooks and the
-    * code table come off parquet; raw floats are touched only for the
-    * nQueries query vectors and the shortlist re-rank. Bit-identical to
-    * `pqAnnRecall` on the same corpus/dial (spec'd law).
-    */
-  def pqAnnRecallFromIndex(embeddings: DataFrame, dir: String,
-      shortlist: Int = 50, nQueries: Int = 5, k: Int = 3,
-      checkFresh: Boolean = false): DataFrame = {
-    val spark = embeddings.sparkSession
-    // opt-in staleness precondition (the bm25FromIndex assertDisjoint
-    // posture): one fingerprint scan, refuse to serve a stale index
-    if (checkFresh) Governance.requireFresh(spark, dir, embeddings,
-      Governance.embCanonical, "pq-index")
-    val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val books = readPqBooks(spark, dir)
-    val codesLong = spark.read.parquet(s"$dir/codes")
-    val adcTables = buildAdcTables(corpus, books, nQueries)
-    val approx = pqShortlistRerank(corpus,
-      pqAdcScores(codesLong, adcTables), shortlist, nQueries, k)
-    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
-  }
-
-  /** Physical compaction of a persisted PQ index under erasure
-    * tombstones: codes and inverted-list rows for deleted ids are
-    * dropped; codebooks and coarse centroids are MODEL, not user data —
-    * copied through unchanged (the no-retraining-on-delete contract).
-    * Law (spec'd): serving the compacted index with an empty delete list
-    * equals tombstone serving of the original — compaction is an
-    * optimization, never a semantics change.
-    */
-  def compactPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      deletes: DataFrame, outDir: String): Unit = {
-    val del = broadcast(deletes.select($"vec_id"))
-    spark.read.parquet(s"$dir/codes").join(del, Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$outDir/codes")
-    spark.read.parquet(s"$dir/codebooks")
-      .write.mode("overwrite").parquet(s"$outDir/codebooks")
-    spark.read.parquet(s"$dir/centroids")
-      .write.mode("overwrite").parquet(s"$outDir/centroids")
-    spark.read.parquet(s"$dir/ivflists").join(del, Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$outDir/ivflists")
-  }
-
-  /** The persisted ADC serving path under right-to-erasure tombstones
-    * (the vector twin of `Governance.bm25ServeWithTombstones`): the
-    * delete list anti-joins the persisted CODE table — the 8-byte rows a
-    * serving fleet actually scans — and the shortlist-rerank corpus,
-    * while codebooks and ADC tables are untouched (no retraining on
-    * delete: codes are model-relative, and the model is not the user's
-    * data). Returns the approx top-k (query_id, neighbor_id) frame so
-    * the spec can state the laws directly: equals the same serve over a
-    * physically filtered code table, and no deleted id ever surfaces.
-    * Query vectors come from the RETAINED corpus head (a deleted user
-    * cannot be a query either).
-    */
-  def pqServeTopKFromIndex(embeddings: DataFrame, dir: String,
-      deletes: Option[DataFrame] = None, shortlist: Int = 50,
-      nQueries: Int = 5, k: Int = 3): DataFrame = {
-    val spark = embeddings.sparkSession
-    val corpus0 = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val codes0 = spark.read.parquet(s"$dir/codes")
-    val (corpus, codesLong) = deletes match {
-      case Some(delFrame) =>
-        val del = broadcast(delFrame.select($"vec_id"))
-        (corpus0.join(del, Seq("vec_id"), "left_anti"),
-          codes0.join(del, Seq("vec_id"), "left_anti"))
-      case None => (corpus0, codes0)
-    }
-    val books = readPqBooks(spark, dir)
-    val adcTables = buildAdcTables(corpus, books, nQueries)
-    pqShortlistRerank(corpus, pqAdcScores(codesLong, adcTables),
-      shortlist, nQueries, k)
-  }
-
-  /** q149's cell-pruned scan served from a persisted index: centroids,
-    * inverted lists, codebooks, and codes all come off parquet.
-    * Bit-identical to `ivfPqAnnRecall` on the same corpus/dial (spec'd).
-    */
-  def ivfPqAnnRecallFromIndex(embeddings: DataFrame, dir: String,
-      nProbe: Int = 4, shortlist: Int = 50, nQueries: Int = 5,
-      k: Int = 3, checkFresh: Boolean = false): DataFrame = {
-    val spark = embeddings.sparkSession
-    if (checkFresh) Governance.requireFresh(spark, dir, embeddings,
-      Governance.embCanonical, "ivfpq-index")
-    val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val books = readPqBooks(spark, dir)
-    val codesLong = spark.read.parquet(s"$dir/codes")
-    val cents = spark.read.parquet(s"$dir/centroids").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val assigned = spark.read.parquet(s"$dir/ivflists")
-    val adcTables = buildAdcTables(corpus, books, nQueries)
-    val approx = pqShortlistRerank(corpus,
-      ivfAdcScores(corpus, codesLong, adcTables, assigned, cents, nProbe, nQueries),
-      shortlist, nQueries, k)
-    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
-  }
 
   /** IVF (inverted-file) ANN — the second scale path beside LSH: partition
     * the corpus into `nCentroids` cells by nearest centroid, then scan only
@@ -2399,11 +2271,8 @@ object Similarity {
     * report itself is one corpus pass (model broadcast) ending in a
     * TakeOrderedAndProject on the exact integer key (|tm|, vec_id).
     */
-  def abttOutliers(embeddings: DataFrame, iters: Int = 8, topN: Int = 10): DataFrame =
-    abttOutliersWith(embeddings, abttModelFor(embeddings, iters), topN)
-
-  private def abttOutliersWith(embeddings: DataFrame, model: AbttModel,
-      topN: Int): DataFrame = {
+  def abttOutliers(embeddings: DataFrame, iters: Int = 8, topN: Int = 10): DataFrame = {
+    val model = abttModelFor(embeddings, iters)
     val proj = abttProjections(embeddings, model)
       .select($"vec_id", $"tm", $"cd2",
         round($"tm".cast("double") / lit(math.sqrt(model.vn2.toDouble)), 6).as("proj"),
@@ -2422,10 +2291,8 @@ object Similarity {
 
   /** Persist the fitted spectral model (q152's mean + PC1 + exact
     * scalars) as a (kind, i, v) parquet — 2d+3 rows, written once after
-    * a fit that rides the session model cache. Serving a new batch's
-    * outlier report then needs NO moment pass and NO power iteration:
-    * one broadcast-model corpus scan (the `abttOutliersFromModel` law —
-    * the spectral twin of the BM25/PQ/classifier artifact laws).
+    * a fit that rides the session model cache. q242 fingerprints the
+    * directory for its staleness report.
     */
   def writeSpectralModel(embeddings: DataFrame, dir: String, iters: Int = 8): Unit = {
     val spark = embeddings.sparkSession
@@ -2438,32 +2305,6 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$dir/model")
     // build-slice fingerprint (q242 staleness contract)
     Governance.writeFingerprint(embeddings, Governance.embCanonical, dir)
-  }
-
-  private def readSpectralModel(spark: org.apache.spark.sql.SparkSession,
-      dir: String): AbttModel = {
-    val rows = spark.read.parquet(s"$dir/model").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    def vec(kind: String): Array[Long] =
-      rows.filter(_._1 == kind).sortBy(_._2).map(_._3)
-    def scalar(kind: String): Long = rows.find(_._1 == kind).get._3
-    val dim = scalar("dim").toInt
-    val (mu, vs) = (vec("mu"), vec("vs"))
-    require(mu.length == dim && vs.length == dim,
-      s"corrupt spectral model at $dir: dim=$dim, mu=${mu.length}, vs=${vs.length}")
-    AbttModel(mu, vs, scalar("vn2"), scalar("trace"), dim)
-  }
-
-  /** q153's outlier report served from a persisted model: the mean/PC1
-    * artifact comes off parquet, the corpus is touched only by the one
-    * scoring scan. Bit-identical to the session path (spec'd law) —
-    * `abttProjections` is the shared projection core.
-    */
-  def abttOutliersFromModel(embeddings: DataFrame, dir: String,
-      topN: Int = 10, checkFresh: Boolean = false): DataFrame = {
-    if (checkFresh) Governance.requireFresh(embeddings.sparkSession, dir,
-      embeddings, Governance.embCanonical, "spectral-model")
-    abttOutliersWith(embeddings, readSpectralModel(embeddings.sparkSession, dir), topN)
   }
 
   /** Embedding-distribution drift monitor — the vector twin of q127's

@@ -341,9 +341,8 @@ object TextAnalysis {
   }
 
   /** Shared BM25 ranking core: identical expressions whether `tf`/`dl`
-    * come from a live corpus scan (q79) or from the persisted serving
-    * index — the single code path is what makes the round-trip law a
-    * statement about the INDEX, not about two reimplementations agreeing.
+    * come from a live corpus scan (q79) or from tombstoned index rows
+    * (q163, `Governance.erasureBm25`).
     */
   private[operators] def bm25Rank(tf: DataFrame, dl: DataFrame,
       k1: Double, b: Double, topk: Int): DataFrame = {
@@ -360,54 +359,6 @@ object TextAnalysis {
       .agg(round(sum($"s"), 4).as("bm25"))
       .orderBy($"bm25".desc, $"doc_id")
       .limit(topk)
-  }
-
-  /** Persist the BM25 serving index: the FULL postings list
-    * (term, doc_id, tf) plus per-doc lengths — build once at ingest,
-    * serve every query from the index without touching raw text again
-    * (the lexical twin of the persisted hyperplane embedding index).
-    * Postings rows are doc-disjoint across disjoint ingest batches, so
-    * daily shards need NO compaction: reading several shard dirs
-    * together IS the merged index (spec'd as the sharded-union law).
-    */
-  def writeBm25Index(documents: DataFrame, dir: String): Unit = {
-    documents
-      .select($"doc_id", explode(split($"text", " ")).as("term"))
-      .groupBy($"term", $"doc_id").agg(count(lit(1)).as("tf"))
-      .write.mode("overwrite").parquet(s"$dir/postings")
-    documents
-      .select($"doc_id", size(split($"text", " ")).cast("long").as("dl"))
-      .write.mode("overwrite").parquet(s"$dir/doclen")
-    // build-slice fingerprint (q242 staleness contract)
-    Governance.writeFingerprint(documents, Governance.docCanonical, dir)
-  }
-
-  /** Serve BM25 from persisted index shards (one or many): query terms
-    * prune the postings scan (predicate pushdown on `term`), then the
-    * exact q79 ranking core runs on index rows only — query-proportional
-    * compute over a corpus that is never re-tokenized.
-    *
-    * PRECONDITION: shard dirs must be doc-disjoint (each doc_id ingested
-    * into exactly one shard — the writeBm25Index-per-batch contract).
-    * Overlapping shards would double-count df, n, and doclen rows and
-    * silently skew every score. `assertDisjoint = true` verifies it with
-    * one doclen-sized duplicate probe (doclen is doc-count rows, tiny
-    * next to postings) — use it when shard provenance is not trusted.
-    */
-  def bm25FromIndex(spark: org.apache.spark.sql.SparkSession, dirs: Seq[String],
-      query: Seq[String] = Seq("table", "data", "row"),
-      k1: Double = 1.2, b: Double = 0.75, topk: Int = 20,
-      assertDisjoint: Boolean = false): DataFrame = {
-    require(dirs.nonEmpty, "bm25FromIndex: no index shard dirs")
-    val tf = spark.read.parquet(dirs.map(d => s"$d/postings"): _*)
-      .filter($"term".isin(query: _*))
-    val dl = spark.read.parquet(dirs.map(d => s"$d/doclen"): _*)
-    if (assertDisjoint && dirs.length > 1) {
-      val dup = dl.groupBy($"doc_id").count().filter($"count" > 1).limit(1).count()
-      require(dup == 0, "bm25FromIndex: shard dirs overlap — a doc_id " +
-        "appears in more than one doclen shard; df/n/doclen would double-count")
-    }
-    bm25Rank(tf, dl, k1, b, topk)
   }
 
   /** Pseudo-relevance feedback (Rocchio-style query expansion): run the

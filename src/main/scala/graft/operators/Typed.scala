@@ -37,7 +37,7 @@ object Typed {
     sketch.join(exact, "l_returnflag").orderBy(col("l_returnflag"))
   }
 
-  /** groupByKey + typed TwoLevelSum (the reference's partial+final sum as
+  /** groupByKey + typed TwoLevelSumOf (the reference's partial+final sum as
     * an Aggregator) — output canonicalized for the oracle.
     */
   def statusTotals(spark: SparkSession, orders: DataFrame): DataFrame = {

@@ -526,8 +526,8 @@ object EventStreams {
     * dashboard every experimentation stack nevertheless ships; the
     * sequential-decision correction is a policy on top, not a different
     * aggregate). DELEGATES to `operators.Events.abValueTest` — one code
-    * path for batch and stream, the evalCore discipline, which is the
-    * whole law: the conditional-moment aggregate is trivially mergeable,
+    * path for batch and stream, which is the whole law: the
+    * conditional-moment aggregate is trivially mergeable,
     * so the complete-mode table equals the batch answer at every cut
     * where the same rows have arrived. State is the six-moment single
     * row however long the feed runs; the degenerate-input guards there

@@ -183,6 +183,17 @@ class FormatsSpec extends GraftSuite {
     assert(fb.collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
   }
 
+  test("Verify: a failed query leaves no earlier run's output behind and is reported") {
+    val out = Files.createTempDirectory("graft_verify")
+    val emptySf = Files.createTempDirectory("graft_empty_sf")
+    val stale = out.resolve("q01_sum_by_group")
+    Files.createDirectories(stale)
+    Files.writeString(stale.resolve("part-00000.parquet"), "an earlier run's output")
+    val failed = Verify.dumpQueries(spark, emptySf.toString, out.toString, _ == "q01_sum_by_group")
+    assert(failed === Seq("q01_sum_by_group"))
+    assert(!Files.exists(stale), "the earlier output must not survive a failed run")
+  }
+
   test("normalizeTsCol: NANOS-era bigint date reads back as the exact NTZ instant") {
     import graft.sources.Tables
     import spark.implicits.{localSeqToDatasetHolder, newLongEncoder}

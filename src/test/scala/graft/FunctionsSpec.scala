@@ -232,20 +232,6 @@ class FunctionsSpec extends GraftSuite {
     assert(rows.nonEmpty)
   }
 
-  test("MomentsAgg matches built-in avg/stddev and is partition-invariant") {
-    import spark.implicits._
-    val values = Tables.orders(spark, sf).select(col("o_totalprice")).as[Double]
-    val agg = new Aggregators.MomentsAgg().toColumn
-    val m = values.select(agg).collect()(0)
-    val expected = Tables.orders(spark, sf)
-      .agg(avg(col("o_totalprice")), stddev_samp(col("o_totalprice"))).collect()(0)
-    assert(math.abs(m.mean - expected.getDouble(0)) < 1e-9)
-    assert(math.abs(m.stddev - expected.getDouble(1)) < 1e-9)
-    val m2 = values.repartition(13).select(agg).collect()(0)
-    assert(m2.n === m.n)
-    assert(math.abs(m2.mean - m.mean) < 1e-9)
-  }
-
   test("KMV sketch: partition-invariant, exact under k, within tolerance over k") {
     val li = Tables.lineitem(spark, sf)
     val a = graft.operators.Typed.kmvDistinct(spark, li).collect()
@@ -268,7 +254,7 @@ class FunctionsSpec extends GraftSuite {
   test("TwoLevelSum: reduce/merge equals sum (reference partial+final agg)") {
     import spark.implicits._
     val values = Tables.orders(spark, sf).select(col("o_totalprice")).as[Double]
-    val s = values.repartition(7).select(new Aggregators.TwoLevelSum().toColumn).collect()(0)
+    val s = values.repartition(7).select(new Aggregators.TwoLevelSumOf[Double](identity).toColumn).collect()(0)
     val expected = Tables.orders(spark, sf).agg(sum(col("o_totalprice"))).collect()(0).getDouble(0)
     assert(math.abs(s - expected) < 1e-4)
   }

@@ -3,9 +3,9 @@ package graft
 import graft.operators.{Governance, Similarity, TextAnalysis}
 import graft.sources.Tables
 
-/** Right-to-erasure laws: tombstone serving == filtered re-ingest,
-  * compaction == tombstones, and deleted ids never surface — for both
-  * the lexical (BM25) and vector (PQ) persisted serving stacks.
+/** Right-to-erasure laws: tombstone serving == filtered re-ingest and
+  * pair-grain erasure == a full re-run, plus the governance audits and
+  * the persisted-artifact staleness report.
   */
 class GovernanceSpec extends GraftSuite {
   import org.apache.spark.sql.functions._
@@ -31,28 +31,6 @@ class GovernanceSpec extends GraftSuite {
     val baseline = TextAnalysis.bm25TopDocs(docs).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(tombstoned !== baseline)
-  }
-
-  test("persisted BM25 tombstone serving: monolith == shards == compacted == in-session") {
-    val tmp = java.nio.file.Files.createTempDirectory("bm25_erasure").toString
-    val del = Governance.erasureRequests(docs)
-    TextAnalysis.writeBm25Index(docs, s"$tmp/full")
-    TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 2 === 0), s"$tmp/a")
-    TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 2 =!= 0), s"$tmp/b")
-    val inSession = Governance.erasureBm25(docs, del).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val monolith = Governance.bm25ServeWithTombstones(spark, Seq(s"$tmp/full"), del)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(monolith === inSession)
-    val sharded = Governance.bm25ServeWithTombstones(spark, Seq(s"$tmp/a", s"$tmp/b"), del)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(sharded === inSession)
-    // compaction law: physically applying the tombstones and merging the
-    // shards, then serving with NO delete list, changes nothing
-    Governance.compactBm25Index(spark, Seq(s"$tmp/a", s"$tmp/b"), del, s"$tmp/compacted")
-    val compacted = TextAnalysis.bm25FromIndex(spark, Seq(s"$tmp/compacted"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(compacted === inSession)
   }
 
   test("erasureAudit: brute-force per-source equality and mass invariants") {
@@ -108,31 +86,6 @@ class GovernanceSpec extends GraftSuite {
       graft.operators.Dedup.restrictPairs(pairs, keep2)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(leaf === Seq((1L, 1L), (2L, 1L)))
-  }
-
-  test("persisted PQ tombstone serving: no deleted id surfaces; == compacted index") {
-    val tmp = java.nio.file.Files.createTempDirectory("pq_erasure").toString
-    Similarity.writePqIndex(embs, s"$tmp/idx")
-    // pick a delete set guaranteed to bite: a neighbor the baseline serve
-    // actually returns (never a query id — a deleted user cannot query)
-    val nQueries = 5
-    val baseline = Similarity.pqServeTopKFromIndex(embs, s"$tmp/idx").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val victim = baseline.map(_._2).filter(_ >= nQueries).head
-    val del = Seq(victim).toDF("vec_id")
-    val tombstoned = Similarity.pqServeTopKFromIndex(embs, s"$tmp/idx", Some(del))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(tombstoned.forall(_._2 != victim), "deleted id must never surface")
-    assert(tombstoned !== baseline, "the victim was in the baseline top-k")
-    assert(tombstoned.map(_._1).distinct.sorted ===
-      baseline.map(_._1).distinct.sorted, "every query still answered")
-    // compaction law: physically dropping the victim's code rows (model
-    // untouched) and serving with no delete list changes nothing
-    Similarity.compactPqIndex(spark, s"$tmp/idx", del, s"$tmp/compacted")
-    val retained = embs.filter($"vec_id" =!= victim)
-    val compacted = Similarity.pqServeTopKFromIndex(retained, s"$tmp/compacted")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(compacted === tombstoned)
   }
 
   test("tableProfile equals the in-JVM per-column recompute; branch scans stay pruned") {
@@ -361,7 +314,7 @@ class GovernanceSpec extends GraftSuite {
     assert(Curation.datasheetFromPartials(spark, Seq(s"$tmp/p")).count() > 0)
   }
 
-  test("PQ/spectral staleness: a one-component vector mutation flips stale; checkFresh enforces; serving ignores the sidecar") {
+  test("PQ/spectral staleness: a one-component vector mutation flips stale") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_vecfp").toString
     val base = embs.filter($"vec_id" % 10 =!= 1)
     Similarity.writePqIndex(base, s"$tmp/pq")
@@ -381,31 +334,6 @@ class GovernanceSpec extends GraftSuite {
     assert(rep("pq_ok") === ((true, true, true)))
     assert(rep("pq_mut") === ((true, false, false)))
     assert(rep("sp_mut") === ((true, false, false)))
-    // opt-in read-time enforcement on every vector-artifact serve path:
-    // the fresh corpus serves, the mutated one refuses loudly
-    assert(Similarity.pqAnnRecallFromIndex(base, s"$tmp/pq",
-      checkFresh = true).count() > 0)
-    assert(Similarity.ivfPqAnnRecallFromIndex(base, s"$tmp/pq",
-      checkFresh = true).count() > 0)
-    assert(Similarity.abttOutliersFromModel(base, s"$tmp/sp",
-      checkFresh = true).count() > 0)
-    val e = intercept[IllegalArgumentException] {
-      Similarity.pqAnnRecallFromIndex(mutated, s"$tmp/pq", checkFresh = true)
-    }
-    assert(e.getMessage.contains("stale artifact 'pq-index'"))
-    val e2 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqAnnRecallFromIndex(mutated, s"$tmp/pq", checkFresh = true)
-    }
-    assert(e2.getMessage.contains("ivfpq-index"))
-    val e3 = intercept[IllegalArgumentException] {
-      Similarity.abttOutliersFromModel(mutated, s"$tmp/sp", checkFresh = true)
-    }
-    assert(e3.getMessage.contains("spectral-model"))
-    // default serving performs no freshness scan and is untouched by
-    // the hidden _fingerprint sidecar (underscore dirs are invisible
-    // to parquet discovery)
-    assert(Similarity.pqAnnRecallFromIndex(base, s"$tmp/pq").count() > 0)
-    assert(Similarity.abttOutliersFromModel(base, s"$tmp/sp").count() > 0)
   }
 
   test("tClosenessReport equals the brute-force prefix EMD; a concentrated class maximizes (q256)") {

@@ -790,7 +790,7 @@ class PipelineSpec extends GraftSuite {
 
   test("multimodal: batched decode serves real header fields for every asset") {
     import Multimodal.BmpCodec
-    val decoded = Multimodal.decodeBatched(Multimodal.bmpAssets(docs)).collect()
+    val decoded = Multimodal.decodeBatched(Multimodal.assetStore(docs, "bmp")).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getInt(3), r.getInt(4)))
     assert(decoded.length === docs.count())
     decoded.foreach { case (id, nb, w, h) =>
@@ -1066,29 +1066,6 @@ class PipelineSpec extends GraftSuite {
     // corpus must retain clear signal vs an uninformed draw (~0/15)
     assert(r1.map(_._2).sum >= 4L,
       s"cell pruning destroyed the ranking: ${r1.mkString(", ")}")
-  }
-
-  test("persisted PQ/IVF-PQ index: parquet serving == session cache, bit-for-bit") {
-    import graft.operators.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("pq_idx").toString
-    Similarity.writePqIndex(embs, tmp)
-    val pqSession = Similarity.pqAnnRecall(embs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val pqServed = Similarity.pqAnnRecallFromIndex(embs, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(pqServed === pqSession,
-      "ADC ranking from parquet codebooks+codes must equal the session path")
-    val ivfSession = Similarity.ivfPqAnnRecall(embs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val ivfServed = Similarity.ivfPqAnnRecallFromIndex(embs, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(ivfServed === ivfSession,
-      "cell-pruned serving from parquet centroids+lists must equal the session path")
-    // the bundle really is the compressed form: the stored code table is
-    // m single-byte codes per vector, not d floats
-    val nVec = embs.count()
-    val nCodes = spark.read.parquet(s"$tmp/codes").count()
-    assert(nCodes === nVec * 8)
   }
 
   test("annRecall agrees with a manual truth-vs-approx set comparison") {
@@ -2109,24 +2086,6 @@ class PipelineSpec extends GraftSuite {
     assert(got === expected)
   }
 
-  test("persisted BM25 index: parquet serving == corpus recompute; sharded union == monolith") {
-    val tmp = java.nio.file.Files.createTempDirectory("bm25_idx").toString
-    TextAnalysis.writeBm25Index(docs, s"$tmp/full")
-    val fromCorpus = TextAnalysis.bm25TopDocs(docs).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val fromIndex = TextAnalysis.bm25FromIndex(spark, Seq(s"$tmp/full")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(fromIndex === fromCorpus)
-    assert(fromIndex.nonEmpty)
-    // sharded-union law: two doc-disjoint ingest batches, two shard dirs,
-    // no compaction — serving from both dirs equals the monolithic index
-    TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 2 === 0), s"$tmp/a")
-    TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 2 =!= 0), s"$tmp/b")
-    val sharded = TextAnalysis.bm25FromIndex(spark, Seq(s"$tmp/a", s"$tmp/b")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(sharded === fromIndex)
-  }
-
   test("heavyHittersBySource: brute-force per-group equality; per-source superset holds") {
     val k = 49
     val rows = docs.select($"source", $"text").collect()
@@ -2156,37 +2115,6 @@ class PipelineSpec extends GraftSuite {
       .map(r => (Option(r.getString(0)), r.getString(1), r.getLong(2), r.getLong(3)))
     // each group: 5 tokens, threshold n/(k+1) = 5/3 -> only the 4-count token
     assert(got.toSet === Set((None, "a", 4L, 5L), (Some("web"), "x", 4L, 5L)))
-  }
-
-  test("bm25FromIndex assertDisjoint: overlapping shards rejected, disjoint pass") {
-    val tmp = java.nio.file.Files.createTempDirectory("bm25_overlap").toString
-    TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 2 === 0), s"$tmp/a")
-    TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 2 =!= 0), s"$tmp/b")
-    TextAnalysis.writeBm25Index(docs, s"$tmp/full") // overlaps both shards
-    val ok = TextAnalysis.bm25FromIndex(spark, Seq(s"$tmp/a", s"$tmp/b"),
-      assertDisjoint = true).collect()
-    assert(ok.nonEmpty)
-    val e = intercept[IllegalArgumentException] {
-      TextAnalysis.bm25FromIndex(spark, Seq(s"$tmp/a", s"$tmp/full"),
-        assertDisjoint = true).collect()
-    }
-    assert(e.getMessage.contains("shard dirs overlap"))
-  }
-
-  test("persisted spectral model: outlier report from parquet == session, bit-for-bit") {
-    val tmp = java.nio.file.Files.createTempDirectory("abtt_model").toString
-    Similarity.writeSpectralModel(embs, tmp)
-    val session = Similarity.abttOutliers(embs).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getDouble(3), r.getInt(4)))
-    val served = Similarity.abttOutliersFromModel(embs, tmp).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getDouble(3), r.getInt(4)))
-    assert(served === session,
-      "outliers from the parquet mean/PC1 artifact must equal the session path")
-    // artifact shape: mu + vs vectors and the three scalars, nothing else
-    val kinds = spark.read.parquet(s"$tmp/model").groupBy("kind").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(kinds === Map("mu" -> 64L, "vs" -> 64L,
-      "vn2" -> 1L, "trace" -> 1L, "dim" -> 1L))
   }
 
   test("spectral fit: empty corpus fails with the diagnostic, not an index error") {

@@ -25,21 +25,6 @@ class ScaleSpec extends GraftSuite {
     assert(salted === direct)
   }
 
-  test("salted join equals plain join on a skewed fact table") {
-    import spark.implicits._
-    val dim = (0 to 6).map(i => (s"k$i", s"name$i")).toDF("key", "name")
-    val fact = (1 to 5000).map { i =>
-      (if (i % 50 == 0) s"k${i % 7}" else "k0", i.toLong, i / 10.0)
-    }.toDF("key", "row_id", "value")
-    val plain = fact.join(dim, Seq("key"))
-      .groupBy($"key").agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("t"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val salted = Scale.saltedJoin(fact, dim, "key", "row_id")
-      .groupBy($"key").agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("t"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(salted === plain)
-  }
-
   test("bloom prefilter: matches a brute-force md5 bloom; members always pass") {
     import graft.sources.Tables
     import org.apache.spark.sql.functions.col
@@ -234,7 +219,7 @@ class ScaleSpec extends GraftSuite {
   test("compactionPlan: equals a single-node replica; partition-count invariant; conserves bytes over contiguous bins (q310)") {
     import graft.operators.Multimodal
     val target = 64L * 1024
-    val files = Multimodal.bmpAssets(Tables.documents(spark, sf))
+    val files = Multimodal.assetStore(Tables.documents(spark, sf), "bmp")
       .select(col("asset_id"), length(col("payload")).cast("long").as("n_bytes"))
     val got = Scale.compactionPlan(files, "asset_id", "n_bytes", target)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -390,7 +375,7 @@ class ScaleSpec extends GraftSuite {
 
   test("compactionDebt: equals a single-node replica; threshold splits the fixture (q312)") {
     import graft.operators.Multimodal
-    val files = Multimodal.bmpAssets(Tables.documents(spark, sf))
+    val files = Multimodal.assetStore(Tables.documents(spark, sf), "bmp")
       .select(col("media_type"), length(col("payload")).as("n_bytes"))
     val got = Scale.compactionDebt(files, "media_type", "n_bytes")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -411,7 +396,7 @@ class ScaleSpec extends GraftSuite {
 
   test("compactionPlanKeyed: per family == the global planner on that family alone; partition-count invariant (q313)") {
     import graft.operators.Multimodal
-    val files = Multimodal.bmpAssets(Tables.documents(spark, sf))
+    val files = Multimodal.assetStore(Tables.documents(spark, sf), "bmp")
       .select(col("media_type"), col("asset_id"),
         length(col("payload")).cast("long").as("n_bytes"))
     val target = 64L * 1024
@@ -437,7 +422,7 @@ class ScaleSpec extends GraftSuite {
 
   test("compactionForecast == join of the registered debt and keyed-plan outputs; compaction retires most files (q315)") {
     import graft.operators.Multimodal
-    val files = Multimodal.bmpAssets(Tables.documents(spark, sf))
+    val files = Multimodal.assetStore(Tables.documents(spark, sf), "bmp")
       .select(col("media_type"), col("asset_id"),
         length(col("payload")).as("n_bytes"))
     val target = 64L * 1024

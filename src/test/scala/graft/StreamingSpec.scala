@@ -434,7 +434,7 @@ class StreamingSpec extends GraftSuite {
   test("streaming compaction debt == batch compactionDebt bit-for-bit at every trigger") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val rows = graft.operators.Multimodal.bmpAssets(Tables.documents(spark, sf))
+    val rows = graft.operators.Multimodal.assetStore(Tables.documents(spark, sf), "bmp")
       .select(col("media_type"), length(col("payload")).as("n_bytes"))
       .collect().map(r => (r.getString(0), r.getInt(1)))
     val input = MemoryStream[(String, Int)]
