@@ -123,70 +123,13 @@ object Aggregators {
     * string order == numeric order); the common no-op path (hash beyond the
     * current kth) is decided from the buffer tail without parsing.
     */
-  case class SampleItem(h: String, v: Double)
-  case class BottomKBuf(items: Seq[SampleItem])
-  case class QuantileEst(n_sample: Long, p50_est: Double, p90_est: Double)
-
-  /** Bottom-k quantile sketch as a typed Aggregator — the streaming-capable
-    * form of `Events.quantileSketch`'s bottom-k-by-md5 sample: keep the k
-    * input rows with the smallest hash (a deterministic uniform sample),
-    * merge associatively (bottom-k of concatenated bottom-k's), and finish
-    * with the exact interpolated sample quantiles using the same
-    * (hi-pos)*v_lo + (pos-lo)*v_hi formula as `Scale.exactQuantileByGroup`
-    * and the same HALF_UP rounding — so a streaming groupBy over this
-    * aggregator reproduces the batch query's estimates EXACTLY (asserted in
-    * StreamingSpec). State is k (hash, value) pairs per group, bounded on
-    * an unbounded stream without a watermark.
-    */
-  class BottomKQuantileOf[T](hashOf: T => String, valueOf: T => Double, k: Int = 256)
-      extends Aggregator[T, BottomKBuf, QuantileEst] {
-
-    override def zero: BottomKBuf = BottomKBuf(Vector.empty)
-
-    private def insert(b: BottomKBuf, it: SampleItem): BottomKBuf =
-      if (b.items.sizeIs >= k && it.h >= b.items.last.h) b
-      else BottomKBuf(((b.items :+ it).sortBy(_.h)).take(k))
-
-    override def reduce(b: BottomKBuf, x: T): BottomKBuf =
-      insert(b, SampleItem(hashOf(x), valueOf(x)))
-
-    override def merge(a: BottomKBuf, b: BottomKBuf): BottomKBuf =
-      BottomKBuf((a.items ++ b.items).sortBy(_.h).take(k))
-
-    /** Exact interpolated quantile of the sample values — the same doubles
-      * `Scale.exactQuantileByGroup` (and Spark's `percentile`) produce.
-      */
-    private def quantile(sorted: IndexedSeq[Double], q: Double): Double = {
-      val pos = q * (sorted.length - 1)
-      val lo = math.floor(pos).toLong
-      val hi = math.ceil(pos).toLong
-      val vlo = sorted(lo.toInt)
-      val vhi = sorted(hi.toInt)
-      val cut = if (hi == lo || vhi == vlo) vlo else (hi - pos) * vlo + (pos - lo) * vhi
-      Rounding.halfUp(cut, 4)
-    }
-
-    override def finish(b: BottomKBuf): QuantileEst =
-      if (b.items.isEmpty) QuantileEst(0L, Double.NaN, Double.NaN)
-      else {
-        val vs = b.items.map(_.v).sorted.toIndexedSeq
-        QuantileEst(b.items.size.toLong, quantile(vs, 0.5), quantile(vs, 0.9))
-      }
-
-    override def bufferEncoder: Encoder[BottomKBuf] = Encoders.product[BottomKBuf]
-    override def outputEncoder: Encoder[QuantileEst] = Encoders.product[QuantileEst]
-  }
-
-  /** Shared bottom-k md5-hash buffer ops (KMVSketchOf and
-    * BottomKHashesOf): the buffer is the sorted hashes joined with ','
-    * (md5 hex is fixed-width, so string order == numeric order); the
-    * common no-op path (hash beyond the current kth at fill) is decided
-    * from the buffer tail without parsing.
-    */
-  private[functions] object KmvBuffer {
+  class KMVSketchOf[T](f: T => String, k: Int)
+      extends Aggregator[T, String, KMVEstimate] {
     private val W = 32 // md5 hex width
 
-    def insert(k: Int)(b: String, h: String): String =
+    override def zero: String = ""
+
+    private def insert(b: String, h: String): String =
       if (b.isEmpty) h
       else {
         val size = (b.length + 1) / (W + 1)
@@ -197,14 +140,6 @@ object Aggregators {
           else (arr :+ h).sorted.take(k).mkString(",")
         }
       }
-  }
-
-  class KMVSketchOf[T](f: T => String, k: Int)
-      extends Aggregator[T, String, KMVEstimate] {
-
-    override def zero: String = ""
-
-    private def insert(b: String, h: String): String = KmvBuffer.insert(k)(b, h)
 
     override def reduce(b: String, x: T): String = {
       // null keys carry no hash and are excluded from the distinct count —
@@ -230,123 +165,6 @@ object Aggregators {
 
     override def bufferEncoder: Encoder[String] = Encoders.STRING
     override def outputEncoder: Encoder[KMVEstimate] = Encoders.product[KMVEstimate]
-  }
-
-  /** The KMV sketch CONTENTS (sorted bottom-k hash set) instead of the
-    * collapsed estimate — the exportable state a sketch STORE persists so
-    * later queries can MERGE windows (q128's rollup) without touching raw
-    * data. Same buffer algebra as KMVSketchOf, so streamed daily sketches
-    * are bit-identical to batch ones (StreamingSpec).
-    */
-  class BottomKHashesOf[T](f: T => String, k: Int)
-      extends Aggregator[T, String, Seq[String]] {
-    override def zero: String = ""
-    override def reduce(b: String, x: T): String = {
-      val h = f(x)
-      if (h == null) b else KmvBuffer.insert(k)(b, h)
-    }
-    override def merge(a: String, b: String): String =
-      if (b.isEmpty) a else b.split(',').foldLeft(a)(KmvBuffer.insert(k))
-    override def finish(b: String): Seq[String] =
-      if (b.isEmpty) Nil else b.split(',').toSeq
-    override def bufferEncoder: Encoder[String] = Encoders.STRING
-    override def outputEncoder: Encoder[Seq[String]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]()
-  }
-
-  case class PsiCell(source: String, bin: Long, c: Long)
-  case class PsiBuf(cells: Seq[PsiCell])
-  case class PsiRow(source: String, n_docs: Long, psi: Double)
-
-  /** Streaming twin of `TextAnalysis.sourceDriftPsi`'s math: per-(source,
-    * quality-bin) counts as typed Aggregator state — bounded by sources ×
-    * bins on an unbounded stream, NO watermark (counts only grow; the
-    * report is recomputed from the live cell table each trigger). `finish`
-    * replicates the batch PSI exactly: add-one smoothing on the observed
-    * bin set, per-bin terms quantized to integer micro-units (exact
-    * order-free sums), one /1e6 + round(4) — so a complete-mode stream
-    * reproduces q102's rows bit-for-bit at every trigger.
-    */
-  class PsiReportOf extends Aggregator[(String, Long), PsiBuf, Seq[PsiRow]] {
-    override def zero: PsiBuf = PsiBuf(Vector.empty)
-
-    private def bump(cells: Seq[PsiCell], source: String, bin: Long, by: Long): Seq[PsiCell] = {
-      val i = cells.indexWhere(c => c.source == source && c.bin == bin)
-      if (i < 0) cells :+ PsiCell(source, bin, by)
-      else cells.updated(i, cells(i).copy(c = cells(i).c + by))
-    }
-
-    override def reduce(b: PsiBuf, x: (String, Long)): PsiBuf =
-      PsiBuf(bump(b.cells, x._1, x._2, 1L))
-
-    override def merge(a: PsiBuf, b: PsiBuf): PsiBuf =
-      PsiBuf(b.cells.foldLeft(a.cells) { (acc, c) => bump(acc, c.source, c.bin, c.c) })
-
-    override def finish(b: PsiBuf): Seq[PsiRow] = {
-      val cb = b.cells.groupBy(_.bin).view.mapValues(_.map(_.c).sum).toMap
-      val n = cb.values.sum; val nb = cb.size.toLong
-      b.cells.groupBy(_.source).toSeq.sortBy(_._1).map { case (src, cs) =>
-        val sb = cs.groupBy(_.bin).view.mapValues(_.map(_.c).sum).toMap
-        val ns = cs.map(_.c).sum
-        val t6 = cb.toSeq.sortBy(_._1).map { case (bin, cBin) =>
-          val p = (sb.getOrElse(bin, 0L) + 1).toDouble / (ns + nb)
-          val q = (cBin + 1).toDouble / (n + nb)
-          java.math.BigDecimal.valueOf((p - q) * math.log(p / q) * 1e6)
-            .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        }.sum
-        PsiRow(src, ns, Rounding.halfUp(t6 / 1e6, 4))
-      }
-    }
-
-    override def bufferEncoder: Encoder[PsiBuf] = Encoders.product[PsiBuf]
-    override def outputEncoder: Encoder[Seq[PsiRow]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[PsiRow]]()
-  }
-
-  case class MixCell(lang: String, toks: Long)
-  case class MixBuf(cells: Seq[MixCell])
-  case class MixRow(lang: String, tokens: Long, sample_weight: Double,
-    target_tokens: Long, epochs: Double)
-
-  /** Streaming mixture/epoch-plan state: per-language token counts (state
-    * bounded by language count on an unbounded stream), with `finish`
-    * replicating q112's arithmetic — sqrt-temperature weights renormalized
-    * (round 6), budget targets, epoch factors (round 4). The pa-sum runs
-    * over lang-sorted cells; like the q69/q112 oracles, round-6 absorbs
-    * the float-sum association order, so a complete-mode stream reproduces
-    * the batch rows at every trigger.
-    */
-  class MixturePlanOf(budgetTokens: Long = 1000000L)
-      extends Aggregator[(String, Long), MixBuf, Seq[MixRow]] {
-    override def zero: MixBuf = MixBuf(Vector.empty)
-
-    private def bump(cells: Seq[MixCell], lang: String, by: Long): Seq[MixCell] = {
-      val i = cells.indexWhere(_.lang == lang)
-      if (i < 0) cells :+ MixCell(lang, by)
-      else cells.updated(i, cells(i).copy(toks = cells(i).toks + by))
-    }
-
-    override def reduce(b: MixBuf, x: (String, Long)): MixBuf =
-      MixBuf(bump(b.cells, x._1, x._2))
-
-    override def merge(a: MixBuf, b: MixBuf): MixBuf =
-      MixBuf(b.cells.foldLeft(a.cells) { (acc, c) => bump(acc, c.lang, c.toks) })
-
-    override def finish(b: MixBuf): Seq[MixRow] = {
-      val total = b.cells.map(_.toks).sum
-      val pas = b.cells.sortBy(_.lang)
-        .map(c => (c.lang, c.toks, math.sqrt(c.toks.toDouble / total)))
-      val paSum = pas.map(_._3).sum
-      pas.map { case (lang, toks, pa) =>
-        val w = Rounding.halfUp(pa / paSum, 6)
-        val target = Rounding.halfUp(w * budgetTokens, 0).toLong
-        MixRow(lang, toks, w, target, Rounding.halfUp(target.toDouble / toks, 4))
-      }
-    }
-
-    override def bufferEncoder: Encoder[MixBuf] = Encoders.product[MixBuf]
-    override def outputEncoder: Encoder[Seq[MixRow]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[MixRow]]()
   }
 
   /** One-pass EXACT scatter-moment accumulator for the spectral family:

@@ -118,7 +118,7 @@ object Dedup {
     * selection, q83's source matrix, and q84's capstone all analyze the SAME
     * pair set, and a production curation run materializes it once for
     * exactly this reason (it is the in-session analog of the persisted
-    * `bandBuckets`/`shingleIndex` incremental-ingest index). Entries hold
+    * `bandBuckets` incremental-ingest index). Entries hold
     * localCheckpointed near-linear pair sets, so cache memory is
     * pair-proportional, never corpus-proportional; keys and eviction follow
     * [[SessionArtifacts]].
@@ -496,6 +496,22 @@ object Dedup {
       .orderBy($"threshold")
   }
 
+  /** (doc_id, band, bh) LSH band-bucket rows — the persistable index side
+    * of incremental dedup.
+    */
+  def bandBuckets(docs: DataFrame, n: Int = 5): DataFrame = {
+    val parts = docs.sparkSession.sparkContext.defaultParallelism * 2
+    docs
+      .repartition(parts, $"doc_id")
+      // fused native band keys: signature + per-band xxhash64 fold in one
+      // pass, no signature column, no 126-element_at expression tree
+      // (bit-identical to the compositional form; FunctionsSpec)
+      .select($"doc_id",
+        posexplode(graft.functions.MinHashFunctions
+          .minhash_band_keys($"text", n, NumHashes, BandRows)))
+      .select($"doc_id", $"pos".cast("int").as("band"), $"col".as("bh"))
+  }
+
   /** Incremental near-dup detection: find pairs between a NEW batch of
     * documents (doc_id < newIdCut) and the already-indexed corpus
     * (doc_id >= newIdCut) — the daily-ingest shape of LSH dedup, where the
@@ -512,33 +528,6 @@ object Dedup {
     * (q27's oracle) carries over; the oracle is the new-vs-old restricted
     * all-pairs Jaccard.
     */
-  /** (doc_id, band, bh) LSH band-bucket rows — the persistable index side
-    * of incremental dedup (also consumed by the streaming twin,
-    * `streaming.EventStreams.incrementalNearDupStream`).
-    */
-  def bandBuckets(docs: DataFrame, n: Int = 5): DataFrame = {
-    val parts = docs.sparkSession.sparkContext.defaultParallelism * 2
-    docs
-      .repartition(parts, $"doc_id")
-      // fused native band keys: signature + per-band xxhash64 fold in one
-      // pass, no signature column, no 126-element_at expression tree
-      // (bit-identical to the compositional form; FunctionsSpec)
-      .select($"doc_id",
-        posexplode(graft.functions.MinHashFunctions
-          .minhash_band_keys($"text", n, NumHashes, BandRows)))
-      .select($"doc_id", $"pos".cast("int").as("band"), $"col".as("bh"))
-  }
-
-  /** (doc_id, hs) sorted-distinct shingle-hash rows — the verification
-    * side of the persisted dedup index.
-    */
-  def shingleIndex(docs: DataFrame, n: Int = 5): DataFrame = {
-    val parts = docs.sparkSession.sparkContext.defaultParallelism * 2
-    docs
-      .repartition(parts, $"doc_id")
-      .select($"doc_id", graft.functions.MinHashFunctions.shingle_hashes($"text", n).as("hs"))
-  }
-
   def incrementalNearDupPairs(documents: DataFrame, newIdCut: Long = 100L,
       n: Int = 5, threshold: Double = 0.6): DataFrame = {
     val parts = documents.sparkSession.sparkContext.defaultParallelism * 2

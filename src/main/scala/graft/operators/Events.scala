@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Time-series operators over the `events` table (batch analogs of the
-  * streaming pipeline in `graft.streaming`; SURVEY.md §2.2).
+/** Time-series operators over the `events` table (SURVEY.md §2.2).
   *
   * The fixture stores TIMESTAMP(NANOS) parquet, which Spark's vectorized
   * reader rejects; `Tables.events` reads it as raw nanosecond longs
@@ -25,8 +24,8 @@ object Events {
   private val NsPerHour = 3600L * 1000000000L
   private val NsPerSecond = 1000000000L
 
-  /** Tumbling-window aggregation: events per (hour, event_type). The batch
-    * twin of the streaming windowed agg; one shuffle on the composite key.
+  /** Tumbling-window aggregation: events per (hour, event_type); one
+    * shuffle on the composite key.
     */
   def hourlyAgg(events: DataFrame): DataFrame =
     events
@@ -780,10 +779,9 @@ object Events {
     val mA = mean($"s1_a", $"n_a"); val mB = mean($"s1_b", $"n_b")
     val vA = svar($"s1_a", $"s2_a", $"n_a"); val vB = svar($"s1_b", $"s2_b", $"n_b")
     // degenerate-input guards (n<2 in an arm, or zero pooled variance):
-    // null instead of an ANSI divide-by-zero throw — this is what lets
-    // the SAME code path serve as the cold-starting streaming monitor
-    // (EventStreams.abTestStream), whose first micro-batches may hold a
-    // single arm; never triggered on a healthy batch corpus
+    // null instead of an ANSI divide-by-zero throw, so a tiny input or
+    // one whose users all hash into a single arm still returns its one
+    // row; never triggered on the fixture corpus
     counts.select(
       $"n_a", $"n_b",
       when($"n_a" > 0L, round(mA / 1e4, 4)).as("mean_a"),
@@ -1098,19 +1096,32 @@ object Events {
     * at/near 1 — the monitor correctly refuses to stop.
     */
   def msprtMonitor(events: DataFrame, metricType: String = "purchase",
-      tauMicro: Double = 50000.0): DataFrame =
-    msprtFromMoments(msprtArmMoments(events, metricType), tauMicro)
+      tauMicro: Double = 50000.0): DataFrame = {
+    def mean(s1: Column, n: Column): Column = s1.cast("double") / n
+    def svar(s1: Column, s2: Column, n: Column): Column =
+      (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
+    val mA = mean($"s1_a", $"n_a"); val mB = mean($"s1_b", $"n_b")
+    val vA = svar($"s1_a", $"s2_a", $"n_a"); val vB = svar($"s1_b", $"s2_b", $"n_b")
+    val th = mB - mA
+    val se2 = vA / $"n_a" + vB / $"n_b"
+    val t2 = lit(tauMicro * tauMicro)
+    val lam = sqrt(se2 / (se2 + t2)) *
+      exp(th * th * t2 / (lit(2.0) * se2 * (se2 + t2)))
+    msprtArmMoments(events, metricType).select(
+      $"n_a", $"n_b",
+      // guarded like se/lambda/p: an empty arm must render NULL on BOTH
+      // engines (Spark nulls a zero-divisor double division, DuckDB
+      // does not), not lean on the fixture always populating both arms
+      when($"n_a" >= 1L && $"n_b" >= 1L,
+        round(th / 1e4, 4)).as("theta_hat"),
+      when($"n_a" >= 2L && $"n_b" >= 2L && se2 > 0.0,
+        round(sqrt(se2) / 1e4, 4)).as("se"),
+      when($"n_a" >= 2L && $"n_b" >= 2L && se2 > 0.0,
+        round(lam, 4)).as("lambda"),
+      when($"n_a" >= 2L && $"n_b" >= 2L && se2 > 0.0,
+        round(least(lit(1.0), lit(1.0) / lam), 4)).as("p_always_valid"))
+  }
 
-  /** The monitor's exact 1-row arm-moment frame: per md5 arm, (n, Σvm,
-    * Σvm²) on the integer micro-unit grid. Split out (round 11) so the
-    * STREAMED per-arm state (`EventStreams.msprtMomentStream` — pure
-    * long addition) finishes through the IDENTICAL code path as the
-    * batch: θ̂, se, Λ and the always-valid p derive from these six
-    * scalars alone, so maintaining them incrementally maintains the
-    * whole monitor (the cusumFromMoments discipline applied to the one
-    * op whose production form is inherently streaming: a dashboard
-    * peeks CONTINUOUSLY, which is the entire reason mSPRT exists).
-    */
   /** Minimal detectable effect for the q192 A/B design (q279): given
     * the CURRENT arm sizes and variances, the smallest true lift a
     * two-sided α = 0.05 test detects with 80% power is
@@ -1207,19 +1218,11 @@ object Events {
     * corpus scan into the value frame; every window runs over distinct
     * values, not rows.
     */
-  def hillTailIndex(events: DataFrame, metricType: String = "purchase"): DataFrame =
-    hillFromValueCounts(events.filter($"event_type" === metricType)
+  def hillTailIndex(events: DataFrame, metricType: String = "purchase"): DataFrame = {
+    val byV = events.filter($"event_type" === metricType)
       .select(round($"value" * 10000, 0).cast("long").as("vm"))
-      .groupBy($"vm").agg(count(lit(1)).as("c")))
-
-  /** Finish the q285 Hill estimator from a (vm, c) value-count frame —
-    * shared by the batch scan and the drained `valueCountStream` state
-    * (the medianFromValueCounts pattern: per-value counts are pure
-    * addition, so a tail-index DRIFT monitor streams for free through
-    * the identical finisher — the twelfth twin).
-    */
-  def hillFromValueCounts(valueCounts: DataFrame): DataFrame = {
-    val byV = valueCounts.filter($"vm" >= 1L)
+      .groupBy($"vm").agg(count(lit(1)).as("c"))
+      .filter($"vm" >= 1L)
     val tot = byV.agg(sum($"c").as("n"))
     val w = Window.orderBy($"vm".desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1326,10 +1329,9 @@ object Events {
   }
 
   /** Finish the q286 stationary distribution from a (src, dst, count)
-    * transition-count frame — shared by the batch scan and the drained
-    * `transitionStream` counts (the msprtFromMoments pattern: the
-    * eleventh streaming twin is pure reuse, transition counts are pure
-    * addition and this finisher is identical on both paths).
+    * transition-count matrix — split from [[markovStationary]] so a spec
+    * can drive it with a hand-built chain (InferenceSpec's slowly mixing
+    * chain, whose non-zero residual the fixture cannot produce).
     */
   def markovStationaryFromCounts(spark: org.apache.spark.sql.SparkSession,
       matrix: Seq[(String, String, Long)], iters: Int = 24): DataFrame = {
@@ -1471,6 +1473,11 @@ object Events {
       .orderBy($"bucket")
   }
 
+  /** The monitor's exact 1-row arm-moment frame: per md5 arm, (n, Σvm,
+    * Σvm²) on the integer micro-unit grid. θ̂, se, Λ and the always-valid
+    * p of q237 derive from these six scalars alone; q279's MDE and q283's
+    * TOST ride the same frame.
+    */
   private[graft] def msprtArmMoments(events: DataFrame,
       metricType: String): DataFrame =
     events.filter($"event_type" === metricType)
@@ -1483,37 +1490,6 @@ object Events {
         sum(when($"arm" === 1L, 1L).otherwise(0L)).as("n_b"),
         sum(when($"arm" === 1L, $"vm").otherwise(0L)).as("s1_b"),
         sum(when($"arm" === 1L, $"vm" * $"vm").otherwise(0L)).as("s2_b"))
-
-  /** Finish the q237 monitor from a 1-row (n_a, s1_a, s2_a, n_b, s1_b,
-    * s2_b) moment frame — shared by the batch scan and the streamed
-    * per-arm state.
-    */
-  def msprtFromMoments(counts: DataFrame,
-      tauMicro: Double = 50000.0): DataFrame = {
-    def mean(s1: Column, n: Column): Column = s1.cast("double") / n
-    def svar(s1: Column, s2: Column, n: Column): Column =
-      (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
-    val mA = mean($"s1_a", $"n_a"); val mB = mean($"s1_b", $"n_b")
-    val vA = svar($"s1_a", $"s2_a", $"n_a"); val vB = svar($"s1_b", $"s2_b", $"n_b")
-    val th = mB - mA
-    val se2 = vA / $"n_a" + vB / $"n_b"
-    val t2 = lit(tauMicro * tauMicro)
-    val lam = sqrt(se2 / (se2 + t2)) *
-      exp(th * th * t2 / (lit(2.0) * se2 * (se2 + t2)))
-    counts.select(
-      $"n_a", $"n_b",
-      // guarded like se/lambda/p: an empty arm must render NULL on BOTH
-      // engines (Spark nulls a zero-divisor double division, DuckDB
-      // does not), not lean on the fixture always populating both arms
-      when($"n_a" >= 1L && $"n_b" >= 1L,
-        round(th / 1e4, 4)).as("theta_hat"),
-      when($"n_a" >= 2L && $"n_b" >= 2L && se2 > 0.0,
-        round(sqrt(se2) / 1e4, 4)).as("se"),
-      when($"n_a" >= 2L && $"n_b" >= 2L && se2 > 0.0,
-        round(lam, 4)).as("lambda"),
-      when($"n_a" >= 2L && $"n_b" >= 2L && se2 > 0.0,
-        round(least(lit(1.0), lit(1.0) / lam), 4)).as("p_always_valid"))
-  }
 
   /** Session-entry attribution (q195): credit every purchase to the
     * event type that OPENED its session — first-touch attribution at
@@ -1750,26 +1726,10 @@ object Events {
     */
   def cusumDriftDays(events: DataFrame, h: Long = 50000L): DataFrame = {
     val NsPerDay = 24L * NsPerHour
-    cusumFromMoments(
-      events
-        .groupBy((expr(s"ts div $NsPerDay") * 86400).as("day_epoch"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(round($"value" * 10000, 0).cast("long")).as("s1")),
-      h)
-  }
-
-  /** The q193 CUSUM chain from exact per-day moments (day_epoch,
-    * n_events, s1) — split out so the STREAMED moment state
-    * (`EventStreams.cusumMomentStream`, pure-addition per-day
-    * accumulators) finishes through the IDENTICAL code path as the
-    * batch: the reference level k, both CUSUM tracks, and the alarm
-    * derive from the moments alone, so maintaining the moments
-    * incrementally maintains the whole detector (the q225/q227/q228
-    * partials discipline applied to sequential detection). Input is
-    * days-proportional; the windows run over the bounded day frame,
-    * never the corpus.
-    */
-  def cusumFromMoments(moments: DataFrame, h: Long = 50000L): DataFrame = {
+    val moments = events
+      .groupBy((expr(s"ts div $NsPerDay") * 86400).as("day_epoch"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(round($"value" * 10000, 0).cast("long")).as("s1"))
     // reference level k from the RAW exact moments (not from xm, whose
     // per-day floor already lost sub-unit mass)
     val kRef = moments.agg(expr("(10000 * sum(s1)) div sum(n_events)").as("k"))
@@ -2239,10 +2199,8 @@ object Events {
       lambda, limit)
 
   /** The EWMA finisher over a (d, c) daily count frame — split from
-    * [[ewmaControl]] so the streaming twin (the per-day pure-addition
-    * counts `EventStreams.cusumMomentStream` already maintains) finishes
-    * through the IDENTICAL code path (the cusum/mSPRT/KS refactor
-    * pattern).
+    * [[ewmaControl]] so a spec can drive the chart with a planted
+    * synthetic series (InferenceSpec's drift step).
     */
   private[graft] def ewmaFromDailyCounts(daily: DataFrame, lambda: Double,
       limit: Double): DataFrame = {
@@ -2433,22 +2391,10 @@ object Events {
     * shares render from exact sums. Shape: the day frame × 29 periods
     * — a calendar-bounded grid, never corpus-proportional.
     */
-  def periodogram(events: DataFrame, maxPeriod: Int = 30): DataFrame =
-    periodogramFromDaily(
-      events.groupBy(expr(s"ts div $NsPerDay").as("d"))
-        .agg(count(lit(1)).as("x")),
-      maxPeriod)
-
-  /** The periodogram finisher over a (d, x) daily count frame — split
-    * from [[periodogram]] so the streaming twin (the per-day
-    * pure-addition counts `EventStreams.cusumMomentStream` already
-    * maintains) finishes through the IDENTICAL code path (the
-    * q255-EWMA reuse pattern: the thirteenth twin is zero new stream
-    * operators).
-    */
-  private[graft] def periodogramFromDaily(daily: DataFrame,
-      maxPeriod: Int): DataFrame = {
-    val spark = daily.sparkSession
+  def periodogram(events: DataFrame, maxPeriod: Int = 30): DataFrame = {
+    val spark = events.sparkSession
+    val daily = events.groupBy(expr(s"ts div $NsPerDay").as("d"))
+      .agg(count(lit(1)).as("x"))
     val cal = daily.agg(min($"d").as("d0"), max($"d").as("d1"))
     val series = cal.select(explode(expr("sequence(d0, d1)")).as("d"))
       .join(daily, Seq("d"), "left_outer")
@@ -2853,17 +2799,10 @@ object Events {
     * median at k = ⌈n/2⌉), so all three outputs come from one
     * windowed pass over the value frame.
     */
-  def medianCi(events: DataFrame): DataFrame =
-    medianFromValueCounts(events
+  def medianCi(events: DataFrame): DataFrame = {
+    val byVal = events
       .select($"event_type", round($"value" * 10000, 0).cast("long").as("vm"))
-      .groupBy($"event_type", $"vm").agg(count(lit(1)).as("c")))
-
-  /** The median-CI finisher over a (event_type, vm, c) per-value count
-    * frame — split from [[medianCi]] so the streaming twin
-    * (`EventStreams.valueCountStream`, pure-addition per-value counts)
-    * finishes through the IDENTICAL code path (the KS/EWMA pattern).
-    */
-  private[graft] def medianFromValueCounts(byVal: DataFrame): DataFrame = {
+      .groupBy($"event_type", $"vm").agg(count(lit(1)).as("c"))
     val w = Window.partitionBy($"event_type").orderBy($"vm")
       .rowsBetween(Window.unboundedPreceding, 0)
     val cum = byVal

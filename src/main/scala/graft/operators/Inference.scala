@@ -330,20 +330,12 @@ object Inference {
     * [[kolmogorovTail]] at λ = D·√(n₁n₂/(n₁+n₂)).
     */
   def ksTwoSample(documents: DataFrame, srcA: String = "src0",
-      srcB: String = "src1"): DataFrame =
-    ksFromCounts(documents
+      srcB: String = "src1"): DataFrame = {
+    val byVal = documents
       .filter($"source" === srcA || $"source" === srcB)
       .groupBy($"n_chars".as("v"))
       .agg(sum(when($"source" === srcA, 1L).otherwise(0L)).as("c1"),
-        sum(when($"source" === srcB, 1L).otherwise(0L)).as("c2")))
-
-  /** The KS finisher over a (v, c1, c2) per-value count frame — split
-    * from [[ksTwoSample]] so the streaming twin
-    * (`EventStreams.ksCountStream`, which maintains the counts by pure
-    * addition) finishes through the IDENTICAL code path (the
-    * cusum/mSPRT/datasheet refactor pattern).
-    */
-  private[graft] def ksFromCounts(byVal: DataFrame): DataFrame = {
+        sum(when($"source" === srcB, 1L).otherwise(0L)).as("c2"))
     val tot = byVal.agg(sum($"c1").as("n1"), sum($"c2").as("n2"))
     val w = Window.orderBy($"v").rowsBetween(Window.unboundedPreceding, 0)
     val dmax = byVal

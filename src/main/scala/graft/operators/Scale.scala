@@ -574,10 +574,8 @@ object Scale {
     * Real lakehouses alert on exactly this — "small-file debt" — because
     * scan parallelism and manifest pressure degrade long before a
     * scheduled compaction notices). Pure additive aggregates (counts +
-    * conditional sums + one rounded share), so the metric is exact,
-    * arrival-order-free, and has a live streaming twin
-    * (`EventStreams.compactionDebtStream`, complete mode, state = one
-    * row per family) that equals this batch form at every trigger.
+    * conditional sums + one rounded share), so the metric is exact and
+    * arrival-order-free.
     */
   def compactionDebt(files: DataFrame, typeCol: String, sizeCol: String,
       smallBytes: Long = 4096): DataFrame = {

@@ -1175,8 +1175,7 @@ object Similarity {
     *  - `ivflists(vec_id, centroid_id)` — the inverted-list assignment.
     * Training rides the session model cache (q148 the carrier), so
     * persisting after a served query costs only the writes. q242
-    * fingerprints the directory for its staleness report, and
-    * `pqServingStatic` reads it back for the streaming serve.
+    * fingerprints the directory for its staleness report.
     */
   def writePqIndex(embeddings: DataFrame, dir: String, m: Int = 8,
       codes: Int = 16, iters: Int = 2, nQueries: Int = 5,
@@ -1201,27 +1200,9 @@ object Similarity {
     Governance.writeFingerprint(embeddings, Governance.embCanonical, dir)
   }
 
-  /** Static half of the STREAMING PQ serving path (see
-    * `EventStreams.pqServeStream`): the persisted q148/q149 artifacts
-    * re-shaped for a stream-static join — cell-tagged code rows
-    * (codes ⋈ inverted lists, code-table-proportional, never
-    * collected), the codebook table as-is, and the collected coarse
-    * centroids (model-sized) for the probe expression.
-    */
-  def pqServingStatic(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame, Array[(Long, Array[Double])]) = {
-    val candidates = spark.read.parquet(s"$dir/codes")
-      .join(spark.read.parquet(s"$dir/ivflists"), Seq("vec_id"))
-    val books = spark.read.parquet(s"$dir/codebooks")
-    val cents = spark.read.parquet(s"$dir/centroids").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    (candidates, books, cents)
-  }
-
   /** The `nProbe` nearest coarse cells of a query-vector column, by the
     * SAME rounded-argmin structs every batch IVF path probes with —
-    * returns array<long> of centroid ids (for the streaming serving
-    * path, where the probe must be a pure Column expression).
+    * returns array<long> of centroid ids.
     */
   def probeCellsExpr(cents: Array[(Long, Array[Double])], v: Column,
       nProbe: Int): Column =

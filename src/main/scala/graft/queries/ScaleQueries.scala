@@ -107,8 +107,7 @@ private[graft] object ScaleQueries extends QueryFamily {
     "q311_layout_skipping" -> ((s, d) =>
       Scale.layoutSkippingAudit(Tables.orders(s, d), "o_orderdate", "o_orderkey")),
     // small-file debt per media family over the real asset store — the
-    // trigger metric that decides when q310's planner runs; has the
-    // round-13 streaming twin (EventStreams.compactionDebtStream)
+    // trigger metric that decides when q310's planner runs
     "q312_compaction_debt" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       Scale.compactionDebt(

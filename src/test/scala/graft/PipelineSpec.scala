@@ -2231,6 +2231,18 @@ class PipelineSpec extends GraftSuite {
     // the arms see the same process: an A/A split should not "detect" an
     // effect (|z| inside the 1.96 line on any healthy fixture)
     assert(math.abs(row.getDouble(4)) < 1.96, s"A/A z unexpectedly large: ${row.getDouble(4)}")
+    // degenerate inputs (an arm with n < 2) return their one row with a
+    // null z instead of an ANSI divide-by-zero: a one-row frame, and a
+    // frame whose purchases all fall in arm 0
+    val purchases = ev.filter($"event_type" === "purchase")
+    val armA = purchases.select($"user_id").distinct().collect().map(_.getLong(0))
+      .filter(u => Integer.parseInt(md5hex(u.toString).substring(0, 4), 16) % 2 == 0)
+    val oneRow = Events.abValueTest(purchases.limit(1)).collect()
+    val oneArm = Events.abValueTest(purchases.filter($"user_id".isin(armA.toSeq: _*))).collect()
+    assert(oneRow.map(r => r.getLong(0) + r.getLong(1)).toSeq === Seq(1L))
+    assert(oneArm.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((a.length.toLong, 0L)))
+    for (r <- oneRow ++ oneArm)
+      assert(r.isNullAt(r.fieldIndex("z_score")), s"z_score ${r.get(r.fieldIndex("z_score"))}")
   }
 
   test("motifCensus: brute-force subsequence existence over every ordered triple (q236)") {

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * or of `functions.Aggregators` is named somewhere else in `src/main`
   * (a query, a main, or another operator). A member that only a spec
   * calls is deleted with its spec, or listed in `testOnly` with its
-  * reason.
+  * reason; an allowlisted name must stay named by some other spec, so
+  * deleting its last spec flags it too.
   */
 class RegisteredSurfaceSpec extends AnyFunSuite {
 
@@ -22,9 +23,7 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
     "lshBucket" -> "Column reference for the fused native bucket form",
     "neardupBucket" -> "Column reference for the fused native bucket form",
     "embeddingNearDupExact" -> "O(n^2) ground truth for the near-dup specs",
-    "requireFresh" -> "the staleness check GovernanceSpec and MatchingSpec assert directly",
-    "pqServingStatic" -> "input for the EventStreams PQ serving spec",
-    "shingleIndex" -> "input for the EventStreams incremental-dedup spec")
+    "requireFresh" -> "the staleness check GovernanceSpec and MatchingSpec assert directly")
 
   // comments and string/char literals: a scaladoc mention keeps nothing
   // alive, and braces inside literals do not count toward nesting
@@ -39,10 +38,13 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
     Literal.replaceAllIn(Files.readString(p), m => " " + "\n" * m.matched.count(_ == '\n'))
 
   test("drift guard: every operator API is named somewhere else in src/main") {
-    val src = Paths.get("src/main/scala")
-    assert(Files.isDirectory(src), s"${src.toAbsolutePath} not found")
-    val files = Files.walk(src).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).map(p => p -> code(p)).toList
+    def sources(dir: String): List[(Path, String)] = {
+      val root = Paths.get(dir)
+      assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
+      Files.walk(root).iterator.asScala
+        .filter(_.toString.endsWith(".scala")).map(p => p -> code(p)).toList
+    }
+    val files = sources("src/main/scala")
     val all = files.map(_._2).mkString("\n")
     val named = Ident.findAllIn(all).toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
     val declared = Decl.findAllMatchIn(all).toSeq.groupMapReduce(_.group(3))(_ => 1)(_ + _)
@@ -75,5 +77,11 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
       unlisted.map(_._2).mkString("\n"))
     val stale = testOnly.keySet -- orphans.map(_._1)
     if (stale.nonEmpty) fail(s"allowlisted but now named in src/main (drop them from testOnly): $stale")
+    val specNamed = sources("src/test/scala")
+      .filterNot(_._1.getFileName.toString == "RegisteredSurfaceSpec.scala")
+      .flatMap { case (_, text) => Ident.findAllIn(text) }.toSet
+    val unused = testOnly.keySet -- specNamed
+    if (unused.nonEmpty) fail("allowlisted but named by no spec — delete them from src/main " +
+      s"and from testOnly: $unused")
   }
 }
