@@ -34,10 +34,4 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-
-  def local(appName: String = "graft-test"): SparkSession = {
-    val s = builder(appName).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicReference
 import com.fasterxml.jackson.core.io.JsonStringEncoder
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
@@ -25,7 +26,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    (wall − job sum, negative when jobs overlap): wall ≫ job sum means
   *    driver-side planning/codegen cost, wall ≈ job sum means executor work;
   *  - `plan` — `target/profile/<qNN>.txt`, the write's executed
-  *    FormattedMode plan (AQE's final plan), or null on failure.
+  *    FormattedMode plan (AQE's final plan), or null on failure. The file
+  *    is normalized so that two runs of the same code, in one JVM or in
+  *    two checkouts, write the same bytes unless AQE planned differently:
+  *    ids that depend on the JVM or on timing (`plan_id=N`, `#N`
+  *    expression ids, RDD, codegen and AQE stage ids, lambda names,
+  *    identity hashes, scratch-dir suffixes) are renumbered in order of
+  *    first appearance, and the working directory prefix reads `.`.
   *
   * Run: `SPARK_GRAFT_PROFILE_QUERIES=q27_dedup_minhash_lsh sbt "runMain graft.Profile"`.
   */
@@ -89,6 +96,7 @@ object Profile {
       require(markersDone.size > before, "listener bus did not deliver the marker job within 60 s")
     }
 
+    val workDir = Paths.get("").toAbsolutePath.toString
     Files.createDirectories(outDir)
     sc.addSparkListener(listener)
     spark.listenerManager.register(qeListener)
@@ -108,7 +116,8 @@ object Profile {
         val jobSum = jobWalls.values.asScala.sum / 1e3
         val plan = Option(lastQe.get).filter(_ => status == "ok").map { qe =>
           val file = outDir.resolve(s"${name.takeWhile(_ != '_')}.txt")
-          Files.writeString(file, s"-- $name @ $sfDir\n" + qe.explainString(FormattedMode))
+          Files.writeString(file,
+            normalize(s"-- $name @ $sfDir\n" + qe.explainString(FormattedMode), workDir))
           file
         }
         val line = s"""{"query":${str(name)},"status":${str(status)},""" +
@@ -122,6 +131,27 @@ object Profile {
       spark.listenerManager.unregister(qeListener)
     }
   }
+
+  // ids that depend on the JVM, on what ran earlier in it or on task
+  // timing: exchange plan ids, expression ids, RDD ids, codegen stage ids,
+  // AQE query-stage ids, lambda class names, object identity hashes and
+  // the random suffixes of graft's scratch dirs
+  private val Ids = Seq("""(plan_id=)(\d+)""", """(#)(\d+)""", """(RDD\[)(\d+)""",
+    """(codegen id : )(\d+)""",
+    """(?m)(^\(\d+\) \w*QueryStage\nOutput \[\d+\]: .*\nArguments: )(\d+)$""",
+    """(\$\$Lambda)(\$\d+/0x\p{XDigit}+@\p{XDigit}+)""", """([\w$]@)(\p{XDigit}+)\b""",
+    """(/graft_[a-z_]+)(\d{12,})""").map(_.r)
+
+  /** `plan` with each kind of id in `Ids` renumbered from 0 in order of
+    * first appearance, and paths under `workDir` made relative to it
+    * (`./...`).
+    */
+  private[graft] def normalize(plan: String, workDir: String): String =
+    Ids.foldLeft(plan.replace(workDir + "/", "./")) { (text, re) =>
+      val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      re.replaceAllIn(text, m =>
+        Regex.quoteReplacement(m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size)))
+    }
 
   private def str(s: String): String =
     "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""

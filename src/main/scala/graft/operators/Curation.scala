@@ -48,8 +48,10 @@ object Curation {
     * benchmark-proportional, not corpus-proportional. At 100 TB the same
     * plan holds: corpus scan → broadcast probe → near-empty aggregate.
     */
-  def decontaminate(documents: DataFrame, nBenchmark: Long = 50, n: Int = 3,
-      threshold: Double = 0.5): DataFrame = {
+  def decontaminate(documents: DataFrame): DataFrame = {
+    val nBenchmark = 50L
+    val n = 3
+    val threshold = 0.5
     import graft.functions.TextFunctions.word_grams
     val bench = documents.filter($"doc_id" < nBenchmark)
       .select(explode(word_grams($"text", n, distinct = true)).as("g"))
@@ -171,7 +173,7 @@ object Curation {
   /** PII / denylist redaction report — the pre-release scrub every
     * published training corpus runs. Three structural PII patterns
     * (emails, phone numbers, SSN-shaped ids; regexes valid in both Java
-    * and RE2 dialects) plus a configurable term denylist counted with
+    * and RE2 dialects) plus a term denylist (`customer`, `vector`) counted with
     * exact padded-marker integer arithmetic. One codegen'd projection +
     * one map-side-combined aggregation per corpus scan — embarrassingly
     * parallel, the right shape for a 100 TB scrub pass.
@@ -189,12 +191,10 @@ object Curation {
       regexp_count(lower(text), lit(PhoneRe)) +
       regexp_count(lower(text), lit(SsnRe))
 
-  def redactionReport(documents: DataFrame,
-      denyTerms: Seq[String] = Seq("customer", "vector")): DataFrame = {
+  def redactionReport(documents: DataFrame): DataFrame = {
     val padded = concat(lit(" "), lower($"text"), lit(" "))
     val denyHits =
-      if (denyTerms.isEmpty) lit(0)
-      else denyTerms.map(t => TextAnalysis.occurrences(padded, s" $t ")).reduce(_ + _)
+      Seq("customer", "vector").map(t => TextAnalysis.occurrences(padded, s" $t ")).reduce(_ + _)
     documents
       .select($"source", piiCountCol($"text").as("pii"), denyHits.as("deny"))
       .groupBy($"source")
@@ -216,7 +216,8 @@ object Curation {
     * shuffle as tf-idf's document frequency, linear in gram occurrences —
     * then a 1-row fold. No pairwise comparisons anywhere.
     */
-  def dupGramMass(documents: DataFrame, n: Int = 3): DataFrame = {
+  def dupGramMass(documents: DataFrame): DataFrame = {
+    val n = 3
     import graft.functions.TextFunctions.word_grams
     documents
       .filter(size(split($"text", " ")) >= n)
@@ -247,7 +248,8 @@ object Curation {
     * deterministic, and stable under re-runs: the same doc set is drawn
     * every time, which is what makes a training mix reproducible.
     */
-  def materializeMixture(documents: DataFrame, targetFraction: Double = 0.5): DataFrame = {
+  def materializeMixture(documents: DataFrame): DataFrame = {
+    val targetFraction = 0.5
     val w = Window.partitionBy() // language-count rows only
     val langStats = documents
       .groupBy($"lang")
@@ -281,11 +283,11 @@ object Curation {
     * is small enough to identify contributors. One map-side-combined
     * aggregation; cells, not rows, leave the reducers.
     */
-  def kAnonymityReport(documents: DataFrame, k: Long = 10L): DataFrame =
+  def kAnonymityReport(documents: DataFrame): DataFrame =
     documents
       .groupBy($"lang", $"source")
       .agg(count(lit(1)).as("n_docs"))
-      .select($"lang", $"source", $"n_docs", ($"n_docs" >= k).as("k_anonymous"))
+      .select($"lang", $"source", $"n_docs", ($"n_docs" >= 10L).as("k_anonymous"))
       .orderBy($"lang", $"source")
 
   /** Exact duplicated-SPAN detection: per document, the maximal token
@@ -309,7 +311,8 @@ object Curation {
     * and a Bloom prefilter (q72's primitive) slots in front of the
     * position join unchanged.
     */
-  def duplicatedSpans(documents: DataFrame, k: Int = 8): DataFrame =
+  def duplicatedSpans(documents: DataFrame): DataFrame = {
+    val k = 8
     dupSpanIslands(documents, k)
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_spans"), sum($"e" - $"s" + 1L).as("dup_tokens"))
@@ -318,6 +321,7 @@ object Curation {
       .select($"doc_id", $"n_spans", $"dup_tokens", $"n_tokens",
         round($"dup_tokens" / $"n_tokens", 6).as("dup_fraction"))
       .orderBy($"doc_id")
+  }
 
   /** The maximal duplicated-span intervals behind `duplicatedSpans` /
     * `cutDuplicatedSpans`: `(doc_id, island, s, e)` with token interval
@@ -368,8 +372,8 @@ object Curation {
     * order-insensitive `array_sort(collect_list(struct(pos, tok)))` —
     * deterministic under any partitioning.
     */
-  def cutDuplicatedSpans(documents: DataFrame, k: Int = 8): DataFrame = {
-    val covered = dupSpanIslands(documents, k)
+  def cutDuplicatedSpans(documents: DataFrame): DataFrame = {
+    val covered = dupSpanIslands(documents, 8)
       .select($"doc_id", explode(sequence($"s", $"e")).as("pos"))
     val kept = documents
       .select($"doc_id", posexplode(split($"text", " ")))
@@ -414,8 +418,10 @@ object Curation {
     * back to units + round(4); ranking is on the rounded score then
     * doc_id.
     */
-  def dsirImportance(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 1024, topk: Int = 50): DataFrame = {
+  def dsirImportance(documents: DataFrame): DataFrame = {
+    val targetLang = "en"
+    val buckets = 1024
+    val topk = 50
     val toks = documents
       .select($"doc_id", $"lang", explode(split($"text", " ")).as("tok"))
       .select($"doc_id", $"lang", Scale.md5SlicePos($"tok", 0, buckets).as("b"))
@@ -506,10 +512,10 @@ object Curation {
     * (exact — an integer-valued double at budget ≤ 1e9); epochs is one
     * division of exact integers, rounded once.
     */
-  def epochPlan(documents: DataFrame, budgetTokens: Long = 1000000L): DataFrame =
+  def epochPlan(documents: DataFrame): DataFrame =
     temperatureMixture(documents)
       .select($"lang", $"tokens", $"sample_weight",
-        round($"sample_weight" * budgetTokens, 0).cast("long").as("target_tokens"))
+        round($"sample_weight" * 1000000L, 0).cast("long").as("target_tokens"))
       .select($"lang", $"tokens", $"sample_weight", $"target_tokens",
         round($"target_tokens" / $"tokens", 4).as("epochs"))
       .orderBy($"lang")
@@ -539,7 +545,8 @@ object Curation {
     * lang-sized min/max rollup, and a broadcast join with the per-lang
     * corpus stats. Report: corpus mean, bootstrap envelope [lo, hi].
     */
-  def bootstrapCi(documents: DataFrame, replicas: Int = 16): DataFrame = {
+  def bootstrapCi(documents: DataFrame): DataFrame = {
+    val replicas = 16
     val perDoc = documents.select($"doc_id", $"lang",
       round(TextAnalysis.qualityCol($"text") * 1e4, 0).cast("long").as("qm"))
     val u = conv(substring(
@@ -592,8 +599,8 @@ object Curation {
     * doc_id on both engines. covered_total is exact by disjointness —
     * each round adds exactly `new_tokens` previously-uncovered types.
     */
-  def setCoverSelect(documents: DataFrame, nSel: Int = 5,
-      gram: Int = 2): DataFrame = {
+  def setCoverSelect(documents: DataFrame): DataFrame = {
+    val nSel = 5
     val spark0 = documents.sparkSession
     // universe = distinct word `gram`-grams (the fixture's unigram
     // vocabulary is 31 types — one doc covers it; bigrams give the
@@ -618,7 +625,7 @@ object Curation {
       .repartition(parts, $"doc_id")
       .select($"doc_id",
         explode(graft.functions.TextFunctions.word_grams(
-          $"text", gram, distinct = true)).as("tok"))
+          $"text", 2, distinct = true)).as("tok"))
       .localCheckpoint() // scanned once per greedy round
     // r14 (guide §2.4/§3.1): the covered set is NOT vocabulary-sized —
     // it is the union of the ≤ nSel PICKED documents' distinct grams, a
@@ -808,7 +815,8 @@ object Curation {
     * then runs over a langs×topk-bounded frame; the final order is a
     * TakeOrderedAndProject, never a global sort.
     */
-  def interleaveSchedule(documents: DataFrame, topk: Int = 50): DataFrame = {
+  def interleaveSchedule(documents: DataFrame): DataFrame = {
+    val topk = 50
     val weights = temperatureMixture(documents).select($"lang", $"sample_weight")
     val pruned = Scale.topKPerGroup(
       documents.select($"doc_id", $"lang"),
@@ -940,9 +948,7 @@ object Curation {
     * onto at most 2^4 pattern rows, and the corpus share comes from a
     * window over that bounded frame.
     */
-  def filterAttrition(documents: DataFrame, minWords: Int = 25,
-      minQuality: Double = 0.5, maxDup2: Double = 0.06,
-      keepLang: String = "en"): DataFrame = {
+  def filterAttrition(documents: DataFrame): DataFrame = {
     import graft.functions.TextFunctions.word_ngram_stats
     val flagged = documents
       .select(
@@ -951,17 +957,17 @@ object Curation {
         word_ngram_stats($"text", 2).as("s2"),
         $"lang")
       .select($"nw",
-        ($"nw" < minWords).as("f_short"),
-        ($"quality" < minQuality).as("f_lowq"),
+        ($"nw" < 25).as("f_short"),
+        ($"quality" < 0.5).as("f_lowq"),
         // a doc with < 2 words has no 2-grams; the division must sit
         // under a CaseWhen (which conditionally evaluates) because ANSI
         // throws DIVIDE_BY_ZERO even for double 0/0 and `&&` does not
         // short-circuit — such a doc is never 'rep' (it is already
         // 'short'), matching the oracle's LEFT JOIN + coalesce(0.0)
         when($"s2.n_grams" > 0,
-          ($"s2.n_grams" - $"s2.n_distinct") / $"s2.n_grams" > maxDup2)
+          ($"s2.n_grams" - $"s2.n_distinct") / $"s2.n_grams" > 0.06)
           .otherwise(lit(false)).as("f_rep"),
-        ($"lang" =!= keepLang).as("f_lang"))
+        ($"lang" =!= "en").as("f_lang"))
     val pattern = concat_ws(",",
       when($"f_short", "short"), when($"f_lowq", "lowq"),
       when($"f_rep", "rep"), when($"f_lang", "lang"))
@@ -1397,11 +1403,11 @@ object Curation {
     * training contract and scale shape. Output: hash bucket (-1 = bias),
     * the integer micro-unit weight, and its double rendering.
     */
-  def qualityClassifierWeights(documents: DataFrame,
-      targetLang: String = "en", buckets: Int = 64, rounds: Int = 4,
-      lr: Double = 0.0009765625): DataFrame = {
+  def qualityClassifierWeights(documents: DataFrame): DataFrame = {
+    val buckets = 64
+    val rounds = 4
     val spark = documents.sparkSession
-    val (_, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
+    val (_, w) = trainQualityWeights(documents, "en", buckets, rounds, 0.0009765625)
     spark.createDataFrame(w).toDF("b", "w_micro")
       .select($"b", $"w_micro", round($"w_micro" / 1e6, 6).as("weight"))
       .orderBy($"b")
@@ -1419,10 +1425,10 @@ object Curation {
     * scoring is a single corpus-linear pass, the same plan a 100 TB
     * inference sweep would run.
     */
-  def qualityClassifierEval(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625): DataFrame = {
+  def qualityClassifierEval(documents: DataFrame): DataFrame = {
+    val targetLang = "en"
     val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
+    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
     val labels = documents.select($"doc_id",
       when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
     val scored = fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
@@ -1455,10 +1461,9 @@ object Curation {
     * pm_mass (sum of accepted micro-scores) is the exact integer the
     * expected-token-budget planner needs.
     */
-  def classifierSample(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625): DataFrame = {
+  def classifierSample(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
+    val (fx, w) = trainQualityWeights(documents, "en", 64, 4, 0.0009765625)
     val scored = fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
       .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
       .select($"doc_id",
@@ -1498,9 +1503,8 @@ object Curation {
     * weights + feature-frame caches (q143 is the family carrier), then
     * a bucket-sized rollup.
     */
-  def classifierCalibration(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625): DataFrame =
-    marginBuckets(documents, targetLang, buckets, rounds, lr)
+  def classifierCalibration(documents: DataFrame): DataFrame =
+    marginBuckets(documents, "en", 64, 4, 0.0009765625)
       .select($"mbucket", $"n_docs", $"n_pos",
         round($"n_pos" / $"n_docs", 6).as("pos_rate"))
       .orderBy($"mbucket")
@@ -1545,9 +1549,9 @@ object Curation {
     * frame — the quadratic lives entirely in dimension space, the
     * classic O(n²)-sequential-PAV made distribution-safe.
     */
-  def isotonicCalibration(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625): DataFrame = {
-    val b = marginBuckets(documents, targetLang, buckets, rounds, lr)
+  def isotonicCalibration(documents: DataFrame): DataFrame = {
+    val buckets = 64
+    val b = marginBuckets(documents, "en", buckets, 4, 0.0009765625)
     val wOrd = Window.orderBy($"mbucket")
       .rowsBetween(Window.unboundedPreceding, 0)
     val cum = b
@@ -1600,11 +1604,10 @@ object Curation {
     * the driver. All comparisons are exact integer; the two output
     * ratios are the only floats.
     */
-  def conformalQuality(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625,
-      alphas: Seq[Double] = Seq(0.05, 0.1, 0.2)): DataFrame = {
+  def conformalQuality(documents: DataFrame): DataFrame = {
+    val targetLang = "en"
     val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
+    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
     val labels = documents.select($"doc_id",
       when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
     val scored = fx
@@ -1616,7 +1619,7 @@ object Curation {
       .localCheckpoint() // scored once; read by q-hat and per-alpha passes
     val nCal = scored.filter($"is_calib").count()
     val test = scored.filter(!$"is_calib")
-    alphas.map { alpha =>
+    Seq(0.05, 0.1, 0.2).map { alpha =>
       val k = math.ceil((nCal + 1) * (1 - alpha)).toLong
       require(k <= nCal,
         s"alpha=$alpha needs ${k} calibration points, have $nCal")
@@ -1655,11 +1658,10 @@ object Curation {
     * the label-y calibration slice via the salted two-stage rank; one
     * scalar per (α, label) crosses the driver.
     */
-  def mondrianConformal(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625,
-      alphas: Seq[Double] = Seq(0.1, 0.2)): DataFrame = {
+  def mondrianConformal(documents: DataFrame): DataFrame = {
+    val targetLang = "en"
     val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
+    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
     val labels = documents.select($"doc_id",
       when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
     val scored = fx
@@ -1672,7 +1674,7 @@ object Curation {
     val nCalByY = scored.filter($"is_calib").groupBy($"y").count()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val test = scored.filter(!$"is_calib")
-    (for (alpha <- alphas; y <- Seq(0L, 1L)) yield {
+    (for (alpha <- Seq(0.1, 0.2); y <- Seq(0L, 1L)) yield {
       // getOrElse: a class absent from the calibration slice must fail
       // through the descriptive require below, not a bare Map.apply
       val nCal = nCalByY.getOrElse(y, 0L)
@@ -1718,11 +1720,10 @@ object Curation {
     * back. No global window, no driver fold; the final aggregate is one
     * row.
     */
-  def classifierAuc(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625,
-      parts: Int = 32): DataFrame = {
+  def classifierAuc(documents: DataFrame, parts: Int = 32): DataFrame = {
+    val targetLang = "en"
     val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
+    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
     val labels = documents.select($"doc_id",
       when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
     val byScore = fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
@@ -1754,10 +1755,10 @@ object Curation {
   /** Per-doc (doc_id, zm, y) margin frame — the shared q143 scoring
     * pass, exposed for the eval-family brute-force specs.
     */
-  private[graft] def docMargins(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625): DataFrame = {
+  private[graft] def docMargins(documents: DataFrame): DataFrame = {
+    val targetLang = "en"
     val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
+    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
     val labels = documents.select($"doc_id",
       when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
     fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
@@ -1782,11 +1783,10 @@ object Curation {
     * SE, and the clamped Wald 95% band. The prefix sums ride the same
     * two-phase range-partition machinery as q189 — no global window.
     */
-  def aucDelong(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625,
-      parts: Int = 32): DataFrame = {
+  def aucDelong(documents: DataFrame): DataFrame = {
+    val targetLang = "en"
     val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
+    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
     val labels = documents.select($"doc_id",
       when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
     val byScore = fx
@@ -1795,7 +1795,7 @@ object Curation {
       .join(labels, Seq("doc_id"))
       .groupBy($"zm")
       .agg(sum($"y").as("np"), sum(lit(1L) - $"y").as("nn"))
-      .repartitionByRange(parts, $"zm")
+      .repartitionByRange(32, $"zm")
       .localCheckpoint()
       .withColumn("pid", spark_partition_id().cast("int"))
     val wBase = Window.orderBy($"pid")
@@ -1861,9 +1861,8 @@ object Curation {
     * scoring pass); per-bucket REL/RES terms micro-quantize before the
     * cross-bucket sums (the q245 discipline). Output is one row.
     */
-  def brierDecomposition(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 64, rounds: Int = 4, lr: Double = 0.0009765625): DataFrame = {
-    val iso = isotonicCalibration(documents, targetLang, buckets, rounds, lr)
+  def brierDecomposition(documents: DataFrame): DataFrame = {
+    val iso = isotonicCalibration(documents)
       .localCheckpoint() // bucket-sized; read twice (totals + terms)
     val tot = iso.agg(sum($"n_docs").as("nt"), sum($"n_pos").as("pt"))
     val ybar = $"pt".cast("double") / $"nt"
@@ -1917,9 +1916,11 @@ object Curation {
     * Nothing pairwise outside the restricted pair set, nothing
     * corpus-proportional on the driver.
     */
-  def capstoneV2(documents: DataFrame, width: Int = 8, minDocs: Int = 3,
-      k: Int = 8, targetLang: String = "en", buckets: Int = 64,
-      rounds: Int = 4, lr: Double = 0.0009765625): DataFrame = {
+  def capstoneV2(documents: DataFrame): DataFrame = {
+    val width = 8
+    val minDocs = 3
+    val k = 8
+    val buckets = 64
     val spark = documents.sparkSession
     // stage 1: boilerplate-cleaned text (q142's segmentation + frequency
     // rule; docs whose every segment is boilerplate drop out here and
@@ -1964,7 +1965,7 @@ object Curation {
       .select($"doc_id", Scale.md5SlicePos($"tok", 0, buckets).as("b"))
       .groupBy($"doc_id", $"b").agg(count(lit(1)).as("c"))
       .unionAll(documents.select($"doc_id", lit(-1L).as("b"), lit(1L).as("c")))
-    val (_, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
+    val (_, w) = trainQualityWeights(documents, "en", buckets, 4, 0.0009765625)
     val accepted = fx2
       .join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
       .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
@@ -2075,8 +2076,9 @@ object Curation {
     * density frames are 2·B rows, broadcast. Top-k selection orders by
     * the score ROUNDED to 6 with doc_id tiebreak (engine-stable).
     */
-  def hbosOutliers(documents: DataFrame, bins: Int = 16,
-      k: Int = 20): DataFrame = {
+  def hbosOutliers(documents: DataFrame): DataFrame = {
+    val bins = 16
+    val k = 20
     val feats = documents.select($"doc_id", $"n_chars".as("x"),
       size(split($"text", " ")).cast("long").as("y"))
     val ext = feats.agg(min($"x").as("x0"), max($"x").as("x1"),

@@ -67,7 +67,8 @@ object Dedup {
     * — correct at small scale and the ground truth the LSH path is verified
     * against; at 100 TB use `minhashLshPairs` instead.
     */
-  def ngramJaccardPairs(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame = {
+  def ngramJaccardPairs(documents: DataFrame, threshold: Double = 0.6): DataFrame = {
+    val n = 5
     val toks = shingleSet(documents, n)
     val sizes = toks.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
     val inter = toks.as("a")
@@ -107,8 +108,8 @@ object Dedup {
     * is candidate-proportional (near-linear), never corpus-proportional.
     * This is the shape that holds at 100 TB.
     */
-  def minhashLshPairs(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame =
-    pairIndex(documents, n, threshold).orderBy($"id1", $"id2")
+  def minhashLshPairs(documents: DataFrame): DataFrame =
+    pairIndex(documents, 5, 0.6).orderBy($"id1", $"id2")
 
   private val PairIndexes = new SessionArtifacts.Kind[DataFrame]
 
@@ -235,9 +236,10 @@ object Dedup {
     * candidate set needs asymmetric (bottom-k one-sided) sketching — by
     * design not offered here; this op refines what the index found.
     */
-  def containmentRefine(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame = {
+  def containmentRefine(documents: DataFrame): DataFrame = {
+    val n = 5
     val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
-    val pairs = pairIndex(documents, n, threshold)
+    val pairs = pairIndex(documents, n, 0.6)
     val ids = pairs.select(explode(array($"id1", $"id2")).as("doc_id")).distinct()
     val sets = documents.join(ids, Seq("doc_id"), "left_semi")
       .repartition(parts, $"doc_id")
@@ -282,10 +284,10 @@ object Dedup {
     * end; per-pair cost is one map traversal, the same volume class as the
     * shingle-array verify join.
     */
-  def weightedJaccardRefine(documents: DataFrame, n: Int = 5,
-      threshold: Double = 0.6): DataFrame = {
+  def weightedJaccardRefine(documents: DataFrame): DataFrame = {
+    val threshold = 0.6
     val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
-    val pairs = pairIndex(documents, n, threshold)
+    val pairs = pairIndex(documents, 5, threshold)
     val ids = pairs.select(explode(array($"id1", $"id2")).as("doc_id")).distinct()
     val docTf = documents.join(ids, Seq("doc_id"), "left_semi")
       .repartition(parts, $"doc_id")
@@ -317,9 +319,9 @@ object Dedup {
     * joins of the near-linear pair set against the doc_id→source
     * projection), never corpus×corpus.
     */
-  def dupSourceMatrix(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame = {
+  def dupSourceMatrix(documents: DataFrame): DataFrame = {
     val meta = documents.select($"doc_id", $"source")
-    pairIndex(documents, n, threshold)
+    pairIndex(documents, 5, 0.6)
       .join(meta.select($"doc_id".as("id1"), $"source".as("s1")), Seq("id1"))
       .join(meta.select($"doc_id".as("id2"), $"source".as("s2")), Seq("id2"))
       .select(least($"s1", $"s2").as("source_a"), greatest($"s1", $"s2").as("source_b"))
@@ -338,8 +340,8 @@ object Dedup {
     * Output: one row per document appearing in any near-dup pair, with the
     * cluster representative and whether the doc survives the dedup.
     */
-  def nearDupSurvivors(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame =
-    survivorsOverPairs(pairIndex(documents, n, threshold))
+  def nearDupSurvivors(documents: DataFrame): DataFrame =
+    survivorsOverPairs(pairIndex(documents, 5, 0.6))
 
   /** Connected-component survivor selection over an arbitrary near-dup
     * pair set (the LSH index, or a restriction of it — q84's capstone
@@ -427,8 +429,8 @@ object Dedup {
     * per-cluster sort. doc_id is negated inside the struct so the max
     * breaks quality ties toward the smaller id.
     */
-  def qualityCanonical(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame = {
-    val members = survivorsOverPairs(pairIndex(documents, n, threshold))
+  def qualityCanonical(documents: DataFrame): DataFrame = {
+    val members = survivorsOverPairs(pairIndex(documents, 5, 0.6))
       .select($"doc_id", $"cluster_rep")
     val scored = members.join(
       documents.select($"doc_id", TextAnalysis.qualityCol($"text").as("quality")),
@@ -455,9 +457,8 @@ object Dedup {
     * components labels; everything after the membership aggregation is
     * size-histogram-sized.
     */
-  def clusterSizeDistribution(documents: DataFrame, n: Int = 5,
-      threshold: Double = 0.6): DataFrame =
-    survivorsOverPairs(pairIndex(documents, n, threshold))
+  def clusterSizeDistribution(documents: DataFrame): DataFrame =
+    survivorsOverPairs(pairIndex(documents, 5, 0.6))
       .groupBy($"cluster_rep")
       .agg(count(lit(1)).as("sz"))
       .groupBy($"sz".as("cluster_size"))
@@ -476,13 +477,13 @@ object Dedup {
     * cross join over the near-linear pair set — pair-proportional work
     * per threshold, with a left join keeping empty thresholds as zeros.
     */
-  def thresholdSweep(documents: DataFrame, n: Int = 5,
-      thresholds: Seq[Double] = Seq(0.6, 0.7, 0.8, 0.9)): DataFrame = {
+  def thresholdSweep(documents: DataFrame): DataFrame = {
+    val thresholds = Seq(0.6, 0.7, 0.8, 0.9)
     val spark = documents.sparkSession
     // selective import: the full implicits._ would make a second `$`
     // interpolator ambiguous with the package-level one
     import spark.implicits.{localSeqToDatasetHolder, newDoubleEncoder}
-    val pairs = pairIndex(documents, n, thresholds.min)
+    val pairs = pairIndex(documents, 5, thresholds.min)
     val th = thresholds.toDF("threshold")
     val f = pairs.crossJoin(broadcast(th)).filter($"jaccard" >= $"threshold")
     val np = f.groupBy($"threshold").agg(count(lit(1)).as("p"))
@@ -528,8 +529,9 @@ object Dedup {
     * (q27's oracle) carries over; the oracle is the new-vs-old restricted
     * all-pairs Jaccard.
     */
-  def incrementalNearDupPairs(documents: DataFrame, newIdCut: Long = 100L,
-      n: Int = 5, threshold: Double = 0.6): DataFrame = {
+  def incrementalNearDupPairs(documents: DataFrame): DataFrame = {
+    val newIdCut = 100L
+    val n = 5
     val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
     val newBuckets = bandBuckets(documents.filter($"doc_id" < newIdCut), n)
       .withColumnRenamed("doc_id", "new_id")
@@ -559,7 +561,7 @@ object Dedup {
         size($"hs1").as("sz1"), size($"hs2").as("sz2"))
       .select($"new_id", $"old_id",
         round($"i" / ($"sz1" + $"sz2" - $"i"), 6).as("jaccard"))
-      .filter($"jaccard" >= threshold)
+      .filter($"jaccard" >= 0.6)
       .orderBy($"new_id", $"old_id")
   }
 
@@ -572,11 +574,11 @@ object Dedup {
     * formulation proven in FunctionsSpec). The explicit repartition spreads
     * the compact doc rows before the heavy per-row loop.
     */
-  def simhashSignatures(documents: DataFrame, n: Int = 5): DataFrame =
+  def simhashSignatures(documents: DataFrame): DataFrame =
     documents
       .repartition(documents.sparkSession.sparkContext.defaultParallelism * 2, $"doc_id")
       .select($"doc_id",
-        graft.functions.MinHashFunctions.simhash_signature($"text", n).as("sig"))
+        graft.functions.MinHashFunctions.simhash_signature($"text", 5).as("sig"))
 
   /** Near-dup pairs by SimHash hamming distance <= maxHamming, via
     * pigeonhole banding: split the 32-bit signature into maxHamming+1
@@ -588,10 +590,11 @@ object Dedup {
     * the all-pairs formulation (and to the DuckDB all-pairs oracle), with
     * near-linear work at corpus scale.
     */
-  def simhashPairs(documents: DataFrame, n: Int = 5, maxHamming: Int = 1): DataFrame = {
+  def simhashPairs(documents: DataFrame): DataFrame = {
+    val maxHamming = 1
     val bands = maxHamming + 1
     val bandBits = 32 / bands
-    val sig = simhashSignatures(documents, n)
+    val sig = simhashSignatures(documents)
     val sliced = sig.select($"doc_id", $"sig",
       explode(array((0 until bands).map { b =>
         struct(lit(b).as("slice"),
@@ -636,8 +639,10 @@ object Dedup {
     * probe, no shuffle before the per-doc count), then one map-side-
     * combined aggregation. Corpus-linear, query-proportional state.
     */
-  def containmentSearch(documents: DataFrame, queryDocId: Long = 0L,
-      n: Int = 5, tau: Double = 0.5): DataFrame = {
+  def containmentSearch(documents: DataFrame): DataFrame = {
+    val queryDocId = 0L
+    val n = 5
+    val tau = 0.5
     val qShingles = documents
       .filter($"doc_id" === queryDocId)
       .select(explode(array_distinct(shingleArray($"text", n))).as("g"))
@@ -731,7 +736,7 @@ object Dedup {
     * constant (4), so the plan is 4 chained join+agg stages — AQE
     * handles skewed hub degrees the same way it does every other join.
     */
-  def neardupPagerank(documents: DataFrame, iters: Int = 4): DataFrame = {
+  def neardupPagerank(documents: DataFrame): DataFrame = {
     val pairs = pairIndex(documents).select($"id1", $"id2")
     val edges = pairs.select($"id1".as("src"), $"id2".as("dst"))
       .unionAll(pairs.select($"id2".as("src"), $"id1".as("dst")))
@@ -740,7 +745,7 @@ object Dedup {
     val r0 = if (nNodes == 0) 0L else 1000000L / nNodes
     val base = if (nNodes == 0) 0L else 150000L / nNodes
     var ranks = deg.select($"node", $"deg", lit(r0).as("rank_m"))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to 4) {
       val contrib = ranks.select($"node".as("src"), expr("rank_m div deg").as("c"))
       val inSum = edges.join(contrib, Seq("src"))
         .groupBy($"dst".as("node"))
@@ -770,10 +775,10 @@ object Dedup {
     * right side is cluster-count-sized — duplicate-mass-proportional at
     * any corpus scale, like q108.
     */
-  def rankCanonical(documents: DataFrame, iters: Int = 4): DataFrame = {
+  def rankCanonical(documents: DataFrame): DataFrame = {
     val members = survivorsOverPairs(pairIndex(documents))
       .select($"doc_id", $"cluster_rep")
-    val ranks = neardupPagerank(documents, iters)
+    val ranks = neardupPagerank(documents)
       .select($"doc_id", $"rank_micro")
     val scored = members.join(ranks, Seq("doc_id"))
     val best = scored
@@ -828,13 +833,13 @@ object Dedup {
     * grows vocabulary with corpus size and posting selectivity holds;
     * on degenerate data the cost is the exactness, not the plan.
     */
-  def containmentDiscover(documents: DataFrame, n: Int = 5,
-      tau: Double = 0.9): DataFrame = {
+  def containmentDiscover(documents: DataFrame): DataFrame = {
+    val tau = 0.9
     import graft.functions.MinHashFunctions.{shingle_hashes, sorted_intersect_count}
     val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
     val sh = documents
       .repartition(parts, $"doc_id") // AQE-blindness guard (see above)
-      .select($"doc_id", shingle_hashes($"text", n).as("hs"))
+      .select($"doc_id", shingle_hashes($"text", 5).as("hs"))
       .localCheckpoint() // probes + postings + two verify joins
     // k_A probes: floor((1-τ+ε)·|A|) + 1 rarest — ε covers the rounded
     // filter's boundary (round6(i/|A|) ≥ τ admits i/|A| ≥ τ − 5e-7).

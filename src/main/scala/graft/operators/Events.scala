@@ -42,13 +42,13 @@ object Events {
     * (classic lag + running-sum-of-boundaries). One shuffle on user_id; the
     * windows never cross users, so state stays bounded per key at any scale.
     */
-  def sessionize(events: DataFrame, gapSeconds: Long = 1800L): DataFrame = {
+  def sessionize(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val withGap = events
       .select($"user_id", $"event_id", $"ts", $"value")
       .withColumn("prev_ts", lag($"ts", 1).over(byUser))
       .withColumn("new_session",
-        when($"prev_ts".isNull || ($"ts" - $"prev_ts") > gapSeconds * NsPerSecond, 1)
+        when($"prev_ts".isNull || ($"ts" - $"prev_ts") > 1800L * NsPerSecond, 1)
           .otherwise(0))
       .withColumn("session_seq",
         sum($"new_session").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -77,7 +77,8 @@ object Events {
     * landing exactly on the gap boundary would surface as a q52/q33
     * divergence, not a bug in either form.
     */
-  def sessionWindowAgg(events: DataFrame, gap: String = "30 minutes"): DataFrame =
+  def sessionWindowAgg(events: DataFrame): DataFrame = {
+    val gap = "30 minutes"
     events
       .withColumn("tss", timestamp_micros(expr("ts div 1000")))
       .groupBy($"user_id", session_window($"tss", gap).as("sw"))
@@ -87,6 +88,7 @@ object Events {
         unix_timestamp($"sw.start").as("session_start"),
         $"n_events", $"session_value")
       .orderBy($"user_id", $"session_start")
+  }
 
   /** Event-type profile with exact percentiles (percentile_cont semantics
     * on both engines).
@@ -152,7 +154,8 @@ object Events {
     * full event stream. Exact integer-nanosecond comparisons; only the
     * final averages are floating point (rounded).
     */
-  def signupFunnel(events: DataFrame, horizonHours: Long = 24L): DataFrame = {
+  def signupFunnel(events: DataFrame): DataFrame = {
+    val horizonHours = 24L
     val horizonNs = horizonHours * NsPerHour
     val firstSignup = events.filter($"event_type" === "signup")
       .groupBy($"user_id").agg(min($"ts").as("signup_ts"))
@@ -189,7 +192,9 @@ object Events {
     * between engines (a windowed float σ would differ by summation
     * association).
     */
-  def valueAnomalies(events: DataFrame, windowHours: Long = 24L, minPrev: Int = 5): DataFrame = {
+  def valueAnomalies(events: DataFrame): DataFrame = {
+    val windowHours = 24L
+    val minPrev = 5
     val w = Window.partitionBy($"user_id").orderBy($"ts")
       .rangeBetween(-windowHours * NsPerHour, -1)
     val dec = "decimal(38,0)"
@@ -257,7 +262,8 @@ object Events {
     * interpolation arithmetic (`Scale.exactQuantileByGroup`'s formula) —
     * so the ESTIMATE itself is oracle-checkable bit-for-bit.
     */
-  def quantileSketch(events: DataFrame, k: Int = 256): DataFrame = {
+  def quantileSketch(events: DataFrame): DataFrame = {
+    val k = 256
     val vals = events.select($"event_type", $"event_id",
       round($"value", 2).as("v"))
     val sample = Scale.topKPerGroup(vals, group = $"event_type",
@@ -288,7 +294,8 @@ object Events {
     * engine-shared bit-exact formula, cuts round to 4 — the comparison
     * sees identical doubles on both engines.
     */
-  def madOutliers(events: DataFrame, k: Double = 3.0): DataFrame = {
+  def madOutliers(events: DataFrame): DataFrame = {
+    val k = 3.0
     val vals = events.select($"event_type", round($"value", 2).as("v"))
       .localCheckpoint() // feeds the median pass and the deviation pass
     val med = Scale.exactQuantileByGroup(vals, "event_type", "v", 0.5)
@@ -322,8 +329,9 @@ object Events {
     * single-shuffle discipline as scd2History — then a map-side-combined
     * count into a types³-bounded frame and a TakeOrderedAndProject.
     */
-  def topSessionPaths(events: DataFrame, gapSeconds: Long = 1800L,
-      topk: Int = 10): DataFrame = {
+  def topSessionPaths(events: DataFrame): DataFrame = {
+    val gapSeconds = 1800L
+    val topk = 10
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val gapNs = gapSeconds * NsPerSecond
     events
@@ -359,8 +367,8 @@ object Events {
     * inspection (the q73/q54 report convention) — a production run drops
     * it and with it the corpus-sized window join.
     */
-  def slidingDistinctUsers(events: DataFrame, k: Int = 64,
-      windowDays: Int = 7): DataFrame = {
+  def slidingDistinctUsers(events: DataFrame, k: Int = 64): DataFrame = {
+    val windowDays = 7
     val du = events
       .select(expr(s"ts div $NsPerDay").as("day"), $"user_id")
       .distinct()
@@ -466,8 +474,8 @@ object Events {
     * pattern at 100 TB: each day's events are read once when the shard
     * lands; every later percentile panel reads days×k rows.
     */
-  def writeDailyQuantileSketches(events: DataFrame, path: String,
-      k: Int = 256): Unit = {
+  def writeDailyQuantileSketches(events: DataFrame, path: String): Unit = {
+    val k = 256
     // sequential for the same overwrite-vs-_fingerprint reason as
     // writeDailySketches; cross-shard overlap lives at the caller
     Scale.topKPerGroup(
@@ -486,7 +494,8 @@ object Events {
     * distinct guards idempotent shard rewrites, as in q228).
     */
   def quantilesFromSketchFiles(spark: org.apache.spark.sql.SparkSession,
-      dirs: Seq[String], k: Int = 256): DataFrame = {
+      dirs: Seq[String]): DataFrame = {
+    val k = 256
     val parts = dirs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
     val merged = Scale.topKPerGroup(
       parts.select($"event_type", $"day", $"h", $"event_id", $"v").distinct(),
@@ -608,7 +617,8 @@ object Events {
     * matrix, not from a second corpus pass. p is exact rational n/total
     * rounded to 4 — identical doubles on any engine.
     */
-  def sessionTransitions(events: DataFrame, gapSeconds: Long = 1800L): DataFrame = {
+  def sessionTransitions(events: DataFrame): DataFrame = {
+    val gapSeconds = 1800L
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val pairs = events
       .select($"user_id", $"event_id", $"ts", $"event_type")
@@ -647,7 +657,8 @@ object Events {
     * 1-row-per-lag aggregate are all aggregate-scale at any event
     * volume.
     */
-  def hourlyAutocorrelation(events: DataFrame, maxLag: Int = 24): DataFrame = {
+  def hourlyAutocorrelation(events: DataFrame): DataFrame = {
+    val maxLag = 24
     val spark = events.sparkSession
     val hourly = events
       .groupBy(expr(s"ts div $NsPerHour").as("h"))
@@ -693,7 +704,8 @@ object Events {
     * The lag joins run on the calendar-bounded zero-filled day frame
     * (the q191 shape, days instead of hours).
     */
-  def neweyWestSe(events: DataFrame, maxLag: Int = 7): DataFrame = {
+  def neweyWestSe(events: DataFrame): DataFrame = {
+    val maxLag = 7
     val spark = events.sparkSession
     val daily = events
       .groupBy(expr(s"ts div $NsPerDay").as("d"))
@@ -760,7 +772,8 @@ object Events {
     * the row's own user_id — no user table, no join, nothing
     * corpus-proportional after the scan.
     */
-  def abValueTest(events: DataFrame, metricType: String = "purchase"): DataFrame = {
+  def abValueTest(events: DataFrame): DataFrame = {
+    val metricType = "purchase"
     val counts = events.filter($"event_type" === metricType)
       .select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"),
         round($"value" * 10000, 0).cast("long").as("vm"))
@@ -944,12 +957,11 @@ object Events {
     * universe, no second distinct pass), then a 1-row moment
     * aggregate.
     */
-  def ratioMetricDelta(events: DataFrame, numType: String = "purchase",
-      denType: String = "click"): DataFrame = {
+  def ratioMetricDelta(events: DataFrame): DataFrame = {
     val perUser = events.groupBy($"user_id").agg(
-      sum(when($"event_type" === numType,
+      sum(when($"event_type" === "purchase",
         round($"value" * 10000, 0).cast("long")).otherwise(0L)).as("y"),
-      sum(when($"event_type" === denType, 1L).otherwise(0L)).as("x"))
+      sum(when($"event_type" === "click", 1L).otherwise(0L)).as("x"))
     val um = perUser.select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"), $"y", $"x")
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     def aSum(a: Long, c: Column): Column = sum(when($"arm" === a, c).otherwise(0L))
@@ -1015,12 +1027,12 @@ object Events {
     * per-user agg (map-side combined), one distinct-user frame, then a
     * 1-row moment aggregate — nothing corpus-proportional afterwards.
     */
-  def cupedAbTest(events: DataFrame, metricType: String = "purchase"): DataFrame = {
+  def cupedAbTest(events: DataFrame): DataFrame = {
     val NsPerDay = 24L * NsPerHour
     val ev = events.select($"user_id", expr(s"ts div $NsPerDay").as("day"),
       $"event_type", round($"value" * 10000, 0).cast("long").as("vm"))
     val mid = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-    val perUser = ev.filter($"event_type" === metricType)
+    val perUser = ev.filter($"event_type" === "purchase")
       .crossJoin(broadcast(mid))
       .groupBy($"user_id")
       .agg(sum(when($"day" < $"mid", $"vm").otherwise(0L)).as("x"),
@@ -1095,8 +1107,8 @@ object Events {
     * micro-unit τ is exact. On the A/A fixture the always-valid p sits
     * at/near 1 — the monitor correctly refuses to stop.
     */
-  def msprtMonitor(events: DataFrame, metricType: String = "purchase",
-      tauMicro: Double = 50000.0): DataFrame = {
+  def msprtMonitor(events: DataFrame): DataFrame = {
+    val tauMicro = 50000.0
     def mean(s1: Column, n: Column): Column = s1.cast("double") / n
     def svar(s1: Column, s2: Column, n: Column): Column =
       (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
@@ -1107,7 +1119,7 @@ object Events {
     val t2 = lit(tauMicro * tauMicro)
     val lam = sqrt(se2 / (se2 + t2)) *
       exp(th * th * t2 / (lit(2.0) * se2 * (se2 + t2)))
-    msprtArmMoments(events, metricType).select(
+    msprtArmMoments(events, "purchase").select(
       $"n_a", $"n_b",
       // guarded like se/lambda/p: an empty arm must render NULL on BOTH
       // engines (Spark nulls a zero-divisor double division, DuckDB
@@ -1133,8 +1145,8 @@ object Events {
     * 0.8416, the standard normal 97.5% and 80% points), one double
     * expression renders the absolute and relative MDE.
     */
-  def mdeReadout(events: DataFrame, metricType: String = "purchase"): DataFrame = {
-    val m = msprtArmMoments(events, metricType)
+  def mdeReadout(events: DataFrame): DataFrame = {
+    val m = msprtArmMoments(events, "purchase")
     def svar(s1: Column, s2: Column, n: Column): Column =
       (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
     val se = sqrt(svar($"s1_a", $"s2_a", $"n_a") / $"n_a"
@@ -1167,9 +1179,8 @@ object Events {
     * kernel, mirrored as the same CASE in the oracle. One corpus scan,
     * 1-row finisher.
     */
-  def tostEquivalence(events: DataFrame, metricType: String = "purchase",
-      relMargin: Double = 0.05): DataFrame = {
-    val m = msprtArmMoments(events, metricType)
+  def tostEquivalence(events: DataFrame): DataFrame = {
+    val m = msprtArmMoments(events, "purchase")
     def svar(s1: Column, s2: Column, n: Column): Column =
       (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
     val mA = $"s1_a".cast("double") / $"n_a"
@@ -1177,7 +1188,7 @@ object Events {
     val diff = mB - mA
     val se = sqrt(svar($"s1_a", $"s2_a", $"n_a") / $"n_a"
       + svar($"s1_b", $"s2_b", $"n_b") / $"n_b")
-    val delta = lit(relMargin) *
+    val delta = lit(0.05) *
       (($"s1_a" + $"s1_b").cast("double") / ($"n_a" + $"n_b"))
     def tail(x: Column): Column =
       when(x >= 0.0, Inference.upperTail(x))
@@ -1218,8 +1229,8 @@ object Events {
     * corpus scan into the value frame; every window runs over distinct
     * values, not rows.
     */
-  def hillTailIndex(events: DataFrame, metricType: String = "purchase"): DataFrame = {
-    val byV = events.filter($"event_type" === metricType)
+  def hillTailIndex(events: DataFrame): DataFrame = {
+    val byV = events.filter($"event_type" === "purchase")
       .select(round($"value" * 10000, 0).cast("long").as("vm"))
       .groupBy($"vm").agg(count(lit(1)).as("c"))
       .filter($"vm" >= 1L)
@@ -1271,10 +1282,8 @@ object Events {
     * DRIVER loop over that bounded frame (the q233 EM-state pattern:
     * |T|² scalars, never corpus rows).
     */
-  def markovStationary(events: DataFrame, gapSeconds: Long = 1800L,
-      iters: Int = 24): DataFrame =
-    markovStationaryFromCounts(events.sparkSession,
-      collectTransitionCounts(events, gapSeconds), iters)
+  def markovStationary(events: DataFrame): DataFrame =
+    markovStationaryFromCounts(events.sparkSession, collectTransitionCounts(events, 1800L))
 
   /** The q123/q286/q293 in-session transition counts, collected to the
     * driver as (src, dst, count) — one extraction, every Markov
@@ -1334,9 +1343,9 @@ object Events {
     * chain, whose non-zero residual the fixture cannot produce).
     */
   def markovStationaryFromCounts(spark: org.apache.spark.sql.SparkSession,
-      matrix: Seq[(String, String, Long)], iters: Int = 24): DataFrame = {
+      matrix: Seq[(String, String, Long)]): DataFrame = {
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val (sources, _, r, s, resid9) = markovState(matrix, iters)
+    val (sources, _, r, s, resid9) = markovState(matrix, 24)
     val tot = s.sum
     // residual = max_i |one more power step − s| on the 1e9 scale: a
     // slowly mixing chain is VISIBLE in the output (non-zero residual),
@@ -1369,12 +1378,11 @@ object Events {
     * anywhere. Oracle = the q286 unrolled chain plus one per-cell
     * projection and the same integer couplings.
     */
-  def markovEntropyRate(events: DataFrame, gapSeconds: Long = 1800L,
-      iters: Int = 24): DataFrame = {
+  def markovEntropyRate(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
     val (sources, c, r, s, _) =
-      markovState(collectTransitionCounts(events, gapSeconds), iters)
+      markovState(collectTransitionCounts(events, 1800L), 24)
     val m = sources.length
     val tot = s.sum
     val invLn2 = 1.4426950408889634
@@ -1425,15 +1433,14 @@ object Events {
     * never silent). Shape: one corpus scan into a per-user aggregate,
     * then a bounded bucket frame; every window runs over buckets.
     */
-  def stratifiedAte(events: DataFrame, treatType: String = "error",
-      metricType: String = "purchase"): DataFrame = {
+  def stratifiedAte(events: DataFrame): DataFrame = {
     // exposure = error-PRONE: the user's error share exceeds the uniform
     // 1/5 of their events (exact integer test — "has any error" is
     // degenerate on a dense event stream, every active user has one)
     val perUser = events.groupBy($"user_id").agg(
       count(lit(1)).as("n_ev"),
-      sum(when($"event_type" === treatType, 1L).otherwise(0L)).as("e"),
-      sum(when($"event_type" === metricType,
+      sum(when($"event_type" === "error", 1L).otherwise(0L)).as("e"),
+      sum(when($"event_type" === "purchase",
         round($"value" * 10000, 0).cast("long")).otherwise(0L)).as("y"))
       .withColumn("t", ($"e" * 5L > $"n_ev").cast("long"))
     val byB = perUser
@@ -1509,14 +1516,14 @@ object Events {
     * then two map-side-combined aggregates — per-session (key grain:
     * user × session) and per-entry-type (types-sized output frame).
     */
-  def sessionAttribution(events: DataFrame, gapSeconds: Long = 1800L): DataFrame = {
+  def sessionAttribution(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val sess = events
       .select($"user_id", $"event_id", $"ts", $"event_type",
         round($"value" * 10000, 0).cast("long").as("vm"))
       .withColumn("prev_ts", lag($"ts", 1).over(byUser))
       .withColumn("new_session",
-        when($"prev_ts".isNull || ($"ts" - $"prev_ts") > gapSeconds * NsPerSecond, 1)
+        when($"prev_ts".isNull || ($"ts" - $"prev_ts") > 1800L * NsPerSecond, 1)
           .otherwise(0))
       .withColumn("session_seq",
         sum($"new_session").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1554,7 +1561,8 @@ object Events {
     * and a 1-row aggregate; nothing is globally sorted and nothing
     * corpus-sized reaches the driver.
     */
-  def interArrivalFit(events: DataFrame, parts: Int = 32): DataFrame = {
+  def interArrivalFit(events: DataFrame): DataFrame = {
+    val parts = 32
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val gaps = events
       .select($"user_id", $"event_id", $"ts")
@@ -1610,13 +1618,13 @@ object Events {
     * bounded) and a types²-sized aggregate; nothing downstream of the
     * distinct is corpus-proportional.
     */
-  def basketLift(events: DataFrame, gapSeconds: Long = 1800L): DataFrame = {
+  def basketLift(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val basket = events
       .select($"user_id", $"event_id", $"ts", $"event_type")
       .withColumn("prev_ts", lag($"ts", 1).over(byUser))
       .withColumn("new_session",
-        when($"prev_ts".isNull || ($"ts" - $"prev_ts") > gapSeconds * NsPerSecond, 1)
+        when($"prev_ts".isNull || ($"ts" - $"prev_ts") > 1800L * NsPerSecond, 1)
           .otherwise(0))
       .withColumn("session_seq",
         sum($"new_session").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1724,7 +1732,8 @@ object Events {
     * are engine-exact integers; `h` is the alarm threshold in the same
     * micro-units.
     */
-  def cusumDriftDays(events: DataFrame, h: Long = 50000L): DataFrame = {
+  def cusumDriftDays(events: DataFrame): DataFrame = {
+    val h = 50000L
     val NsPerDay = 24L * NsPerHour
     val moments = events
       .groupBy((expr(s"ts div $NsPerDay") * 86400).as("day_epoch"))
@@ -1814,8 +1823,8 @@ object Events {
     * |steps|-row result.
     */
   def orderedFunnel(events: DataFrame,
-      steps: Seq[String] = Seq("signup", "click", "purchase"),
-      stepHorizonHours: Long = 24L): DataFrame = {
+      steps: Seq[String] = Seq("signup", "click", "purchase")): DataFrame = {
+    val stepHorizonHours = 24L
     require(steps.nonEmpty)
     val horizonNs = stepHorizonHours * NsPerHour
     val frames = steps.zipWithIndex.scanLeft(Option.empty[DataFrame]) {
@@ -1861,7 +1870,7 @@ object Events {
     * (arm, user)) into a 2-row frame; everything else is windows over
     * those 2 rows.
     */
-  def srmCheck(events: DataFrame, threshold: Double = 3.841): DataFrame = {
+  def srmCheck(events: DataFrame): DataFrame = {
     val arms = events
       .select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"), $"user_id")
       .groupBy($"arm")
@@ -1874,7 +1883,7 @@ object Events {
       .select($"arm", $"n_users", $"n_events",
         round($"n_users" / $"n_total", 6).as("user_share"),
         round($"d" * $"d" / $"n_total", 6).as("chi2"),
-        ($"d" * $"d" / $"n_total" > threshold).as("srm"))
+        ($"d" * $"d" / $"n_total" > 3.841).as("srm"))
       .orderBy($"arm")
   }
 
@@ -1939,13 +1948,11 @@ object Events {
     * dial that keeps in-bucket windows partition-sized at any corpus
     * rate. The rollup is |types| rows.
     */
-  def lateArrivalAudit(events: DataFrame,
-      watermarkDelayNs: Long = 3600L * NsPerSecond,
-      injectedDelayNs: Long = 7200L * NsPerSecond,
-      delayedModulus: Long = 17L, delayedResidue: Long = 3L): DataFrame = {
+  def lateArrivalAudit(events: DataFrame, injectedDelayNs: Long = 7200L * NsPerSecond): DataFrame = {
+    val watermarkDelayNs = 3600L * NsPerSecond
     val NsPerDay = 86400L * NsPerSecond
     val arr = events.select($"event_type", $"ts", $"event_id",
-        ($"ts" + when($"user_id" % delayedModulus === delayedResidue,
+        ($"ts" + when($"user_id" % 17L === 3L,
           injectedDelayNs).otherwise(0L)).as("arrival"))
       .withColumn("bucket", expr(s"arrival div $NsPerDay"))
     val wIn = Window.partitionBy($"bucket").orderBy($"arrival", $"event_id")
@@ -1994,14 +2001,13 @@ object Events {
     * pass) + a broadcast |types|-row cut frame + one map-side-combined
     * rollup. All state is domain- or type-bounded.
     */
-  def winsorizedValueStats(events: DataFrame, pLo: Double = 0.05,
-      pHi: Double = 0.95): DataFrame = {
+  def winsorizedValueStats(events: DataFrame): DataFrame = {
     val vals = events
       .select($"event_type", round($"value" * 100, 0).cast("long").as("c"))
       .localCheckpoint() // feeds the cut pass and the clamp pass
     val cuts = Scale.quantilePanel(
         vals.select($"event_type", $"c".cast("double").as("v")),
-        "event_type", "v", Seq(pLo -> "plo", pHi -> "phi"))
+        "event_type", "v", Seq(0.05 -> "plo", 0.95 -> "phi"))
       .select($"event_type", floor($"plo").cast("long").as("lo"),
         ceil($"phi").cast("long").as("hi"))
     val clamped = greatest(least($"c", $"hi"), $"lo")
@@ -2037,8 +2043,8 @@ object Events {
     * (median domain = half-integer seconds, bounded by the gap range),
     * broadcast back as one row. Flagging is a codegen'd filter pass.
     */
-  def rateOutliers(events: DataFrame, pCut: Double = 0.1,
-      minEvents: Long = 8L): DataFrame = {
+  def rateOutliers(events: DataFrame): DataFrame = {
+    val pCut = 0.1
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val gaps = events
       .select($"user_id", $"ts", $"event_id",
@@ -2048,7 +2054,7 @@ object Events {
       .agg(count(lit(1)).as("n_events"),
         expr("percentile(gap, 0.5D)").as("med"),
         (max($"sec") - min($"sec")).as("span_s"))
-      .filter($"n_events" >= minEvents)
+      .filter($"n_events" >= 8L)
       .localCheckpoint() // feeds the population-cut pass and the flag pass
     val cut = Scale.exactQuantileByGroup(
         users.select(lit("all").as("g"), $"med".as("v")), "g", "v", pCut)
@@ -2081,12 +2087,12 @@ object Events {
     * mirrored double finisher. On the A/A fixture DiD ≈ 0 with |z|
     * inside 1.96 — the design's null gate.
     */
-  def didEstimate(events: DataFrame, metricType: String = "purchase"): DataFrame = {
+  def didEstimate(events: DataFrame): DataFrame = {
     val NsPerDay = 24L * NsPerHour
     val ev = events.select($"user_id", expr(s"ts div $NsPerDay").as("day"),
       $"event_type", round($"value" * 10000, 0).cast("long").as("vm"))
     val mid = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-    val perUser = ev.filter($"event_type" === metricType)
+    val perUser = ev.filter($"event_type" === "purchase")
       .crossJoin(broadcast(mid))
       .groupBy($"user_id")
       .agg(sum(when($"day" < $"mid", $"vm").otherwise(0L)).as("x"),
@@ -2191,12 +2197,11 @@ object Events {
     * compares ROUNDED values (the q246 discipline: last-ulp libm wobble
     * in pow/sqrt must not flip a verdict).
     */
-  def ewmaControl(events: DataFrame, lambda: Double = 0.2,
-      limit: Double = 3.0): DataFrame =
+  def ewmaControl(events: DataFrame): DataFrame =
     ewmaFromDailyCounts(
       events.groupBy(expr(s"ts div $NsPerDay").as("d"))
         .agg(count(lit(1)).as("c")),
-      lambda, limit)
+      0.2, 3.0)
 
   /** The EWMA finisher over a (d, c) daily count frame — split from
     * [[ewmaControl]] so a spec can drive the chart with a planted
@@ -2306,7 +2311,7 @@ object Events {
     * with the day tiebreak, windows PARTITIONED BY TYPE over the
     * calendar-bounded (type × day) frame.
     */
-  def changepointPanel(events: DataFrame, alpha: Double = 0.05): DataFrame = {
+  def changepointPanel(events: DataFrame): DataFrame = {
     val daily = events
       .groupBy($"event_type", expr(s"ts div $NsPerDay").as("d"))
       .agg(count(lit(1)).as("c"))
@@ -2338,7 +2343,7 @@ object Events {
     val ranked = best.withColumn("p_rank",
       row_number().over(Window.partitionBy().orderBy($"p_value", $"event_type")))
     val kStar = max(when(
-      $"p_value" <= $"p_rank" * lit(alpha) / $"m", $"p_rank"))
+      $"p_value" <= $"p_rank" * lit(0.05) / $"m", $"p_rank"))
       .over(Window.partitionBy())
     ranked
       .withColumn("significant", $"p_rank" <= coalesce(kStar, lit(0L)))
@@ -2391,7 +2396,7 @@ object Events {
     * shares render from exact sums. Shape: the day frame × 29 periods
     * — a calendar-bounded grid, never corpus-proportional.
     */
-  def periodogram(events: DataFrame, maxPeriod: Int = 30): DataFrame = {
+  def periodogram(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     val daily = events.groupBy(expr(s"ts div $NsPerDay").as("d"))
       .agg(count(lit(1)).as("x"))
@@ -2401,7 +2406,7 @@ object Events {
       .select($"d", coalesce($"x", lit(0L)).as("x"))
     val tot = series.agg(count(lit(1)).as("tt"), sum($"x").as("sx"),
       min($"d").as("dmin"))
-    val periods = spark.range(2, maxPeriod + 1).toDF("p")
+    val periods = spark.range(2, 30 + 1).toDF("p")
     val grid = series.crossJoin(broadcast(tot))
       .select((($"d" - $"dmin")).as("t"), ($"tt" * $"x" - $"sx").as("y"))
       .crossJoin(broadcast(periods))
@@ -2578,10 +2583,10 @@ object Events {
     * mirrored double expression; two-sided p via the A&S kernel. A
     * perfectly flat dose–response gives T EXACTLY 0 (spec-pinned).
     */
-  def cochranArmitage(events: DataFrame, metricType: String = "purchase"): DataFrame = {
+  def cochranArmitage(events: DataFrame): DataFrame = {
     val perUser = events.groupBy($"user_id").agg(
       count(lit(1)).as("c"),
-      sum(when($"event_type" === metricType, 1L).otherwise(0L)).as("e"))
+      sum(when($"event_type" === "purchase", 1L).otherwise(0L)).as("e"))
       .withColumn("y", ($"e" * 5L > $"c").cast("long"))
     val byB = perUser
       .select((length(bin($"c")) - 1).cast("long").as("w"), $"y")
@@ -2687,7 +2692,7 @@ object Events {
     * moments (Σc, Σc² exact — counts are integers); the distinct-user
     * total broadcasts as one row. Flags compare rounded values.
     */
-  def overdispersionPanel(events: DataFrame, zCrit: Double = 1.6449): DataFrame = {
+  def overdispersionPanel(events: DataFrame): DataFrame = {
     val perUser = events.groupBy($"event_type", $"user_id")
       .agg(count(lit(1)).as("c"))
     val perType = perUser.groupBy($"event_type")
@@ -2708,7 +2713,7 @@ object Events {
         round(mean, 6).as("mean_per_user"),
         when($"n" > 1L && $"s" > 0L, round(varS / mean, 4)).as("vmr"),
         round($"z_raw", 4).as("z_score"),
-        (coalesce(round($"z_raw", 4), lit(0.0)) > lit(zCrit)).as("overdispersed"))
+        (coalesce(round($"z_raw", 4), lit(0.0)) > lit(1.6449)).as("overdispersed"))
       .orderBy($"event_type")
   }
 
@@ -2850,10 +2855,10 @@ object Events {
     * p(1−p)/B, so B = 64 resolves p ≈ 0.05 to ±0.03 — raise it for
     * tighter panels; cost is linear in B.
     */
-  def permutationTest(events: DataFrame, metricType: String = "purchase",
-      b: Int = 64): DataFrame = {
+  def permutationTest(events: DataFrame): DataFrame = {
+    val b = 64
     val perUser = events.groupBy($"user_id").agg(
-      sum(when($"event_type" === metricType,
+      sum(when($"event_type" === "purchase",
         round($"value" * 10000, 0).cast("long")).otherwise(0L)).as("vm"))
       .localCheckpoint() // users-sized; read by the observed + B passes
     def armAgg(df: DataFrame, grp: Seq[Column]): DataFrame =
@@ -2917,10 +2922,10 @@ object Events {
     * contribute zero to both sums, loudly visible as NULL per-stratum
     * columns rather than silently skewing the pool.
     */
-  def cmhStratified(events: DataFrame, metricType: String = "purchase"): DataFrame = {
+  def cmhStratified(events: DataFrame): DataFrame = {
     val perUser = events.groupBy($"user_id").agg(
       count(lit(1)).as("c"),
-      sum(when($"event_type" === metricType, 1L).otherwise(0L)).as("np"))
+      sum(when($"event_type" === "purchase", 1L).otherwise(0L)).as("np"))
     val rows = perUser.select(
       (length(bin($"c")) - 1).cast("long").as("stratum"),
       Scale.md5SlicePos($"user_id", 0, 2).as("arm"),
@@ -2977,8 +2982,10 @@ object Events {
     * O(T) over the calendar-bounded array, once (not per day — only the
     * final state forecasts).
     */
-  def holtForecastEval(events: DataFrame, alpha: Double = 0.3,
-      beta: Double = 0.1, horizon: Int = 7): DataFrame = {
+  def holtForecastEval(events: DataFrame): DataFrame = {
+    val alpha = 0.3
+    val beta = 0.1
+    val horizon = 7
     val al = lit(alpha); val oma = lit(1.0 - alpha)
     val be = lit(beta); val omb = lit(1.0 - beta)
     val daily = events

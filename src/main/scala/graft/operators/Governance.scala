@@ -34,12 +34,14 @@ object Governance {
     * deletion requests arrive from a compliance system keyed by document
     * id; the fixture has no such feed, so the registered queries model it
     * as a fixed congruence class (`doc_id % modulus == residue`, ~2.4% of
-    * the corpus at the defaults) — exogenous in shape (an id list with no
+    * the corpus) — exogenous in shape (an id list with no
     * derivable content signal), trivial for the oracle to reproduce.
     */
-  def erasureRequests(documents: DataFrame, modulus: Long = 41L,
-      residue: Long = 3L): DataFrame =
+  def erasureRequests(documents: DataFrame): DataFrame = {
+    val modulus = 41L
+    val residue = 3L
     documents.select($"doc_id").filter($"doc_id" % modulus === residue)
+  }
 
   /** q163: BM25 ranking under erasure tombstones applied at the INDEX-ROW
     * grain — the delete list anti-joins the postings-shaped (doc_id, term,
@@ -50,20 +52,18 @@ object Governance {
     * bit-identical to re-ingesting the filtered corpus (which is what the
     * DuckDB oracle computes).
     */
-  def erasureBm25(documents: DataFrame, deletes: DataFrame,
-      query: Seq[String] = Seq("table", "data", "row"),
-      k1: Double = 1.2, b: Double = 0.75, topk: Int = 20): DataFrame = {
+  def erasureBm25(documents: DataFrame, deletes: DataFrame): DataFrame = {
     val del = broadcast(deletes.select($"doc_id"))
     val dl = documents
       .select($"doc_id", size(split($"text", " ")).cast("long").as("dl"))
       .join(del, Seq("doc_id"), "left_anti")
     val tf = documents
       .select($"doc_id", explode(split($"text", " ")).as("term"))
-      .filter($"term".isin(query: _*))
+      .filter($"term".isin("table", "data", "row"))
       .join(del, Seq("doc_id"), "left_anti")
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("tf"))
-    TextAnalysis.bm25Rank(tf, dl, k1, b, topk)
+    TextAnalysis.bm25Rank(tf, dl, 1.2, 0.75, 20)
   }
 
   /** q165: near-dup survivor selection under erasure — tombstones applied
@@ -80,12 +80,11 @@ object Governance {
     * `restrictPairs` law). The oracle states it as q53's recursive
     * components over the all-pairs set with both endpoints retained.
     */
-  def erasureSurvivors(documents: DataFrame, deletes: DataFrame,
-      n: Int = 5, threshold: Double = 0.6): DataFrame = {
+  def erasureSurvivors(documents: DataFrame, deletes: DataFrame): DataFrame = {
     val retained = documents.select($"doc_id")
       .join(broadcast(deletes.select($"doc_id")), Seq("doc_id"), "left_anti")
     Dedup.survivorsOverPairs(
-      Dedup.restrictPairs(Dedup.pairIndex(documents, n, threshold), retained))
+      Dedup.restrictPairs(Dedup.pairIndex(documents, 5, 0.6), retained))
   }
 
   /** q164: per-source erasure-impact audit — the compliance report a
@@ -357,7 +356,8 @@ object Governance {
     * rows, leave the first reducers, so the audit is one corpus pass at
     * any scale.
     */
-  def lDiversityReport(customer: DataFrame, l: Long = 3L): DataFrame =
+  def lDiversityReport(customer: DataFrame): DataFrame = {
+    val l = 3L
     customer
       .select($"c_nationkey", $"c_mktsegment",
         floor($"c_acctbal" / 1000).cast("long").as("band"))
@@ -370,6 +370,7 @@ object Governance {
         round(log2($"n_rows") - $"s6" / 1e6 / $"n_rows", 4).as("entropy_bits"),
         ($"distinct_l" >= l).as("l_diverse"))
       .orderBy($"c_nationkey", $"c_mktsegment")
+  }
 
   // ---- persisted-artifact staleness (q242) ------------------------------
 
@@ -500,7 +501,8 @@ object Governance {
     * class size), l-diversity (q230, sensitive variety), t-closeness
     * (distributional skew).
     */
-  def tClosenessReport(customer: DataFrame, t: Double = 0.2): DataFrame = {
+  def tClosenessReport(customer: DataFrame): DataFrame = {
+    val t = 0.2
     val base = customer.select($"c_nationkey", $"c_mktsegment",
       floor($"c_acctbal" / 1000).cast("long").as("band"))
     val cells = base.groupBy($"c_nationkey", $"c_mktsegment", $"band")

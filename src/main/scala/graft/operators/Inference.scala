@@ -114,8 +114,9 @@ object Inference {
     * empty complement (m = 1) or zero pooled variance emits NULL z and
     * p = 1 (never rejected), keeping the panel total.
     */
-  def bhFdrPanel(documents: DataFrame, minChars: Long = 300L,
-      alpha: Double = 0.05): DataFrame = {
+  def bhFdrPanel(documents: DataFrame): DataFrame = {
+    val minChars = 300L
+    val alpha = 0.05
     val per = documents.groupBy($"source").agg(
       count(lit(1)).as("ns"),
       sum(when($"n_chars" >= minChars, 1L).otherwise(0L)).as("ks"))
@@ -178,10 +179,10 @@ object Inference {
     * (U1·2 − n1·n2 is integer; no 0.5 fudge — the tie-averaged U is
     * already centered).
     */
-  def mannWhitney(documents: DataFrame, srcA: String = "src0",
-      srcB: String = "src1"): DataFrame = {
+  def mannWhitney(documents: DataFrame): DataFrame = {
+    val srcA = "src0"
     val byVal = documents
-      .filter($"source" === srcA || $"source" === srcB)
+      .filter($"source" === srcA || $"source" === "src1")
       .groupBy($"n_chars".as("v"))
       .agg(count(lit(1)).as("t"),
         sum(when($"source" === srcA, 1L).otherwise(0L)).as("ta"))
@@ -329,8 +330,9 @@ object Inference {
     * distinct-value frame (the q247 machinery). p via
     * [[kolmogorovTail]] at λ = D·√(n₁n₂/(n₁+n₂)).
     */
-  def ksTwoSample(documents: DataFrame, srcA: String = "src0",
-      srcB: String = "src1"): DataFrame = {
+  def ksTwoSample(documents: DataFrame): DataFrame = {
+    val srcA = "src0"
+    val srcB = "src1"
     val byVal = documents
       .filter($"source" === srcA || $"source" === srcB)
       .groupBy($"n_chars".as("v"))
@@ -370,7 +372,7 @@ object Inference {
     * The grid is |sources| × |values| — dimension-bounded — and the
     * prefix windows partition BY SOURCE (no single-partition stage).
     */
-  def ksPanel(documents: DataFrame, alpha: Double = 0.05): DataFrame = {
+  def ksPanel(documents: DataFrame): DataFrame = {
     val bySrcVal = documents.groupBy($"source", $"n_chars".as("v"))
       .agg(count(lit(1)).as("c"))
     val byVal = bySrcVal.groupBy($"v").agg(sum($"c").as("t"))
@@ -403,7 +405,7 @@ object Inference {
     val ranked = scored.withColumn("p_rank",
       row_number().over(Window.partitionBy().orderBy($"p_value", $"source")))
     val kStar = max(when(
-      $"p_value" <= $"p_rank" * lit(alpha) / $"m", $"p_rank"))
+      $"p_value" <= $"p_rank" * lit(0.05) / $"m", $"p_rank"))
       .over(Window.partitionBy())
     ranked
       .withColumn("significant", $"p_rank" <= coalesce(kStar, lit(0L)))
@@ -490,10 +492,10 @@ object Inference {
     * q245 discipline: exact long sums over the m-row panel); one double
     * expression renders M and the posterior means. One corpus scan.
     */
-  def ebShrunkRates(documents: DataFrame, minChars: Long = 300L): DataFrame = {
+  def ebShrunkRates(documents: DataFrame): DataFrame = {
     val per = documents.groupBy($"source").agg(
       count(lit(1)).as("ns"),
-      sum(when($"n_chars" >= minChars, 1L).otherwise(0L)).as("ks"))
+      sum(when($"n_chars" >= 300L, 1L).otherwise(0L)).as("ks"))
       .withColumn("r6",
         round($"ks".cast("double") / $"ns" * lit(1000000.0), 0).cast("long"))
     val ens = per.agg(count(lit(1)).as("j"),
@@ -539,11 +541,10 @@ object Inference {
     * expressions of those longs, mirrored shape-for-shape in the
     * oracle; χ²₁ tail = 2·(1−Φ(√χ²)) via the A&S kernel.
     */
-  def labelerAgreement(documents: DataFrame, minChars: Long = 300L,
-      minTokens: Long = 60L): DataFrame = {
+  def labelerAgreement(documents: DataFrame): DataFrame = {
     val labeled = documents.select(
-      ($"n_chars" >= minChars).cast("long").as("a"),
-      (size(split($"text", " ")) >= minTokens).cast("long").as("b"))
+      ($"n_chars" >= 300L).cast("long").as("a"),
+      (size(split($"text", " ")) >= 60L).cast("long").as("b"))
     val m = labeled.agg(
       count(lit(1)).as("n"),
       sum($"a" * $"b").as("n11"),
@@ -588,7 +589,8 @@ object Inference {
     * micro-quantized before the cross-bucket sum (q245); the bucket
     * frame is ≤ maxBucket+1 rows. One corpus scan.
     */
-  def woeIvPanel(documents: DataFrame, maxBucket: Int = 7): DataFrame = {
+  def woeIvPanel(documents: DataFrame): DataFrame = {
+    val maxBucket = 7
     val padded = concat(lit(" "), lower($"text"), lit(" "))
     val cnt = TextAnalysis.occurrences(padded, " the ")
     val byB = documents.select(
@@ -632,8 +634,9 @@ object Inference {
     * one mirrored double expression per side. One corpus scan
     * (bandwidth filter pushes to the parquet range), 1-row output.
     */
-  def rdGateAudit(documents: DataFrame, cutoff: Long = 300L,
-      bandwidth: Long = 150L): DataFrame = {
+  def rdGateAudit(documents: DataFrame): DataFrame = {
+    val cutoff = 300L
+    val bandwidth = 150L
     val words = size(split($"text", " "))
     val stops = TextAnalysis.occurrences(
       concat(lit(" "), lower($"text"), lit(" ")), " the ") +
@@ -688,10 +691,10 @@ object Inference {
         .as("p_value"))
   }
 
-  def jackknifeInfluence(documents: DataFrame, minChars: Long = 300L): DataFrame = {
+  def jackknifeInfluence(documents: DataFrame): DataFrame = {
     val per = documents.groupBy($"source").agg(
       count(lit(1)).as("ns"), sum($"n_chars").as("ss"),
-      sum(when($"n_chars" >= minChars, 1L).otherwise(0L)).as("ks"))
+      sum(when($"n_chars" >= 300L, 1L).otherwise(0L)).as("ks"))
     val tot = per.agg(sum($"ns").as("n"), sum($"ss").as("s"), sum($"ks").as("k"))
     per.crossJoin(broadcast(tot))
       .select($"source", $"ns".as("n_docs"),

@@ -42,7 +42,8 @@ object Matching {
     * Output: one row per matched (name_a < name_b) pair with the edit
     * distance and the number of catalog rows carrying each name.
     */
-  def fuzzyNameMatch(part: DataFrame, maxDist: Int = 3): DataFrame = {
+  def fuzzyNameMatch(part: DataFrame): DataFrame = {
+    val maxDist = 3
     val names = part.groupBy($"p_name").agg(count(lit(1)).as("n_parts"))
     val toks = names.select($"p_name", explode(split($"p_name", " ")).as("tok"))
     val cand = toks.as("a")
@@ -184,10 +185,10 @@ object Matching {
     * Candidate volume is block-bounded (Σ_block |block|²); the EM passes
     * are candidate-proportional aggregates over ONE checkpointed frame.
     */
-  def fsLinkageWeights(part: DataFrame, rounds: Int = 3,
-      maxPairs: Long = 50000000L): DataFrame = {
+  def fsLinkageWeights(part: DataFrame): DataFrame = {
+    val rounds = 3
     val spark = part.sparkSession
-    val (m6, u6) = fsEmFit(guardPairVolume(fsCandidates(part), maxPairs), rounds)
+    val (m6, u6) = fsEmFit(guardPairVolume(fsCandidates(part), 50000000L), rounds)
     // finish IN Spark (not on the driver) so the log2/round rendering is
     // the same engine codepath every other oracle-checked query uses
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
@@ -220,10 +221,9 @@ object Matching {
     * the oracle re-derives the scalars through its own unrolled EM and
     * scores with the same fixed-order sum).
     */
-  def fsLinkageMatches(part: DataFrame, rounds: Int = 3,
-      minBits: Double = 4.0, maxPairs: Long = 50000000L): DataFrame = {
-    val cand = guardPairVolume(fsCandidates(part), maxPairs)
-    val (m6, u6) = fsEmFit(cand, rounds)
+  def fsLinkageMatches(part: DataFrame, minBits: Double = 4.0): DataFrame = {
+    val cand = guardPairVolume(fsCandidates(part), 50000000L)
+    val (m6, u6) = fsEmFit(cand, 3)
     val score = (1 to 4).map { k =>
       when(col(s"g$k") === 1L,
         log2(lit(m6(k - 1)).cast("double") / lit(u6(k - 1))))
@@ -267,8 +267,10 @@ object Matching {
     * document length; candidate generation and both scoring joins are
     * hash equi-joins on term/doc_id. Nothing is ever all-pairs.
     */
-  def tfidfCosinePairs(documents: DataFrame, k: Int = 8, dfCapPerMille: Int = 64,
-      tau: Double = 0.7): DataFrame = {
+  def tfidfCosinePairs(documents: DataFrame): DataFrame = {
+    val k = 8
+    val dfCapPerMille = 64
+    val tau = 0.7
     val tf = documents
       .select($"doc_id", explode(split($"text", " ")).as("term"))
       .groupBy($"doc_id", $"term")
@@ -343,8 +345,10 @@ object Matching {
     * lexical hit on that document is a real hit and may enter the fused
     * list through its lexical rank alone.
     */
-  def hybridRrf(documents: DataFrame, embeddings: DataFrame, k: Int = 20,
-      queryVecId: Long = 0L, rrfK: Int = 60, topk: Int = 10): DataFrame = {
+  def hybridRrf(documents: DataFrame, embeddings: DataFrame): DataFrame = {
+    val k = 20
+    val queryVecId = 0L
+    val rrfK = 60
     // k-row frames: the unpartitioned windows rank already-reduced lists
     val wLex = Window.orderBy($"bm25".desc, $"doc_id")
     val lex = TextAnalysis.bm25TopDocs(documents, topk = k)
@@ -368,7 +372,7 @@ object Matching {
         coalesce(round(lit(1e6) / ($"r_lex" + rrfK)).cast("long"), lit(0L)) +
         coalesce(round(lit(1e6) / ($"r_vec" + rrfK)).cast("long"), lit(0L)))
       .orderBy($"rrf_micro".desc, $"id")
-      .limit(topk)
+      .limit(10)
       .select($"id", $"r_lex".cast("int").as("r_lex"),
         $"r_vec".cast("int").as("r_vec"), $"rrf_micro")
       .orderBy($"rrf_micro".desc, $"id")
@@ -480,7 +484,8 @@ object Matching {
     * join of the nPlanted twin keys; never materializes candidate
     * PAIRS — the count comes from the block-size frame.
     */
-  def blockingQuality(part: DataFrame, nPlanted: Long = 50L): DataFrame = {
+  def blockingQuality(part: DataFrame): DataFrame = {
+    val nPlanted = 50L
     val base = part.select($"p_partkey", $"p_brand", $"p_size")
     val twins = base.filter($"p_partkey" < nPlanted).select(
       ($"p_partkey" + 90000000L).as("p_partkey"), $"p_brand",

@@ -209,20 +209,17 @@ object Multimodal {
   }
 
   /** Batched per-partition decode — the integration shape for a codec
-    * (setup amortizes per batch, not per row). The DEFAULT decoder is
-    * the real `BmpCodec.decode`; a different codec swaps in through the
-    * same parameter with partitioning, schema, and downstream plan
+    * (setup amortizes per batch, not per row). The decoder is the real
+    * `BmpCodec.decode`; a different codec swaps in at the one
+    * `mapPartitions` call with partitioning, schema, and downstream plan
     * untouched.
     */
-  def decodeBatched(
-      assets: DataFrame,
-      decoder: Iterator[(Long, Array[Byte], String)] => Iterator[(Long, String, Long, Int, Int)] =
-        bmpBatchDecoder): DataFrame = {
+  def decodeBatched(assets: DataFrame): DataFrame = {
     import assets.sparkSession.implicits.newProductEncoder
     val out = assets
       .select($"asset_id", $"payload", $"media_type")
       .as[(Long, Array[Byte], String)]
-      .mapPartitions(decoder)
+      .mapPartitions(bmpBatchDecoder)
       .toDF("asset_id", "media_type", "n_bytes", "width", "height")
     out.withColumn("duration_s", round(col("n_bytes") / 1000.0, 3))
   }
@@ -285,8 +282,8 @@ object Multimodal {
     * sort — at 100 TB this is the embarrassingly-parallel map stage a
     * thumbnailing pass is.
     */
-  def bmpThumbnails(documents: DataFrame, k: Int = 2): DataFrame = {
-    require(k >= 1, s"bmpThumbnails: scale factor k=$k must be >= 1")
+  def bmpThumbnails(documents: DataFrame): DataFrame = {
+    val k = 2
     import documents.sparkSession.implicits.newProductEncoder
     assetStore(documents, "bmp")
       .filter($"media_type" === "image") // the q35 image rotation, pushed to the scan
@@ -620,8 +617,8 @@ object Multimodal {
     * Shape: per-partition batched, asset-proportional, no shuffle
     * beyond the sort.
     */
-  def wavResample(documents: DataFrame, k: Int = 2): DataFrame = {
-    require(k >= 1, s"wavResample: decimation factor k=$k must be >= 1")
+  def wavResample(documents: DataFrame): DataFrame = {
+    val k = 2
     import documents.sparkSession.implicits.newProductEncoder
     assetStore(documents, "wav16")
       .select($"asset_id", $"payload").as[(Long, Array[Byte])]
@@ -668,7 +665,8 @@ object Multimodal {
     * grid. Shape: per-partition batched decode, per-channel O(n) scan,
     * asset×channel output rows, no shuffle beyond the sort.
     */
-  def wavSilenceRuns(documents: DataFrame, threshold: Int = 128): DataFrame = {
+  def wavSilenceRuns(documents: DataFrame): DataFrame = {
+    val threshold = 128
     import documents.sparkSession.implicits.newProductEncoder
     assetStore(documents, "wavburst")
       .select($"asset_id", $"payload").as[(Long, Array[Byte])]
@@ -781,7 +779,8 @@ object Multimodal {
     * scales identically (state per distinct checksum, duplicates-only
     * output).
     */
-  def frameDedup(documents: DataFrame, frameBytes: Int = 64): DataFrame =
+  def frameDedup(documents: DataFrame): DataFrame = {
+    val frameBytes = 64
     assetsFromDocuments(documents)
       .select($"asset_id", $"payload",
         explode(sequence(lit(0),
@@ -797,6 +796,7 @@ object Multimodal {
       .select($"fc".as("frame_checksum"), $"n_copies", $"n_assets",
         $"k.asset_id".as("keeper_asset"), $"k.frame_no".as("keeper_frame"))
       .orderBy($"frame_checksum")
+  }
 
   /** Perceptual-hash near-dup over media assets (q203): a 60-bit
     * signature per asset from the PER-BIT MAJORITY of its frame hashes
@@ -824,8 +824,8 @@ object Multimodal {
     * chars — `Tables.nonAsciiDocs` is the drift probe that names this
     * cause if a regenerated fixture ever ships multi-byte text.
     */
-  def framePhashNearDup(documents: DataFrame, frameBytes: Int = 64,
-      maxHamming: Int = 3): DataFrame = {
+  def framePhashNearDup(documents: DataFrame): DataFrame = {
+    val frameBytes = 64
     val frames = assetsFromDocuments(documents)
       .select($"asset_id", $"payload",
         explode(sequence(lit(0),
@@ -856,17 +856,18 @@ object Multimodal {
       .filter($"id1" < $"id2")
       .select($"id1", $"id2", expr("bit_count(p1 ^ p2)").cast("int").as("hamming"))
       .distinct() // a close pair can share several bands
-      .filter($"hamming" <= maxHamming)
+      .filter($"hamming" <= 3)
       .orderBy($"id1", $"id2")
   }
 
-  def frameSample(documents: DataFrame, frameBytes: Int = 64, every: Int = 4): DataFrame = {
+  def frameSample(documents: DataFrame): DataFrame = {
+    val frameBytes = 64
     val assets = assetsFromDocuments(documents).filter($"media_type" === "video")
     assets
       .select($"asset_id", $"payload",
         explode(sequence(lit(0),
           greatest(floor($"meta.n_bytes" / frameBytes).cast("int") - 1, lit(0)))).as("frame_no"))
-      .filter($"frame_no" % every === 0)
+      .filter($"frame_no" % 4 === 0)
       .select(
         $"asset_id", $"frame_no".cast("bigint").as("frame_no"),
         md5($"payload".substr(($"frame_no" * frameBytes + 1).cast("int"), lit(frameBytes)))

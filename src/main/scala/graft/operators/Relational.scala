@@ -119,7 +119,8 @@ object Relational {
   /** Sort + limit top-k: TakeOrderedAndProject — per-partition top-k then a
     * single-partition merge; no global sort shuffle at any scale.
     */
-  def topK(orders: DataFrame, customer: DataFrame, nation: DataFrame, k: Int = 10): DataFrame =
+  def topK(orders: DataFrame, customer: DataFrame, nation: DataFrame): DataFrame = {
+    val k = 10
     orders
       .join(customer, orders("o_custkey") === customer("c_custkey"))
       .join(nation, customer("c_nationkey") === nation("n_nationkey"))
@@ -127,6 +128,7 @@ object Relational {
       .agg(f2(sum($"o_totalprice")).as("total"))
       .orderBy($"total".desc, $"n_name")
       .limit(k)
+  }
 
   /** Union of two disjoint partial aggregates re-aggregated: the reference's
     * merge of per-worker partial CSVs into the master map
@@ -311,8 +313,8 @@ object Relational {
     * sizes the join; the `> minQty` filter is what makes it small at any
     * scale — Q18's threshold semantics). TakeOrderedAndProject cut.
     */
-  def largeOrders(customer: DataFrame, orders: DataFrame, lineitem: DataFrame,
-      minQty: Double = 300.0): DataFrame =
+  def largeOrders(customer: DataFrame, orders: DataFrame, lineitem: DataFrame): DataFrame = {
+    val minQty = 300.0
     lineitem.groupBy($"l_orderkey")
       .agg(sum($"l_quantity").as("raw_qty"))
       .filter($"raw_qty" > minQty)
@@ -324,6 +326,7 @@ object Relational {
         round($"raw_qty", 2).as("total_qty"))
       .orderBy($"total_price".desc, $"o_orderkey")
       .limit(100)
+  }
 
   /** TPC-H Q16 shape (supplier diversity per part class): distinct
     * supplier counts per (brand, type, size) over the OBSERVED
@@ -432,12 +435,12 @@ object Relational {
     * order-count rows. The date filter lands on the orders scan as a
     * pushed predicate before the join.
     */
-  def lateOrderPriority(orders: DataFrame, lineitem: DataFrame,
-      fromDate: String = "1996-01-01", toDate: String = "1996-07-01",
-      lagDays: Int = 60): DataFrame =
+  def lateOrderPriority(orders: DataFrame, lineitem: DataFrame): DataFrame = {
+    val fromDate = "1996-01-01"
+    val lagDays = 60
     orders
       .filter($"o_orderdate" >= tsLit(orders, "o_orderdate", fromDate) &&
-        $"o_orderdate" < tsLit(orders, "o_orderdate", toDate))
+        $"o_orderdate" < tsLit(orders, "o_orderdate", "1996-07-01"))
       .join(lineitem
           // derived bound: qualifying orders have o_orderdate >= fromDate,
           // so every witness line has l_shipdate > fromDate + lag — a
@@ -451,6 +454,7 @@ object Relational {
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n_orders"))
       .orderBy($"o_orderpriority")
+  }
 
   /** TPC-H Q12 shape (shipment-class priority audit): per return-flag
     * class (the fixture's stand-in for Q12's ship mode), lines shipped in
@@ -460,12 +464,11 @@ object Relational {
     * per-branch scan, no second exchange; the ship-date filter prunes the
     * lineitem scan and the orders side carries only (orderkey, priority).
     */
-  def shipclassPriority(orders: DataFrame, lineitem: DataFrame,
-      fromDate: String = "1996-01-01", toDate: String = "1997-01-01"): DataFrame = {
+  def shipclassPriority(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val isHigh = $"o_orderpriority".isin("1-URGENT", "2-HIGH")
     lineitem
-      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", fromDate) &&
-        $"l_shipdate" < tsLit(lineitem, "l_shipdate", toDate))
+      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", "1996-01-01") &&
+        $"l_shipdate" < tsLit(lineitem, "l_shipdate", "1997-01-01"))
       .join(orders.select($"o_orderkey", $"o_orderpriority"),
         $"l_orderkey" === $"o_orderkey")
       .groupBy($"l_returnflag")
@@ -483,11 +486,10 @@ object Relational {
     * accumulation — association-order-free), so the one FP division
     * consumes identical inputs on any engine and partitioning.
     */
-  def promoRevenueShare(part: DataFrame, lineitem: DataFrame,
-      fromDate: String = "1996-01-01", toDate: String = "1996-04-01"): DataFrame =
+  def promoRevenueShare(part: DataFrame, lineitem: DataFrame): DataFrame =
     lineitem
-      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", fromDate) &&
-        $"l_shipdate" < tsLit(lineitem, "l_shipdate", toDate))
+      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", "1996-01-01") &&
+        $"l_shipdate" < tsLit(lineitem, "l_shipdate", "1996-04-01"))
       .join(part.select($"p_partkey", $"p_type"), $"l_partkey" === $"p_partkey")
       .agg(
         dollarsFrom4(sum(money4(when($"p_type" === "PROMO",
@@ -507,11 +509,10 @@ object Relational {
     * per-customer count shuffles on custkey (partial-aggregable), the
     * histogram re-shuffles |distinct counts| rows — a tiny second stage.
     */
-  def customerOrderDistribution(customer: DataFrame, orders: DataFrame,
-      excludeStatus: String = "F"): DataFrame =
+  def customerOrderDistribution(customer: DataFrame, orders: DataFrame): DataFrame =
     customer.select($"c_custkey")
       .join(
-        orders.filter($"o_orderstatus" =!= excludeStatus)
+        orders.filter($"o_orderstatus" =!= "F")
           .select($"o_custkey", $"o_orderkey"),
         $"c_custkey" === $"o_custkey", "left_outer")
       .groupBy($"c_custkey")
@@ -532,8 +533,8 @@ object Relational {
     * the per-part mean is exact regardless of summation order and the
     * `< 0.2 * avg` cut is engine-portable.
     */
-  def smallQuantityRevenue(part: DataFrame, lineitem: DataFrame,
-      brand: String = "Brand#5"): DataFrame = {
+  def smallQuantityRevenue(part: DataFrame, lineitem: DataFrame): DataFrame = {
+    val brand = "Brand#5"
     val brandParts = part.filter($"p_brand" === brand).select($"p_partkey")
     val brandLines = lineitem
       .join(broadcast(brandParts), $"l_partkey" === $"p_partkey")
@@ -562,12 +563,11 @@ object Relational {
     * dimension-sized output. The anti-join is the only fact-sized
     * exchange.
     */
-  def idleCustomerBalance(customer: DataFrame, orders: DataFrame,
-      nation: DataFrame, openStatus: String = "O"): DataFrame = {
+  def idleCustomerBalance(customer: DataFrame, orders: DataFrame, nation: DataFrame): DataFrame = {
     val avgBal = customer.filter($"c_acctbal" > 0.0)
       .agg(avg($"c_acctbal").as("avg_bal"))
     customer
-      .join(orders.filter($"o_orderstatus" === openStatus).select($"o_custkey"),
+      .join(orders.filter($"o_orderstatus" === "O").select($"o_custkey"),
         $"c_custkey" === $"o_custkey", "left_anti")
       .crossJoin(broadcast(avgBal))
       .filter($"c_acctbal" > $"avg_bal")
@@ -589,18 +589,18 @@ object Relational {
     * the single fact pass. The ship-date window prunes the lineitem
     * scan; one groupBy on (supp_nation, cust_nation, year) finishes it.
     */
-  def nationVolumeShipping(lineitem: DataFrame, orders: DataFrame,
-      customer: DataFrame, supplier: DataFrame, nation: DataFrame,
-      nationA: String = "NATION_12", nationB: String = "NATION_13",
-      fromDate: String = "1996-01-01", toDate: String = "1998-01-01"): DataFrame = {
+  def nationVolumeShipping(lineitem: DataFrame, orders: DataFrame, customer: DataFrame,
+      supplier: DataFrame, nation: DataFrame): DataFrame = {
+    val nationA = "NATION_12"
+    val nationB = "NATION_13"
     val nat = nation.select($"n_nationkey", $"n_name")
     val suppNation = supplier.join(broadcast(nat), $"s_nationkey" === $"n_nationkey")
       .select($"s_suppkey", $"n_name".as("supp_nation"))
     val custNation = customer.join(broadcast(nat), $"c_nationkey" === $"n_nationkey")
       .select($"c_custkey", $"n_name".as("cust_nation"))
     lineitem
-      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", fromDate) &&
-        $"l_shipdate" < tsLit(lineitem, "l_shipdate", toDate))
+      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", "1996-01-01") &&
+        $"l_shipdate" < tsLit(lineitem, "l_shipdate", "1998-01-01"))
       .join(broadcast(suppNation), $"l_suppkey" === $"s_suppkey")
       .join(orders.select($"o_orderkey", $"o_custkey"), $"l_orderkey" === $"o_orderkey")
       .join(broadcast(custNation), $"o_custkey" === $"c_custkey")
@@ -622,12 +622,8 @@ object Relational {
     * all broadcast dimension chains; orders' date window prunes before
     * the join; the fact table is touched once.
     */
-  def nationMarketShare(lineitem: DataFrame, orders: DataFrame,
-      customer: DataFrame, supplier: DataFrame, nation: DataFrame,
-      region: DataFrame, part: DataFrame,
-      targetNation: String = "NATION_3", regionName: String = "ASIA",
-      partType: String = "STANDARD",
-      fromDate: String = "1996-01-01", toDate: String = "1998-01-01"): DataFrame = {
+  def nationMarketShare(lineitem: DataFrame, orders: DataFrame, customer: DataFrame,
+      supplier: DataFrame, nation: DataFrame, region: DataFrame, part: DataFrame): DataFrame = {
     val nat = nation.select($"n_nationkey", $"n_name", $"n_regionkey")
     val suppNation = supplier.join(broadcast(nat), $"s_nationkey" === $"n_nationkey")
       .select($"s_suppkey", $"n_name".as("supp_nation"))
@@ -635,20 +631,20 @@ object Relational {
       .join(broadcast(nat), $"c_nationkey" === $"n_nationkey")
       .join(broadcast(region.select($"r_regionkey", $"r_name")),
         $"n_regionkey" === $"r_regionkey")
-      .filter($"r_name" === regionName)
+      .filter($"r_name" === "ASIA")
       .select($"c_custkey")
-    val typedParts = part.filter($"p_type" === partType).select($"p_partkey")
+    val typedParts = part.filter($"p_type" === "STANDARD").select($"p_partkey")
     lineitem
       .join(broadcast(typedParts), $"l_partkey" === $"p_partkey")
       .join(orders.select($"o_orderkey", $"o_custkey", $"o_orderdate")
-          .filter($"o_orderdate" >= tsLit(orders, "o_orderdate", fromDate) &&
-            $"o_orderdate" < tsLit(orders, "o_orderdate", toDate)),
+          .filter($"o_orderdate" >= tsLit(orders, "o_orderdate", "1996-01-01") &&
+            $"o_orderdate" < tsLit(orders, "o_orderdate", "1998-01-01")),
         $"l_orderkey" === $"o_orderkey")
       .join(broadcast(regionCust), $"o_custkey" === $"c_custkey", "left_semi")
       .join(broadcast(suppNation), $"l_suppkey" === $"s_suppkey")
       .groupBy(year($"o_orderdate").cast("int").as("o_year"))
       .agg(
-        dollarsFrom4(sum(money4(when($"supp_nation" === targetNation,
+        dollarsFrom4(sum(money4(when($"supp_nation" === "NATION_3",
           $"l_extendedprice" * (lit(1.0) - $"l_discount")).otherwise(lit(0.0)))))
           .as("nation_revenue"),
         dollarsFrom4(sum(money4($"l_extendedprice" * (lit(1.0) - $"l_discount"))))
@@ -698,11 +694,10 @@ object Relational {
     * supplier-key order, exactly as Q15 specifies. Supplier is the
     * broadcast dimension; the window prunes the fact scan.
     */
-  def topSupplierRevenue(supplier: DataFrame, lineitem: DataFrame,
-      fromDate: String = "1996-01-01", toDate: String = "1996-04-01"): DataFrame = {
+  def topSupplierRevenue(supplier: DataFrame, lineitem: DataFrame): DataFrame = {
     val rev = lineitem
-      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", fromDate) &&
-        $"l_shipdate" < tsLit(lineitem, "l_shipdate", toDate))
+      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", "1996-01-01") &&
+        $"l_shipdate" < tsLit(lineitem, "l_shipdate", "1996-04-01"))
       .groupBy($"l_suppkey")
       .agg(dollarsFrom4(
         sum(money4($"l_extendedprice" * (lit(1.0) - $"l_discount")))).as("total_revenue"))
@@ -723,14 +718,11 @@ object Relational {
     * point at 100 TB is that every conjunct lands in PushedFilters and
     * the aggregate is map-side partial — spec-asserted.
     */
-  def forecastRevenueDelta(lineitem: DataFrame,
-      fromDate: String = "1996-01-01", toDate: String = "1997-01-01",
-      discLo: Double = 0.05, discHi: Double = 0.07,
-      qtyMax: Double = 24.0): DataFrame =
+  def forecastRevenueDelta(lineitem: DataFrame): DataFrame =
     lineitem
-      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", fromDate) &&
-        $"l_shipdate" < tsLit(lineitem, "l_shipdate", toDate) &&
-        $"l_discount".between(discLo, discHi) && $"l_quantity" < qtyMax)
+      .filter($"l_shipdate" >= tsLit(lineitem, "l_shipdate", "1996-01-01") &&
+        $"l_shipdate" < tsLit(lineitem, "l_shipdate", "1997-01-01") &&
+        $"l_discount".between(0.05, 0.07) && $"l_quantity" < 24.0)
       .agg(dollarsFrom4(sum(money4($"l_extendedprice" * $"l_discount")))
           .as("revenue_delta"),
         count(lit(1)).as("n_lines"))
@@ -750,17 +742,16 @@ object Relational {
     * (acctbal desc, nation, supplier, part) is a total order over the
     * output grain, so the LIMIT is deterministic on any engine.
     */
-  def minCostSupplier(part: DataFrame, supplier: DataFrame, nation: DataFrame,
-      region: DataFrame, partsupp: DataFrame, size: Int = 15,
-      partType: String = "STANDARD", regionName: String = "EUROPE",
-      topk: Int = 100): DataFrame = {
+  def minCostSupplier(part: DataFrame, supplier: DataFrame, nation: DataFrame, region: DataFrame,
+      partsupp: DataFrame): DataFrame = {
+    val size = 15
     val regSupp = supplier
       .join(broadcast(nation.select($"n_nationkey", $"n_name", $"n_regionkey")),
         $"s_nationkey" === $"n_nationkey")
-      .join(broadcast(region.filter($"r_name" === regionName).select($"r_regionkey")),
+      .join(broadcast(region.filter($"r_name" === "EUROPE").select($"r_regionkey")),
         $"n_regionkey" === $"r_regionkey")
       .select($"s_suppkey", $"s_name", $"s_acctbal", $"n_name")
-    val targetParts = part.filter($"p_size" === size && $"p_type" === partType)
+    val targetParts = part.filter($"p_size" === size && $"p_type" === "STANDARD")
       .select($"p_partkey", $"p_name")
     val regPs = partsupp
       .join(broadcast(targetParts.select($"p_partkey")),
@@ -776,7 +767,7 @@ object Relational {
       .select($"s_acctbal", $"s_name", $"n_name", $"p_partkey", $"p_name",
         ($"ps_supplycost_c" / 100.0).as("supplycost"))
       .orderBy($"s_acctbal".desc, $"n_name", $"s_name", $"p_partkey")
-      .limit(topk)
+      .limit(100)
   }
 
   /** TPC-H Q9 shape (product-type profit, q212): per supplier nation
@@ -794,10 +785,9 @@ object Relational {
     * dollarsFrom4 boundary per group (sign-symmetric across engines:
     * both evaluate the same floor((x+50)/100)).
     */
-  def productTypeProfit(part: DataFrame, supplier: DataFrame, nation: DataFrame,
-      orders: DataFrame, lineitem: DataFrame, partsupp: DataFrame,
-      nameSub: String = "bolt"): DataFrame = {
-    val famParts = part.filter($"p_name".contains(nameSub)).select($"p_partkey")
+  def productTypeProfit(part: DataFrame, supplier: DataFrame, nation: DataFrame, orders: DataFrame,
+      lineitem: DataFrame, partsupp: DataFrame): DataFrame = {
+    val famParts = part.filter($"p_name".contains("bolt")).select($"p_partkey")
     val suppNat = supplier
       .join(broadcast(nation.select($"n_nationkey", $"n_name")),
         $"s_nationkey" === $"n_nationkey")
@@ -834,11 +824,11 @@ object Relational {
     * filter — nothing driver-side, nothing all-pairs.
     */
   def importantStock(supplier: DataFrame, nation: DataFrame, region: DataFrame,
-      partsupp: DataFrame, regionName: String = "EUROPE"): DataFrame = {
+      partsupp: DataFrame): DataFrame = {
     val regSupp = supplier
       .join(broadcast(nation.select($"n_nationkey", $"n_regionkey")),
         $"s_nationkey" === $"n_nationkey")
-      .join(broadcast(region.filter($"r_name" === regionName).select($"r_regionkey")),
+      .join(broadcast(region.filter($"r_name" === "EUROPE").select($"r_regionkey")),
         $"n_regionkey" === $"r_regionkey")
       .select($"s_suppkey")
     val perPart = partsupp

@@ -19,14 +19,16 @@ object Sampling {
     * so a low-cardinality stratum column never funnels the corpus through
     * a handful of reducers.
     */
-  def stratifiedSample(documents: DataFrame, stratum: String = "lang",
-      perStratum: Int = 20): DataFrame =
+  def stratifiedSample(documents: DataFrame): DataFrame = {
+    val stratum = "lang"
+    val perStratum = 20
     Scale.topKPerGroup(
         documents.select($"doc_id", col(stratum).as("stratum")),
         group = $"stratum", rankKey = md5($"doc_id".cast("string")), tie = $"doc_id",
         saltSource = $"doc_id", k = perStratum)
       .select($"stratum", $"doc_id")
       .orderBy($"stratum", $"doc_id")
+  }
 
   /** Neyman-allocation stratified sampling — the variance-OPTIMAL
     * allocation of a fixed sample budget across strata (Neyman 1934):
@@ -56,8 +58,9 @@ object Sampling {
     * pattern; the salted `topKPerGroup` is the heavy-skew alternative
     * when per-stratum k is uniform).
     */
-  def neymanAllocation(documents: DataFrame, stratum: String = "lang",
-      nTotal: Int = 200): DataFrame = {
+  def neymanAllocation(documents: DataFrame): DataFrame = {
+    val stratum = "lang"
+    val nTotal = 200
     import graft.operators.TextAnalysis
     val perDoc = documents.select(col(stratum).as("stratum"), $"doc_id",
       round(TextAnalysis.qualityCol($"text") * 1e4, 0).cast("long").as("qm"))
@@ -107,11 +110,11 @@ object Sampling {
     * replayable eval holdout needs (rand() or modulo-on-row-number both
     * lack it). Output: per-split doc and whitespace-token totals.
     */
-  def trainTestSplit(documents: DataFrame, testCutHex: String = "0d"): DataFrame =
+  def trainTestSplit(documents: DataFrame): DataFrame =
     documents
       .select($"doc_id",
         size(split($"text", " ")).cast("bigint").as("tok"),
-        when(substring(md5($"doc_id".cast("string")), 1, 2) < testCutHex, "test")
+        when(substring(md5($"doc_id".cast("string")), 1, 2) < "0d", "test")
           .otherwise("train").as("split"))
       .groupBy($"split")
       .agg(count(lit(1)).as("n_docs"), sum($"tok").as("total_tokens"))
@@ -128,7 +131,7 @@ object Sampling {
     * split, and the assignment stays replayable and stable as unrelated
     * docs arrive. Per-split doc/token totals, same shape as q57.
     */
-  def clusterAwareSplit(documents: DataFrame, testCutHex: String = "0d"): DataFrame = {
+  def clusterAwareSplit(documents: DataFrame): DataFrame = {
     val comps = Dedup.survivorsOverPairs(Dedup.pairIndex(documents))
       .select($"doc_id", $"cluster_rep")
     documents
@@ -136,7 +139,7 @@ object Sampling {
       .join(comps, Seq("doc_id"), "left")
       .select($"doc_id", $"tok", coalesce($"cluster_rep", $"doc_id").as("rep"))
       .select($"tok",
-        when(substring(md5($"rep".cast("string")), 1, 2) < testCutHex, "test")
+        when(substring(md5($"rep".cast("string")), 1, 2) < "0d", "test")
           .otherwise("train").as("split"))
       .groupBy($"split")
       .agg(count(lit(1)).as("n_docs"), sum($"tok").as("total_tokens"))
@@ -201,9 +204,8 @@ object Sampling {
       .select($"doc_id", $"tok", expr(s"off div $budget").as("bin"))
   }
 
-  def packByTokenOffset(documents: DataFrame, budget: Long = 2048L,
-      bucketWidth: Long = 1024L): DataFrame =
-    tokenBins(documents, budget, bucketWidth)
+  def packByTokenOffset(documents: DataFrame): DataFrame =
+    tokenBins(documents, 2048L, 1024L)
       .groupBy($"bin")
       .agg(count(lit(1)).as("n_docs"), sum($"tok").as("total_tokens"))
       .orderBy($"bin")
@@ -221,7 +223,9 @@ object Sampling {
     * array (never re-splitting the text per chunk); the fan-out is
     * `posexplode`, shuffle-free until the canonical output sort.
     */
-  def docChunks(documents: DataFrame, chunkSize: Int = 64, stride: Int = 32): DataFrame = {
+  def docChunks(documents: DataFrame): DataFrame = {
+    val chunkSize = 64
+    val stride = 32
     val nws = size($"ws")
     val nChunks = when(nws <= chunkSize, lit(1L))
       .otherwise(ceil((nws - chunkSize).cast("double") / stride).cast("bigint") + 1L)
@@ -257,8 +261,8 @@ object Sampling {
     * checksum computed incrementally per file — the permutation
     * semantics, and hence the checksums, are identical.
     */
-  def epochShuffle(documents: DataFrame, seed: String = "epoch0",
-      nShards: Int = 8): DataFrame = {
+  def epochShuffle(documents: DataFrame, seed: String = "epoch0"): DataFrame = {
+    val nShards = 8
     val keyed = documents.select($"doc_id",
       md5(concat(lit(s"$seed:"), $"doc_id".cast("string"))).as("k"))
     keyed
@@ -290,7 +294,8 @@ object Sampling {
     * output rounds to 6 for cross-engine display stability (nearest tied
     * keys sit ~1e9 ulps apart, so ranking is engine-stable).
     */
-  def weightedSample(documents: DataFrame, k: Int = 50): DataFrame = {
+  def weightedSample(documents: DataFrame): DataFrame = {
+    val k = 50
     val u = conv(substring(md5($"doc_id".cast("string")), 1, 13), 16, 10)
       .cast("double") / math.pow(16.0, 13)
     val keyed = documents
@@ -331,7 +336,8 @@ object Sampling {
     * Requires corpus size > k (τ must exist) — trivially true wherever
     * estimation is the point.
     */
-  def htEstimate(documents: DataFrame, k: Int = 50): DataFrame = {
+  def htEstimate(documents: DataFrame): DataFrame = {
+    val k = 50
     val u = conv(substring(md5($"doc_id".cast("string")), 1, 13), 16, 10)
       .cast("double") / math.pow(16.0, 13)
     val keyed = documents
@@ -413,9 +419,9 @@ object Sampling {
       .select($"tok", $"n", $"w6", $"lo", $"hi")
   }
 
-  def negativeSamples(documents: DataFrame, slots: Int = 4,
-      buckets: Int = 1024, parts: Int = 32): DataFrame = {
-    val cdf = vocabCdf(documents, parts)
+  def negativeSamples(documents: DataFrame): DataFrame = {
+    val buckets = 1024
+    val cdf = vocabCdf(documents, 32)
       .localCheckpoint() // vocab-sized; feeds total, spans, and resolve
     val total = cdf.agg(max($"hi").as("tw"))
     val spans = cdf.crossJoin(broadcast(total))
@@ -425,7 +431,7 @@ object Sampling {
     val u = conv(substring(md5(concat($"doc_id".cast("string"), lit(":"),
       $"slot".cast("string"))), 1, 13), 16, 10).cast("double") / math.pow(16.0, 13)
     val draws = documents.select($"doc_id")
-      .withColumn("slot", explode(sequence(lit(1L), lit(slots.toLong))))
+      .withColumn("slot", explode(sequence(lit(1L), lit(4.toLong))))
       .crossJoin(broadcast(total))
       .select($"doc_id", $"slot", floor(u * $"tw").cast("long").as("r"), $"tw")
       .select($"doc_id", $"slot", $"r",
@@ -459,7 +465,8 @@ object Sampling {
     * weight 0 (the standard raking caveat: margins converge on
     * represented cells; the fixture's subsample covers every cell).
     */
-  def rakingWeights(documents: DataFrame, rounds: Int = 3): DataFrame = {
+  def rakingWeights(documents: DataFrame): DataFrame = {
+    val rounds = 3
     val spark = documents.sparkSession
     val cells = documents
       .filter(Scale.md5SlicePos($"doc_id", 0, 4) === 0L)
@@ -500,8 +507,8 @@ object Sampling {
     * q245 discipline); each per-lang row also carries the overall
     * ESS/deff (the grid convention).
     */
-  def rakingEss(documents: DataFrame, rounds: Int = 3): DataFrame = {
-    val raked = rakingWeights(documents, rounds)
+  def rakingEss(documents: DataFrame): DataFrame = {
+    val raked = rakingWeights(documents)
     val withW = raked
       .withColumn("w", $"raked_docs" / $"n_sample")
       .withColumn("sw6",
@@ -526,14 +533,14 @@ object Sampling {
       .orderBy($"lang")
   }
 
-  def weightedSampleByStratum(documents: DataFrame, k: Int = 10): DataFrame = {
+  def weightedSampleByStratum(documents: DataFrame): DataFrame = {
     val u = conv(substring(md5($"doc_id".cast("string")), 1, 13), 16, 10)
       .cast("double") / math.pow(16.0, 13)
     val keyed = documents
       .select($"doc_id", $"lang", $"n_chars",
         (-log(u) / $"n_chars").as("key"))
     Scale.topKPerGroup(keyed, group = $"lang", rankKey = $"key",
-        tie = $"doc_id", saltSource = $"doc_id", k = k)
+        tie = $"doc_id", saltSource = $"doc_id", k = 10)
       .select($"lang", $"doc_id", $"n_chars", round($"key" * 1e6, 4).as("key_micro"))
       .orderBy($"lang", $"key_micro", $"doc_id")
   }

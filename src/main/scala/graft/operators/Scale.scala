@@ -56,15 +56,15 @@ object Scale {
     * reducers; phase 2 folds the per-salt partials. Deterministic: the salt
     * comes from hashing `saltSource`, not from rand().
     */
-  def saltedSumByKey(
-      df: DataFrame, key: String, valueCol: String, saltSource: String,
-      salts: Int = 16): DataFrame =
+  def saltedSumByKey(df: DataFrame, key: String, valueCol: String, saltSource: String): DataFrame = {
+    val salts = 16
     df
       .withColumn("_salt", pmod(xxhash64(col(saltSource)), lit(salts)))
       .groupBy(col(key), col("_salt"))
       .agg(sum(col(valueCol)).as("_partial"))
       .groupBy(col(key))
       .agg(sum(col("_partial")).as(s"sum_$valueCol"))
+  }
 
   /** Deterministic fixed-size per-group top-K by a rank key, selected in
     * two stages: a per-(group, salt) pre-rank keeps at most K rows per
@@ -219,7 +219,9 @@ object Scale {
     * false-positive rate is what the report measures.
     */
   def bloomPrefilterStats(fact: DataFrame, factKey: String, dim: DataFrame,
-      dimKey: String, m: Int = 16384, k: Int = 3): DataFrame = {
+      dimKey: String): DataFrame = {
+    val m = 16384
+    val k = 3
     // NULL keys drop on both sides (SQL membership of NULL is undefined
     // anyway, and the oracle's list_distinct/unnest would silently skip
     // them — make the rule explicit rather than engine-dependent)
@@ -279,7 +281,8 @@ object Scale {
     * float scale would risk a last-ulp floor flip. Output columns:
     * scaled x, scaled y, z.
     */
-  def zOrderEncode(df: DataFrame, xCol: Column, yCol: Column, bits: Int = 16): DataFrame = {
+  def zOrderEncode(df: DataFrame, xCol: Column, yCol: Column): DataFrame = {
+    val bits = 16
     val top = (1L << bits) - 1
     val raw = df.select(xCol.cast("long").as("x"), yCol.cast("long").as("y"))
     val b = raw.agg(min($"x"), max($"x"), min($"y"), max($"y")).collect()(0)
@@ -297,11 +300,11 @@ object Scale {
     * columns (the quantity a z-ordered writer minimizes per file). One
     * scan for the bounds + one map-side-combined aggregation.
     */
-  def zOrderBucketStats(orders: DataFrame, bucketShift: Int = 24): DataFrame =
+  def zOrderBucketStats(orders: DataFrame): DataFrame =
     zOrderEncode(orders,
         pmod(col("o_custkey"), lit(65536L)),
         pmod(floor(col("o_totalprice")).cast("long"), lit(65536L)))
-      .groupBy(shiftright(col("z"), bucketShift).as("z_bucket"))
+      .groupBy(shiftright(col("z"), 24).as("z_bucket"))
       .agg(count(lit(1)).as("n"),
         min($"x").as("min_x"), max($"x").as("max_x"),
         min($"y").as("min_y"), max($"y").as("max_y"))
@@ -319,8 +322,8 @@ object Scale {
     * bit-for-bit. The exact intersection (one semi-join) rides along for
     * accuracy inspection.
     */
-  def kmvIntersectEstimate(a: DataFrame, aKey: String, b: DataFrame, bKey: String,
-      k: Int = 64): DataFrame = {
+  def kmvIntersectEstimate(a: DataFrame, aKey: String, b: DataFrame, bKey: String): DataFrame = {
+    val k = 64
     val round = graft.functions.Rounding.halfUp _
     // NULL keys are excluded (the KMVSketchOf convention): a null md5
     // would sort NULLS FIRST into a k-min slot and poison the merge
@@ -468,12 +471,11 @@ object Scale {
     * Writes are idempotent per (family, bin): a task retry truncates
     * and rewrites the same deterministic content.
     */
-  def compactionExecute(assets: DataFrame, familyCol: String, fileId: String,
-      sizeCol: String, payloadCol: String, outDir: String,
-      targetBytes: Long, smallBytes: Long = 4096, parts: Int = 32): DataFrame = {
+  def compactionExecute(assets: DataFrame, familyCol: String, fileId: String, sizeCol: String,
+      payloadCol: String, outDir: String, targetBytes: Long, smallBytes: Long = 4096): DataFrame = {
+    val parts = 32
     require(targetBytes > 0, s"compactionExecute: targetBytes=$targetBytes must be > 0")
     require(smallBytes > 0, s"compactionExecute: smallBytes=$smallBytes must be > 0")
-    require(parts > 0, s"compactionExecute: parts=$parts must be > 0")
     val spark = assets.sparkSession
     val meta = assets.select(col(familyCol), col(fileId), col(sizeCol))
     val asg = keyedAssignments(meta, familyCol, fileId, sizeCol, targetBytes, parts)
@@ -552,13 +554,12 @@ object Scale {
     * (count of bins) before the broadcast-sized join with the debt
     * frame — nothing here outlives the plan's own aggregates.
     */
-  def compactionForecast(files: DataFrame, familyCol: String, fileId: String,
-      sizeCol: String, targetBytes: Long, smallBytes: Long = 4096,
-      parts: Int = 32): DataFrame = {
+  def compactionForecast(files: DataFrame, familyCol: String, fileId: String, sizeCol: String,
+      targetBytes: Long, smallBytes: Long = 4096): DataFrame = {
     val debt = compactionDebt(files.select(col(familyCol), col(sizeCol)),
       familyCol, sizeCol, smallBytes)
     val planned = compactionPlanKeyed(files, familyCol, fileId, sizeCol,
-        targetBytes, parts)
+        targetBytes, 32)
       .groupBy($"family").agg(count(lit(1)).as("planned_files"))
     debt.join(planned, Seq("family"))
       .select($"family", $"n_files", $"total_bytes", $"small_files",
@@ -617,9 +618,9 @@ object Scale {
     * except the one rounded mean.
     */
   def layoutSkippingAudit(df: DataFrame, keyCol: String, idCol: String,
-      files: Int = 64, parts: Int = 32): DataFrame = {
+      files: Int = 64): DataFrame = {
+    val parts = 32
     require(files > 0, s"layoutSkippingAudit: files=$files must be > 0")
-    require(parts > 0, s"layoutSkippingAudit: parts=$parts must be > 0")
     import org.apache.spark.sql.expressions.Window
     val base = df.select(col(idCol).as("id"), col(keyCol).as("k"))
 

@@ -48,8 +48,8 @@ object Similarity {
     * aggregate/zip_with chain — identical results, one codegen'd loop per
     * pair.
     */
-  def cosineTopKNative(embeddings: DataFrame, nQueries: Int = 5, k: Int = 5): DataFrame =
-    cosineTopKWith(graft.functions.VectorFunctions.cosine_sim)(embeddings, nQueries, k)
+  def cosineTopKNative(embeddings: DataFrame): DataFrame =
+    cosineTopKWith(graft.functions.VectorFunctions.cosine_sim)(embeddings, 5, 5)
 
   private def cosineTopKWith(scorer: (Column, Column) => Column)(
       embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
@@ -82,11 +82,13 @@ object Similarity {
     * broadcast for the IVF cell route (q55) and the plain window for the
     * salted `Scale.topKPerGroup` — same band-then-rank pipeline.
     */
-  def hardNegatives(embeddings: DataFrame, nAnchors: Int = 5, k: Int = 5,
-      lo: Double = 0.2, hi: Double = 0.45): DataFrame = {
+  def hardNegatives(embeddings: DataFrame): DataFrame = {
+    val k = 5
+    val lo = 0.2
+    val hi = 0.45
     import graft.functions.VectorFunctions.cosine_sim
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val anchors = corpus.filter($"vec_id" < nAnchors)
+    val anchors = corpus.filter($"vec_id" < 5)
       .select($"vec_id".as("anchor_id"), $"v".as("av"))
     val w = Window.partitionBy($"anchor_id").orderBy($"cos".desc, $"neighbor_id")
     corpus
@@ -116,8 +118,10 @@ object Similarity {
     * `hardNegatives`' scaladoc prescribes. Band filter precedes the rank
     * window, so window partitions hold band populations only.
     */
-  def contrastivePairs(embeddings: DataFrame, k: Int = 5,
-      lo: Double = 0.2, hi: Double = 0.45): DataFrame = {
+  def contrastivePairs(embeddings: DataFrame): DataFrame = {
+    val k = 5
+    val lo = 0.2
+    val hi = 0.45
     import graft.functions.VectorFunctions.cosine_sim
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
     val pairs = embeddingNearDup(embeddings, threshold = hi)
@@ -155,7 +159,9 @@ object Similarity {
     * corpus-sized window partitions); votes and the report are
     * anchor-bounded frames.
     */
-  def knnLabelEval(embeddings: DataFrame, perLabel: Int = 8, k: Int = 5): DataFrame = {
+  def knnLabelEval(embeddings: DataFrame): DataFrame = {
+    val perLabel = 8
+    val k = 5
     import graft.functions.VectorFunctions.cosine_sim
     val corpus = embeddings.select($"vec_id", $"label", asDouble($"embedding").as("v"))
     val anchors = Scale.topKPerGroup(corpus,
@@ -271,8 +277,8 @@ object Similarity {
     * ties (count desc, label asc) — bit-equal on any engine; the oracle
     * unrolls both propagation rounds over the shared Lloyd CTEs.
     */
-  def labelPropagation(embeddings: DataFrame, k: Int = 5, rounds: Int = 2,
-      kCells: Int = AutoCells): DataFrame = {
+  def labelPropagation(embeddings: DataFrame, rounds: Int = 2, kCells: Int = AutoCells): DataFrame = {
+    val k = 5
     val labels = embeddings
       .select($"vec_id", $"label".cast("long").as("y"))
       .withColumn("hidden", Scale.md5SlicePos($"vec_id", 0, 2) === 1L)
@@ -313,8 +319,8 @@ object Similarity {
     * corpus size. Cosine is symmetric bit-for-bit (same fused loop, same
     * dimension order), so the emitted score is direction-free.
     */
-  def mutualNeighborPairs(embeddings: DataFrame, k: Int = 5,
-      kCells: Int = AutoCells): DataFrame = {
+  def mutualNeighborPairs(embeddings: DataFrame, kCells: Int = AutoCells): DataFrame = {
+    val k = 5
     val knn = cellKnnGraph(embeddings, k, kCells)
     val lo = knn.filter($"id" < $"nb")
       .select($"id".as("a"), $"nb".as("b"), $"cos")
@@ -347,8 +353,8 @@ object Similarity {
     * ANSI divide-by-zero. Degree join is edge-proportional; nothing
     * corpus-sized moves.
     */
-  def marginScoredPairs(embeddings: DataFrame, k: Int = 5,
-      kCells: Int = AutoCells): DataFrame = {
+  def marginScoredPairs(embeddings: DataFrame, kCells: Int = AutoCells): DataFrame = {
+    val k = 5
     val knn = cellKnnGraph(embeddings, k, kCells)
     val deg = knn.groupBy($"id").agg(
       sum(round($"cos" * 1e6, 0).cast("long")).as("s6"),
@@ -435,12 +441,12 @@ object Similarity {
     * k-row broadcast crossJoin per vector (k = cells, the IVF argmin
     * cost), one groupBy(vec) max, one cluster-sized rollup.
     */
-  def silhouetteProfile(embeddings: DataFrame, kCells: Int = 16): DataFrame = {
+  def silhouetteProfile(embeddings: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.cosine_sim
     val spark = embeddings.sparkSession
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
       .localCheckpoint()
-    val cents = trainCentroids(embeddings, corpus, kCells, 2, "coreset")
+    val cents = trainCentroids(embeddings, corpus, 16, 2, "coreset")
     val af = corpus.withColumn("a", least(cellStructs(cents, $"v"): _*))
       .select($"vec_id", $"v", $"a.cid".as("cid"), (-$"a.negcos").as("cos"))
     val centDf = spark.createDataFrame(cents.toSeq).toDF("ccid", "cv")
@@ -482,7 +488,8 @@ object Similarity {
     * corpus pass computing both argmin assignments side by side, a
     * k²-row contingency aggregate, and 1-row rollups.
     */
-  def clusterStability(embeddings: DataFrame, kCells: Int = 16): DataFrame = {
+  def clusterStability(embeddings: DataFrame): DataFrame = {
+    val kCells = 16
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
       .localCheckpoint() // seeds + 2 trainings + the final joint pass
     // The A and B trainings are mutually independent driver-side Lloyd
@@ -558,13 +565,13 @@ object Similarity {
         lit(0.0), (acc, x) => acc + x)
     }: _*)
 
-  def projectionDistortion(embeddings: DataFrame, nSample: Int = 32): DataFrame = {
+  def projectionDistortion(embeddings: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.cosine_sim
     def proj(v: Column): Column = projectArray(v)
     val sampled = Scale.topKPerGroup(
         embeddings.select($"vec_id", asDouble($"embedding").as("v")).withColumn("g", lit(1)),
         group = $"g", rankKey = md5($"vec_id".cast("string")), tie = $"vec_id",
-        saltSource = $"vec_id", k = nSample)
+        saltSource = $"vec_id", k = 32)
       .select($"vec_id", $"v", proj($"v").as("p"))
       .localCheckpoint() // tiny fixed-size sample; self-joined below
     sampled.as("a").join(sampled.as("b"), col("a.vec_id") < col("b.vec_id"))
@@ -597,8 +604,9 @@ object Similarity {
     * Like q29/q63 an EVAL op over a bounded query sample: cost is
     * nQueries·|dims|·corpus, never corpus².
     */
-  def prefixDimRecall(embeddings: DataFrame, dims: Seq[Int] = Seq(8, 16, 32),
-      nQueries: Int = 5, k: Int = 3): DataFrame = {
+  def prefixDimRecall(embeddings: DataFrame, dims: Seq[Int] = Seq(8, 16, 32)): DataFrame = {
+    val nQueries = 5
+    val k = 3
     import graft.functions.VectorFunctions.cosine_sim
     val spark = embeddings.sparkSession
     import spark.implicits.{localSeqToDatasetHolder, newIntEncoder}
@@ -664,8 +672,9 @@ object Similarity {
     * projection preserves ranking far better; run THIS report before
     * committing to the projected route, exactly like q116.
     */
-  def projectedAnnRecall(embeddings: DataFrame, nQueries: Int = 5, k: Int = 3,
-      overfetch: Int = 3): DataFrame = {
+  def projectedAnnRecall(embeddings: DataFrame, overfetch: Int = 3): DataFrame = {
+    val nQueries = 5
+    val k = 3
     import graft.functions.VectorFunctions.cosine_sim
     val corpus = embeddings
       .select($"vec_id", asDouble($"embedding").as("v"))
@@ -777,11 +786,13 @@ object Similarity {
     * (the expensive parts are the underlying searches, each already
     * scale-shaped).
     */
-  def annRecall(embeddings: DataFrame, nQueries: Int = 5, k: Int = 3,
-      maxHamming: Int = 1): DataFrame =
+  def annRecall(embeddings: DataFrame): DataFrame = {
+    val nQueries = 5
+    val k = 3
     recallAgainstTruth(
       cosineTopK(embeddings, nQueries, k),
-      lshCosineTopK(embeddings, nQueries, k, maxHamming), k)
+      lshCosineTopK(embeddings, nQueries, k, 1), k)
+  }
 
   /** Ideal-DCG@k in integer micro-units under graded relevance
     * (truthK+1-rank_truth): the constant both engines divide by, computed
@@ -812,8 +823,10 @@ object Similarity {
     * final score is a ratio of integers. Same k·nQueries-row cost shape
     * as annRecall.
     */
-  def annNdcg(embeddings: DataFrame, nQueries: Int = 5, k: Int = 3,
-      truthK: Int = 5): DataFrame = {
+  def annNdcg(embeddings: DataFrame): DataFrame = {
+    val nQueries = 5
+    val k = 3
+    val truthK = 5
     val approx = lshCosineTopK(embeddings, nQueries, k)
     val truth = cosineTopK(embeddings, nQueries, truthK)
     val idcg = ndcgIdcgMicro(k, truthK)
@@ -867,7 +880,9 @@ object Similarity {
     * stored and served); the per-candidate hot path below it scores with
     * the native fused-loop cosine.
     */
-  def quantizedAnnRecall(embeddings: DataFrame, nQueries: Int = 5, k: Int = 3): DataFrame = {
+  def quantizedAnnRecall(embeddings: DataFrame): DataFrame = {
+    val nQueries = 5
+    val k = 3
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
     val maxabs = aggregate($"v", lit(0.0), (acc, x) => greatest(acc, abs(x)))
     val qcorpus = corpus
@@ -932,9 +947,13 @@ object Similarity {
     * trade made measurable (same report shape as `annRecall`/
     * `quantizedAnnRecall`).
     */
-  def pqAnnRecall(embeddings: DataFrame, m: Int = 8, codes: Int = 16,
-      iters: Int = 2, shortlist: Int = 50, nQueries: Int = 5, k: Int = 3): DataFrame = {
-    val mdl = pqModelFor(embeddings, m, codes, iters, nQueries)
+  def pqAnnRecall(embeddings: DataFrame): DataFrame = {
+    val m = 8
+    val codes = 16
+    val shortlist = 50
+    val nQueries = 5
+    val k = 3
+    val mdl = pqModelFor(embeddings, m, codes, 2, nQueries)
     // the full-scan ADC ranking: every stored code row meets its query's
     // broadcast dot-table
     val adcScores = mdl.codesLong
@@ -1140,10 +1159,12 @@ object Similarity {
     * Law (spec'd): with nProbe = nCentroids the cell pruning vanishes
     * and this equals `pqAnnRecall` bit-for-bit.
     */
-  def ivfPqAnnRecall(embeddings: DataFrame, nCentroids: Int = 16, nProbe: Int = 4,
-      m: Int = 8, codes: Int = 16, iters: Int = 2, shortlist: Int = 50,
-      nQueries: Int = 5, k: Int = 3): DataFrame = {
-    val mdl = pqModelFor(embeddings, m, codes, iters, nQueries)
+  def ivfPqAnnRecall(embeddings: DataFrame, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
+    val codes = 16
+    val shortlist = 50
+    val nQueries = 5
+    val k = 3
+    val mdl = pqModelFor(embeddings, 8, codes, 2, nQueries)
     val cents = md5Coreset(mdl.corpus, nCentroids)
     val assigned = mdl.corpus
       .withColumn("a", least(cellStructs(cents, $"v"): _*))
@@ -1170,24 +1191,24 @@ object Similarity {
     * serving fleet actually loads, written once at build time:
     *  - `codebooks(s, cid, cw)`    — m×codes codeword vectors;
     *  - `codes(vec_id, s, cid)`    — the encoded corpus (8 bytes/vector
-    *    of payload at the default dial; THE stored table);
+    *    of payload at this dial; THE stored table);
     *  - `centroids(cid, cv)`       — the IVF coarse quantizer;
     *  - `ivflists(vec_id, centroid_id)` — the inverted-list assignment.
     * Training rides the session model cache (q148 the carrier), so
     * persisting after a served query costs only the writes. q242
     * fingerprints the directory for its staleness report.
     */
-  def writePqIndex(embeddings: DataFrame, dir: String, m: Int = 8,
-      codes: Int = 16, iters: Int = 2, nQueries: Int = 5,
-      nCentroids: Int = 16): Unit = {
-    val mdl = pqModelFor(embeddings, m, codes, iters, nQueries)
+  def writePqIndex(embeddings: DataFrame, dir: String): Unit = {
+    val m = 8
+    val codes = 16
+    val mdl = pqModelFor(embeddings, m, codes, 2, 5)
     val spark = embeddings.sparkSession
     spark.createDataFrame(for {
       s <- 0 until m; (cid, cw) <- mdl.books(s)
     } yield (s, cid, cw.toSeq)).toDF("s", "cid", "cw")
       .write.mode("overwrite").parquet(s"$dir/codebooks")
     mdl.codesLong.write.mode("overwrite").parquet(s"$dir/codes")
-    val cents = md5Coreset(mdl.corpus, nCentroids)
+    val cents = md5Coreset(mdl.corpus, 16)
     spark.createDataFrame(cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) })
       .toDF("cid", "cv")
       .write.mode("overwrite").parquet(s"$dir/centroids")
@@ -1280,15 +1301,14 @@ object Similarity {
     }
   }
 
-  def ivfCosineTopK(embeddings: DataFrame, nCentroids: Int = 16, nProbe: Int = 2,
-      nQueries: Int = 5, k: Int = 3): DataFrame = {
+  def ivfCosineTopK(embeddings: DataFrame, nProbe: Int = 2): DataFrame = {
     import graft.functions.VectorFunctions.cosine_sim
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val cents = md5Coreset(corpus, nCentroids)
+    val cents = md5Coreset(corpus, 16)
     val assigned = corpus
       .withColumn("a", least(cellStructs(cents, $"v"): _*))
       .select($"vec_id", $"v", $"a.cid".as("centroid_id"))
-    val queries = corpus.filter($"vec_id" < nQueries)
+    val queries = corpus.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
       .select($"query_id", $"qv",
         explode(probeCellsExpr(cents, $"qv", nProbe)).as("centroid_id"))
@@ -1300,7 +1320,7 @@ object Similarity {
     val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
     scored
       .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
+      .filter($"rnk" <= 3)
       .select($"query_id", $"neighbor_id", $"cos", $"rnk".cast("int").as("rnk"))
       .orderBy($"query_id", $"rnk")
   }
@@ -1322,17 +1342,15 @@ object Similarity {
     * The oracle replicates cells + predicate, so the gate checks the
     * real served answer, not a best-case one.
     */
-  def ivfFilteredTopK(embeddings: DataFrame, labelEq: Int = 3,
-      nCentroids: Int = 16, nProbe: Int = 2, nQueries: Int = 5,
-      k: Int = 3): DataFrame = {
+  def ivfFilteredTopK(embeddings: DataFrame, nProbe: Int = 2, k: Int = 3): DataFrame = {
     import graft.functions.VectorFunctions.cosine_sim
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"), $"label")
-    val cents = md5Coreset(corpus, nCentroids)
+    val cents = md5Coreset(corpus, 16)
     val assigned = corpus
       .withColumn("a", least(cellStructs(cents, $"v"): _*))
       .select($"vec_id", $"v", $"label", $"a.cid".as("centroid_id"))
-      .filter($"label" === labelEq)
-    val queries = corpus.filter($"vec_id" < nQueries)
+      .filter($"label" === 3)
+    val queries = corpus.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
       .select($"query_id", $"qv",
         explode(probeCellsExpr(cents, $"qv", nProbe)).as("centroid_id"))
@@ -1395,8 +1413,9 @@ object Similarity {
     * candidates by attraction counts (one aggregation), then greedy
     * weighted farthest-point selection over the tiny candidate set.
     */
-  def kmeansParallelInit(embeddings: DataFrame, k: Int = 16, rounds: Int = 2,
-      oversample: Int = 2): Array[(Long, Array[Double])] = {
+  def kmeansParallelInit(embeddings: DataFrame, k: Int = 16): Array[(Long, Array[Double])] = {
+    val rounds = 2
+    val oversample = 2
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
     val l = oversample * k
     // least() needs >= 2 args; the first round runs against the single seed
@@ -1454,9 +1473,8 @@ object Similarity {
     chosen.sortBy(_._1).toArray
   }
 
-  def kmeansClusters(embeddings: DataFrame, k: Int = 16, iters: Int = 2,
-      init: String = "coreset"): DataFrame =
-    kmeansAssignments(embeddings, k, iters, init)
+  def kmeansClusters(embeddings: DataFrame, init: String = "coreset"): DataFrame =
+    kmeansAssignments(embeddings, 16, 2, init)
       .select($"cid", $"cos")
       .groupBy($"cid")
       .agg(count(lit(1)).as("n_members"), round(avg($"cos"), 6).as("cohesion"))
@@ -1587,13 +1605,14 @@ object Similarity {
     * coverage_micro), cid being the seed vec_id naming the selected
     * coreset cell.
     */
-  def facilityLocationSelect(embeddings: DataFrame, k: Int = 16,
-      iters: Int = 2, nSel: Int = 5): DataFrame = {
+  def facilityLocationSelect(embeddings: DataFrame): DataFrame = {
+    val k = 16
+    val nSel = 5
     import graft.functions.VectorFunctions.cosine_sim
     val spark0 = embeddings.sparkSession
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
       .localCheckpoint() // scanned by training rounds + the weighting pass
-    val cents = trainCentroids(embeddings, corpus, k, iters, "coreset")
+    val cents = trainCentroids(embeddings, corpus, k, 2, "coreset")
     val cellW: Map[Long, Long] = corpus
       .withColumn("a", least(cellStructs(cents, $"v"): _*))
       .groupBy($"a.cid".as("cid")).agg(count(lit(1)).as("n"))
@@ -1650,9 +1669,10 @@ object Similarity {
     * plans hash/SMJ on the cluster key), native codegen'd `cosine_sim`
     * on the pair, distinct-droppee + per-cluster report aggregation.
     */
-  def semanticDedup(embeddings: DataFrame, k: Int = 16, iters: Int = 2,
-      tau: Double = 0.45): DataFrame = {
-    val a = kmeansAssignments(embeddings, k, iters, "coreset")
+  def semanticDedup(embeddings: DataFrame): DataFrame = {
+    val k = 16
+    val tau = 0.45
+    val a = kmeansAssignments(embeddings, k, 2, "coreset")
       .select($"vec_id", $"v", $"cid")
       .localCheckpoint() // self-joined + aggregated below
     a.groupBy($"cid").agg(count(lit(1)).as("n_members"))
@@ -1762,11 +1782,11 @@ object Similarity {
     * corpus the planted union is unnecessary and this IS the production
     * query, shuffle_hash verify pins and all.
     */
-  def productionNearDup(embeddings: DataFrame, nPlanted: Long = 100L,
-      threshold: Double = 0.9, tables: Int = 24, bits: Int = 12): DataFrame = {
+  def productionNearDup(embeddings: DataFrame): DataFrame = {
+    val nPlanted = 100L
     val base = embeddings.select($"vec_id", asDouble($"embedding").as("embedding"))
     embeddingNearDup(base.unionByName(plantedNearDupTwins(embeddings, nPlanted)),
-      threshold, tables, bits)
+      0.9, 24, 12)
   }
 
   /** The planted rows of `productionNearDup`, public so specs can derive
@@ -1929,29 +1949,24 @@ object Similarity {
     * OR-amplified multi-table recall math as `embeddingNearDup`.
     */
   def incrementalEmbeddingNearDup(embeddings: DataFrame, newIdCut: Long = 200L,
-      threshold: Double = 0.45, tables: Int = NeardupTables,
-      bits: Int = NeardupBits): DataFrame =
-    incrementalEmbeddingNearDupFromIndex(embeddings,
-      hyperplaneIndex(embeddings, tables, bits), newIdCut, threshold, tables, bits)
+      threshold: Double = 0.45): DataFrame =
+    incrementalEmbeddingNearDupFromIndex(embeddings, hyperplaneIndex(embeddings), newIdCut, threshold)
 
   /** q95's ingest shape probing an EXTERNAL bucket index — the production
     * form where the corpus index is the PERSISTED `hyperplaneBucketRows`
     * parquet table (written once at index-build time, re-read by every
     * ingest job) rather than the session cache. `corpusIndex` must carry
     * `hyperplaneBucketRows`' (vec_id, t, bk) schema built with the SAME
-    * (tables, bits) dial — bucketing is deterministic per row, so the
+    * (NeardupTables, NeardupBits) dial — bucketing is deterministic per row, so the
     * persisted table and a fresh in-session build are bit-identical and
     * this path equals the session-index path exactly (spec-asserted via
     * a parquet write → read-back round-trip, the vector twin of q128's
     * sketch-store round-trip).
     */
   def incrementalEmbeddingNearDupFromIndex(embeddings: DataFrame,
-      corpusIndex: DataFrame, newIdCut: Long = 200L,
-      threshold: Double = 0.45, tables: Int = NeardupTables,
-      bits: Int = NeardupBits): DataFrame = {
+      corpusIndex: DataFrame, newIdCut: Long = 200L, threshold: Double = 0.45): DataFrame = {
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val newBuckets = hyperplaneBucketRows(
-        embeddings.filter($"vec_id" < newIdCut), tables, bits)
+    val newBuckets = hyperplaneBucketRows(embeddings.filter($"vec_id" < newIdCut))
       .withColumnRenamed("vec_id", "new_id")
     val oldBuckets = corpusIndex
       .filter($"vec_id" >= newIdCut)
@@ -2076,11 +2091,11 @@ object Similarity {
       .orderBy($"label")
   }
 
-  def labelCohesion(embeddings: DataFrame, perLabel: Int = 16): DataFrame = {
+  def labelCohesion(embeddings: DataFrame): DataFrame = {
     val sampled = Scale.topKPerGroup(
         embeddings.select($"vec_id", $"label", asDouble($"embedding").as("v")),
         group = $"label", rankKey = md5($"vec_id".cast("string")), tie = $"vec_id",
-        saltSource = $"vec_id", k = perLabel)
+        saltSource = $"vec_id", k = 16)
       .localCheckpoint() // tiny fixed-size sample; self-joined below
     sampled.as("a")
       .join(sampled.as("b"), col("a.vec_id") < col("b.vec_id"))
@@ -2231,10 +2246,10 @@ object Similarity {
     * state is d^2 longs. Both passes are corpus-linear with no
     * corpus-proportional shuffle — the scan dominates at 100 TB.
     */
-  def pc1Power(embeddings: DataFrame, iters: Int = 8): DataFrame = {
+  def pc1Power(embeddings: DataFrame): DataFrame = {
     def halfUp(x: Double, s: Int): Double = graft.functions.Rounding.halfUp(x, s)
     val spark = embeddings.sparkSession
-    val model = abttModelFor(embeddings, iters)
+    val model = abttModelFor(embeddings, 8)
     val s2 = abttProjections(embeddings, model)
       .agg(sum($"tm" * $"tm").as("s2")).collect()(0).getLong(0)
     val ratio = halfUp(s2.toDouble * 1e12 / model.vn2 / model.trace, 6)
@@ -2252,8 +2267,9 @@ object Similarity {
     * report itself is one corpus pass (model broadcast) ending in a
     * TakeOrderedAndProject on the exact integer key (|tm|, vec_id).
     */
-  def abttOutliers(embeddings: DataFrame, iters: Int = 8, topN: Int = 10): DataFrame = {
-    val model = abttModelFor(embeddings, iters)
+  def abttOutliers(embeddings: DataFrame): DataFrame = {
+    val topN = 10
+    val model = abttModelFor(embeddings, 8)
     val proj = abttProjections(embeddings, model)
       .select($"vec_id", $"tm", $"cd2",
         round($"tm".cast("double") / lit(math.sqrt(model.vn2.toDouble)), 6).as("proj"),
@@ -2275,9 +2291,9 @@ object Similarity {
     * a fit that rides the session model cache. q242 fingerprints the
     * directory for its staleness report.
     */
-  def writeSpectralModel(embeddings: DataFrame, dir: String, iters: Int = 8): Unit = {
+  def writeSpectralModel(embeddings: DataFrame, dir: String): Unit = {
     val spark = embeddings.sparkSession
-    val m = abttModelFor(embeddings, iters)
+    val m = abttModelFor(embeddings, 8)
     val rows =
       m.mu.toSeq.zipWithIndex.map { case (v, i) => ("mu", i.toLong, v) } ++
       m.vs.toSeq.zipWithIndex.map { case (v, i) => ("vs", i.toLong, v) } ++
@@ -2303,7 +2319,8 @@ object Similarity {
     * single double division inside the final rounded cosine. Everything
     * after the first agg is a dim-bounded frame.
     */
-  def embeddingDrift(embeddings: DataFrame, topDims: Int = 8): DataFrame = {
+  def embeddingDrift(embeddings: DataFrame): DataFrame = {
+    val topDims = 8
     val halfF = embeddings.agg(expr("(max(vec_id) + 1) div 2").as("half"))
     val cells = embeddings.crossJoin(broadcast(halfF))
       .select(when($"vec_id" < $"half", 0L).otherwise(1L).as("grp"),
@@ -2355,8 +2372,8 @@ object Similarity {
     * rows) — two joins back onto the edge frame and bounded
     * aggregates; never all-pairs.
     */
-  def lofOutliers(embeddings: DataFrame, k: Int = 5,
-      kCells: Int = AutoCells, topN: Int = 50): DataFrame = {
+  def lofOutliers(embeddings: DataFrame, kCells: Int = AutoCells): DataFrame = {
+    val k = 5
     val ed = cellKnnGraph(embeddings, k, kCells)
       .select($"id", $"nb",
         round((lit(1.0) - $"cos") * 1e6, 0).cast("long").as("d6"))
@@ -2377,7 +2394,7 @@ object Similarity {
       .select($"id".as("vec_id"), $"cnt".as("n_neighbors"),
         round($"kd6" / 1e6, 6).as("k_dist"), $"lofr".as("lof"))
       .orderBy($"lof".desc, $"vec_id")
-      .limit(topN)
+      .limit(50)
   }
 
   // ---- LSH dial planner (q289) ---------------------------------------------
@@ -2403,9 +2420,7 @@ object Similarity {
     * lesson: never a CartesianProduct in a registered plan). One
     * corpus aggregate (the count) is the only data-dependent input.
     */
-  def lshDialPlanner(embeddings: DataFrame, tau: Double = 0.9,
-      s0: Double = 0.5, recallTarget: Double = 0.95,
-      maxTables: Int = 32, maxBits: Int = 16): DataFrame = {
+  def lshDialPlanner(embeddings: DataFrame, maxTables: Int = 32, maxBits: Int = 16): DataFrame = {
     // the argmin key packs (a6, cost, t) into one long with slot widths
     // sized FROM the grid bounds below; 1e6·(t·b+1)·(t+1) must stay
     // under Long.MaxValue
@@ -2418,14 +2433,14 @@ object Similarity {
     val grid = spark.range(1, maxTables + 1).toDF("t")
       .crossJoin(broadcast(spark.range(1, maxBits + 1).toDF("b")))
       .crossJoin(broadcast(n))
-    val p = lit(1.0) - acos(lit(tau)) / lit(math.Pi)
-    val p0 = lit(1.0) - acos(lit(s0)) / lit(math.Pi)
+    val p = lit(1.0) - acos(lit(0.9)) / lit(math.Pi)
+    val p0 = lit(1.0) - acos(lit(0.5)) / lit(math.Pi)
     def q6(c: Column): Column = round(c * 1e6, 0).cast("long")
     val t2 = grid
       .withColumn("r6", q6(lit(1.0) - pow(lit(1.0) - pow(p, $"b"), $"t")))
       .withColumn("a6", q6(lit(1.0) - pow(lit(1.0) - pow(p0, $"b"), $"t")))
       .withColumn("cost", $"t" * $"b")
-      .withColumn("meets", $"r6" >= math.round(recallTarget * 1e6))
+      .withColumn("meets", $"r6" >= math.round(0.95 * 1e6))
       // exact lexicographic (a6, cost, t) for ANY grid inside the
       // require above: cost spans [1, t·b], t spans [1, maxTables]
       .withColumn("key",

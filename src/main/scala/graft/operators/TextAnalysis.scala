@@ -79,7 +79,8 @@ object TextAnalysis {
     * cross-engine: an interpolated cut either equals a data value exactly
     * or lies strictly between two distinct rounded-to-4 values.
     */
-  def qualityFilter(documents: DataFrame, q: Double = 0.1): DataFrame = {
+  def qualityFilter(documents: DataFrame): DataFrame = {
+    val q = 0.1
     val scored = documents.select($"doc_id", $"lang", qualityCol($"text").as("quality"))
     val cuts = Scale.exactQuantileByGroup(
       scored.select($"lang", $"quality"), "lang", "quality", q)
@@ -254,8 +255,10 @@ object TextAnalysis {
     * per-token state anywhere). Probing joins the tiny broadcast counter
     * table. CM guarantee (estimate >= true count) asserted in spec.
     */
-  def countMinTopTokens(documents: DataFrame, d: Int = 3, w: Int = 1024,
-      topk: Int = 10): DataFrame = {
+  def countMinTopTokens(documents: DataFrame): DataFrame = {
+    val d = 3
+    val w = 1024
+    val topk = 10
     val cells = documents
       .select(explode(split($"text", " ")).as("token"))
       .select(posexplode(array((0 until d).map(j => Scale.md5SlicePos($"token", j, w)): _*)))
@@ -287,8 +290,7 @@ object TextAnalysis {
     * TakeOrderedAndProject on the ROUNDED score (micro-unit ln — the one
     * transcendental, quantized far above libm jitter).
     */
-  def collocations(documents: DataFrame, minCount: Long = 20,
-      topk: Int = 20): DataFrame = {
+  def collocations(documents: DataFrame, minCount: Long = 20): DataFrame = {
     val toks = documents.select(split($"text", " ").as("ts"))
     val bigrams = toks
       .filter(size($"ts") >= 2)
@@ -312,7 +314,7 @@ object TextAnalysis {
         (round(log($"n_pos".cast("double") * $"cab" /
           ($"c1".cast("double") * $"c2")) * 1e6) / 1e6).as("pmi"))
       .orderBy($"pmi".desc, $"w1", $"w2")
-      .limit(topk)
+      .limit(20)
   }
 
   /** BM25 retrieval scoring: rank documents against a fixed query-term
@@ -375,10 +377,12 @@ object TextAnalysis {
     * broadcast-semi-joins the token explode, so the re-score pass stays
     * expanded-query-proportional. Same rounding discipline as q79.
     */
-  def prfExpandedRetrieval(documents: DataFrame,
-      query: Seq[String] = Seq("table", "data", "row"), fbDocs: Int = 3,
-      fbTerms: Int = 2, k1: Double = 1.2, b: Double = 0.75,
-      topk: Int = 10): DataFrame = {
+  def prfExpandedRetrieval(documents: DataFrame): DataFrame = {
+    val query = Seq("table", "data", "row")
+    val fbDocs = 3
+    val fbTerms = 2
+    val k1 = 1.2
+    val b = 0.75
     val spark = documents.sparkSession
     import spark.implicits.{localSeqToDatasetHolder, newStringEncoder}
     val seedTop = bm25TopDocs(documents, query, k1, b, fbDocs)
@@ -420,20 +424,22 @@ object TextAnalysis {
       .groupBy($"doc_id")
       .agg(round(sum($"s"), 4).as("bm25x"))
       .orderBy($"bm25x".desc, $"doc_id")
-      .limit(topk)
+      .limit(10)
   }
 
   /** Document-length histogram: fixed-width bins over `n_chars` with doc
     * and token mass per bin — integer arithmetic only, one
     * map-side-combined aggregation over a scan projection.
     */
-  def lengthHistogram(documents: DataFrame, width: Int = 50): DataFrame =
+  def lengthHistogram(documents: DataFrame): DataFrame = {
+    val width = 50
     documents
       .select((floor($"n_chars" / width) * width).cast("bigint").as("bin"),
         size(split($"text", " ")).cast("bigint").as("nw"))
       .groupBy($"bin")
       .agg(count(lit(1)).as("n_docs"), sum($"nw").as("total_words"))
       .orderBy($"bin")
+  }
 
   /** Distributed BPE merge training (Sennrich et al. 2016), BATCHED: learn
     * the first `nMerges` byte-pair merges from the corpus — the TOKENIZER-
@@ -642,7 +648,8 @@ object TextAnalysis {
     * aggregate is map-side combined over lang. All ratios are one IEEE
     * division of exact integer sums, rounded once.
     */
-  def bpeFertility(documents: DataFrame, nMerges: Int = 5): DataFrame = {
+  def bpeFertility(documents: DataFrame): DataFrame = {
+    val nMerges = 5
     val merges = bpeMerges(documents, nMerges).orderBy($"rank")
       .select($"pair", $"merged").collect()
       .map(r => (r.getString(0), r.getString(1)))
@@ -696,7 +703,8 @@ object TextAnalysis {
     * the inherent cost of LM scoring (the hashed-feature alternative is
     * q98's DSIR). V is a 1-row broadcast off its own vocabulary pass.
     */
-  def bigramSurprisal(documents: DataFrame, topk: Int = 30): DataFrame = {
+  def bigramSurprisal(documents: DataFrame): DataFrame = {
+    val topk = 30
     val toks = documents.select($"doc_id", split($"text", " ").as("ts"))
     val bd = toks
       .filter(size($"ts") >= 2)
@@ -744,8 +752,9 @@ object TextAnalysis {
     * scalar is the node count; `minCount` is the vocabulary dial that
     * bounds the graph at web scale. Final top-k is TakeOrderedAndProject.
     */
-  def textrankKeywords(documents: DataFrame, minCount: Long = 5L,
-      iters: Int = 4, topk: Int = 20): DataFrame = {
+  def textrankKeywords(documents: DataFrame): DataFrame = {
+    val minCount = 5L
+    val iters = 4
     val toks = documents.select(split($"text", " ").as("ts"))
     val cooc = toks.filter(size($"ts") >= 2)
       .select(explode(expr(
@@ -787,7 +796,7 @@ object TextAnalysis {
     ranks
       .select($"node".as("token"), $"wdeg", $"rank_m".as("rank_micro"))
       .orderBy($"rank_micro".desc, $"token")
-      .limit(topk)
+      .limit(20)
   }
 
   /** Exact positional phrase search (q196): which documents contain the
@@ -972,7 +981,8 @@ object TextAnalysis {
     * end, rounded to 4. The rank window runs over the n-row TakeOrdered
     * head, never the vocabulary.
     */
-  def zipfFit(documents: DataFrame, n: Int = 100): DataFrame = {
+  def zipfFit(documents: DataFrame): DataFrame = {
+    val n = 100
     import org.apache.spark.sql.expressions.Window
     val ranked = tokenTopK(documents, n)
       .withColumn("rank", row_number().over(Window.orderBy($"n".desc, $"token")).cast("long"))
@@ -1004,7 +1014,8 @@ object TextAnalysis {
     * deterministic monotone bucketing). The only window runs over the
     * `buckets`-row aggregate frame — driver-scale by construction.
     */
-  def vocabGrowth(documents: DataFrame, buckets: Int = 10): DataFrame = {
+  def vocabGrowth(documents: DataFrame): DataFrame = {
+    val buckets = 10
     import org.apache.spark.sql.expressions.Window
     val n = documents.agg((max($"doc_id") + 1).as("n"))
     val toks = documents.select($"doc_id", explode(split($"text", " ")).as("token"))
@@ -1104,7 +1115,8 @@ object TextAnalysis {
     * bigram groups; per-group −log₂p micro-quantized before the
     * per-lang sum. Everything after the explode is vocabulary-bounded.
     */
-  def kneserNeyEval(documents: DataFrame, discount: Double = 0.75): DataFrame = {
+  def kneserNeyEval(documents: DataFrame): DataFrame = {
+    val discount = 0.75
     val coin = Scale.md5SlicePos($"doc_id", 0, 2)
     val toks = documents
       .select($"doc_id", $"lang", (coin === 0L).as("is_train"),
@@ -1205,8 +1217,8 @@ object TextAnalysis {
     * one explode → (token, doc) counts (corpus-proportional, map-side
     * combined), then a vocabulary-bounded frame.
     */
-  def tokenBurstiness(documents: DataFrame, minDf: Long = 50L,
-      topN: Int = 25): DataFrame = {
+  def tokenBurstiness(documents: DataFrame, minDf: Long = 50L): DataFrame = {
+    val topN = 25
     val n = documents.agg(count(lit(1)).as("n"))
     val perDoc = documents
       .select($"doc_id", explode(split($"text", " ")).as("token"))

@@ -20,7 +20,8 @@ object Typed {
     * reproducible by the DuckDB oracle (see Aggregators.KMVSketchOf), with
     * the exact distinct count alongside for accuracy inspection.
     */
-  def kmvDistinct(spark: SparkSession, lineitem: DataFrame, k: Int = 64): DataFrame = {
+  def kmvDistinct(spark: SparkSession, lineitem: DataFrame): DataFrame = {
+    val k = 64
     import org.apache.spark.sql.Encoders
     implicit val pairEnc: org.apache.spark.sql.Encoder[(String, String)] =
       Encoders.tuple(Encoders.STRING, Encoders.STRING)

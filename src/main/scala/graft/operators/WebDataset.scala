@@ -179,7 +179,7 @@ object WebDataset {
 
   // JVM-scoped, not a SessionArtifacts kind: the shard files outlive a session
   private val shardDirs =
-    new java.util.concurrent.ConcurrentHashMap[(LogicalPlan, Int), String]()
+    new java.util.concurrent.ConcurrentHashMap[LogicalPlan, String]()
 
   /** Build (once per corpus plan per JVM) and serve the shard directory:
     * real `.tar` files named `shard-<id>.tar`, each holding the image
@@ -189,15 +189,14 @@ object WebDataset {
     * files stream out per partition (the compactionExecute write shape;
     * on a cluster the directory must be shared storage).
     */
-  def shardDir(documents: DataFrame, shardAssets: Int = ShardAssets): String = {
-    require(shardAssets > 0, s"shardDir: shardAssets=$shardAssets must be > 0")
+  def shardDir(documents: DataFrame): String = {
     val spark = documents.sparkSession
     val ids = documents.select($"doc_id")
     val plan = ids.queryExecution.analyzed.canonicalized
-    shardDirs.computeIfAbsent((plan, shardAssets), _ => {
+    shardDirs.computeIfAbsent(plan, _ => {
       import spark.implicits.{newLongEncoder, newProductEncoder}
       val dir = graft.sources.Scratch.dir("graft_wds")
-      val span = 3L * shardAssets
+      val span = 3L * ShardAssets
       ids.filter($"doc_id" % 3 === 0) // the q35 image rotation
         // integer div, not double-divide-then-cast: engine-exact at any id
         .select(expr(s"doc_id div ${span}L").as("shard"), $"doc_id")
@@ -236,11 +235,10 @@ object WebDataset {
     * (shards are the unit of sequential I/O); the walk runs batched per
     * partition like every codec here.
     */
-  def tarMembers(documents: DataFrame,
-      shardAssets: Int = ShardAssets): DataFrame = {
+  def tarMembers(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits.newProductEncoder
-    val dir = shardDir(documents, shardAssets)
+    val dir = shardDir(documents)
     spark.read.format("binaryFile").load(dir)
       .select(
         regexp_extract(element_at(split($"path", "/"), -1),
@@ -263,9 +261,8 @@ object WebDataset {
     * closed forms (BMP size arithmetic, sidecar digit lengths, ustar
     * block rounding) without touching a byte.
     */
-  def tarInventory(documents: DataFrame,
-      shardAssets: Int = ShardAssets): DataFrame =
-    tarMembers(documents, shardAssets)
+  def tarInventory(documents: DataFrame): DataFrame = {
+    tarMembers(documents)
       .select($"shard_id", $"archive_bytes", $"member_name",
         length($"member_bytes").cast("long").as("mb"))
       .groupBy($"shard_id")
@@ -275,6 +272,7 @@ object WebDataset {
         sum($"mb").as("member_bytes"),
         max($"archive_bytes").as("archive_bytes"))
       .orderBy($"shard_id")
+  }
 
   /** q318 — decode THROUGH the container: every `.bmp` member's pixel
     * features (the q244 moment sums) computed from bytes that traveled
@@ -282,11 +280,10 @@ object WebDataset {
     * per shard. A single misplaced offset anywhere in the container
     * path breaks the position-weighted sums.
     */
-  def tarDecodeFeatures(documents: DataFrame,
-      shardAssets: Int = ShardAssets): DataFrame = {
+  def tarDecodeFeatures(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits.newProductEncoder
-    tarMembers(documents, shardAssets)
+    tarMembers(documents)
       .filter($"member_name".endsWith(".bmp"))
       .select($"shard_id", $"member_bytes")
       .as[(Long, Array[Byte])]
@@ -313,11 +310,10 @@ object WebDataset {
     * swapped sidecar flips `n_dim_match`, a blocking bug flips
     * `padding_bytes`.
     */
-  def tarIntegrity(documents: DataFrame,
-      shardAssets: Int = ShardAssets): DataFrame = {
+  def tarIntegrity(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits.newProductEncoder
-    val members = tarMembers(documents, shardAssets)
+    val members = tarMembers(documents)
     val bmp = members.filter($"member_name".endsWith(".bmp"))
       .select($"shard_id", $"archive_bytes",
         regexp_extract($"member_name", "^(\\d+)\\.bmp$", 1).cast("long").as("id"),

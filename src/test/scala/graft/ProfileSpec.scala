@@ -55,4 +55,16 @@ class ProfileSpec extends GraftSuite {
     assert(added.forall(_.getClass.getName == "org.apache.spark.sql.util.ExecutionListenerBus"),
       added)
   }
+
+  test("plan files are normalized: the same query profiles to the same bytes after another ran") {
+    val Seq(first, second) = Seq("a", "b").map(d => Files.createTempDirectory(s"graft_profile_$d"))
+    Profile.profile(spark, sf, Seq("q01_sum_by_group"), first)
+    Profile.profile(spark, sf, Seq("q02_total_by_nation"), Files.createTempDirectory("graft_profile"))
+    Profile.profile(spark, sf, Seq("q01_sum_by_group"), second)
+    val Seq(a, b) = Seq(first, second).map(d => Files.readString(d.resolve("q01.txt")))
+    assert(a === b)
+    assert(Profile.normalize("[plan_id=41] x#7L, y#3, x#7L /w/d/t /w/dx [plan_id=9] " +
+      "RDD[2484] [codegen id : 8] /tmp/graft_scratch1890329210866709267", "/w/d") ===
+      "[plan_id=0] x#0L, y#1, x#0L ./t /w/dx [plan_id=1] RDD[0] [codegen id : 0] /tmp/graft_scratch0")
+  }
 }

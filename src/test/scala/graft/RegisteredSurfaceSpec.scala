@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (a query, a main, or another operator). A member that only a spec
   * calls is deleted with its spec, or listed in `testOnly` with its
   * reason; an allowlisted name must stay named by some other spec, so
-  * deleting its last spec flags it too.
+  * deleting its last spec flags it too. Likewise an operator parameter
+  * with a default exists only where some caller in `src/main` or
+  * `src/test` passes it; a value no caller varies is a constant in the
+  * body.
   */
 class RegisteredSurfaceSpec extends AnyFunSuite {
 
@@ -26,7 +29,9 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
     "requireFresh" -> "the staleness check GovernanceSpec and MatchingSpec assert directly")
 
   // comments and string/char literals: a scaladoc mention keeps nothing
-  // alive, and braces inside literals do not count toward nesting
+  // alive, and braces or commas inside literals do not count toward
+  // nesting or arguments (a literal leaves ` 0` behind, so it still
+  // counts as an argument)
   private val Literal =
     """//[^\n]*|"{3}[\s\S]*?"{3,}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|/\*[\s\S]*?\*/""".r
   private val Decl = ("""\b((?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+|""" +
@@ -35,15 +40,17 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
   private val Ident = """[A-Za-z_]\w*""".r
 
   private def code(p: Path): String =
-    Literal.replaceAllIn(Files.readString(p), m => " " + "\n" * m.matched.count(_ == '\n'))
+    Literal.replaceAllIn(Files.readString(p), m =>
+      (if (m.matched.startsWith("/")) " " else " 0") + "\n" * m.matched.count(_ == '\n'))
+
+  private def sources(dir: String): List[(Path, String)] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
+    Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).map(p => p -> code(p)).toList
+  }
 
   test("drift guard: every operator API is named somewhere else in src/main") {
-    def sources(dir: String): List[(Path, String)] = {
-      val root = Paths.get(dir)
-      assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
-      Files.walk(root).iterator.asScala
-        .filter(_.toString.endsWith(".scala")).map(p => p -> code(p)).toList
-    }
     val files = sources("src/main/scala")
     val all = files.map(_._2).mkString("\n")
     val named = Ident.findAllIn(all).toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
@@ -83,5 +90,101 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
     val unused = testOnly.keySet -- specNamed
     if (unused.nonEmpty) fail("allowlisted but named by no spec — delete them from src/main " +
       s"and from testOnly: $unused")
+  }
+
+  /** Index one past the bracket that closes `text(open)`. */
+  private def close(text: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    do {
+      val c = text(i)
+      if ("([{".contains(c)) depth += 1 else if (")]}".contains(c)) depth -= 1
+      i += 1
+    } while (depth > 0)
+    i
+  }
+
+  /** The non-blank top-level comma-separated pieces of `text(from until until)`. */
+  private def pieces(text: String, from: Int, until: Int): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var depth = 0
+    var start = from
+    for (i <- from until until) text(i) match {
+      case '(' | '[' | '{' => depth += 1
+      case ')' | ']' | '}' => depth -= 1
+      case ',' if depth == 0 => out += text.substring(start, i); start = i + 1
+      case _ =>
+    }
+    out += text.substring(start, until)
+    out.result().filter(_.trim.nonEmpty)
+  }
+
+  /** The argument lists that follow `at` (type arguments skipped). */
+  private def argLists(text: String, at: Int): List[Seq[String]] = {
+    var i = at
+    def skipBlanks(): Unit = while (i < text.length && " \t".contains(text(i))) i += 1
+    skipBlanks()
+    if (i < text.length && text(i) == '[') i = close(text, i)
+    val lists = List.newBuilder[Seq[String]]
+    while (i < text.length && text(i) == '(') {
+      val end = close(text, i)
+      lists += pieces(text, i + 1, end - 1)
+      i = end
+      skipBlanks()
+    }
+    lists.result()
+  }
+
+  private val Def = """\bdef\s+([A-Za-z_]\w*)""".r
+  // a name, with its `def` keyword when it is the name being declared
+  private val Name = """(\bdef\s+)?(?<![\w$])([A-Za-z_]\w*)""".r
+  private val Param = """(?s)\s*(?:implicit\s+)?([A-Za-z_]\w*)\s*:(.*)""".r
+  private val Label = """(?s)\s*([A-Za-z_]\w*)\s*=(?![=>]).*""".r
+
+  /** Whether a parameter's text after its `:` carries a default (`=` at the top level). */
+  private def hasDefault(afterColon: String): Boolean = {
+    var depth = 0
+    afterColon.indices.exists { i =>
+      afterColon(i) match {
+        case '(' | '[' | '{' => depth += 1; false
+        case ')' | ']' | '}' => depth -= 1; false
+        case '=' => depth == 0 && !"=!<>".contains(afterColon.lift(i - 1).getOrElse(' ')) &&
+            !"=>".contains(afterColon.lift(i + 1).getOrElse(' '))
+        case _ => false
+      }
+    }
+  }
+
+  test("drift guard: every defaulted operator parameter is passed by some caller") {
+    // (member, list, index, param, where) of every defaulted parameter of a
+    // member of a top-level definition in graft.operators
+    val defaulted = sources("src/main/scala/graft/operators").flatMap { case (p, text) =>
+      val depth = text.scanLeft(0)((d, c) => if (c == '{') d + 1 else if (c == '}') d - 1 else d)
+      Def.findAllMatchIn(text).filter(m => depth(m.start) == 1).flatMap { m =>
+        val line = text.substring(0, m.start).count(_ == '\n') + 1
+        argLists(text, m.end).zipWithIndex.flatMap { case (params, li) =>
+          params.zipWithIndex.collect { case (Param(name, rest), pi) if hasDefault(rest) =>
+            (m.group(1), li, pi, name, s"$p:$line")
+          }
+        }
+      }
+    }
+    assert(defaulted.nonEmpty)
+    val members = defaulted.map(_._1).toSet
+    // every call of a member's name, as its argument lists: same-named
+    // members share their calls, which can only keep a parameter
+    val calls = (sources("src/main/scala") ++ sources("src/test/scala")).flatMap { case (_, text) =>
+      Name.findAllMatchIn(text).filter(m => m.group(1) == null && members(m.group(2)))
+        .map(m => m.group(2) -> argLists(text, m.end))
+    }.groupMap(_._1)(_._2)
+    val unset = defaulted.filterNot { case (member, li, pi, name, _) =>
+      calls.getOrElse(member, Nil).exists(_.lift(li).exists { args =>
+        args.takeWhile(!Label.matches(_)).length > pi ||
+          args.exists { case Label(label) => label == name; case _ => false }
+      })
+    }
+    if (unset.nonEmpty) fail("defaulted operator parameters no caller in src/main or src/test " +
+      "passes — make each value a constant in the body:\n" +
+      unset.map { case (member, _, _, name, where) => s"$where: $member($name)" }.mkString("\n"))
   }
 }
