@@ -15,9 +15,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Dev profiler (not part of the driver contract). For each query in
-  * SPARK_GRAFT_PROFILE_QUERIES (comma-separated full names; default:
-  * every registered query in qNN order) on SPARK_GRAFT_SF_DIR at
+/** Dev profiler (not part of the driver contract). For each query, in qNN
+  * order, of SPARK_GRAFT_QUERIES (comma-separated full names; default:
+  * every registered query) on SPARK_GRAFT_SF_DIR at
   * local[SPARK_GRAFT_CPUS], after Bench's warm-up, it prints one JSON line:
   *  - `query`, `status` (`ok` or the failure message), `wall_s` — the
   *    build AND the noop write, as Bench times them (the dedup pipelines
@@ -34,7 +34,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    identity hashes, scratch-dir suffixes) are renumbered in order of
   *    first appearance, and the working directory prefix reads `.`.
   *
-  * Run: `SPARK_GRAFT_PROFILE_QUERIES=q27_dedup_minhash_lsh sbt "runMain graft.Profile"`.
+  * Run: `SPARK_GRAFT_QUERIES=q27_dedup_minhash_lsh sbt "runMain graft.Profile"`.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -44,10 +44,7 @@ object Profile {
       .builder(appName = "graft-profile", master = s"local[$cpus]", shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val names = sys.env.get("SPARK_GRAFT_PROFILE_QUERIES")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(SparkEntry.queries.keys.toSeq
-        .sortBy(name => name.drop(1).takeWhile(_.isDigit).toInt))
+    val names = SparkEntry.selectedQueries()
     // Bench's warm-up: JVM, file-index and codegen paths outside the timed region
     spark.range(1000000L).selectExpr("sum(id)").collect()
     SparkEntry.queries("q02_total_by_nation")(spark, sfDir)

@@ -65,12 +65,9 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset (the driver never sets it): comma-separated query
-    // names to dump/compare — keeps local delta gates at minutes, not the
-    // ~50-minute full-oracle DuckDB grind at sf0.1.
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_VERIFY_QUERIES").map(_.split(",").map(_.trim).toSet)
-    def keep(name: String): Boolean = only.forall(_.contains(name))
+    // a SPARK_GRAFT_QUERIES subset keeps local delta gates at minutes,
+    // not the ~50-minute full-oracle DuckDB grind at sf0.1
+    val keep = SparkEntry.selectedQueries().toSet
     dumpQueries(spark, sfDir, outDir, keep)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

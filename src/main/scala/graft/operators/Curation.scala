@@ -261,11 +261,7 @@ object Curation {
       .select($"lang",
         least(lit(1.0),
           lit(targetFraction) * $"total_tokens" * $"wgt" / $"tokens").as("p_keep"))
-    // exact 13-hex-digit md5 fraction in [0, 1): every term is a power of
-    // two, so the double is identical on any engine (see Aggregators
-    // .hexFraction)
-    val u = conv(substring(md5($"doc_id".cast("string")), 1, 13), 16, 10)
-      .cast("double") / math.pow(16.0, 13)
+    val u = Scale.hexFraction(md5($"doc_id".cast("string")))
     documents
       .select($"doc_id", $"lang",
         size(split($"text", " ")).cast("long").as("tok"), u.as("u"))
@@ -549,9 +545,8 @@ object Curation {
     val replicas = 16
     val perDoc = documents.select($"doc_id", $"lang",
       round(TextAnalysis.qualityCol($"text") * 1e4, 0).cast("long").as("qm"))
-    val u = conv(substring(
-        md5(concat($"doc_id".cast("string"), lit(":"), $"b".cast("string"))),
-        1, 13), 16, 10).cast("double") / math.pow(16.0, 13)
+    val u = Scale.hexFraction(md5(concat($"doc_id".cast("string"), lit(":"),
+      $"b".cast("string"))))
     val w = when($"u" < 0.36787944117144233, 0L)
       .when($"u" < 0.7357588823428847, 1L)
       .when($"u" < 0.9196986029286058, 2L)
@@ -764,38 +759,17 @@ object Curation {
     * semantics: the first document that would overflow the budget (and
     * everything after it) is out.
     *
-    * The running sum is the DISTRIBUTED two-phase prefix sum (the q58
-    * pattern applied to a computed order): `repartitionByRange` on the
-    * selection order, per-partition window cumsum + per-partition token
-    * subtotals, and each partition's base offset from one tiny window
-    * over the ≤`parts` subtotal rows (broadcast back). No global window,
-    * no driver fold — the quality order exists only as range-partition
-    * boundaries, exactly how a 1000-executor sort would place it. The
-    * checkpoint pins partition identity so the subtotal pass and the
-    * final join see the same `spark_partition_id`.
-    *
-    * Output is partition-count invariant (spec'd): the cumsum is a
-    * function of the total order, not of where the range boundaries
-    * fall; quality is the shared rounded-to-4 q21 score, so the order
-    * and the cut are engine-exact.
+    * The running sum is a `Scale.rangePrefixSums` over the selection
+    * order: no global window, no driver fold, and partition-count
+    * invariant (spec'd). Quality is the shared rounded-to-4 q21 score,
+    * so the order and the cut are engine-exact.
     */
   def budgetSelect(documents: DataFrame, budgetTokens: Long = 10000L,
       parts: Int = 32): DataFrame = {
     val scored = documents
       .select($"doc_id", TextAnalysis.qualityCol($"text").as("quality"),
         size(split($"text", " ")).cast("long").as("toks"))
-      .repartitionByRange(parts, $"quality".desc, $"doc_id")
-      .localCheckpoint()
-      .withColumn("pid", spark_partition_id().cast("int"))
-    val wBase = Window.orderBy($"pid")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = scored.groupBy($"pid").agg(sum($"toks").as("t"))
-      .withColumn("base", sum($"t").over(wBase) - $"t") // <= `parts` rows
-      .select($"pid", $"base")
-    val wIn = Window.partitionBy($"pid").orderBy($"quality".desc, $"doc_id")
-    scored
-      .join(broadcast(bases), Seq("pid"))
-      .withColumn("cum_toks", $"base" + sum($"toks").over(wIn))
+    Scale.rangePrefixSums(scored, Seq($"quality".desc, $"doc_id"), Seq("toks"), parts)
       .filter($"cum_toks" <= budgetTokens)
       .select($"doc_id", $"quality", $"toks", $"cum_toks")
       .orderBy($"cum_toks")
@@ -1122,8 +1096,7 @@ object Curation {
     // empty key = the public oracle-checkable demo form; non-empty key =
     // the form whose noise is not publicly recomputable
     val seed = if (secretKey.isEmpty) s"dp:$releaseTag:" else s"dp:$secretKey:$releaseTag:"
-    val u = conv(substring(md5(concat(lit(seed), $"lang")), 1, 13), 16, 10)
-      .cast("double") / math.pow(16.0, 13)
+    val u = Scale.hexFraction(md5(concat(lit(seed), $"lang")))
     documents
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"))
@@ -1715,10 +1688,8 @@ object Curation {
     * Scale shape: scoring is the shared one-broadcast pass over the
     * cached feature frame; the frame then collapses to DISTINCT scores
     * (≤ nDocs, typically ≪), and the cumulative-negatives rank term
-    * rides the q167 two-phase distributed prefix sum — range partition
-    * by score, per-partition window, ≤`parts` base offsets broadcast
-    * back. No global window, no driver fold; the final aggregate is one
-    * row.
+    * is a `Scale.rangePrefixSums` over score. No global window, no
+    * driver fold; the final aggregate is one row.
     */
   def classifierAuc(documents: DataFrame, parts: Int = 32): DataFrame = {
     val targetLang = "en"
@@ -1731,19 +1702,9 @@ object Curation {
       .join(labels, Seq("doc_id"))
       .groupBy($"zm")
       .agg(sum($"y").as("np"), sum(lit(1L) - $"y").as("nn"))
-      .repartitionByRange(parts, $"zm")
-      .localCheckpoint()
-      .withColumn("pid", spark_partition_id().cast("int"))
-    val wBase = Window.orderBy($"pid")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = byScore.groupBy($"pid").agg(sum($"nn").as("t"))
-      .withColumn("base", sum($"t").over(wBase) - $"t") // <= `parts` rows
-      .select($"pid", $"base")
-    val wIn = Window.partitionBy($"pid").orderBy($"zm")
-    byScore
-      .join(broadcast(bases), Seq("pid"))
+    Scale.rangePrefixSums(byScore, Seq($"zm"), Seq("nn"), parts)
       // negatives with a strictly LOWER score than this tie group
-      .withColumn("cum_nn", $"base" + sum($"nn").over(wIn) - $"nn")
+      .withColumn("cum_nn", $"cum_nn" - $"nn")
       .agg(
         sum($"np").as("n_pos"), sum($"nn").as("n_neg"),
         sum(lit(2L) * $"np" * $"cum_nn" + $"np" * $"nn").as("num2"))
@@ -1780,8 +1741,8 @@ object Curation {
     * positive suffix) are LONGS per distinct score; their first/second
     * weighted moments accumulate in decimal(38,0) (d10² overflows long
     * near 1.5·10⁹ per-class rows); one double expression renders AUC,
-    * SE, and the clamped Wald 95% band. The prefix sums ride the same
-    * two-phase range-partition machinery as q189 — no global window.
+    * SE, and the clamped Wald 95% band. The prefix sums and the
+    * positive total are one `Scale.rangePrefixSums` — no global window.
     */
   def aucDelong(documents: DataFrame): DataFrame = {
     val targetLang = "en"
@@ -1795,26 +1756,11 @@ object Curation {
       .join(labels, Seq("doc_id"))
       .groupBy($"zm")
       .agg(sum($"y").as("np"), sum(lit(1L) - $"y").as("nn"))
-      .repartitionByRange(32, $"zm")
-      .localCheckpoint()
-      .withColumn("pid", spark_partition_id().cast("int"))
-    val wBase = Window.orderBy($"pid")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = byScore.groupBy($"pid")
-      .agg(sum($"nn").as("tn"), sum($"np").as("tp"))
-      .withColumn("basen", sum($"tn").over(wBase) - $"tn")
-      .withColumn("basep", sum($"tp").over(wBase) - $"tp")
-      .select($"pid", $"basen", $"basep")
-    val tot = byScore.agg(sum($"np").as("npt"))
-    val wIn = Window.partitionBy($"pid").orderBy($"zm")
-    val cum = byScore
-      .join(broadcast(bases), Seq("pid"))
-      .withColumn("cum_nn", $"basen" + sum($"nn").over(wIn) - $"nn")
-      .withColumn("cum_np", $"basep" + sum($"np").over(wIn) - $"np")
-      .crossJoin(broadcast(tot))
-      .withColumn("d10", lit(2L) * $"cum_nn" + $"nn")
-      .withColumn("d01",
-        lit(2L) * ($"npt" - $"cum_np" - $"np") + $"np")
+    // inclusive sums: cum_nn - nn negatives score strictly lower,
+    // tot_np - cum_np positives strictly higher
+    val cum = Scale.rangePrefixSums(byScore, Seq($"zm"), Seq("nn", "np"), 32)
+      .withColumn("d10", lit(2L) * ($"cum_nn" - $"nn") + $"nn")
+      .withColumn("d01", lit(2L) * ($"tot_np" - $"cum_np") + $"np")
     val agg = cum.agg(
       sum($"np").as("m"), sum($"nn").as("n"),
       sum(($"np".cast("decimal(38,0)") * $"d10").cast("decimal(38,0)"))

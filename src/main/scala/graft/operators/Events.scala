@@ -383,7 +383,7 @@ object Events {
     val merged = Scale.topKPerGroup(
       toWindows(dailySketch).select($"window_end_day", $"h").distinct(),
       group = $"window_end_day", rankKey = $"h", tie = $"h", saltSource = $"h", k = k)
-    val frac = conv(substring($"kth", 1, 13), 16, 10).cast("double") / math.pow(16.0, 13)
+    val frac = Scale.hexFraction($"kth")
     val est = merged
       .groupBy($"window_end_day")
       // the sketch is the k smallest hashes, so its max IS the kth smallest
@@ -447,8 +447,7 @@ object Events {
       parts.select($"event_type", $"h").distinct(),
       group = $"event_type", rankKey = $"h", tie = $"h", saltSource = $"h",
       k = k)
-    val frac =
-      conv(substring($"kth", 1, 13), 16, 10).cast("double") / math.pow(16.0, 13)
+    val frac = Scale.hexFraction($"kth")
     val nDays = parts.groupBy($"event_type")
       .agg(countDistinct($"day").as("n_days"))
     merged
@@ -1550,19 +1549,18 @@ object Events {
     * max(i/n − F(x᪲), F(x᪲) − (i−1)/n) over the sorted sample;
     * reject at the 5% asymptotic line 1.36/√n.
     *
-    * Determinism: gaps are exact ns integers; ranks come from the
-    * distinct-gap histogram + the q167 two-phase prefix sum; each KS
+    * Determinism: gaps are exact ns integers; ranks, n and Σg come from
+    * the distinct-gap histogram's `Scale.rangePrefixSums`; each KS
     * term quantizes to 1e-6 BEFORE the max (cross-engine exp agrees to
     * ulps — the q106 micro-bit argument), so the max is over identical
     * rounded values.
     *
     * Shape: one per-user lag window (bounded per-key state), a
-    * map-side-combined histogram, ≤`parts` base offsets broadcast back,
-    * and a 1-row aggregate; nothing is globally sorted and nothing
-    * corpus-sized reaches the driver.
+    * map-side-combined histogram, its prefix sums, and a 1-row
+    * aggregate; nothing is globally sorted and nothing corpus-sized
+    * reaches the driver.
     */
   def interArrivalFit(events: DataFrame): DataFrame = {
-    val parts = 32
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val gaps = events
       .select($"user_id", $"event_id", $"ts")
@@ -1570,21 +1568,10 @@ object Events {
       .filter($"prev".isNotNull)
       .select(($"ts" - $"prev").as("g"))
     val hist = gaps.groupBy($"g").agg(count(lit(1)).as("c"))
-      .repartitionByRange(parts, $"g")
-      .localCheckpoint()
-      .withColumn("pid", spark_partition_id().cast("int"))
-    val wBase = Window.orderBy($"pid")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = hist.groupBy($"pid").agg(sum($"c").as("t"))
-      .withColumn("base", sum($"t").over(wBase) - $"t")
-      .select($"pid", $"base")
-    val wIn = Window.partitionBy($"pid").orderBy($"g")
-    val stats = gaps.agg(count(lit(1)).as("n"), sum($"g").as("sg"))
+      .withColumn("gc", $"g" * $"c")
     val fExp = lit(1.0) - exp(-(($"n" / $"sg") * $"g"))
-    val terms = hist
-      .join(broadcast(bases), Seq("pid"))
-      .withColumn("cum", $"base" + sum($"c").over(wIn))
-      .crossJoin(broadcast(stats))
+    val terms = Scale.rangePrefixSums(hist, Seq($"g"), Seq("c", "gc"), 32)
+      .select($"g", $"c", $"cum_c".as("cum"), $"tot_c".as("n"), $"tot_gc".as("sg"))
       .select(
         round($"cum" / $"n" - fExp, 6).as("dp"),
         round(fExp - ($"cum" - $"c") / $"n", 6).as("dm"),

@@ -296,8 +296,7 @@ object Sampling {
     */
   def weightedSample(documents: DataFrame): DataFrame = {
     val k = 50
-    val u = conv(substring(md5($"doc_id".cast("string")), 1, 13), 16, 10)
-      .cast("double") / math.pow(16.0, 13)
+    val u = Scale.hexFraction(md5($"doc_id".cast("string")))
     val keyed = documents
       .select($"doc_id", $"lang", $"n_chars",
         (-log(u) / $"n_chars").as("key"))
@@ -338,8 +337,7 @@ object Sampling {
     */
   def htEstimate(documents: DataFrame): DataFrame = {
     val k = 50
-    val u = conv(substring(md5($"doc_id".cast("string")), 1, 13), 16, 10)
-      .cast("double") / math.pow(16.0, 13)
+    val u = Scale.hexFraction(md5($"doc_id".cast("string")))
     val keyed = documents
       .select($"doc_id", $"n_chars", (-log(u) / $"n_chars").as("key"))
     val topK1 = Scale.topKPerGroup(keyed, group = lit(1), rankKey = $"key",
@@ -375,13 +373,9 @@ object Sampling {
     * Scale shape — the CDF never broadcasts a range join OR funnels the
     * vocabulary through one task: smoothed weights are micro-quantized
     * (round(10⁶·n^0.75) — exact integers after the one pow), the
-    * vocabulary CDF is the two-stage pid-based DISTRIBUTED prefix sum
-    * (the budgetSelect device: range-partition by tok, per-partition
-    * subtotals, a `parts`-row base window, then within-partition
-    * cumsum — Heaps' law puts the vocab at 10⁸ types at 100 TB, far too
-    * big for the single-task Window.orderBy cumsum this replaced; the
-    * result is partition-count invariant because the cumsum is a
-    * function of the tok total order alone), and draw→token resolution
+    * vocabulary CDF is a `Scale.rangePrefixSums` over tok (Heaps' law
+    * puts the vocab at 10⁸ types at 100 TB, far too big for a
+    * single-task Window.orderBy cumsum), and draw→token resolution
     * is an EQUI-join on a bucketized CDF: token spans map to the
     * `buckets` ids they overlap (explode costs vocab + buckets rows), a
     * draw computes its bucket by integer arithmetic, and the residual
@@ -402,21 +396,8 @@ object Sampling {
       .groupBy($"tok").agg(count(lit(1)).as("n"))
       .select($"tok", $"n",
         round(pow($"n", 0.75) * 1e6, 0).cast("long").as("w6"))
-      .repartitionByRange(parts, $"tok")
-      .localCheckpoint() // pins partition identity: subtotal pass and
-      .withColumn("pid", spark_partition_id().cast("int")) // join agree
-    val wBase = Window.orderBy($"pid")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = vocab.groupBy($"pid").agg(sum($"w6").as("t"))
-      .withColumn("base", sum($"t").over(wBase) - $"t") // <= `parts` rows
-      .select($"pid", $"base")
-    val wIn = Window.partitionBy($"pid").orderBy($"tok")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    vocab
-      .join(broadcast(bases), Seq("pid"))
-      .withColumn("hi", $"base" + sum($"w6").over(wIn))
-      .withColumn("lo", $"hi" - $"w6")
-      .select($"tok", $"n", $"w6", $"lo", $"hi")
+    Scale.rangePrefixSums(vocab, Seq($"tok"), Seq("w6"), parts)
+      .select($"tok", $"n", $"w6", ($"cum_w6" - $"w6").as("lo"), $"cum_w6".as("hi"))
   }
 
   def negativeSamples(documents: DataFrame): DataFrame = {
@@ -428,8 +409,8 @@ object Sampling {
       .select($"tok", $"lo", $"hi",
         explode(sequence(expr(s"(lo * $buckets) div tw"),
           expr(s"((hi - 1) * $buckets) div tw"))).as("bucket"))
-    val u = conv(substring(md5(concat($"doc_id".cast("string"), lit(":"),
-      $"slot".cast("string"))), 1, 13), 16, 10).cast("double") / math.pow(16.0, 13)
+    val u = Scale.hexFraction(md5(concat($"doc_id".cast("string"), lit(":"),
+      $"slot".cast("string"))))
     val draws = documents.select($"doc_id")
       .withColumn("slot", explode(sequence(lit(1L), lit(4.toLong))))
       .crossJoin(broadcast(total))
@@ -534,8 +515,7 @@ object Sampling {
   }
 
   def weightedSampleByStratum(documents: DataFrame): DataFrame = {
-    val u = conv(substring(md5($"doc_id".cast("string")), 1, 13), 16, 10)
-      .cast("double") / math.pow(16.0, 13)
+    val u = Scale.hexFraction(md5($"doc_id".cast("string")))
     val keyed = documents
       .select($"doc_id", $"lang", $"n_chars",
         (-log(u) / $"n_chars").as("key"))

@@ -10,16 +10,6 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/D/Program.cs:131-139`); salting is the shuffle-native
   * generalization: spread one hot key over `salts` reducers, then (for
   * aggregation) fold the partials.
-  *
-  * Durability note (the lakehouse-maintenance ops): `compactionPlan`,
-  * `compactionPlanKeyed`, and `layoutSkippingAudit` pin their
-  * range-partitioned pass with `localCheckpoint(eager = false)` — LAZY,
-  * so constructing the operator runs nothing; the first action
-  * materializes UNREPLICATED local blocks that truncate lineage. On a
-  * real cluster an executor loss after materialization fails downstream
-  * reads of that frame: re-invoke the operator on failure, or swap in a
-  * reliable `checkpoint()` over shared storage where a maintenance plan
-  * must survive executor churn (round-14 advice).
   */
 object Scale {
 
@@ -88,6 +78,57 @@ object Scale {
       .withColumn("_prn", row_number().over(preW)).filter(col("_prn") <= k)
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
       .drop("_rkey", "_salt", "_prn", "_rn")
+  }
+
+  /** Two-phase distributed prefix sum, the one home of the range-partition
+    * running sum. For each column `v` of `values` it adds `cum_v`, the
+    * inclusive running sum of `v` over the total order `order` (restarting
+    * per `groups`), and `tot_v`, the sum of `v` over the group. A caller
+    * that needs the exclusive sum subtracts its own value; an unselected
+    * `tot_v` is pruned away. The split is the reference's range-cutoff
+    * shuffle (its `D/Program.cs:121-127`):
+    *  1. range-partition on `groups ++ order` into `parts` and pin the
+    *     partitions with a `localCheckpoint`, so the subtotal pass and the
+    *     final join see the same `spark_partition_id` (`pid`);
+    *  2. per-(pid, groups) subtotals, and each partition's base from one
+    *     window over those ≤ `parts`·groups rows, broadcast back (the
+    *     window is partitioned by `groups`, so with none it is the
+    *     unpartitioned window ScaleSpec's sweep audits);
+    *  3. base + a running ROWS window inside each (pid, groups) partition.
+    * `order` must be total (end it on a unique key): the sums then depend
+    * on the order alone, so the result is partition-count invariant.
+    *
+    * Checkpoint mode, lazy (`eager = false`): under AQE, which
+    * `GraftSession` turns on, building the frame still runs the range
+    * sample and the shuffle-map stage (2 jobs); only the reduce side that
+    * writes the local blocks waits for the first action (eager would run
+    * it as a third job at build time). With AQE off only the range sample
+    * runs at build time. The blocks are unreplicated and cut the lineage:
+    * on a cluster, an executor lost after they are written fails later
+    * reads, so re-run the query, or use a reliable `checkpoint()` where
+    * that must be survived.
+    */
+  def rangePrefixSums(df: DataFrame, order: Seq[Column], values: Seq[String],
+      parts: Int, groups: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val keys = ("pid" +: groups).map(col)
+    val ranged = df.repartitionByRange(parts, groups.map(col) ++ order: _*)
+      .localCheckpoint(eager = false)
+      .withColumn("pid", spark_partition_id())
+    val byPid = Window.partitionBy(groups.map(col): _*).orderBy(col("pid"))
+    val subtotals = values.map(v => sum(col(v)).as(s"_t_$v"))
+    val bases = values.foldLeft(ranged.groupBy(keys: _*).agg(subtotals.head, subtotals.tail: _*)) {
+      (f, v) => f
+        .withColumn(s"_base_$v", sum(col(s"_t_$v")).over(
+          byPid.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - col(s"_t_$v"))
+        .withColumn(s"tot_$v", sum(col(s"_t_$v")).over(
+          byPid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+    }.drop(values.map(v => s"_t_$v"): _*)
+    val inPid = Window.partitionBy(keys: _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    values.foldLeft(ranged.join(broadcast(bases), "pid" +: groups)) { (f, v) =>
+      f.withColumn(s"cum_$v", col(s"_base_$v") + sum(col(v)).over(inPid))
+    }.drop("pid" +: values.map(v => s"_base_$v"): _*)
   }
 
   /** Exact interpolated per-group quantile with BOUNDED aggregation state:
@@ -203,6 +244,14 @@ object Scale {
     */
   private[graft] def md5SlicePos(key: Column, j: Int, m: Int): Column =
     conv(substring(md5(key.cast("string")), 4 * j + 1, 4), 16, 10).cast("bigint") % m
+
+  /** The first 13 digits of the hex string `hex` (an md5) as a fraction in
+    * [0, 1) — the deterministic md5 coin, `hexFraction(md5(key))`, and
+    * the Column twin of `Aggregators.hexFraction(h, 13)`. Every term is a
+    * power of two, so the double is identical on any engine.
+    */
+  def hexFraction(hex: Column): Column =
+    conv(substring(hex, 1, 13), 16, 10).cast("double") / math.pow(16.0, 13)
 
   /** Bloom-prefilter accounting: build a deterministic md5 Bloom filter
     * (m cells, k hash functions) over the dim-side keys, probe every
@@ -378,11 +427,8 @@ object Scale {
     * compactors run: one plan PER table family / partition, because
     * output files must not mix families). Same next-fit-by-start-offset
     * semantics as `compactionPlan`, but the running offset resets per
-    * family: the (family, size desc, id) order is range-partitioned,
-    * per-(pid, family) subtotals roll up, and the cross-partition bases
-    * come from a window PARTITIONED BY family over ≤ parts·families
-    * rows — fully distributed, no unpartitioned window at all (one
-    * step stronger than the global planner's audited pid frame).
+    * family (`rangePrefixSums` grouped by family: its base window is
+    * partitioned by family, so this op has no unpartitioned window).
     * Output: one row per (family, bin) with fill statistics;
     * families plan independently, so adding a family never moves
     * another family's bins (spec'd against the global planner run on
@@ -405,35 +451,16 @@ object Scale {
   /** Per-file keyed next-fit bin assignment — the shared core behind
     * `compactionPlanKeyed` (metadata rollup) and `compactionExecute`
     * (the physical rewrite): one row per input file with its planned
-    * output bin, `(family, file_id, n_bytes, bin)`. Same distributed
-    * two-stage prefix sum as the global planner, with the running
-    * offset reset per family via the family-partitioned base window.
+    * output bin, `(family, file_id, n_bytes, bin)`: the global
+    * planner's start-offset bins, with the offset reset per family.
     */
   private def keyedAssignments(files: DataFrame, familyCol: String, fileId: String,
       sizeCol: String, targetBytes: Long, parts: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val f = files
-      .select(col(familyCol).as("family"),
-        col(fileId).cast("long").as("file_id"),
-        col(sizeCol).cast("long").as("n_bytes"))
-      .repartitionByRange(parts, $"family", col("n_bytes").desc, $"file_id")
-      // pins partition identity (subtotal pass and join agree); LAZY so
-      // merely constructing the operator runs nothing — the first action
-      // materializes the blocks (round-14 advice fix; see the class-level
-      // durability note: local blocks are unreplicated)
-      .localCheckpoint(eager = false)
-      .withColumn("pid", spark_partition_id().cast("int"))
-    val wBase = Window.partitionBy($"family").orderBy($"pid")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = f.groupBy($"pid", $"family").agg(sum($"n_bytes").as("t"))
-      .withColumn("base", sum($"t").over(wBase) - $"t") // <= parts*families rows
-      .select($"pid", $"family", $"base")
-    val wIn = Window.partitionBy($"pid", $"family")
-      .orderBy($"n_bytes".desc, $"file_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    f.join(broadcast(bases), Seq("pid", "family"))
-      .withColumn("start_off", $"base" + sum($"n_bytes").over(wIn) - $"n_bytes")
-      .withColumn("bin", expr(s"start_off div ${targetBytes}L"))
+    val f = files.select(col(familyCol).as("family"),
+      col(fileId).cast("long").as("file_id"), col(sizeCol).cast("long").as("n_bytes"))
+    rangePrefixSums(f, Seq($"n_bytes".desc, $"file_id"), Seq("n_bytes"), parts,
+        groups = Seq("family"))
+      .withColumn("bin", expr(s"(cum_n_bytes - n_bytes) div ${targetBytes}L"))
       .select($"family", $"file_id", $"n_bytes", $"bin")
   }
 
@@ -606,11 +633,9 @@ object Scale {
     * Mechanics: a file is a rank slice — file = ⌊rank₀ · files / N⌋
     * over the layout's total order ((key, id) for sorted, (id) for
     * arrival; id unique, so both orders are total and the assignment is
-    * partition-count invariant). The global 0-based rank is the
-    * DISTRIBUTED two-phase prefix count (the q167/q189 pattern): range
-    * partition by the layout order, per-partition `row_number`, ≤
-    * `parts` base offsets broadcast back — no corpus-sized single-task
-    * window (ScaleSpec audits the two pid frames). Per-file min/max =
+    * partition-count invariant). The global rank and the row count N are
+    * a `rangePrefixSums` count (N is its total over the ≤ `parts`
+    * subtotal rows, not a second corpus scan). Per-file min/max =
     * one aggregate (`files` rows — exactly the parquet footer stats a
     * real reader consults); probes = the DISTINCT key values
     * (domain-sized); reads = probes × broadcast(file stats) filtered to
@@ -621,35 +646,15 @@ object Scale {
       files: Int = 64): DataFrame = {
     val parts = 32
     require(files > 0, s"layoutSkippingAudit: files=$files must be > 0")
-    import org.apache.spark.sql.expressions.Window
     val base = df.select(col(idCol).as("id"), col(keyCol).as("k"))
 
-    // file id by global rank over `order` — two-phase, never one task.
-    // The corpus row count N comes from the <= `parts`-row subtotal
-    // frame, NOT a separate corpus scan per layout.
-    def fileStats(order: Seq[Column], layout: String): DataFrame = {
-      val f = base.repartitionByRange(parts, order: _*)
-        // pins partition identity (subtotal pass == join); LAZY so
-        // construction runs nothing (r14 advice fix; see class note)
-        .localCheckpoint(eager = false)
-        .withColumn("pid", spark_partition_id().cast("int"))
-      val wBase = Window.orderBy($"pid")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val subtot = f.groupBy($"pid").agg(count(lit(1)).as("t"))
-        .localCheckpoint(eager = false) // <= `parts` rows; feeds bases AND the total
-      val bases = subtot
-        .withColumn("base", sum($"t").over(wBase) - $"t")
-        .select($"pid", $"base")
-      val total = subtot.agg(sum($"t").as("n"))
-      val wIn = Window.partitionBy($"pid").orderBy(order: _*)
-      f.join(broadcast(bases), Seq("pid"))
-        .withColumn("r0", $"base" + row_number().over(wIn).cast("long") - 1L)
-        .crossJoin(broadcast(total))
-        .withColumn("f", expr(s"r0 * ${files}L div n"))
+    // file id = 0-based global rank over `order` · files div N
+    def fileStats(order: Seq[Column], layout: String): DataFrame =
+      rangePrefixSums(base.withColumn("n", lit(1L)), order, Seq("n"), parts)
+        .withColumn("f", expr(s"(cum_n - 1) * ${files}L div tot_n"))
         .groupBy($"f")
         .agg(min($"k").as("lo"), max($"k").as("hi"))
         .withColumn("layout", lit(layout))
-    }
 
     // materialize the footer-stats frame (2·files rows) once: it feeds
     // both the probe join and the n_files rollup, and a real reader
@@ -696,13 +701,9 @@ object Scale {
     * its fill statistics — `n_bins ≈ Σbytes / target`, so the report is
     * corpus-bytes-proportional, never file-count-proportional.
     *
-    * Scale shape: the global running offset is the fully DISTRIBUTED
-    * two-stage prefix sum (the q58/q234 pattern — partition-local
-    * cumsum + broadcast per-partition bases over ≤ `parts` rows;
-    * `localCheckpoint` pins partition identity so the subtotal pass and
-    * the join agree). No corpus-sized single-task window anywhere —
-    * ScaleSpec's unpartitioned-window sweep audits the one pid-frame
-    * site. Dial: `targetBytes` is workload-chosen (128 MB in a real
+    * Scale shape: the global running offset is a `rangePrefixSums`
+    * (no corpus-sized single-task window). Dial: `targetBytes` is
+    * workload-chosen (128 MB in a real
     * lake); output rows scale as Σbytes / target, independent of file
     * count.
     */
@@ -710,26 +711,10 @@ object Scale {
       targetBytes: Long, parts: Int = 32): DataFrame = {
     require(targetBytes > 0, s"compactionPlan: targetBytes=$targetBytes must be > 0")
     require(parts > 0, s"compactionPlan: parts=$parts must be > 0")
-    import org.apache.spark.sql.expressions.Window
-    val f = files
-      .select(col(fileId).cast("long").as("file_id"),
-        col(sizeCol).cast("long").as("n_bytes"))
-      .repartitionByRange(parts, col("n_bytes").desc, col("file_id"))
-      // pins partition identity (subtotal pass and join agree); LAZY so
-      // construction runs nothing — the first action materializes (r14
-      // advice fix; local blocks are unreplicated, see class note)
-      .localCheckpoint(eager = false)
-      .withColumn("pid", spark_partition_id().cast("int"))
-    val wBase = Window.orderBy($"pid")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = f.groupBy($"pid").agg(sum($"n_bytes").as("t"))
-      .withColumn("base", sum($"t").over(wBase) - $"t") // <= `parts` rows
-      .select($"pid", $"base")
-    val wIn = Window.partitionBy($"pid").orderBy($"n_bytes".desc, $"file_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    f.join(broadcast(bases), Seq("pid"))
-      .withColumn("start_off", $"base" + sum($"n_bytes").over(wIn) - $"n_bytes")
-      .withColumn("bin", expr(s"start_off div ${targetBytes}L"))
+    val f = files.select(col(fileId).cast("long").as("file_id"),
+      col(sizeCol).cast("long").as("n_bytes"))
+    rangePrefixSums(f, Seq($"n_bytes".desc, $"file_id"), Seq("n_bytes"), parts)
+      .withColumn("bin", expr(s"(cum_n_bytes - n_bytes) div ${targetBytes}L"))
       .groupBy($"bin")
       .agg(count(lit(1)).as("n_files"),
         sum($"n_bytes").as("total_bytes"),

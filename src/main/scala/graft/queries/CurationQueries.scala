@@ -7,9 +7,8 @@ import graft.sources.Tables
 import graft.OracleHelpers._
 
 /** Curation family queries: corpus curation: quality classifier, spans, decontamination, mixtures, capstones.
-  * Split from PipelineQueries (round 9) -- entries and oracles are moved
-  * verbatim; PipelineQueries concatenates the families and asserts the
-  * key sets stay disjoint and aligned.
+  * SparkEntry concatenates the families and asserts the key sets stay
+  * disjoint and aligned.
   */
 private[graft] object CurationQueries extends QueryFamily {
 

@@ -7,9 +7,8 @@ import graft.sources.Tables
 import graft.OracleHelpers._
 
 /** Dedup family queries: exact/near-duplicate discovery (MinHash-LSH, SimHash, containment, dup-graph analytics).
-  * Split from PipelineQueries (round 9) -- entries and oracles are moved
-  * verbatim; PipelineQueries concatenates the families and asserts the
-  * key sets stay disjoint and aligned.
+  * SparkEntry concatenates the families and asserts the key sets stay
+  * disjoint and aligned.
   */
 private[graft] object DedupQueries extends QueryFamily {
 

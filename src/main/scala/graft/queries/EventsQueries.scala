@@ -7,9 +7,8 @@ import graft.sources.Tables
 import graft.OracleHelpers._
 
 /** Events family queries: event/statistics: sessions, funnels, SCD2, ACF/CUSUM/Welch/KS, A/B.
-  * Split from PipelineQueries (round 9) -- entries and oracles are moved
-  * verbatim; PipelineQueries concatenates the families and asserts the
-  * key sets stay disjoint and aligned.
+  * SparkEntry concatenates the families and asserts the key sets stay
+  * disjoint and aligned.
   */
 private[graft] object EventsQueries extends QueryFamily {
 

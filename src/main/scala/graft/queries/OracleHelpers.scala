@@ -1,8 +1,8 @@
 package graft
 
-/** Shared DuckDB-oracle SQL fragments used across the family query files
-  * (split out of PipelineQueries in round 9). Everything here is ORACLE
-  * text or its builders -- the Spark side never sees these strings.
+/** Shared DuckDB-oracle SQL fragments used across the family query files.
+  * Everything here is ORACLE text or a function that writes it -- the
+  * Spark side never sees these strings.
   */
 import graft.operators.Similarity
 

@@ -7,9 +7,8 @@ import graft.sources.Tables
 import graft.OracleHelpers._
 
 /** Text family queries: text analysis: stats, language ID, tf-idf/BM25, entropy, tokenizers, LMs.
-  * Split from PipelineQueries (round 9) -- entries and oracles are moved
-  * verbatim; PipelineQueries concatenates the families and asserts the
-  * key sets stay disjoint and aligned.
+  * SparkEntry concatenates the families and asserts the key sets stay
+  * disjoint and aligned.
   */
 private[graft] object TextQueries extends QueryFamily {
 

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * deleting its last spec flags it too. Likewise an operator parameter
   * with a default exists only where some caller in `src/main` or
   * `src/test` passes it; a value no caller varies is a constant in the
-  * body.
+  * body. Two expressions have one home each: `spark_partition_id` is
+  * only in `Scale.rangePrefixSums`, the 13-digit md5 coin only in
+  * `Scale.hexFraction`.
   */
 class RegisteredSurfaceSpec extends AnyFunSuite {
 
@@ -90,6 +92,23 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
     val unused = testOnly.keySet -- specNamed
     if (unused.nonEmpty) fail("allowlisted but named by no spec — delete them from src/main " +
       s"and from testOnly: $unused")
+  }
+
+  test("drift guard: one distributed prefix sum and one md5 coin in src/main") {
+    // each expression has one home; a copy anywhere else is hand-rolled
+    // machinery to move back onto the helper
+    val homes = Seq(
+      """spark_partition_id\s*\(""".r -> "rangePrefixSums",
+      """math\.pow\(\s*16(?:\.0)?\s*,\s*13\s*\)""".r -> "hexFraction")
+    val offenders = for {
+      (p, text) <- sources("src/main/scala")
+      (needle, home) <- homes
+      m <- needle.findAllMatchIn(text)
+      owner = Def.findAllMatchIn(text.substring(0, m.start)).toSeq.lastOption.map(_.group(1))
+      if !owner.contains(home)
+    } yield s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}: `${m.matched}` in " +
+      s"${owner.getOrElse("?")}, not in Scale.$home"
+    if (offenders.nonEmpty) fail("call the helper instead:\n" + offenders.mkString("\n"))
   }
 
   /** Index one past the bracket that closes `text(open)`. */

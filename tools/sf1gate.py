@@ -13,7 +13,7 @@ What it does, in order:
   1. materializes target/sf1eq via `sbt Test/runMain graft.ProfileSf1Data`
      if the directory is missing (deterministic from /root/testdata/sf0.1);
   2. runs the ENGINE on the selected heads:
-     SPARK_GRAFT_VERIFY_QUERIES=<subset> graft.Verify target/sf1eq <out>;
+     SPARK_GRAFT_QUERIES=<subset> graft.Verify target/sf1eq <out>;
   3. runs the ORACLE gate: tools/check.py target/sf1eq <out> --only
      <subset> --times (per-head DuckDB wall = the 6.21 cost column);
   4. on all-PASS, stamps bench/sf1eq_state.json with the current commit —
@@ -155,7 +155,7 @@ def main(argv):
 
     subset = ",".join(heads)
     sh(["rm", "-rf", OUT])
-    env = dict(os.environ, SPARK_GRAFT_VERIFY_QUERIES=subset)
+    env = dict(os.environ, SPARK_GRAFT_QUERIES=subset)
     r = sh(["sbt", "-batch", f"runMain graft.Verify {SF1EQ} {OUT}"], env=env)
     if r.returncode != 0:
         print("[sf1gate] engine run failed")
