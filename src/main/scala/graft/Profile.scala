@@ -150,6 +150,7 @@ object Profile {
         Regex.quoteReplacement(m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size)))
     }
 
-  private def str(s: String): String =
+  /** `s` as a JSON string literal (Jackson's escaping). */
+  private[graft] def str(s: String): String =
     "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
 }

@@ -57,6 +57,18 @@ object Verify {
       }
     }
 
+  /** `$outDir/oracle_sql.json`: the `keep` entries of
+    * `SparkEntry.oracleSql` as one JSON object, strings escaped by
+    * `Profile.str` (a tab or CR in an oracle left raw would make the
+    * reader's JSON parse fail and zero the correctness compare).
+    */
+  private[graft] def writeOracleSql(outDir: String, keep: String => Boolean): Unit = {
+    val json = SparkEntry.oracleSql
+      .filter { case (k, _) => keep(k) }
+      .map { case (k, v) => s"${Profile.str(k)}: ${Profile.str(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -69,22 +81,7 @@ object Verify {
     // not the ~50-minute full-oracle DuckDB grind at sf0.1
     val keep = SparkEntry.selectedQueries().toSet
     dumpQueries(spark, sfDir, outDir, keep)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => keep(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, keep)
     spark.stop()
   }
 }

@@ -98,6 +98,9 @@ object Dedup {
   val NumHashes = 126
   val BandRows  = 6
 
+  /** Character n-gram length of the near-dup pair index's shingles. */
+  val ShingleLen = 5
+
   /** Candidate pairs from LSH banding, verified with exact Jaccard.
     * Signatures come from one fused codegen'd pass per document (native
     * MinHashSignature — no explode, no shuffle in the signature stage);
@@ -109,12 +112,12 @@ object Dedup {
     * This is the shape that holds at 100 TB.
     */
   def minhashLshPairs(documents: DataFrame): DataFrame =
-    pairIndex(documents, 5, 0.6).orderBy($"id1", $"id2")
+    pairIndex(documents).orderBy($"id1", $"id2")
 
   private val PairIndexes = new SessionArtifacts.Kind[DataFrame]
 
   /** Session-scoped materialized pair index: the verified near-dup pairs of
-    * a corpus, computed once per (corpus plan, n, threshold) per session and
+    * a corpus, computed once per (corpus plan, threshold) per session and
     * reused by every consumer — q27's pair listing, q53's survivor
     * selection, q83's source matrix, and q84's capstone all analyze the SAME
     * pair set, and a production curation run materializes it once for
@@ -124,9 +127,9 @@ object Dedup {
     * pair-proportional, never corpus-proportional; keys and eviction follow
     * [[SessionArtifacts]].
     */
-  def pairIndex(documents: DataFrame, n: Int = 5, threshold: Double = 0.6): DataFrame =
-    SessionArtifacts.getOrBuild(PairIndexes, documents, n, threshold)(
-      minhashLshPairsUnordered(documents, n, threshold).localCheckpoint())
+  def pairIndex(documents: DataFrame, threshold: Double = 0.6): DataFrame =
+    SessionArtifacts.getOrBuild(PairIndexes, documents, threshold)(
+      minhashLshPairsUnordered(documents, ShingleLen, threshold).localCheckpoint())
 
   /** Restrict a corpus pair index to a sub-corpus: near-dup pairs of a
     * SUBSET equal the full-corpus pairs with both endpoints in the subset —
@@ -237,13 +240,12 @@ object Dedup {
     * design not offered here; this op refines what the index found.
     */
   def containmentRefine(documents: DataFrame): DataFrame = {
-    val n = 5
     val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
-    val pairs = pairIndex(documents, n, 0.6)
+    val pairs = pairIndex(documents)
     val ids = pairs.select(explode(array($"id1", $"id2")).as("doc_id")).distinct()
     val sets = documents.join(ids, Seq("doc_id"), "left_semi")
       .repartition(parts, $"doc_id")
-      .select($"doc_id", graft.functions.MinHashFunctions.shingle_hashes($"text", n).as("hs"))
+      .select($"doc_id", graft.functions.MinHashFunctions.shingle_hashes($"text", ShingleLen).as("hs"))
       .localCheckpoint() // candidate-proportional; referenced twice below
     // shuffle_hash: same defect class as the ×30 broadcast-of-candidates
     // failure (see minhashLshPairsUnordered) — neither the pair set's nor
@@ -287,7 +289,7 @@ object Dedup {
   def weightedJaccardRefine(documents: DataFrame): DataFrame = {
     val threshold = 0.6
     val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
-    val pairs = pairIndex(documents, 5, threshold)
+    val pairs = pairIndex(documents, threshold)
     val ids = pairs.select(explode(array($"id1", $"id2")).as("doc_id")).distinct()
     val docTf = documents.join(ids, Seq("doc_id"), "left_semi")
       .repartition(parts, $"doc_id")
@@ -321,7 +323,7 @@ object Dedup {
     */
   def dupSourceMatrix(documents: DataFrame): DataFrame = {
     val meta = documents.select($"doc_id", $"source")
-    pairIndex(documents, 5, 0.6)
+    pairIndex(documents)
       .join(meta.select($"doc_id".as("id1"), $"source".as("s1")), Seq("id1"))
       .join(meta.select($"doc_id".as("id2"), $"source".as("s2")), Seq("id2"))
       .select(least($"s1", $"s2").as("source_a"), greatest($"s1", $"s2").as("source_b"))
@@ -341,7 +343,7 @@ object Dedup {
     * cluster representative and whether the doc survives the dedup.
     */
   def nearDupSurvivors(documents: DataFrame): DataFrame =
-    survivorsOverPairs(pairIndex(documents, 5, 0.6))
+    survivorsOverPairs(pairIndex(documents))
 
   /** Connected-component survivor selection over an arbitrary near-dup
     * pair set (the LSH index, or a restriction of it — q84's capstone
@@ -430,7 +432,7 @@ object Dedup {
     * breaks quality ties toward the smaller id.
     */
   def qualityCanonical(documents: DataFrame): DataFrame = {
-    val members = survivorsOverPairs(pairIndex(documents, 5, 0.6))
+    val members = survivorsOverPairs(pairIndex(documents))
       .select($"doc_id", $"cluster_rep")
     val scored = members.join(
       documents.select($"doc_id", TextAnalysis.qualityCol($"text").as("quality")),
@@ -458,7 +460,7 @@ object Dedup {
     * size-histogram-sized.
     */
   def clusterSizeDistribution(documents: DataFrame): DataFrame =
-    survivorsOverPairs(pairIndex(documents, 5, 0.6))
+    survivorsOverPairs(pairIndex(documents))
       .groupBy($"cluster_rep")
       .agg(count(lit(1)).as("sz"))
       .groupBy($"sz".as("cluster_size"))
@@ -483,7 +485,7 @@ object Dedup {
     // selective import: the full implicits._ would make a second `$`
     // interpolator ambiguous with the package-level one
     import spark.implicits.{localSeqToDatasetHolder, newDoubleEncoder}
-    val pairs = pairIndex(documents, 5, thresholds.min)
+    val pairs = pairIndex(documents, thresholds.min)
     val th = thresholds.toDF("threshold")
     val f = pairs.crossJoin(broadcast(th)).filter($"jaccard" >= $"threshold")
     val np = f.groupBy($"threshold").agg(count(lit(1)).as("p"))

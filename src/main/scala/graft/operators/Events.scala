@@ -1179,33 +1179,41 @@ object Events {
     * 1-row finisher.
     */
   def tostEquivalence(events: DataFrame): DataFrame = {
-    val m = msprtArmMoments(events, "purchase")
     def svar(s1: Column, s2: Column, n: Column): Column =
       (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
-    val mA = $"s1_a".cast("double") / $"n_a"
-    val mB = $"s1_b".cast("double") / $"n_b"
-    val diff = mB - mA
-    val se = sqrt(svar($"s1_a", $"s2_a", $"n_a") / $"n_a"
-      + svar($"s1_b", $"s2_b", $"n_b") / $"n_b")
-    val delta = lit(0.05) *
-      (($"s1_a" + $"s1_b").cast("double") / ($"n_a" + $"n_b"))
     def tail(x: Column): Column =
       when(x >= 0.0, Inference.upperTail(x))
         .otherwise(lit(1.0) - Inference.upperTail(-x))
-    val zL = (diff + delta) / se
-    val zU = (delta - diff) / se
-    val pTost = greatest(tail(zL), tail(zU))
     val ok = $"n_a" >= 2L && $"n_b" >= 2L
-    m.select($"n_a", $"n_b",
-      when($"n_a" >= 1L, round(mA / 1e4, 4)).as("mean_a"),
-      when($"n_b" >= 1L, round(mB / 1e4, 4)).as("mean_b"),
-      when(ok, round(diff / 1e4, 4)).as("diff"),
-      when(ok, round(delta / 1e4, 4)).as("margin"),
-      when(ok && se > 0.0, round(se / 1e4, 4)).as("se"),
-      when(ok && se > 0.0, round(zL, 4)).as("z_lower"),
-      when(ok && se > 0.0, round(zU, 4)).as("z_upper"),
-      when(ok && se > 0.0, round(pTost, 6)).as("p_tost"),
-      when(ok && se > 0.0, pTost < 0.05).as("equivalent"))
+    val tested = ok && $"se" > 0.0
+    // One projection per shared term, each computed once under the guard
+    // its outputs carry. Inlined into a single projection, every use of
+    // z and p re-expands the whole tree (CASE branches defeat
+    // subexpression elimination) and the generated method outgrows
+    // Janino's 64 KB limit, which drops the stage to interpreted
+    // evaluation.
+    msprtArmMoments(events, "purchase")
+      .select($"n_a", $"n_b",
+        when($"n_a" >= 1L, $"s1_a".cast("double") / $"n_a").as("m_a"),
+        when($"n_b" >= 1L, $"s1_b".cast("double") / $"n_b").as("m_b"),
+        when(ok, sqrt(svar($"s1_a", $"s2_a", $"n_a") / $"n_a"
+          + svar($"s1_b", $"s2_b", $"n_b") / $"n_b")).as("se"),
+        when(ok, lit(0.05) *
+          (($"s1_a" + $"s1_b").cast("double") / ($"n_a" + $"n_b"))).as("delta"))
+      .withColumn("diff", $"m_b" - $"m_a")
+      .withColumn("z_l", when(tested, ($"diff" + $"delta") / $"se"))
+      .withColumn("z_u", when(tested, ($"delta" - $"diff") / $"se"))
+      .withColumn("p", greatest(tail($"z_l"), tail($"z_u")))
+      .select($"n_a", $"n_b",
+        round($"m_a" / 1e4, 4).as("mean_a"),
+        round($"m_b" / 1e4, 4).as("mean_b"),
+        when(ok, round($"diff" / 1e4, 4)).as("diff"),
+        round($"delta" / 1e4, 4).as("margin"),
+        when(tested, round($"se" / 1e4, 4)).as("se"),
+        round($"z_l", 4).as("z_lower"),
+        round($"z_u", 4).as("z_upper"),
+        round($"p", 6).as("p_tost"),
+        ($"p" < 0.05).as("equivalent"))
   }
 
   /** Hill tail-index estimator on the purchase-value distribution

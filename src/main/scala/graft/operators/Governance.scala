@@ -63,7 +63,7 @@ object Governance {
       .join(del, Seq("doc_id"), "left_anti")
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("tf"))
-    TextAnalysis.bm25Rank(tf, dl, 1.2, 0.75, 20)
+    TextAnalysis.bm25Rank(tf, dl, 20)
   }
 
   /** q165: near-dup survivor selection under erasure — tombstones applied
@@ -84,7 +84,7 @@ object Governance {
     val retained = documents.select($"doc_id")
       .join(broadcast(deletes.select($"doc_id")), Seq("doc_id"), "left_anti")
     Dedup.survivorsOverPairs(
-      Dedup.restrictPairs(Dedup.pairIndex(documents, 5, 0.6), retained))
+      Dedup.restrictPairs(Dedup.pairIndex(documents), retained))
   }
 
   /** q164: per-source erasure-impact audit — the compliance report a

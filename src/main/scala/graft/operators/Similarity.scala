@@ -36,12 +36,17 @@ object Similarity {
 
   private def asDouble(v: Column): Column = transform(v, _.cast("double"))
 
-  /** Exact top-k cosine neighbors for each query vector (vec_id < nQueries).
-    * The tiny query side broadcasts; ranking is per-query via a window over
-    * k*nQueries rows only (rank on already-reduced data).
+  /** The bounded query set of the ANN serving and evaluation ops: the
+    * vectors with vec_id < NQueries.
     */
-  def cosineTopK(embeddings: DataFrame, nQueries: Int = 5, k: Int = 5): DataFrame =
-    cosineTopKWith(cosine)(embeddings, nQueries, k)
+  private val NQueries = 5
+
+  /** Exact top-k cosine neighbors for each query vector (vec_id < NQueries).
+    * The tiny query side broadcasts; ranking is per-query via a window over
+    * k*NQueries rows only (rank on already-reduced data).
+    */
+  def cosineTopK(embeddings: DataFrame, k: Int = 5): DataFrame =
+    cosineTopKWith(cosine)(embeddings, k)
 
   /** cosineTopK scored by the native fused-loop Catalyst expression
     * (graft.functions.CosineSimilarity) instead of the compositional
@@ -49,12 +54,12 @@ object Similarity {
     * pair.
     */
   def cosineTopKNative(embeddings: DataFrame): DataFrame =
-    cosineTopKWith(graft.functions.VectorFunctions.cosine_sim)(embeddings, 5, 5)
+    cosineTopKWith(graft.functions.VectorFunctions.cosine_sim)(embeddings, 5)
 
   private def cosineTopKWith(scorer: (Column, Column) => Column)(
-      embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
+      embeddings: DataFrame, k: Int): DataFrame = {
     val corpus  = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val queries = corpus.filter($"vec_id" < nQueries)
+    val queries = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
     val scored = corpus
       .join(broadcast(queries), $"vec_id" =!= $"query_id")
@@ -243,7 +248,7 @@ object Similarity {
   private def buildCellKnnGraph(embeddings: DataFrame, k: Int,
       cells: Int): DataFrame = {
     import graft.functions.VectorFunctions.cosine_sim
-    val af = kmeansAssignments(embeddings, cells, 2, "coreset")
+    val af = kmeansModel(embeddings, cells).assignments
     val pairs = af.select($"vec_id".as("id"), $"cid", $"v")
       .join(af.select($"vec_id".as("nb"), $"cid", $"v".as("nv")), Seq("cid"))
       .filter($"id" =!= $"nb")
@@ -393,8 +398,7 @@ object Similarity {
   def dbscanProfile(embeddings: DataFrame, eps: Double = 0.2,
       minPts: Int = 4, kCells: Int = AutoCells): DataFrame = {
     import graft.functions.VectorFunctions.cosine_sim
-    val af = kmeansAssignments(embeddings, resolveCells(embeddings, kCells), 2,
-      "coreset")
+    val af = kmeansModel(embeddings, resolveCells(embeddings, kCells)).assignments
     val neigh = af.select($"vec_id".as("id"), $"cid", $"v")
       .join(af.select($"vec_id".as("nb"), $"cid", $"v".as("nv")), Seq("cid"))
       .filter($"id" =!= $"nb")
@@ -437,19 +441,17 @@ object Similarity {
     * emit 0, not an ANSI crash), so cluster means are exact integer
     * sums with one boundary division.
     *
-    * Shape: rides the shared Lloyd training; the best-other term is a
-    * k-row broadcast crossJoin per vector (k = cells, the IVF argmin
-    * cost), one groupBy(vec) max, one cluster-sized rollup.
+    * Shape: rides the session k-means model (centroids and assignment
+    * frame); the best-other term is a k-row broadcast crossJoin per
+    * vector (k = cells, the IVF argmin cost), one groupBy(vec) max, one
+    * cluster-sized rollup.
     */
   def silhouetteProfile(embeddings: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.cosine_sim
     val spark = embeddings.sparkSession
-    val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-      .localCheckpoint()
-    val cents = trainCentroids(embeddings, corpus, 16, 2, "coreset")
-    val af = corpus.withColumn("a", least(cellStructs(cents, $"v"): _*))
-      .select($"vec_id", $"v", $"a.cid".as("cid"), (-$"a.negcos").as("cos"))
-    val centDf = spark.createDataFrame(cents.toSeq).toDF("ccid", "cv")
+    val model = kmeansModel(embeddings, 16)
+    val af = model.assignments
+    val centDf = spark.createDataFrame(model.cents.toSeq).toDF("ccid", "cv")
     val bestOther = af.crossJoin(broadcast(centDf))
       .filter($"cid" =!= $"ccid")
       .select($"vec_id", round(cosine_sim($"v", $"cv"), 6).as("ocos"))
@@ -484,35 +486,18 @@ object Similarity {
     * contingency table; the two divisions happen at the boundary with
     * oracle-matched shape (degenerate denominator → null).
     *
-    * Shape: two Lloyd trainings (driver holds 2·k×dim doubles), ONE
-    * corpus pass computing both argmin assignments side by side, a
-    * k²-row contingency aggregate, and 1-row rollups.
+    * Shape: A is the session k-means model; B trains over A's
+    * checkpointed assignment frame (driver holds k×dim doubles per
+    * side), then ONE pass over that frame adds B's argmin beside A's
+    * cell, a k²-row contingency aggregate, and 1-row rollups.
     */
   def clusterStability(embeddings: DataFrame): DataFrame = {
     val kCells = 16
-    val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-      .localCheckpoint() // seeds + 2 trainings + the final joint pass
-    // The A and B trainings are mutually independent driver-side Lloyd
-    // loops over the same checkpointed corpus — run them concurrently
-    // (guide §2.6) so each round's tail tasks back-fill with the other
-    // training's jobs; results are unchanged by the interleaving.
-    var centsA: Array[(Long, Array[Double])] = null
-    var centsB: Array[(Long, Array[Double])] = null
-    Scale.inParallel(
-      () => { centsA = trainCentroids(embeddings, corpus, kCells, 2, "coreset") },
-      () => {
-        val seedsB = corpus
-          .select($"vec_id", $"v",
-            md5(concat($"vec_id".cast("string"), lit(":b"))).as("r"))
-          .orderBy($"r", $"vec_id").limit(kCells)
-          .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1)
-        centsB = lloydRefine(corpus, seedsB, 2)
-      })
-    val cont = corpus
-      .withColumn("a", least(cellStructs(centsA, $"v"): _*))
-      .withColumn("b", least(cellStructs(centsB, $"v"): _*))
-      .select($"a.cid".as("ca"), $"b.cid".as("cb"))
+    val a = kmeansModel(embeddings, kCells).assignments
+    val corpus = a.select($"vec_id", $"v")
+    val centsB = trainCentroids(corpus, md5Coreset(corpus, kCells, ":b"))
+    val cont = assignCells(a.select($"vec_id", $"v", $"cid".as("ca")), centsB)
+      .select($"ca", $"cid".as("cb"))
       .groupBy($"ca", $"cb").agg(count(lit(1)).as("nij")) // <= k² rows
       .localCheckpoint()
     val p1 = cont.agg(
@@ -602,17 +587,16 @@ object Similarity {
     * |dims|-row frame and each row slices the already-loaded vector (no
     * re-scan per width); rank windows are per (dims, query) partitions.
     * Like q29/q63 an EVAL op over a bounded query sample: cost is
-    * nQueries·|dims|·corpus, never corpus².
+    * NQueries·|dims|·corpus, never corpus².
     */
   def prefixDimRecall(embeddings: DataFrame, dims: Seq[Int] = Seq(8, 16, 32)): DataFrame = {
-    val nQueries = 5
     val k = 3
     import graft.functions.VectorFunctions.cosine_sim
     val spark = embeddings.sparkSession
     import spark.implicits.{localSeqToDatasetHolder, newIntEncoder}
     val e = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
       .localCheckpoint() // feeds the truth pass and the per-dim pass
-    val q = e.filter($"vec_id" < nQueries)
+    val q = e.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
     val dimsDf = dims.toDF("dims")
     val pairs = e.crossJoin(broadcast(q)).where($"vec_id" =!= $"query_id")
@@ -673,13 +657,12 @@ object Similarity {
     * committing to the projected route, exactly like q116.
     */
   def projectedAnnRecall(embeddings: DataFrame, overfetch: Int = 3): DataFrame = {
-    val nQueries = 5
     val k = 3
     import graft.functions.VectorFunctions.cosine_sim
     val corpus = embeddings
       .select($"vec_id", asDouble($"embedding").as("v"))
       .select($"vec_id", $"v", projectArray($"v").as("pv"))
-    val queries = corpus.filter($"vec_id" < nQueries)
+    val queries = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"pv".as("qpv"))
     val wc = Window.partitionBy($"query_id").orderBy($"pcos".desc, $"neighbor_id")
     val wr = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
@@ -694,7 +677,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(wr))
       .filter($"rnk" <= k)
       .select($"query_id", $"neighbor_id")
-    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
+    recallAgainstTruth(cosineTopK(embeddings, k), approx, k)
   }
 
   val NumPlanes = 8
@@ -746,7 +729,7 @@ object Similarity {
     * neighbor that misses the exact bucket most likely flipped exactly one
     * low-margin plane bit.
     */
-  def lshCosineTopK(embeddings: DataFrame, nQueries: Int = 5, k: Int = 3,
+  def lshCosineTopK(embeddings: DataFrame, k: Int = 3,
       maxHamming: Int = 1): DataFrame = {
     val corpus = embeddings
       .select($"vec_id", asDouble($"embedding").as("v"))
@@ -761,7 +744,7 @@ object Similarity {
     // cheap on the driver
     val masks: Seq[Long] = (0 to maxHamming).flatMap(h =>
       (0 until NumPlanes).combinations(h).map(_.foldLeft(0L)((m, b) => m | (1L << b))))
-    val queries = corpus.filter($"vec_id" < nQueries)
+    val queries = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"),
         explode(array(masks.map(m => $"bucket".bitwiseXOR(lit(m))): _*)).as("qbucket"))
     val scored = corpus
@@ -782,16 +765,15 @@ object Similarity {
     *
     * Both sides are the already-registered operators (q29/q30 shapes); the
     * report is a left join from truth to the approximate result over
-    * (query, neighbor) — k*nQueries rows, negligible at any corpus size
+    * (query, neighbor) — k*NQueries rows, negligible at any corpus size
     * (the expensive parts are the underlying searches, each already
     * scale-shaped).
     */
   def annRecall(embeddings: DataFrame): DataFrame = {
-    val nQueries = 5
     val k = 3
     recallAgainstTruth(
-      cosineTopK(embeddings, nQueries, k),
-      lshCosineTopK(embeddings, nQueries, k, 1), k)
+      cosineTopK(embeddings, k),
+      lshCosineTopK(embeddings, k, 1), k)
   }
 
   /** Ideal-DCG@k in integer micro-units under graded relevance
@@ -820,15 +802,14 @@ object Similarity {
     * DCG terms quantize to integer micro-units (round(1e6·rel/log2(i+1)),
     * the PSI trick — libm's 1-ulp log2 jitter sits ~1e2 micro-units from
     * any rounding boundary), so per-query sums are order-free and the
-    * final score is a ratio of integers. Same k·nQueries-row cost shape
+    * final score is a ratio of integers. Same k·NQueries-row cost shape
     * as annRecall.
     */
   def annNdcg(embeddings: DataFrame): DataFrame = {
-    val nQueries = 5
     val k = 3
     val truthK = 5
-    val approx = lshCosineTopK(embeddings, nQueries, k)
-    val truth = cosineTopK(embeddings, nQueries, truthK)
+    val approx = lshCosineTopK(embeddings, k)
+    val truth = cosineTopK(embeddings, truthK)
     val idcg = ndcgIdcgMicro(k, truthK)
     approx.as("a")
       .join(truth.select($"query_id", $"neighbor_id", $"rnk".as("trnk")),
@@ -843,7 +824,7 @@ object Similarity {
   }
 
   /** Recall@k of an approximate result against the exact top-k: a left
-    * join over (query, neighbor) — k*nQueries rows, negligible at any
+    * join over (query, neighbor) — k*NQueries rows, negligible at any
     * corpus size.
     */
   private def recallAgainstTruth(truth: DataFrame, approx: DataFrame, k: Int): DataFrame =
@@ -881,7 +862,6 @@ object Similarity {
     * the native fused-loop cosine.
     */
   def quantizedAnnRecall(embeddings: DataFrame): DataFrame = {
-    val nQueries = 5
     val k = 3
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
     val maxabs = aggregate($"v", lit(0.0), (acc, x) => greatest(acc, abs(x)))
@@ -892,7 +872,7 @@ object Similarity {
           transform($"v", x => (x * 127.0 / $"m").cast("long").cast("double")))
           .otherwise(transform($"v", x => lit(0.0))))
       .select($"vec_id", $"qv")
-    val qqueries = qcorpus.filter($"vec_id" < nQueries)
+    val qqueries = qcorpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"qv".as("qqv"))
     val scored = qcorpus
       .join(broadcast(qqueries), $"vec_id" =!= $"query_id")
@@ -903,7 +883,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter($"rnk" <= k)
       .select($"query_id", $"neighbor_id")
-    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
+    recallAgainstTruth(cosineTopK(embeddings, k), approx, k)
   }
 
   /** Product quantization + asymmetric distance (Jégou et al. 2011, the
@@ -917,7 +897,7 @@ object Similarity {
     * scan does no per-pair float vector math at all. The ADC ranking then
     * feeds the standard serving tail: the top-`shortlist` candidates per
     * query are re-ranked EXACTLY on their float vectors, so only
-    * shortlist×nQueries full vectors are ever touched. This is the
+    * shortlist×NQueries full vectors are ever touched. This is the
     * memory-layout endgame of ANN at 100 TB: 64-dim float64 (512 B) → 8
     * code bytes (64× compression) for the scan, floats only for the
     * shortlist.
@@ -926,7 +906,7 @@ object Similarity {
     * assignments ride a single `explode`) + one (m×codes)-group shuffle;
     * the driver holds only the m×codes×subDim codebook. Encoding is one
     * corpus pass emitting m code columns (the stored table). The ADC
-    * tables are a driver-built m×codes×nQueries frame that enters the
+    * tables are a driver-built m×codes×NQueries frame that enters the
     * scan as a BROADCAST equi-join on (subspace, code) — no giant literal
     * CASE, no shuffle of the code table. The exact re-rank touches only
     * the shortlist semi-join. The trained model is session-cached by
@@ -951,9 +931,8 @@ object Similarity {
     val m = 8
     val codes = 16
     val shortlist = 50
-    val nQueries = 5
     val k = 3
-    val mdl = pqModelFor(embeddings, m, codes, 2, nQueries)
+    val mdl = pqModelFor(embeddings, m, codes, 2)
     // the full-scan ADC ranking: every stored code row meets its query's
     // broadcast dot-table
     val adcScores = mdl.codesLong
@@ -961,8 +940,8 @@ object Similarity {
       .filter($"vec_id" =!= $"query_id")
       .groupBy($"query_id", $"vec_id".as("neighbor_id"))
       .agg(round(sum($"t"), 6).as("adc"))
-    val approx = pqShortlistRerank(mdl.corpus, adcScores, shortlist, nQueries, k)
-    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
+    val approx = pqShortlistRerank(mdl.corpus, adcScores, shortlist, k)
+    recallAgainstTruth(cosineTopK(embeddings, k), approx, k)
   }
 
   /** Session-cached trained PQ model — (checkpointed corpus, encoded
@@ -982,11 +961,11 @@ object Similarity {
   private val PqModels = new SessionArtifacts.Kind[PqModel]
 
   private def pqModelFor(embeddings: DataFrame, m: Int, codes: Int,
-      iters: Int, nQueries: Int): PqModel =
-    SessionArtifacts.getOrBuild(PqModels, embeddings, m, codes, iters, nQueries) {
+      iters: Int): PqModel =
+    SessionArtifacts.getOrBuild(PqModels, embeddings, m, codes, iters) {
       val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
         .localCheckpoint() // scanned per Lloyd round + encode + re-rank
-      val (codesLong, adcTables, books) = pqModel(corpus, m, codes, iters, nQueries)
+      val (codesLong, adcTables, books) = pqModel(corpus, m, codes, iters)
       PqModel(corpus, codesLong.localCheckpoint(), adcTables, books)
     }
 
@@ -997,11 +976,11 @@ object Similarity {
     *    codes per vector unpivoted for the ADC join (the stored table);
     *  - `adcTables(query_id, s, cid, t)` — the driver-built per-query
     *    dot tables, `t = round₆(dot(q_s, codeword_{s,cid}))`, an
-    *    (nQueries × m × codes)-row broadcast side.
+    *    (NQueries × m × codes)-row broadcast side.
     * Training and determinism are documented on `pqAnnRecall`.
     */
-  private def pqModel(corpus: DataFrame, m: Int, codes: Int, iters: Int,
-      nQueries: Int): (DataFrame, DataFrame, Array[Array[(Long, Array[Double])]]) = {
+  private def pqModel(corpus: DataFrame, m: Int, codes: Int,
+      iters: Int): (DataFrame, DataFrame, Array[Array[(Long, Array[Double])]]) = {
     def round6(x: Double): Double = graft.functions.Rounding.halfUp(x, 6)
     val spark = corpus.sparkSession
     // one md5-coreset seed draw shared by all subspaces (sliced per s);
@@ -1074,14 +1053,14 @@ object Similarity {
     // encode: ONE corpus pass, (vec_id, s, cid) — the stored code table
     val codesLong = assigned(books, carrySv = false)
       .select($"vec_id", $"s", $"cid")
-    (codesLong, buildAdcTables(corpus, books, nQueries), books)
+    (codesLong, buildAdcTables(corpus, books), books)
   }
 
   /** Driver-side ADC tables from the bounded query set → broadcast frame:
     * t = round₆(dot(q_s, codeword_{s,cid})) per (query, subspace, code).
     */
   private def buildAdcTables(corpus: DataFrame,
-      books: Array[Array[(Long, Array[Double])]], nQueries: Int): DataFrame = {
+      books: Array[Array[(Long, Array[Double])]]): DataFrame = {
     def round6(x: Double): Double = graft.functions.Rounding.halfUp(x, 6)
     val m = books.length
     val subDim = books(0)(0)._2.length
@@ -1090,7 +1069,7 @@ object Similarity {
       while (i < a.length) { acc += a(i) * b(i); i += 1 }
       acc
     }
-    val qVecs = corpus.filter($"vec_id" < nQueries).select($"vec_id", $"v")
+    val qVecs = corpus.filter($"vec_id" < NQueries).select($"vec_id", $"v")
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
     corpus.sparkSession.createDataFrame(for {
       (qid, qv) <- qVecs.toSeq
@@ -1103,17 +1082,17 @@ object Similarity {
   /** The PQ serving tail shared by the full-scan and IVF-pruned paths:
     * top-`shortlist` per query by (adc desc, id), then exact rounded
     * cosine re-rank of the shortlist only — floats touched for
-    * shortlist×nQueries vectors, never the whole corpus. Returns the
+    * shortlist×NQueries vectors, never the whole corpus. Returns the
     * approx (query_id, neighbor_id) top-k set.
     */
   private def pqShortlistRerank(corpus: DataFrame, adcScores: DataFrame,
-      shortlist: Int, nQueries: Int, k: Int): DataFrame = {
+      shortlist: Int, k: Int): DataFrame = {
     val wAdc = Window.partitionBy($"query_id").orderBy($"adc".desc, $"neighbor_id")
     val short = adcScores
       .withColumn("rnk", row_number().over(wAdc))
       .filter($"rnk" <= shortlist)
       .select($"query_id", $"neighbor_id")
-    val queries = corpus.filter($"vec_id" < nQueries)
+    val queries = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
     val rer = short
       .join(corpus.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
@@ -1162,14 +1141,12 @@ object Similarity {
   def ivfPqAnnRecall(embeddings: DataFrame, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
     val codes = 16
     val shortlist = 50
-    val nQueries = 5
     val k = 3
-    val mdl = pqModelFor(embeddings, 8, codes, 2, nQueries)
+    val mdl = pqModelFor(embeddings, 8, codes, 2)
     val cents = md5Coreset(mdl.corpus, nCentroids)
-    val assigned = mdl.corpus
-      .withColumn("a", least(cellStructs(cents, $"v"): _*))
-      .select($"vec_id", $"a.cid".as("centroid_id"))
-    val probes = mdl.corpus.filter($"vec_id" < nQueries)
+    val assigned = assignCells(mdl.corpus, cents)
+      .select($"vec_id", $"cid".as("centroid_id"))
+    val probes = mdl.corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"),
         explode(probeCellsExpr(cents, $"v", nProbe)).as("centroid_id"))
     // the inverted-list probe: (query, candidate) pairs from probed cells,
@@ -1183,8 +1160,8 @@ object Similarity {
       .join(broadcast(mdl.adcTables), Seq("query_id", "s", "cid"))
       .groupBy($"query_id", $"vec_id".as("neighbor_id"))
       .agg(round(sum($"t"), 6).as("adc"))
-    val approx = pqShortlistRerank(mdl.corpus, adcScores, shortlist, nQueries, k)
-    recallAgainstTruth(cosineTopK(embeddings, nQueries, k), approx, k)
+    val approx = pqShortlistRerank(mdl.corpus, adcScores, shortlist, k)
+    recallAgainstTruth(cosineTopK(embeddings, k), approx, k)
   }
 
   /** Persist the trained PQ/IVF-PQ serving bundle — the artifacts a
@@ -1201,7 +1178,7 @@ object Similarity {
   def writePqIndex(embeddings: DataFrame, dir: String): Unit = {
     val m = 8
     val codes = 16
-    val mdl = pqModelFor(embeddings, m, codes, 2, 5)
+    val mdl = pqModelFor(embeddings, m, codes, 2)
     val spark = embeddings.sparkSession
     spark.createDataFrame(for {
       s <- 0 until m; (cid, cw) <- mdl.books(s)
@@ -1212,8 +1189,8 @@ object Similarity {
     spark.createDataFrame(cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) })
       .toDF("cid", "cv")
       .write.mode("overwrite").parquet(s"$dir/centroids")
-    mdl.corpus.withColumn("a", least(cellStructs(cents, $"v"): _*))
-      .select($"vec_id", $"a.cid".as("centroid_id"))
+    assignCells(mdl.corpus, cents)
+      .select($"vec_id", $"cid".as("centroid_id"))
       .write.mode("overwrite").parquet(s"$dir/ivflists")
     // build-slice fingerprint (q242 staleness contract): a PQ index is
     // the longest-lived artifact in the family — codes built from a
@@ -1221,109 +1198,21 @@ object Similarity {
     Governance.writeFingerprint(embeddings, Governance.embCanonical, dir)
   }
 
-  /** The `nProbe` nearest coarse cells of a query-vector column, by the
-    * SAME rounded-argmin structs every batch IVF path probes with —
-    * returns array<long> of centroid ids.
-    */
-  def probeCellsExpr(cents: Array[(Long, Array[Double])], v: Column,
-      nProbe: Int): Column =
-    transform(slice(array_sort(array(cellStructs(cents, v): _*)), 1, nProbe),
-      p => p.getField("cid"))
-
   /** IVF (inverted-file) ANN — the second scale path beside LSH: partition
-    * the corpus into `nCentroids` cells by nearest centroid, then scan only
-    * the `nProbe` cells nearest each query. Candidate volume is
-    * ~corpus * nProbe / nCentroids regardless of dimension — the classic
+    * the corpus into 16 cells by nearest centroid, then scan only the
+    * `nProbe` cells nearest each query. Candidate volume is
+    * ~corpus * nProbe / cells regardless of dimension — the classic
     * partition-pruned ANN shape.
     *
-    * Centroids here are a deterministic pseudo-random coreset (the
-    * `nCentroids` corpus vectors with the smallest md5(vec_id), a
-    * TakeOrderedAndProject — no full sort), which keeps every step exactly
-    * reproducible by the DuckDB oracle. At 100 TB the selection step is a
-    * k-means|| training job — `kmeansParallelInit` (+ Lloyd rounds) is that
-    * path; the serving path below — broadcast the centroid table, codegen'd
-    * per-row argmin, equi-join on cell id — is identical either way.
-    *
-    * Assignment is a `least()` over per-centroid (rounded-negated-cosine,
-    * centroid-id) structs built from the native fused cosine — one
-    * codegen'd expression per row, no corpus x centroid join, ties broken
-    * by centroid id.
+    * Centroids are the deterministic md5 coreset ([[md5Coreset]]), which
+    * keeps every step exactly reproducible by the DuckDB oracle. At
+    * 100 TB the selection step is a Lloyd training ([[kmeansModel]]); the
+    * serving path below — broadcast the centroid table, codegen'd per-row
+    * argmin ([[assignCells]]), equi-join on cell id — is identical either
+    * way.
     */
-  /** Deterministic pseudo-random coreset: the `k` corpus vectors with the
-    * smallest md5(vec_id) — a TakeOrderedAndProject, no full sort. Tiny by
-    * construction: collected and inlined as literals (the centroid table
-    * is the broadcast side of IVF serving / k-means assignment).
-    */
-  private def md5Coreset(corpus: DataFrame, k: Int): Array[(Long, Array[Double])] =
-    corpus
-      .select($"vec_id", $"v", md5($"vec_id".cast("string")).as("r"))
-      .orderBy($"r", $"vec_id").limit(k)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-
-  /** Lloyd refinement of a coarse-centroid set (the `kmeansClusters`
-    * update rule: rounded-cosine argmin assignment, per-dimension means
-    * rounded half-up at 6; empty cells keep their centroid) —
-    * `clusterStability`'s second, differently-seeded training.
-    */
-  private def lloydRefine(corpus: DataFrame,
-      cents0: Array[(Long, Array[Double])], iters: Int): Array[(Long, Array[Double])] = {
-    def round6(x: Double): Double = graft.functions.Rounding.halfUp(x, 6)
-    var cents = cents0
-    val vecSum = udaf(new graft.functions.Aggregators.VectorSum)
-    for (_ <- 1 to iters) {
-      val stats = corpus
-        .withColumn("a", least(cellStructs(cents, $"v"): _*))
-        .groupBy($"a.cid".as("cid"))
-        .agg(vecSum($"v").as("sv"), count(lit(1)).as("n"))
-        .collect()
-        .map(r => (r.getLong(0), (r.getSeq[Double](1), r.getLong(2)))).toMap
-      cents = cents.map { case (cid, old) =>
-        stats.get(cid) match {
-          case Some((sv, n)) => (cid, sv.map(x => round6(x / n)).toArray)
-          case None => (cid, old)
-        }
-      }
-    }
-    cents
-  }
-
-  /** Per-centroid (rounded-negated-cosine, centroid-id) structs for argmin
-    * assignment via `least()` — one codegen'd expression per row, no
-    * corpus×centroid join, ties broken by centroid id. Rounding before the
-    * comparison keeps assignment decisions reproducible across engines.
-    */
-  private def cellStructs(cents: Array[(Long, Array[Double])], v: Column): Seq[Column] = {
-    import graft.functions.VectorFunctions.cosine_sim
-    def centLit(c: Array[Double]): Column = array(c.map(lit(_)): _*)
-    cents.toSeq.map { case (cid, cv) =>
-      struct(round(-cosine_sim(v, centLit(cv)), 6).as("negcos"), lit(cid).as("cid"))
-    }
-  }
-
-  def ivfCosineTopK(embeddings: DataFrame, nProbe: Int = 2): DataFrame = {
-    import graft.functions.VectorFunctions.cosine_sim
-    val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val cents = md5Coreset(corpus, 16)
-    val assigned = corpus
-      .withColumn("a", least(cellStructs(cents, $"v"): _*))
-      .select($"vec_id", $"v", $"a.cid".as("centroid_id"))
-    val queries = corpus.filter($"vec_id" < 5)
-      .select($"vec_id".as("query_id"), $"v".as("qv"))
-      .select($"query_id", $"qv",
-        explode(probeCellsExpr(cents, $"qv", nProbe)).as("centroid_id"))
-    val scored = assigned
-      .join(broadcast(queries), Seq("centroid_id"))
-      .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id".as("neighbor_id"),
-        round(cosine_sim($"qv", $"v"), 6).as("cos"))
-    val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= 3)
-      .select($"query_id", $"neighbor_id", $"cos", $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
-  }
+  def ivfCosineTopK(embeddings: DataFrame, nProbe: Int = 2): DataFrame =
+    ivfTopK(embeddings.select($"vec_id", asDouble($"embedding").as("v")), nProbe, 3)
 
   /** Metadata-FILTERED IVF search: top-`k` by cosine among documents
     * satisfying a label predicate, served from the SAME index layout as
@@ -1342,15 +1231,21 @@ object Similarity {
     * The oracle replicates cells + predicate, so the gate checks the
     * real served answer, not a best-case one.
     */
-  def ivfFilteredTopK(embeddings: DataFrame, nProbe: Int = 2, k: Int = 3): DataFrame = {
+  def ivfFilteredTopK(embeddings: DataFrame, nProbe: Int = 2, k: Int = 3): DataFrame =
+    ivfTopK(embeddings.select($"vec_id", asDouble($"embedding").as("v"), $"label"),
+      nProbe, k, $"label" === 3)
+
+  /** The IVF probe-and-rank body: md5-coreset cells over `corpus`
+    * (`(vec_id, v, ...)`), the `keep` rows of each probed cell scored
+    * against the broadcast query probes, top-`k` per query.
+    */
+  private def ivfTopK(corpus: DataFrame, nProbe: Int, k: Int,
+      keep: Column = lit(true)): DataFrame = {
     import graft.functions.VectorFunctions.cosine_sim
-    val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"), $"label")
     val cents = md5Coreset(corpus, 16)
-    val assigned = corpus
-      .withColumn("a", least(cellStructs(cents, $"v"): _*))
-      .select($"vec_id", $"v", $"label", $"a.cid".as("centroid_id"))
-      .filter($"label" === 3)
-    val queries = corpus.filter($"vec_id" < 5)
+    val assigned = assignCells(corpus, cents).filter(keep)
+      .select($"vec_id", $"v", $"cid".as("centroid_id"))
+    val queries = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
       .select($"query_id", $"qv",
         explode(probeCellsExpr(cents, $"qv", nProbe)).as("centroid_id"))
@@ -1367,137 +1262,54 @@ object Similarity {
       .orderBy($"query_id", $"rnk")
   }
 
-  /** Lloyd-iteration k-means over the embedding corpus (cosine metric) —
-    * the semantic-clustering building block behind cluster-then-dedup and
-    * domain-discovery pipelines. Deterministic end to end: md5-coreset
-    * init (same seed rule as IVF; `init = "parallel"` switches to the
-    * k-means|| seeding below, the 100 TB path — the registered q70 oracle
-    * keeps the coreset so DuckDB replays it), `iters` fixed Lloyd rounds,
-    * centroids
-    * rounded to 6 decimals after every update so the assignment feedback
-    * loop is bit-reproducible across engines (summation order can wobble
-    * the last ulp; rounding quashes it before it can flip an assignment).
-    * Empty clusters keep their previous centroid.
-    *
-    * Scale shape, per iteration: ONE corpus scan; assignment is a
-    * codegen'd `least()` argmin over broadcast-literal centroids (no
-    * corpus×centroid join); the centroid update aggregates with the
-    * `VectorSum` UDAF, whose per-partition partial buffers mean the
-    * shuffle carries k×dim doubles per partition — never corpus×dim rows
-    * (the posexplode-by-dimension alternative). The driver holds only the
-    * k×dim centroid table between rounds — exactly what it must broadcast
-    * anyway. Output: per-cluster size and mean member cosine (cohesion).
-    *
-    * Known codegen ceiling (measured on the x3/x10 semdedup replicas,
-    * SURVEY §6.4; code at 56418f6):
-    * the broadcast-literal argmin stops whole-stage-codegenning around
-    * k·dim ≈ 10^4 (Janino's 64 KB method limit — k=160 at dim=64 falls
-    * back to interpreted evaluation: correct, logged, slower). A run
-    * needing k beyond that should assign via a broadcast centroid-TABLE
-    * join + `min(struct(negcos, cid))` aggregate instead — same
-    * semantics, k×n intermediate rows but map-side-combined.
+  // ---- the k-means / IVF cell kernel -----------------------------------------
+  //
+  // One copy of each part, shared by IVF serving, PQ's coarse quantizer,
+  // Lloyd training and every cell consumer: md5Coreset seeds, cellStructs
+  // feeds the one argmin (assignCells) and the probe lists
+  // (probeCellsExpr), trainCentroids is the one cosine Lloyd loop (PQ's
+  // per-subspace L2 codebooks train in pqModel), and kmeansModel is the
+  // one session artifact.
+
+  /** Deterministic pseudo-random coreset: the `k` corpus vectors with the
+    * smallest md5(vec_id || salt) — a TakeOrderedAndProject, no full sort.
+    * The empty salt is the registered seeding (IVF, PQ, Lloyd);
+    * `clusterStability` draws its second, independent seeding with ":b".
+    * Tiny by construction: collected and inlined as literals (the
+    * centroid table is the broadcast side of IVF serving / k-means
+    * assignment).
     */
-  /** k-means|| seeding (Bahmani et al., VLDB 2012) — the init that holds
-    * at 100 TB, where the md5 coreset's uniform draw can miss small far
-    * clusters entirely. Deterministic variant: seed with the min-md5
-    * vector, then for `rounds` passes oversample ~`oversample`*k
-    * candidates with probability proportional to their distance cost
-    * (1 - cosine to the nearest current candidate), using an
-    * md5-derived uniform per (vec_id, round) instead of rand() so every
-    * run draws the same candidates. Each pass is ONE distributed corpus
-    * scan against broadcast-literal candidates (same codegen'd `least()`
-    * argmin as IVF/Lloyd assignment); the driver holds only the candidate
-    * set — expectation `rounds*oversample*k + 1` vectors, hard-capped at
-    * 2*oversample*k per round by a deterministic bounded `limit`. The
-    * final reduction to k centers is the standard weighted step: weight
-    * candidates by attraction counts (one aggregation), then greedy
-    * weighted farthest-point selection over the tiny candidate set.
-    */
-  def kmeansParallelInit(embeddings: DataFrame, k: Int = 16): Array[(Long, Array[Double])] = {
-    val rounds = 2
-    val oversample = 2
-    val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val l = oversample * k
-    // least() needs >= 2 args; the first round runs against the single seed
-    def argmin(cs: Seq[Column]): Column = if (cs.sizeIs == 1) cs.head else least(cs: _*)
-    var cand = md5Coreset(corpus, 1)
-    for (r <- 1 to rounds) {
-      val withCost = corpus
-        .withColumn("a", argmin(cellStructs(cand, $"v")))
-        // cosine distance to the nearest candidate; negcos is the rounded
-        // negated cosine, so cost is deterministic to the last bit
-        .withColumn("cost", lit(1.0) + $"a.negcos")
-      val total = withCost.agg(sum($"cost")).collect()(0).getDouble(0)
-      // deterministic Bernoulli(min(1, l*cost/total)): u < l*cost/total
-      // with u an md5-derived uniform in [0,1) keyed by (vec_id, round)
-      val u = conv(
-        substring(md5(concat($"vec_id".cast("string"), lit(s":$r"))), 1, 15), 16, 10)
-        .cast("double") / math.pow(16.0, 15)
-      val drawn = withCost
-        .filter($"cost" > 0.0)
-        .filter(u * total < $"cost" * l)
-        // bounded collect: the expected draw is l; the cap is deterministic
-        // (most-overdrawn rows ranked by u*total/cost, ties by vec_id)
-        .orderBy((u * total / $"cost").asc, $"vec_id")
-        .limit(2 * l)
-        .select($"vec_id", $"v")
-        .collect().map(row => (row.getLong(0), row.getSeq[Double](1).toArray))
-      val seen = cand.map(_._1).toSet
-      cand = (cand ++ drawn.filterNot(c => seen(c._1))).sortBy(_._1)
-    }
-    // weight candidates by how much of the corpus they attract
-    val weights = corpus
-      .withColumn("a", argmin(cellStructs(cand, $"v")))
-      .groupBy($"a.cid".as("cid")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // greedy weighted farthest-point reduction to k (driver-side over the
-    // tiny candidate set): start from the heaviest candidate, then add the
-    // candidate maximizing weight * distance-to-chosen
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      dot / math.sqrt(na * nb)
-    }
-    val byWeight = cand.sortBy { case (cid, _) => (-weights.getOrElse(cid, 0L), cid) }
-    val chosen = scala.collection.mutable.ArrayBuffer(byWeight.head)
-    val rest = scala.collection.mutable.ArrayBuffer(byWeight.tail: _*)
-    while (chosen.size < k && rest.nonEmpty) {
-      val next = rest.maxBy { case (cid, v) =>
-        val dMin = chosen.map(c => 1.0 - cos(v, c._2)).min
-        (weights.getOrElse(cid, 0L).toDouble * dMin, -cid.toDouble)
-      }
-      chosen += next
-      rest -= next
-    }
-    chosen.sortBy(_._1).toArray
+  private def md5Coreset(corpus: DataFrame, k: Int,
+      salt: String = ""): Array[(Long, Array[Double])] = {
+    val key = $"vec_id".cast("string")
+    corpus
+      .select($"vec_id", $"v", md5(if (salt.isEmpty) key else concat(key, lit(salt))).as("r"))
+      .orderBy($"r", $"vec_id").limit(k)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
   }
 
-  def kmeansClusters(embeddings: DataFrame, init: String = "coreset"): DataFrame =
-    kmeansAssignments(embeddings, 16, 2, init)
-      .select($"cid", $"cos")
-      .groupBy($"cid")
-      .agg(count(lit(1)).as("n_members"), round(avg($"cos"), 6).as("cohesion"))
-      .orderBy($"cid")
-
-  /** The trained Lloyd assignment frame behind `kmeansClusters` /
-    * `semanticDedup` / `dbscanProfile` / the kNN-graph builds:
-    * `(vec_id, v, cid, cos)` after `iters` rounds. See `kmeansClusters`
-    * for the scale shape (k×dim shuffle partials, driver holds
-    * centroids only). SESSION-CACHED (round 13, the same plan-keyed
-    * pattern as the kNN graph one level up): q70/q100/q208 and the
-    * graph builds all train the identical (k=16, 2 rounds, coreset)
-    * model — one Lloyd train + one assignment join now serves them all.
+  /** Per-centroid (rounded-negated-cosine, centroid-id) structs for argmin
+    * assignment via `least()` — one codegen'd expression per row, no
+    * corpus×centroid join, ties broken by centroid id. Rounding before the
+    * comparison keeps assignment decisions reproducible across engines.
     */
-  private def kmeansAssignments(embeddings: DataFrame, k: Int, iters: Int,
-      init: String): DataFrame = {
-    SessionArtifacts.getOrBuild(Assignments, embeddings, k, iters, init) {
-      val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-        .localCheckpoint() // scanned once per Lloyd round + final report
-      val cents = trainCentroids(embeddings, corpus, k, iters, init)
-      assignCells(corpus, cents, wide = cents.length > WideDial).localCheckpoint()
+  private def cellStructs(cents: Array[(Long, Array[Double])], v: Column): Seq[Column] = {
+    import graft.functions.VectorFunctions.cosine_sim
+    def centLit(c: Array[Double]): Column = array(c.map(lit(_)): _*)
+    cents.toSeq.map { case (cid, cv) =>
+      struct(round(-cosine_sim(v, centLit(cv)), 6).as("negcos"), lit(cid).as("cid"))
     }
   }
+
+  /** The `nProbe` nearest coarse cells of a query-vector column, by the
+    * SAME rounded-argmin structs every batch IVF path probes with —
+    * returns array<long> of centroid ids.
+    */
+  def probeCellsExpr(cents: Array[(Long, Array[Double])], v: Column,
+      nProbe: Int): Column =
+    transform(slice(array_sort(array(cellStructs(cents, v): _*)), 1, nProbe),
+      p => p.getField("cid"))
 
   /** Expression-width cliff guard for the argmin assignment. A
     * `least()` over k (negcos, cid) structs compiles to ONE k-wide
@@ -1508,77 +1320,133 @@ object Similarity {
     * kCells=142 took 111 s where 245 took 16 s (SURVEY §6.15). Beyond
     * `WideDial` cells the assignment therefore switches to a
     * broadcast-join + struct-min form: one narrow codegen'd cosine per
-    * (vector, centroid) row, a partial-aggregated min(struct) argmin,
-    * and a join back to the checkpointed corpus — row-proportional at
-    * ANY dial, the shape a 1000-executor run needs. Both forms compute
-    * the identical (round6(-cos), cid) minimum (PipelineSpec proves
+    * (vector, centroid) row, a partial-aggregated min(struct) argmin
+    * carrying the other columns with `first` — row-proportional at ANY
+    * dial, the shape a 1000-executor run needs. Both forms compute the
+    * identical (round6(-cos), cid) minimum (PipelineSpec proves
     * bit-equality), so registered narrow-dial queries keep their exact
     * plans.
     */
   private val WideDial = 32
 
+  /** The one nearest-centroid argmin: `corpus` (`(vec_id, v, ...)`) with
+    * `cid` (nearest centroid, ties to the smaller id) and `cos` (its
+    * rounded cosine) appended. `wide` forces the join form, which is
+    * used regardless beyond `WideDial` centroids.
+    */
   private[graft] def assignCells(corpus: DataFrame,
-      cents: Array[(Long, Array[Double])], wide: Boolean): DataFrame = {
+      cents: Array[(Long, Array[Double])], wide: Boolean = false): DataFrame = {
     import graft.functions.VectorFunctions.cosine_sim
-    if (!wide)
-      corpus
-        .withColumn("a", least(cellStructs(cents, $"v"): _*))
-        .select($"vec_id", $"v", $"a.cid".as("cid"), (-$"a.negcos").as("cos"))
+    val cols = corpus.columns.toSeq.map(col)
+    val cell = Seq($"a.cid".as("cid"), (-$"a.negcos").as("cos"))
+    if (!wide && cents.length <= WideDial)
+      corpus.withColumn("a", least(cellStructs(cents, $"v"): _*)).select(cols ++ cell: _*)
     else {
       val spark = corpus.sparkSession
       import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
       val cf = cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
         .toDF("ccid", "cv")
-      // r15: v rides the argmin aggregation (`first` over rows that all
-      // carry the same v) instead of a corpus re-join — two exchanges
-      // fewer per assignment pass, and the Lloyd loop runs one of these
-      // per round. min(struct) ties are impossible (cid is unique), so
-      // first(v) is deterministic.
+      // the other columns ride the argmin aggregation (`first` over rows
+      // that all carry the same values) instead of a corpus re-join — two
+      // exchanges fewer per assignment pass, and the Lloyd loop runs one
+      // of these per round. min(struct) ties are impossible (cid is
+      // unique), so `first` is deterministic.
+      val carried = corpus.columns.toSeq.filter(_ != "vec_id").map(c => first(col(c)).as(c))
       corpus.join(broadcast(cf))
-        .select($"vec_id", $"v",
-          struct(round(-cosine_sim($"v", $"cv"), 6).as("negcos"),
-            $"ccid".as("cid")).as("a"))
-        .groupBy($"vec_id").agg(min($"a").as("a"), first($"v").as("v"))
-        .select($"vec_id", $"v", $"a.cid".as("cid"), (-$"a.negcos").as("cos"))
+        .select(cols :+ struct(round(-cosine_sim($"v", $"cv"), 6).as("negcos"),
+          $"ccid".as("cid")).as("a"): _*)
+        .groupBy($"vec_id").agg(min($"a").as("a"), carried: _*)
+        .select(cols ++ cell: _*)
     }
   }
 
-  /** The Lloyd training loop behind `kmeansAssignments` /
-    * `facilityLocationSelect`: `iters` rounds of argmin assignment +
-    * rounded per-dimension mean updates over `corpus` (pre-projected
-    * `(vec_id, v)`, ideally checkpointed by the caller — it is scanned
-    * once per round). Driver holds k×dim doubles, nothing else.
+  /** Lloyd rounds of every k-means training. */
+  private val LloydIters = 2
+
+  /** The one cosine Lloyd loop: from `seeds`, `LloydIters` rounds of argmin
+    * assignment + per-dimension mean updates rounded half-up at 6, so
+    * the assignment feedback loop is bit-reproducible across engines
+    * (summation order can wobble the last ulp; rounding quashes it before
+    * it can flip an assignment). Empty cells keep their centroid.
+    * `corpus` is a pre-projected `(vec_id, v)` frame the caller has
+    * checkpointed — it is scanned once per round.
+    *
+    * Scale shape, per round: ONE corpus scan; the centroid update
+    * aggregates with the `VectorSum` UDAF, whose per-partition partial
+    * buffers mean the shuffle carries k×dim doubles per partition — never
+    * corpus×dim rows. The driver holds only the k×dim centroid table
+    * between rounds — exactly what it must broadcast anyway.
     */
-  private def trainCentroids(embeddings: DataFrame, corpus: DataFrame, k: Int,
-      iters: Int, init: String): Array[(Long, Array[Double])] = {
-    // Session-cached like the frames above (round 13): q209/q210/q174
-    // and the assignment path all train the same (16, 2, coreset) model
-    // per corpus per session — the trained model is k×dim DRIVER-side
-    // doubles (the Lloyd's-on-Spark contract), so the cache holds
-    // values, not frames, and `iters` full corpus scans are paid once.
-    SessionArtifacts.getOrBuild(Centroids, embeddings, k, iters, init) {
-      def round6(x: Double): Double = graft.functions.Rounding.halfUp(x, 6)
-      val vecSum = udaf(new graft.functions.Aggregators.VectorSum)
-      var cents = init match {
-        case "parallel" => kmeansParallelInit(embeddings, k)
-        case _ => md5Coreset(corpus, k)
-      }
-      for (_ <- 1 to iters) {
-        val stats = assignCells(corpus, cents, wide = cents.length > WideDial)
-          .groupBy($"cid")
-          .agg(vecSum($"v").as("s"), count(lit(1)).as("n"))
-          .collect()
-          .map(r => r.getLong(0) -> ((r.getSeq[Double](1), r.getLong(2)))).toMap
-        cents = cents.map { case (cid, old) =>
-          stats.get(cid) match {
-            case Some((s, n)) => (cid, s.map(x => round6(x / n)).toArray)
-            case None => (cid, old) // empty cluster: centroid unchanged
-          }
+  private def trainCentroids(corpus: DataFrame,
+      seeds: Array[(Long, Array[Double])]): Array[(Long, Array[Double])] = {
+    def round6(x: Double): Double = graft.functions.Rounding.halfUp(x, 6)
+    val vecSum = udaf(new graft.functions.Aggregators.VectorSum)
+    var cents = seeds
+    for (_ <- 1 to LloydIters) {
+      val stats = assignCells(corpus, cents)
+        .groupBy($"cid")
+        .agg(vecSum($"v").as("s"), count(lit(1)).as("n"))
+        .collect()
+        .map(r => r.getLong(0) -> ((r.getSeq[Double](1), r.getLong(2)))).toMap
+      cents = cents.map { case (cid, old) =>
+        stats.get(cid) match {
+          case Some((s, n)) => (cid, s.map(x => round6(x / n)).toArray)
+          case None => (cid, old) // empty cluster: centroid unchanged
         }
       }
-      cents
     }
+    cents
   }
+
+  /** A trained k-means partition of one corpus: the centroids (k×dim
+    * DRIVER-side doubles) and the checkpointed assignment frame
+    * `(vec_id, v, cid, cos)`.
+    */
+  private case class KMeansModel(cents: Array[(Long, Array[Double])],
+      assignments: DataFrame)
+
+  // (corpus, k) -> trained centroids + checkpointed assignments
+  private val KMeansModels = new SessionArtifacts.Kind[KMeansModel]
+
+  /** The session-cached k-means model of a corpus: md5-coreset seeds,
+    * `trainCentroids` over the checkpointed corpus, one assignment pass,
+    * checkpointed. q70/q100/q174/q208/q209/q210 and the kNN-graph builds
+    * all read the (k=16) model — one corpus checkpoint, one training and
+    * one assignment pass per corpus per session serve them all (the
+    * plan-keyed pattern of the kNN graph one level up). Only unsalted
+    * trainings are cached; `clusterStability`'s salted side trains over
+    * this model's assignment frame.
+    */
+  private def kmeansModel(embeddings: DataFrame, k: Int): KMeansModel =
+    SessionArtifacts.getOrBuild(KMeansModels, embeddings, k) {
+      val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
+        .localCheckpoint() // scanned once per Lloyd round + the assignment pass
+      val cents = trainCentroids(corpus, md5Coreset(corpus, k))
+      KMeansModel(cents, assignCells(corpus, cents).localCheckpoint())
+    }
+
+  /** Lloyd-iteration k-means over the embedding corpus (cosine metric) —
+    * the semantic-clustering building block behind cluster-then-dedup and
+    * domain-discovery pipelines: the 16-cell [[kmeansModel]], reported as
+    * per-cluster size and mean member cosine (cohesion). Deterministic end
+    * to end (md5-coreset seeds, [[trainCentroids]]' rounded updates), so
+    * the DuckDB oracle replays it.
+    *
+    * Known codegen ceiling (measured on the x3/x10 semdedup replicas,
+    * SURVEY §6.4; code at 56418f6): the broadcast-literal argmin stops
+    * whole-stage-codegenning around k·dim ≈ 10^4 (Janino's 64 KB method
+    * limit — k=160 at dim=64 falls back to interpreted evaluation:
+    * correct, logged, slower); beyond `WideDial` cells [[assignCells]]
+    * takes the broadcast centroid-TABLE join + `min(struct(negcos, cid))`
+    * form instead — same semantics, k×n intermediate rows but
+    * map-side-combined.
+    */
+  def kmeansClusters(embeddings: DataFrame): DataFrame =
+    kmeansModel(embeddings, 16).assignments
+      .select($"cid", $"cos")
+      .groupBy($"cid")
+      .agg(count(lit(1)).as("n_members"), round(avg($"cos"), 6).as("cohesion"))
+      .orderBy($"cid")
 
   /** Submodular (facility-location) coreset selection — the data-selection
     * operator behind "pick the `nSel` most REPRESENTATIVE exemplars":
@@ -1589,8 +1457,8 @@ object Similarity {
     * Scale shape (the GreeDi/coreset pattern, Mirzasoleiman et al. 2013):
     * exact greedy over the raw corpus is n² per round, so the ground set
     * is the TRAINED k-means coreset — the corpus-proportional work is the
-    * Lloyd training + one weighting scan (`trainCentroids`, k×dim shuffle
-    * partials), after which candidates, weights, and the k×k similarity
+    * session [[kmeansModel]] (Lloyd training, k×dim shuffle partials) +
+    * one cell-count aggregate over its assignment frame, after which candidates, weights, and the k×k similarity
     * matrix are driver-bounded and the nSel greedy rounds are k²·nSel
     * driver flops. At 100 TB k grows with the corpus; the driver state
     * stays k×dim + k².
@@ -1610,12 +1478,10 @@ object Similarity {
     val nSel = 5
     import graft.functions.VectorFunctions.cosine_sim
     val spark0 = embeddings.sparkSession
-    val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-      .localCheckpoint() // scanned by training rounds + the weighting pass
-    val cents = trainCentroids(embeddings, corpus, k, 2, "coreset")
-    val cellW: Map[Long, Long] = corpus
-      .withColumn("a", least(cellStructs(cents, $"v"): _*))
-      .groupBy($"a.cid".as("cid")).agg(count(lit(1)).as("n"))
+    val model = kmeansModel(embeddings, k)
+    val cents = model.cents
+    val cellW: Map[Long, Long] = model.assignments
+      .groupBy($"cid").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // k×k rounded sims via the proven fused expression (not a JVM loop),
     // so every comparison the greedy makes is engine-exact vs the oracle
@@ -1672,7 +1538,7 @@ object Similarity {
   def semanticDedup(embeddings: DataFrame): DataFrame = {
     val k = 16
     val tau = 0.45
-    val a = kmeansAssignments(embeddings, k, 2, "coreset")
+    val a = kmeansModel(embeddings, k).assignments
       .select($"vec_id", $"v", $"cid")
       .localCheckpoint() // self-joined + aggregated below
     a.groupBy($"cid").agg(count(lit(1)).as("n_members"))
@@ -1783,9 +1649,8 @@ object Similarity {
     * query, shuffle_hash verify pins and all.
     */
   def productionNearDup(embeddings: DataFrame): DataFrame = {
-    val nPlanted = 100L
     val base = embeddings.select($"vec_id", asDouble($"embedding").as("embedding"))
-    embeddingNearDup(base.unionByName(plantedNearDupTwins(embeddings, nPlanted)),
+    embeddingNearDup(base.unionByName(plantedNearDupTwins(embeddings)),
       0.9, 24, 12)
   }
 
@@ -1794,7 +1659,8 @@ object Similarity {
     * banded path under test. vec_id' = vec_id + 9e7 (disjoint from any
     * fixture id space); embedding' as documented above, in DOUBLE.
     */
-  def plantedNearDupTwins(embeddings: DataFrame, nPlanted: Long = 100L): DataFrame = {
+  def plantedNearDupTwins(embeddings: DataFrame): DataFrame = {
+    val nPlanted = 100L
     val base = embeddings.select($"vec_id", asDouble($"embedding").as("embedding"))
     val dim = size($"embedding")
     val half = (dim / lit(2)).cast("int")
@@ -1841,10 +1707,6 @@ object Similarity {
   private val PairIndexes = new SessionArtifacts.Kind[DataFrame]
   // (corpus, k, resolved kCells) -> checkpointed kNN graph
   private val KnnGraphs = new SessionArtifacts.Kind[DataFrame]
-  // (corpus, k, iters, init) -> checkpointed Lloyd assignments
-  private val Assignments = new SessionArtifacts.Kind[DataFrame]
-  // (corpus, k, iters, init) -> trained centroids (k x dim DRIVER-side doubles)
-  private val Centroids = new SessionArtifacts.Kind[Array[(Long, Array[Double])]]
 
   /** The session-cached hyperplane bucket index of a corpus. */
   def hyperplaneIndex(embeddings: DataFrame, tables: Int = NeardupTables,

@@ -318,7 +318,7 @@ object TextAnalysis {
   }
 
   /** BM25 retrieval scoring: rank documents against a fixed query-term
-    * set (Lucene-form idf, k1/b defaults) and return the global top-k —
+    * set (Lucene-form idf, k1 = 1.2, b = 0.75) and return the global top-k —
     * the lexical-retrieval half of a RAG pipeline, beside the ANN ops.
     *
     * Shape: term frequencies only for the |Q| query terms (the explode is
@@ -332,22 +332,25 @@ object TextAnalysis {
     * order rides on the rounding.
     */
   def bm25TopDocs(documents: DataFrame, query: Seq[String] = Seq("table", "data", "row"),
-      k1: Double = 1.2, b: Double = 0.75, topk: Int = 20): DataFrame = {
+      topk: Int = 20): DataFrame = {
     val dl = documents.select($"doc_id", size(split($"text", " ")).cast("long").as("dl"))
     val tf = documents
       .select($"doc_id", explode(split($"text", " ")).as("term"))
       .filter($"term".isin(query: _*))
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("tf"))
-    bm25Rank(tf, dl, k1, b, topk)
+    bm25Rank(tf, dl, topk)
   }
 
   /** Shared BM25 ranking core: identical expressions whether `tf`/`dl`
-    * come from a live corpus scan (q79) or from tombstoned index rows
-    * (q163, `Governance.erasureBm25`).
+    * come from a live corpus scan (q79, q138's expanded query) or from
+    * tombstoned index rows (q163, `Governance.erasureBm25`); the score
+    * column is `score`.
     */
-  private[operators] def bm25Rank(tf: DataFrame, dl: DataFrame,
-      k1: Double, b: Double, topk: Int): DataFrame = {
+  private[operators] def bm25Rank(tf: DataFrame, dl: DataFrame, topk: Int,
+      score: String = "bm25"): DataFrame = {
+    val k1 = 1.2 // term-frequency saturation
+    val b = 0.75 // length normalization
     val stats = dl.agg(count(lit(1)).as("n"), avg($"dl").as("avgdl"))
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
     tf
@@ -358,8 +361,8 @@ object TextAnalysis {
         (log(($"n" - $"df" + 0.5) / ($"df" + 0.5) + 1) * $"tf" * lit(k1 + 1) /
           ($"tf" + lit(k1) * (lit(1 - b) + lit(b) * $"dl" / $"avgdl"))).as("s"))
       .groupBy($"doc_id")
-      .agg(round(sum($"s"), 4).as("bm25"))
-      .orderBy($"bm25".desc, $"doc_id")
+      .agg(round(sum($"s"), 4).as(score))
+      .orderBy(col(score).desc, $"doc_id")
       .limit(topk)
   }
 
@@ -381,11 +384,9 @@ object TextAnalysis {
     val query = Seq("table", "data", "row")
     val fbDocs = 3
     val fbTerms = 2
-    val k1 = 1.2
-    val b = 0.75
     val spark = documents.sparkSession
     import spark.implicits.{localSeqToDatasetHolder, newStringEncoder}
-    val seedTop = bm25TopDocs(documents, query, k1, b, fbDocs)
+    val seedTop = bm25TopDocs(documents, query, fbDocs)
       .select($"doc_id")
     // q67's exact per-doc scores, but RANKED only inside the fbDocs
     // feedback partitions — df/N stay corpus-wide (tf-idf's inherent
@@ -411,20 +412,7 @@ object TextAnalysis {
       .select($"term")
     val expanded = query.toDF("term").unionAll(fb).distinct()
     val dl = documents.select($"doc_id", size(split($"text", " ")).cast("long").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n"), avg($"dl").as("avgdl"))
-    val tf = tfAll.join(broadcast(expanded), Seq("term"), "left_semi")
-    val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    tf
-      .join(broadcast(df), Seq("term"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .select($"doc_id",
-        (log(($"n" - $"df" + 0.5) / ($"df" + 0.5) + 1) * $"tf" * lit(k1 + 1) /
-          ($"tf" + lit(k1) * (lit(1 - b) + lit(b) * $"dl" / $"avgdl"))).as("s"))
-      .groupBy($"doc_id")
-      .agg(round(sum($"s"), 4).as("bm25x"))
-      .orderBy($"bm25x".desc, $"doc_id")
-      .limit(10)
+    bm25Rank(tfAll.join(broadcast(expanded), Seq("term"), "left_semi"), dl, 10, "bm25x")
   }
 
   /** Document-length histogram: fixed-width bins over `n_chars` with doc

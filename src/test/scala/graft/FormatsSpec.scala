@@ -194,6 +194,25 @@ class FormatsSpec extends GraftSuite {
     assert(!Files.exists(stale), "the earlier output must not survive a failed run")
   }
 
+  test("Verify: oracle_sql.json parses back to exactly the chosen oracles") {
+    // the subset: every oracle holding a character JSON must escape (a
+    // quote, a backslash or a control character), plus q01
+    val special = SparkEntry.oracleSql.collect {
+      case (k, v) if v.exists(c => c == '"' || c == '\\' || c < ' ') => k
+    }.toSet
+    val chosen = special + "q01_sum_by_group"
+    val sqls = chosen.toSeq.map(SparkEntry.oracleSql)
+    assert(sqls.exists(_.contains('"')) && sqls.exists(_.contains('\n')),
+      "escaping must be exercised")
+    val out = Files.createTempDirectory("graft_oracle_json")
+    Verify.writeOracleSql(out.toString, chosen)
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(out.resolve("oracle_sql.json").toFile,
+        classOf[java.util.LinkedHashMap[String, String]])
+    import scala.jdk.CollectionConverters._
+    assert(parsed.asScala.toMap === SparkEntry.oracleSql.filter { case (k, _) => chosen(k) })
+  }
+
   test("normalizeTsCol: NANOS-era bigint date reads back as the exact NTZ instant") {
     import graft.sources.Tables
     import spark.implicits.{localSeqToDatasetHolder, newLongEncoder}

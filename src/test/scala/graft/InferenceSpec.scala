@@ -1116,6 +1116,23 @@ class InferenceSpec extends GraftSuite {
       "a 30% lift must NOT be declared equivalent at a 5% margin")
   }
 
+  test("tostEquivalence compiles to generated code: no interpreted fallback (q283)") {
+    // a generated method past Janino's 64 KB limit fails to compile; with
+    // the fallback off that failure throws instead of silently switching
+    // the stage to interpreted evaluation
+    val key = "spark.sql.codegen.fallback"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val rows = Events.tostEquivalence(events).collect()
+      assert(rows.length === 1)
+      assert(!rows(0).isNullAt(9), "the fixture's arms must reach the p_tost branch")
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("labelerAgreement equals brute force; self-agreement kappa=1; directional disagreement rejects (q284)") {
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
     val cells = docs.select(col("n_chars"), col("text")).collect().map { r =>

@@ -109,7 +109,7 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("LSH ANN cos values agree with brute force on shared (query, neighbor) pairs") {
-    val brute = Similarity.cosineTopK(embs, nQueries = 5, k = 500)
+    val brute = Similarity.cosineTopK(embs, k = 500)
       .select($"query_id", $"neighbor_id", $"cos".as("cos_bf"))
     val lsh = Similarity.lshCosineTopK(embs)
     val joined = lsh.join(brute, Seq("query_id", "neighbor_id"), "left")
@@ -117,7 +117,7 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("IVF ANN: cos values exact on shared pairs; more probes never lower recall") {
-    val brute = Similarity.cosineTopK(embs, nQueries = 5, k = 500)
+    val brute = Similarity.cosineTopK(embs, k = 500)
       .select($"query_id", $"neighbor_id", $"cos".as("cos_bf"))
     val ivf = Similarity.ivfCosineTopK(embs)
     // every reported cosine is the exact brute-force value (IVF prunes
@@ -131,7 +131,7 @@ class PipelineSpec extends GraftSuite {
     val p1 = found(1); val p2 = found(2)
     assert((exact intersect p2).size >= (exact intersect p1).size,
       "probing more cells must not lower recall")
-    assert(exact === Similarity.cosineTopK(embs, nQueries = 5, k = 3)
+    assert(exact === Similarity.cosineTopK(embs, k = 3)
       .select($"query_id", $"neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
       "all-cells IVF must equal brute force")
   }
@@ -144,7 +144,7 @@ class PipelineSpec extends GraftSuite {
     // label-constrained cosine top-3 — derived from the COMPLETE brute
     // ranking (k = corpus size), filtered to the label, re-cut at 3 per
     // query (post-filtering a short brute list would run out of matches)
-    val exact = Similarity.cosineTopK(embs, nQueries = 5, k = 500)
+    val exact = Similarity.cosineTopK(embs, k = 500)
       .join(embs.select($"vec_id".as("neighbor_id"), $"label"), Seq("neighbor_id"))
       .filter($"label" === 3)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
@@ -173,7 +173,7 @@ class PipelineSpec extends GraftSuite {
     def found(df: org.apache.spark.sql.DataFrame) =
       df.select($"query_id", $"neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact  = found(Similarity.cosineTopK(embs, nQueries = 5, k = 3))
+    val exact  = found(Similarity.cosineTopK(embs, k = 3))
     val single = found(Similarity.lshCosineTopK(embs, maxHamming = 0))
     val multi  = found(Similarity.lshCosineTopK(embs, maxHamming = 1))
     assert(multi.size >= single.size, "probing more buckets cannot shrink the result")
@@ -1069,9 +1069,9 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("annRecall agrees with a manual truth-vs-approx set comparison") {
-    val truth = Similarity.cosineTopK(embs, nQueries = 5, k = 3).collect()
+    val truth = Similarity.cosineTopK(embs, k = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.lshCosineTopK(embs, nQueries = 5, k = 3).collect()
+    val approx = Similarity.lshCosineTopK(embs, k = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = truth.groupBy(_._1).map { case (q, ts) =>
       q -> ts.count(approx.contains).toLong
@@ -1199,26 +1199,6 @@ class PipelineSpec extends GraftSuite {
     // never a cartesian: the self-join is an equi-join on the cluster key
     val plan = Similarity.semanticDedup(embs).queryExecution.executedPlan.toString
     assert(!plan.contains("Cartesian"), s"cluster self-join must stay keyed:\n$plan")
-  }
-
-  test("kmeans parallel init: same clustering laws as coreset, cohesion not worse") {
-    import graft.operators.Similarity
-    val p1 = Similarity.kmeansClusters(embs, init = "parallel").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val p2 = Similarity.kmeansClusters(embs, init = "parallel").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(p1 === p2, "k-means|| seeding must be deterministic end to end")
-    assert(p1.map(_._2).sum === embs.count(), "every vector assigned once")
-    assert(p1.length <= 16 && p1.nonEmpty)
-    assert(p1.forall { case (_, _, c) => c >= -1.0001 && c <= 1.0001 })
-    // the cost-weighted draw should seed at least as well as the uniform
-    // coreset on the size-weighted mean member cosine
-    def meanCohesion(rows: Array[(Long, Long, Double)]): Double =
-      rows.map { case (_, n, c) => n * c }.sum / rows.map(_._2).sum
-    val coreset = Similarity.kmeansClusters(embs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(meanCohesion(p1) >= meanCohesion(coreset) - 0.02,
-      s"parallel-init cohesion ${meanCohesion(p1)} far below coreset ${meanCohesion(coreset)}")
   }
 
   test("facilityLocationSelect equals the full in-JVM greedy replication; gains diminish") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,9 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * deleting its last spec flags it too. Likewise an operator parameter
   * with a default exists only where some caller in `src/main` or
   * `src/test` passes it; a value no caller varies is a constant in the
-  * body. Two expressions have one home each: `spark_partition_id` is
+  * body. Some expressions have one home each: `spark_partition_id` is
   * only in `Scale.rangePrefixSums`, the 13-digit md5 coin only in
-  * `Scale.hexFraction`.
+  * `Scale.hexFraction`, the centroid structs only in
+  * `Similarity.assignCells` and `probeCellsExpr`, and the md5-ordered
+  * coreset draw only in `Similarity.md5Coreset`.
   */
 class RegisteredSurfaceSpec extends AnyFunSuite {
 
@@ -41,15 +44,16 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
     """\s+([A-Za-z_]\w*)""").r
   private val Ident = """[A-Za-z_]\w*""".r
 
-  private def code(p: Path): String =
+  private def code(p: Path, keepLiterals: Boolean): String =
     Literal.replaceAllIn(Files.readString(p), m =>
-      (if (m.matched.startsWith("/")) " " else " 0") + "\n" * m.matched.count(_ == '\n'))
+      if (keepLiterals && !m.matched.startsWith("/")) Regex.quoteReplacement(m.matched)
+      else (if (m.matched.startsWith("/")) " " else " 0") + "\n" * m.matched.count(_ == '\n'))
 
-  private def sources(dir: String): List[(Path, String)] = {
+  private def sources(dir: String, keepLiterals: Boolean = false): List[(Path, String)] = {
     val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
     Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).map(p => p -> code(p)).toList
+      .filter(_.toString.endsWith(".scala")).map(p => p -> code(p, keepLiterals)).toList
   }
 
   test("drift guard: every operator API is named somewhere else in src/main") {
@@ -94,21 +98,42 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
       s"and from testOnly: $unused")
   }
 
+  /** Where `needle` matches in `files` outside the members `homes`. */
+  private def strays(files: List[(Path, String)], needle: Regex,
+      homes: Set[String]): List[String] =
+    for {
+      (p, text) <- files
+      m <- needle.findAllMatchIn(text).toList
+      owner = Def.findAllMatchIn(text.substring(0, m.start)).toSeq.lastOption.map(_.group(1))
+      if !owner.exists(homes)
+    } yield s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}: " +
+      s"`${m.matched.linesIterator.next()}` in ${owner.getOrElse("?")}, " +
+      s"not in ${homes.mkString(" / ")}"
+
   test("drift guard: one distributed prefix sum and one md5 coin in src/main") {
     // each expression has one home; a copy anywhere else is hand-rolled
     // machinery to move back onto the helper
-    val homes = Seq(
-      """spark_partition_id\s*\(""".r -> "rangePrefixSums",
-      """math\.pow\(\s*16(?:\.0)?\s*,\s*13\s*\)""".r -> "hexFraction")
-    val offenders = for {
-      (p, text) <- sources("src/main/scala")
-      (needle, home) <- homes
-      m <- needle.findAllMatchIn(text)
-      owner = Def.findAllMatchIn(text.substring(0, m.start)).toSeq.lastOption.map(_.group(1))
-      if !owner.contains(home)
-    } yield s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}: `${m.matched}` in " +
-      s"${owner.getOrElse("?")}, not in Scale.$home"
-    if (offenders.nonEmpty) fail("call the helper instead:\n" + offenders.mkString("\n"))
+    val files = sources("src/main/scala")
+    val offenders =
+      strays(files, """spark_partition_id\s*\(""".r, Set("rangePrefixSums")) ++
+        strays(files, """math\.pow\(\s*16(?:\.0)?\s*,\s*13\s*\)""".r, Set("hexFraction"))
+    if (offenders.nonEmpty) fail("call the helper in Scale instead:\n" + offenders.mkString("\n"))
+  }
+
+  test("drift guard: one k-means/IVF argmin and one md5 coreset in src/main") {
+    // the centroid structs feed only the argmin and the probe lists, and a
+    // coreset draw (rows ordered by md5 of vec_id) happens only in
+    // md5Coreset; the coreset needle reads string literals, so comments
+    // alone are stripped for it
+    val offenders =
+      strays(sources("src/main/scala"), """(?<!def )\bcellStructs\s*\(""".r,
+        Set("assignCells", "probeCellsExpr")) ++
+        strays(sources("src/main/scala", keepLiterals = true),
+          ("""(?s)orderBy\(\s*md5\(\s*(?:concat\(\s*)?\$"vec_id"""" +
+            """|md5\(\s*(?:concat\(\s*)?\$"vec_id".{0,160}?\.orderBy\(""").r,
+          Set("md5Coreset"))
+    if (offenders.nonEmpty) fail("call the kernel in Similarity instead:\n" +
+      offenders.mkString("\n"))
   }
 
   /** Index one past the bracket that closes `text(open)`. */
