@@ -131,10 +131,11 @@ object Profile {
 
   // ids that depend on the JVM, on what ran earlier in it or on task
   // timing: exchange plan ids, expression ids, RDD ids, codegen stage ids,
-  // AQE query-stage ids, lambda class names, object identity hashes and
+  // AQE query-stage ids, the JVM-wide counter in Catalyst's lambda variable
+  // names (`lambda x_N`), lambda class names, object identity hashes and
   // the random suffixes of graft's scratch dirs
   private val Ids = Seq("""(plan_id=)(\d+)""", """(#)(\d+)""", """(RDD\[)(\d+)""",
-    """(codegen id : )(\d+)""",
+    """(codegen id : )(\d+)""", """(lambda [A-Za-z]\w*?_)(\d+)\b""",
     """(?m)(^\(\d+\) \w*QueryStage\nOutput \[\d+\]: .*\nArguments: )(\d+)$""",
     """(\$\$Lambda)(\$\d+/0x\p{XDigit}+@\p{XDigit}+)""", """([\w$]@)(\p{XDigit}+)\b""",
     """(/graft_[a-z_]+)(\d{12,})""").map(_.r)

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.MinHashFunctions.{shingle_hashes, sorted_intersect_count}
 
 /** Deduplication family for the training-data pipeline (SURVEY.md §2.2 ➕):
   * exact (content-hash groupBy), MinHash+LSH banding, SimHash, and exact
@@ -13,15 +16,17 @@ import org.apache.spark.sql.functions._
   * Scale design:
   *   - exact dedup: one hash-shuffle on the fingerprint, no full-text
   *     comparisons.
-  *   - MinHash+LSH: signatures are ONE fused codegen'd pass per document
+  *   - set-similarity pairs (MinHash+LSH, exact Jaccard, containment): a
+  *     candidate generator, then ONE exact verifier (`verifyOverlap`) over
+  *     sorted shingle-hash sets. The generators stay separate: LSH band
+  *     buckets expanded in place (q27's pair index), the incremental
+  *     bucket equi-join (q74), df-ranked prefix filtering (`rarestPrefix`:
+  *     q26's Jaccard self-join, q178's containment probes). Every relation
+  *     past candidate generation is candidate-proportional, never
+  *     all-pairs — the shape that survives 100 TB.
+  *   - MinHash signatures are ONE fused codegen'd pass per document
   *     (native MinHashSignature expression — zero shuffles, no
-  *     corpus×shingles intermediate); candidates come from band buckets
-  *     expanded in place (groupBy + collect_list, never all-pairs and never
-  *     a self-join that would recompute the signature subtree); candidates
-  *     are verified with exact Jaccard on a candidate-semi-joined slice of
-  *     the corpus. This is the shape that survives 100 TB; the all-pairs
-  *     variant (`ngramJaccardPairs`) exists as the small-data
-  *     oracle/baseline.
+  *     corpus×shingles intermediate).
   *   - SimHash: per-doc 32-bit signature via one aggregation, then pairs
   *     by pigeonhole bit-slice buckets (recall 1 by construction).
   */
@@ -54,35 +59,100 @@ object Dedup {
         sum($"n_copies").as("n_total"),
         sum(when($"n_copies" > 1, 1).otherwise(0)).as("n_dup_groups"))
 
-  /** Distinct shingle set per doc: (doc_id, shingle) rows. Repartition the
-    * compact doc rows first so the shingle blowup parallelizes.
-    */
-  private def shingleSet(documents: DataFrame, n: Int): DataFrame =
-    documents
-      .repartition(documents.sparkSession.sparkContext.defaultParallelism * 2, $"doc_id")
-      .select($"doc_id", explode(shingleArray($"text", n)).as("g"))
-      .distinct()
-
-  /** Exact all-pairs n-gram Jaccard >= threshold. O(pairs-sharing-a-shingle)
-    * — correct at small scale and the ground truth the LSH path is verified
-    * against; at 100 TB use `minhashLshPairs` instead.
+  /** Exact n-gram Jaccard pairs: every (id1 < id2) with distinct-5-gram
+    * Jaccard ≥ threshold, by EXACT prefix filtering (Bayardo et al.
+    * WWW'07; Chaudhuri et al. SSJoin). Each doc keeps its `rarestPrefix`
+    * (⌊(1−t+ε)·|A|⌋+1 rarest grams = |A| − ⌈(t−ε)|A|⌉ + 1); J ≥ t implies
+    * |A∩B| ≥ t·max(|A|,|B|), so two qualifying docs share a prefix gram
+    * under the one global (df, h) order, and recall is a theorem, not a
+    * probability. Candidates are the prefix self-join on the gram, cut by
+    * the length filter min(|A|,|B|) ≥ (t−ε)·max(|A|,|B|) (J ≤ min/max),
+    * then verified exactly by `verifyOverlap`. Grams compare as 64-bit
+    * xxhash values — exact up to hash collisions, which the string-gram
+    * brute-force spec (PipelineSpec) would surface. At threshold 0 the
+    * prefix is the whole set: the output is every pair sharing a gram.
     */
   def ngramJaccardPairs(documents: DataFrame, threshold: Double = 0.6): DataFrame = {
-    val n = 5
-    val toks = shingleSet(documents, n)
-    val sizes = toks.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
-    val inter = toks.as("a")
-      .join(toks.as("b"), col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.as("s1"), col("id1") === col("s1.doc_id"))
-      .join(sizes.as("s2"), col("id2") === col("s2.doc_id"))
-      .select($"id1", $"id2",
-        round($"i" / (col("s1.sz") + col("s2.sz") - $"i"), 6).as("jaccard"))
+    val sh = shingleSets(documents, ShingleLen) // prefix + two verify joins
+    val pre = rarestPrefix(sh, threshold)
+    val cands = pre.as("a")
+      .join(pre.as("b"), $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
+      .filter(least($"a.sz", $"b.sz") >= lit(threshold - 1e-6) * greatest($"a.sz", $"b.sz"))
+      .select($"a.doc_id".as("id1"), $"b.doc_id".as("id2"))
+      .distinct()
+    verifyOverlap(cands, sh)
+      .select($"id1", $"id2", overlapJaccard)
       .filter($"jaccard" >= threshold)
       .orderBy($"id1", $"id2")
   }
+
+  /** Sorted distinct shingle-hash sets (doc_id, hs) of `docs`: one fused
+    * native pass per document (ShingleHashes), checkpointed because every
+    * consumer references the sets twice (the two verify joins). The
+    * repartition is the AQE-blindness guard: the input may arrive in one
+    * partition (a parquet fixture, or a broadcast semi-join's probe side)
+    * and AQE sizes by bytes, blind to the per-row hashing cost, so without
+    * it the whole pass runs serially in a single task.
+    */
+  private def shingleSets(docs: DataFrame, n: Int): DataFrame =
+    docs
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism * 2, $"doc_id")
+      .select($"doc_id", shingle_hashes($"text", n).as("hs"))
+      .localCheckpoint()
+
+  /** `shingleSets` of the documents a candidate frame (id1, id2, …) names:
+    * the corpus is SEMI-JOINED down to the candidate ids BEFORE shingling,
+    * so only candidate-proportional data is shingled, shuffled or (if AQE
+    * so decides) broadcast — never a corpus-proportional relation.
+    */
+  private def candidateSets(documents: DataFrame, candidates: DataFrame, n: Int): DataFrame = {
+    val ids = candidates.select(explode(array($"id1", $"id2")).as("doc_id")).distinct()
+    shingleSets(documents.join(ids, Seq("doc_id"), "left_semi"), n)
+  }
+
+  /** The one exact set-overlap verifier of the family: `candidates`
+    * (id1, id2, extra columns…) against `sets` (doc_id, hs), returning the
+    * candidates' columns plus i = |A∩B| (a native merge scan of the two
+    * sorted hash arrays, computed once — no per-pair hash sets, no string
+    * arrays on the wire), sz1 = |A| and sz2 = |B|. Both joins pin
+    * shuffle_hash on the set side: the candidate frame's size estimate is
+    * blind to its join/explode fan-out (the ×30 broadcast-of-candidates
+    * failure, SURVEY §6.11; see Similarity.embeddingNearDupUnordered), so
+    * the build is per-partition over the doc-proportional side and never
+    * left to the estimator.
+    */
+  private def verifyOverlap(candidates: DataFrame, sets: DataFrame): DataFrame =
+    candidates
+      .join(sets.select($"doc_id".as("id1"), $"hs".as("hs1")).hint("shuffle_hash"), Seq("id1"))
+      .join(sets.select($"doc_id".as("id2"), $"hs".as("hs2")).hint("shuffle_hash"), Seq("id2"))
+      .select(candidates.columns.map(col) ++ Seq(
+        sorted_intersect_count($"hs1", $"hs2").as("i"),
+        size($"hs1").as("sz1"), size($"hs2").as("sz2")): _*)
+
+  /** Jaccard of a verified pair, from `verifyOverlap`'s (i, sz1, sz2). */
+  private def overlapJaccard: Column = round($"i" / ($"sz1" + $"sz2" - $"i"), 6).as("jaccard")
+
+  /** The df-ranked prefix of every shingle set in `sh` (doc_id, hs):
+    * (doc_id, sz, h) rows holding each doc's ⌊(1−t+ε)·sz⌋+1 globally
+    * RAREST hashes, ordered by (df, h) — one total order shared by every
+    * doc, ties broken by hash (deterministic). ε = 1e-6 covers the rounded
+    * filters' boundary (round6(x) ≥ t admits x ≥ t − 5e-7). The same
+    * length is the containment prefix (if every prefix gram misses B, more
+    * than (1−t)·|A| of A is outside B) and the Jaccard prefix
+    * |A| − ⌈(t−ε)|A|⌉ + 1 (J ≥ t implies |A∩B| ≥ t·|A|). Rarest-FIRST
+    * minimizes the probe volume Σ_doc Σ_prefix df(h). df rides a count()
+    * window over the one h-clustered exchange (r15, §2.4): a separate
+    * groupBy(h) df table would exchange the posting mass twice.
+    */
+  private def rarestPrefix(sh: DataFrame, t: Double): DataFrame =
+    sh
+      .select($"doc_id", size($"hs").as("sz"), explode($"hs").as("h"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy($"h")))
+      .groupBy($"doc_id")
+      .agg(array_sort(collect_list(struct($"df", $"h"))).as("ranked"), first($"sz").as("sz"))
+      .select($"doc_id", $"sz", explode(slice($"ranked", lit(1),
+        (floor($"sz" * lit(1.0 - t + 1e-6)) + 1).cast("int"))).as("p"))
+      .select($"doc_id", $"sz", $"p.h".as("h"))
 
   /** MinHash parameters: 126 hash functions in 21 bands of 6 rows.
     * h_s(doc) = min over shingles g of xxhash64(s, g) — the hash only has
@@ -165,7 +235,6 @@ object Dedup {
     // across all cores BEFORE the heavy per-row loop (the parquet fixture
     // may arrive in one partition, and AQE sizes by bytes, blind to
     // per-row compute cost).
-    val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
     val buckets = bandBuckets(documents, n)
     // In-bucket pair expansion via groupBy + collect_list instead of a
     // bucket self-join: a self-join would compute the whole signature
@@ -187,41 +256,11 @@ object Dedup {
       .select($"p.id1".as("id1"), $"p.id2".as("id2"))
       .distinct()
       .localCheckpoint()
-    // exact-Jaccard verification: semi-join the corpus down to the docs that
-    // appear in any candidate pair BEFORE shingling, so only
-    // candidate-proportional data is shingled, shuffled, or (if AQE so
-    // decides) broadcast — never a corpus-proportional relation. Shingle
-    // sets are sorted distinct 8-byte hash arrays from one fused native
-    // pass (ShingleHashes), and the per-pair intersection is a native merge
-    // scan (SortedIntersectCount) computed once — no per-pair hash sets, no
-    // string arrays on the wire, no duplicated array_intersect. Identical
-    // jaccard values up to 64-bit hash collisions (the LSH==exact spec
-    // would surface one). The checkpoint keeps the twice-referenced
-    // candidate shingle sets from being built twice.
-    val candIds = candidates
-      .select(explode(array($"id1", $"id2")).as("doc_id"))
-      .distinct()
-    val candTexts = documents
-      .join(candIds, Seq("doc_id"), "left_semi")
-      // same AQE-blindness guard as the signature stage: the semi-join is a
-      // broadcast probe, so without this the filtered docs keep the scan's
-      // partitioning (ONE partition on a small fixture) and the whole
-      // shingle-hash pass runs serially in a single task
-      .repartition(parts, $"doc_id")
-      .select($"doc_id", graft.functions.MinHashFunctions.shingle_hashes($"text", n).as("hs"))
-      .localCheckpoint()
-    // shuffle_hash on the shingle side: the candidate frame's size
-    // estimate is explode-blind (see Similarity.embeddingNearDupUnordered
-    // — the ×30 broadcast-of-candidates failure), so the join strategy is
-    // pinned to per-partition builds over the doc-proportional side
-    candidates
-      .join(candTexts.select($"doc_id".as("id1"), $"hs".as("hs1")).hint("shuffle_hash"), Seq("id1"))
-      .join(candTexts.select($"doc_id".as("id2"), $"hs".as("hs2")).hint("shuffle_hash"), Seq("id2"))
-      .select($"id1", $"id2",
-        graft.functions.MinHashFunctions.sorted_intersect_count($"hs1", $"hs2").as("i"),
-        size($"hs1").as("sz1"), size($"hs2").as("sz2"))
-      .select($"id1", $"id2",
-        round($"i" / ($"sz1" + $"sz2" - $"i"), 6).as("jaccard"))
+    // exact-Jaccard verification over the candidate slice; identical
+    // jaccard values up to 64-bit hash collisions (the string-gram
+    // brute-force spec would surface one)
+    verifyOverlap(candidates, candidateSets(documents, candidates, n))
+      .select($"id1", $"id2", overlapJaccard)
       .filter($"jaccard" >= threshold)
   }
 
@@ -240,23 +279,8 @@ object Dedup {
     * design not offered here; this op refines what the index found.
     */
   def containmentRefine(documents: DataFrame): DataFrame = {
-    val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
     val pairs = pairIndex(documents)
-    val ids = pairs.select(explode(array($"id1", $"id2")).as("doc_id")).distinct()
-    val sets = documents.join(ids, Seq("doc_id"), "left_semi")
-      .repartition(parts, $"doc_id")
-      .select($"doc_id", graft.functions.MinHashFunctions.shingle_hashes($"text", ShingleLen).as("hs"))
-      .localCheckpoint() // candidate-proportional; referenced twice below
-    // shuffle_hash: same defect class as the ×30 broadcast-of-candidates
-    // failure (see minhashLshPairsUnordered) — neither the pair set's nor
-    // the checkpointed array frame's size estimate can be trusted to pick
-    // a broadcast build, so pin per-partition builds on the shingle side
-    pairs
-      .join(sets.select($"doc_id".as("id1"), $"hs".as("hs1")).hint("shuffle_hash"), Seq("id1"))
-      .join(sets.select($"doc_id".as("id2"), $"hs".as("hs2")).hint("shuffle_hash"), Seq("id2"))
-      .select($"id1", $"id2", $"jaccard",
-        graft.functions.MinHashFunctions.sorted_intersect_count($"hs1", $"hs2").as("i"),
-        size($"hs1").as("sz1"), size($"hs2").as("sz2"))
+    verifyOverlap(pairs, candidateSets(documents, pairs, ShingleLen))
       .select($"id1", $"id2", $"jaccard",
         round($"i" / least($"sz1", $"sz2"), 6).as("containment"),
         round(least($"sz1", $"sz2") / greatest($"sz1", $"sz2"), 6).as("size_ratio"))
@@ -533,36 +557,17 @@ object Dedup {
     */
   def incrementalNearDupPairs(documents: DataFrame): DataFrame = {
     val newIdCut = 100L
-    val n = 5
-    val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
-    val newBuckets = bandBuckets(documents.filter($"doc_id" < newIdCut), n)
+    val newBuckets = bandBuckets(documents.filter($"doc_id" < newIdCut), ShingleLen)
       .withColumnRenamed("doc_id", "new_id")
-    val oldBuckets = bandBuckets(documents.filter($"doc_id" >= newIdCut), n)
+    val oldBuckets = bandBuckets(documents.filter($"doc_id" >= newIdCut), ShingleLen)
       .withColumnRenamed("doc_id", "old_id")
     val candidates = newBuckets
       .join(oldBuckets, Seq("band", "bh"))
-      .select($"new_id", $"old_id")
+      .select($"new_id".as("id1"), $"old_id".as("id2"))
       .distinct()
       .localCheckpoint() // candidate-proportional; consumed by 3 joins below
-    val candIds = candidates
-      .select(explode(array($"new_id", $"old_id")).as("doc_id"))
-      .distinct()
-    val candTexts = documents
-      .join(candIds, Seq("doc_id"), "left_semi")
-      .repartition(parts, $"doc_id")
-      .select($"doc_id", graft.functions.MinHashFunctions.shingle_hashes($"text", n).as("hs"))
-      .localCheckpoint()
-    // shuffle_hash: the candidates frame is post-bucket-join — its size
-    // estimate is explode/join-blind (the measured ×30 broadcast failure
-    // class, SURVEY §6.11) — so pin per-partition builds on the shingle side
-    candidates
-      .join(candTexts.select($"doc_id".as("new_id"), $"hs".as("hs1")).hint("shuffle_hash"), Seq("new_id"))
-      .join(candTexts.select($"doc_id".as("old_id"), $"hs".as("hs2")).hint("shuffle_hash"), Seq("old_id"))
-      .select($"new_id", $"old_id",
-        graft.functions.MinHashFunctions.sorted_intersect_count($"hs1", $"hs2").as("i"),
-        size($"hs1").as("sz1"), size($"hs2").as("sz2"))
-      .select($"new_id", $"old_id",
-        round($"i" / ($"sz1" + $"sz2" - $"i"), 6).as("jaccard"))
+    verifyOverlap(candidates, candidateSets(documents, candidates, ShingleLen))
+      .select($"id1".as("new_id"), $"id2".as("old_id"), overlapJaccard)
       .filter($"jaccard" >= 0.6)
       .orderBy($"new_id", $"old_id")
   }
@@ -805,30 +810,27 @@ object Dedup {
     *
     * Blocking: EXACT df-ordered prefix filtering (Chaudhuri et al.
     * SSJoin / Bayardo et al. WWW'07, adapted to containment): each doc
-    * probes the inverted posting index with its k_A =
-    * ⌊(1−τ)·|A|⌋+1 globally-RAREST shingles (+ a one-probe margin for
-    * the round-to-6 filter boundary; ties by hash — deterministic).
-    * Recall is a THEOREM, not a probability: if every probe misses B
-    * then more than (1−τ)|A| of A's shingles are outside B, so
-    * containment < τ — a qualifying pair always shares a probe.
-    * Probabilistic rarest-m was tried first and REJECTED by
-    * measurement: rare shingles are correlated with being exactly the
-    * mutated part a container lacks, and m=3 missed 8/511 fixture
-    * pairs — bias the independence argument misses. Rarest-FIRST
-    * ordering still matters for cost: candidate volume is
-    * Σ_doc Σ_probe df(h), minimized by df-ascending probe choice.
+    * probes the inverted posting index with its `rarestPrefix` — the
+    * ⌊(1−τ+ε)·|A|⌋+1 globally-RAREST shingles, ties by hash. Recall is a
+    * THEOREM, not a probability: if every probe misses B then more than
+    * (1−τ)|A| of A's shingles are outside B, so containment < τ — a
+    * qualifying pair always shares a probe. Probabilistic rarest-m was
+    * tried first and REJECTED by measurement: rare shingles are
+    * correlated with being exactly the mutated part a container lacks,
+    * and m=3 missed 8/511 fixture pairs — bias the independence argument
+    * misses. Unlike q26's Jaccard prefix self-join, the probes meet the
+    * FULL posting list: containment is one-sided, so B's side cannot be
+    * cut to its prefix.
     *
     * Scale: the posting index is shingle-mass-proportional — the
     * honest price of asymmetric discovery (symmetric banding cannot
-    * find these pairs at any price); df ranking adds one
-    * map-side-combined agg + a per-doc bounded sort, and probes are
-    * ~(1−τ) of the shingle mass. Verification touches candidate pairs
-    * only (the q27 semi-join pattern), normalized UNORDERED first —
-    * the verify join ships both shingle arrays per pair, so the
-    * (a,b)/(b,a) dedup halves its bytes and one merge-scan
-    * intersection feeds both directions (measured 23.4 → 15.6 s at
-    * sf0.1). Fixture honesty: this corpus is a WORST CASE — its
-    * synthetic 5-gram vocabulary is only ~2k types for 5k docs, so
+    * find these pairs at any price); probes are ~(1−τ) of the shingle
+    * mass. Verification is `verifyOverlap` over candidate pairs only,
+    * normalized UNORDERED first — the verify join ships both shingle
+    * arrays per pair, so the (a,b)/(b,a) dedup halves its bytes and one
+    * merge-scan intersection feeds both directions (measured 23.4 →
+    * 15.6 s at sf0.1). Fixture honesty: this corpus is a WORST CASE —
+    * its synthetic 5-gram vocabulary is only ~2k types for 5k docs, so
     * almost every pair truly shares rare shingles and exact-recall
     * blocking is bounded below by that density (measured: 26M probe
     * volume → 6M unordered candidates for 511 output rows). Real text
@@ -837,31 +839,9 @@ object Dedup {
     */
   def containmentDiscover(documents: DataFrame): DataFrame = {
     val tau = 0.9
-    import graft.functions.MinHashFunctions.{shingle_hashes, sorted_intersect_count}
-    val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
-    val sh = documents
-      .repartition(parts, $"doc_id") // AQE-blindness guard (see above)
-      .select($"doc_id", shingle_hashes($"text", 5).as("hs"))
-      .localCheckpoint() // probes + postings + two verify joins
-    // k_A probes: floor((1-τ+ε)·|A|) + 1 rarest — ε covers the rounded
-    // filter's boundary (round6(i/|A|) ≥ τ admits i/|A| ≥ τ − 5e-7).
-    // df rides a count() window over the SAME exchange that used to
-    // feed the df join (r15, §2.4): the old shape exchanged the posting
-    // mass twice (once for the groupBy(h) df table, once for the probe
-    // side of the join) — the window computes df in place on one
-    // h-clustered pass, same exchange count as the df table alone.
-    val probes = sh
-      .select($"doc_id".as("contained_id"), size($"hs").as("sz"),
-        explode($"hs").as("h"))
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"h")))
-      .groupBy($"contained_id")
-      .agg(array_sort(collect_list(struct($"df", $"h"))).as("ranked"),
-        first($"sz").as("sz"))
-      .select($"contained_id", $"sz".as("sza"),
-        explode(slice($"ranked", lit(1),
-          (floor($"sz" * lit(1.0 - tau + 1e-6)) + 1).cast("int"))).as("p"))
-      .select($"contained_id", $"sza", $"p.h".as("h"))
+    val sh = shingleSets(documents, ShingleLen) // probes + postings + two verify joins
+    val probes = rarestPrefix(sh, tau)
+      .select($"doc_id".as("contained_id"), $"sz".as("sza"), $"h")
     // candidates are normalized UNORDERED before the heavy stage: the
     // verify join ships both shingle arrays per pair, so deduping
     // (a,b)/(b,a) halves its volume; each surviving pair re-expands to
@@ -875,9 +855,8 @@ object Dedup {
     // enters via its OWN probe side carrying its own (sza, szb), so
     // filtering directed candidates before the unordered dedup drops
     // no qualifying pair while cutting the distinct exchange AND the
-    // array-shipping verify volume (measured 1.15M → fewer unordered
-    // pairs at sf0.1; the filter runs map-side on the candidate join's
-    // output, before any further shuffle).
+    // array-shipping verify volume (the filter runs map-side on the
+    // candidate join's output, before any further shuffle).
     val cands = probes
       .join(sh.select($"doc_id".as("container_id"), size($"hs").as("szb"),
         explode($"hs").as("h")), Seq("h"))
@@ -887,25 +866,9 @@ object Dedup {
         greatest($"contained_id", $"container_id").as("id2"))
       .distinct()
       .localCheckpoint()
-    def dir(a: Column, b: Column, sza: Column, szb: Column) =
+    def dir(a: Column, b: Column, sza: Column) =
       struct(a.as("contained_id"), b.as("container_id"),
-        round($"i" / sza, 6).as("containment"),
-        round($"i" / (sza + szb - $"i"), 6).as("jaccard"))
-    // verify one candidate slice: both shingle arrays ship per pair,
-    // one merge-scan intersection feeds both directions (explode)
-    // shuffle_hash pins per-partition builds over the doc-proportional
-    // shingle side (the candidate estimate is join-explosion-blind here
-    // too — same class as the ×30 broadcast failure in Similarity)
-    def verify(slice: DataFrame): DataFrame = slice
-      .join(sh.select($"doc_id".as("id1"), $"hs".as("h1")).hint("shuffle_hash"), Seq("id1"))
-      .join(sh.select($"doc_id".as("id2"), $"hs".as("h2")).hint("shuffle_hash"), Seq("id2"))
-      .select($"id1", $"id2", sorted_intersect_count($"h1", $"h2").as("i"),
-        size($"h1").as("sz1"), size($"h2").as("sz2"))
-      .select(explode(array(
-        dir($"id1", $"id2", $"sz1", $"sz2"),
-        dir($"id2", $"id1", $"sz2", $"sz1"))).as("r"))
-      .select($"r.contained_id", $"r.container_id", $"r.containment", $"r.jaccard")
-      .filter($"containment" >= tau)
+        round($"i" / sza, 6).as("containment"), overlapJaccard)
     // A POSTING-EXPLOSION intersection (candidates explode through the
     // posting index and count (id2, h) matches — no resident shingle
     // arrays) was A/B'd against this verify in round 12 and LOST
@@ -921,7 +884,14 @@ object Dedup {
     // extra scans of the checkpointed candidate set cost more than the
     // reduced peak live array volume saves at a 32g heap). Tables:
     // SURVEY §6.11; code at 56418f6.
-    verify(cands).orderBy($"contained_id", $"container_id")
+    verifyOverlap(cands, sh)
+      // one merge-scan intersection feeds both directions (explode)
+      .select(explode(array(
+        dir($"id1", $"id2", $"sz1"),
+        dir($"id2", $"id1", $"sz2"))).as("r"))
+      .select($"r.contained_id", $"r.container_id", $"r.containment", $"r.jaccard")
+      .filter($"containment" >= tau)
+      .orderBy($"contained_id", $"container_id")
   }
 
   /** Heaps-law containment fixture (q302): a deterministic synthetic
@@ -999,7 +969,6 @@ object Dedup {
     * never collected.
     */
   def kcoreDecomposition(documents: DataFrame, rounds: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val pairs = pairIndex(documents).select($"id1", $"id2")
     val edges = pairs.select($"id1".as("src"), $"id2".as("dst"))
       .unionAll(pairs.select($"id2".as("src"), $"id1".as("dst")))

@@ -910,7 +910,7 @@ object Similarity {
     * scan as a BROADCAST equi-join on (subspace, code) — no giant literal
     * CASE, no shuffle of the code table. The exact re-rank touches only
     * the shortlist semi-join. The trained model is session-cached by
-    * (corpus plan, dial) — q148 is the family's training carrier;
+    * corpus plan — q148 is the family's training carrier;
     * `ivfPqAnnRecall` (q149) and repeat calls ride the cache.
     *
     * Determinism: the `kmeansClusters` recipe — md5-coreset seeds,
@@ -928,11 +928,9 @@ object Similarity {
     * `quantizedAnnRecall`).
     */
   def pqAnnRecall(embeddings: DataFrame): DataFrame = {
-    val m = 8
-    val codes = 16
     val shortlist = 50
     val k = 3
-    val mdl = pqModelFor(embeddings, m, codes, 2)
+    val mdl = pqModelFor(embeddings)
     // the full-scan ADC ranking: every stored code row meets its query's
     // broadcast dot-table
     val adcScores = mdl.codesLong
@@ -945,7 +943,7 @@ object Similarity {
   }
 
   /** Session-cached trained PQ model — (checkpointed corpus, encoded
-    * code table, ADC tables) keyed by (session, corpus plan, dial):
+    * code table, ADC tables) keyed by (session, corpus plan):
     * the whole PQ family pays ONE training per corpus per session —
     * q148 is the training carrier, q149 and repeat calls ride. The code
     * table is checkpointed because it IS the stored serving artifact
@@ -960,12 +958,11 @@ object Similarity {
 
   private val PqModels = new SessionArtifacts.Kind[PqModel]
 
-  private def pqModelFor(embeddings: DataFrame, m: Int, codes: Int,
-      iters: Int): PqModel =
-    SessionArtifacts.getOrBuild(PqModels, embeddings, m, codes, iters) {
+  private def pqModelFor(embeddings: DataFrame): PqModel =
+    SessionArtifacts.getOrBuild(PqModels, embeddings) {
       val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
         .localCheckpoint() // scanned per Lloyd round + encode + re-rank
-      val (codesLong, adcTables, books) = pqModel(corpus, m, codes, iters)
+      val (codesLong, adcTables, books) = pqModel(corpus)
       PqModel(corpus, codesLong.localCheckpoint(), adcTables, books)
     }
 
@@ -979,8 +976,11 @@ object Similarity {
     *    (NQueries × m × codes)-row broadcast side.
     * Training and determinism are documented on `pqAnnRecall`.
     */
-  private def pqModel(corpus: DataFrame, m: Int, codes: Int,
-      iters: Int): (DataFrame, DataFrame, Array[Array[(Long, Array[Double])]]) = {
+  private def pqModel(
+      corpus: DataFrame): (DataFrame, DataFrame, Array[Array[(Long, Array[Double])]]) = {
+    val m = 8      // subspaces: 8 one-byte codes per vector
+    val codes = 16 // codewords per subspace
+    val iters = 2  // Lloyd rounds
     def round6(x: Double): Double = graft.functions.Rounding.halfUp(x, 6)
     val spark = corpus.sparkSession
     // one md5-coreset seed draw shared by all subspaces (sliced per s);
@@ -1139,10 +1139,9 @@ object Similarity {
     * and this equals `pqAnnRecall` bit-for-bit.
     */
   def ivfPqAnnRecall(embeddings: DataFrame, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val codes = 16
     val shortlist = 50
     val k = 3
-    val mdl = pqModelFor(embeddings, 8, codes, 2)
+    val mdl = pqModelFor(embeddings)
     val cents = md5Coreset(mdl.corpus, nCentroids)
     val assigned = assignCells(mdl.corpus, cents)
       .select($"vec_id", $"cid".as("centroid_id"))
@@ -1176,12 +1175,10 @@ object Similarity {
     * fingerprints the directory for its staleness report.
     */
   def writePqIndex(embeddings: DataFrame, dir: String): Unit = {
-    val m = 8
-    val codes = 16
-    val mdl = pqModelFor(embeddings, m, codes, 2)
+    val mdl = pqModelFor(embeddings)
     val spark = embeddings.sparkSession
     spark.createDataFrame(for {
-      s <- 0 until m; (cid, cw) <- mdl.books(s)
+      s <- mdl.books.indices; (cid, cw) <- mdl.books(s)
     } yield (s, cid, cw.toSeq)).toDF("s", "cid", "cw")
       .write.mode("overwrite").parquet(s"$dir/codebooks")
     mdl.codesLong.write.mode("overwrite").parquet(s"$dir/codes")

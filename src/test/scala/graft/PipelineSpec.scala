@@ -11,10 +11,38 @@ class PipelineSpec extends GraftSuite {
   private lazy val embs = Tables.embeddings(spark, sf)
 
   test("minhash LSH near-dup pairs == exact all-pairs jaccard (full recall at the data's gap)") {
+    // both sides compare 64-bit shingle hashes: this proves the banding's
+    // recall (and its verify join) against the exact-recall prefix join;
+    // the string-gram check below proves the exact side itself
     val exact = Dedup.ngramJaccardPairs(docs).collect().toSeq
     val lsh   = Dedup.minhashLshPairs(docs).collect().toSeq
     assert(lsh === exact)
     assert(exact.nonEmpty, "fixture should contain planted near-duplicates")
+  }
+
+  test("ngramJaccardPairs == JVM all-pairs string 5-gram jaccard at t = 0.6 and t = 0.0") {
+    // independent of the engine's hashing and blocking: distinct 5-gram
+    // STRINGS with shingleArray's clamp (a text shorter than 5 characters
+    // is its own one gram), every ordered pair, no prefix, no hash
+    def grams5(t: String): Set[String] =
+      (if (t.length < 5) Seq(t) else (0 to t.length - 5).map(i => t.substring(i, i + 5))).toSet
+    def round6(x: Double): Double =
+      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val fixture = docs.select($"doc_id", $"text").collect()
+      .map(r => (r.getLong(0), grams5(r.getString(1)))).sortBy(_._1)
+    val shared = (for {
+      (a, (ida, ga)) <- fixture.zipWithIndex.map(_.swap); (idb, gb) <- fixture.drop(a + 1)
+      i = (ga intersect gb).size
+      if i > 0
+    } yield (ida, idb, round6(i.toDouble / (ga.size + gb.size - i)))).toSeq
+    for (t <- Seq(0.6, 0.0)) {
+      val got = Dedup.ngramJaccardPairs(docs, threshold = t).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(got === shared.filter(_._3 >= t), s"threshold $t")
+    }
+    // (at t = 0.0 the prefix is the whole set, so the expected output is
+    // exactly the pairs that share a gram)
+    assert(shared.exists(_._3 >= 0.6), "fixture should contain planted near-duplicates")
   }
 
   test("near-dup survivors: exactly one survivor per cluster, reps are survivors") {

@@ -66,5 +66,11 @@ class ProfileSpec extends GraftSuite {
     assert(Profile.normalize("[plan_id=41] x#7L, y#3, x#7L /w/d/t /w/dx [plan_id=9] " +
       "RDD[2484] [codegen id : 8] /tmp/graft_scratch1890329210866709267", "/w/d") ===
       "[plan_id=0] x#0L, y#1, x#0L ./t /w/dx [plan_id=1] RDD[0] [codegen id : 0] /tmp/graft_scratch0")
+    // Catalyst's lambda names carry a JVM-wide counter; SQL lambda names do not
+    assert(Profile.normalize("lambdafunction((lambda x_28#5 + lambda y_29#6), lambda x_28#5, " +
+      "lambda y_29#6, false) transform(a#1, lambdafunction(lambda x_31#7, lambda x_31#7, " +
+      "false)) lambda left#8", "/w/d") ===
+      "lambdafunction((lambda x_0#0 + lambda y_1#1), lambda x_0#0, lambda y_1#1, false) " +
+      "transform(a#2, lambdafunction(lambda x_2#3, lambda x_2#3, false)) lambda left#4")
   }
 }

@@ -19,8 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * body. Some expressions have one home each: `spark_partition_id` is
   * only in `Scale.rangePrefixSums`, the 13-digit md5 coin only in
   * `Scale.hexFraction`, the centroid structs only in
-  * `Similarity.assignCells` and `probeCellsExpr`, and the md5-ordered
-  * coreset draw only in `Similarity.md5Coreset`.
+  * `Similarity.assignCells` and `probeCellsExpr`, the md5-ordered
+  * coreset draw only in `Similarity.md5Coreset`, the shingle-set
+  * intersection only in `Dedup.verifyOverlap` and the df-ranked gram
+  * order only in `Dedup.rarestPrefix`.
   */
 class RegisteredSurfaceSpec extends AnyFunSuite {
 
@@ -134,6 +136,21 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
           Set("md5Coreset"))
     if (offenders.nonEmpty) fail("call the kernel in Similarity instead:\n" +
       offenders.mkString("\n"))
+  }
+
+  test("drift guard: one set-overlap verifier and one rarest-gram prefix in src/main") {
+    // candidate pairs meet their shingle arrays and count the intersection
+    // only in Dedup's verifier, and the df-ranked gram order is computed
+    // only in the prefix helper; a second copy is a generator that grew
+    // its own verify join or its own ranking; the df needle reads the
+    // `$"h"` literal, so comments alone are stripped for it
+    val offenders =
+      strays(sources("src/main/scala"), """(?<!def )\bsorted_intersect_count\s*\(""".r,
+        Set("verifyOverlap")) ++
+        strays(sources("src/main/scala", keepLiterals = true),
+          ("""count\(\s*lit\(\s*1\s*\)\s*\)\s*\.over\(\s*""" +
+            """(?:[\w.]+\.)?Window\.partitionBy\(\s*\$"h"\s*\)""").r, Set("rarestPrefix"))
+    if (offenders.nonEmpty) fail("call the helper in Dedup instead:\n" + offenders.mkString("\n"))
   }
 
   /** Index one past the bracket that closes `text(open)`. */
