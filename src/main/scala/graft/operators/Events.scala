@@ -23,6 +23,79 @@ import org.apache.spark.sql.functions._
 object Events {
   private val NsPerHour = 3600L * 1000000000L
   private val NsPerSecond = 1000000000L
+  private val NsPerDay = 86400L * 1000000000L
+
+  /** An event's value on the exact integer micro-unit grid, round(value·10⁴)
+    * as a long: sums and products of it are engine-exact, so every moment
+    * built from it evaluates the same double tree on both engines.
+    */
+  private def valueMicro: Column = round($"value" * 10000, 0).cast("long")
+
+  private def dec(c: Column): Column = c.cast("decimal(38,0)")
+
+  // ---- two-arm A/B kernel ------------------------------------------------------
+
+  /** The A/B arm of a row, as column `arm`: the md5 coin of its user_id,
+    * 0 or 1. One deterministic split that every two-arm readout (q192's
+    * family) grades, so all of them compare the same two user sets.
+    */
+  private def userArm: Column = Scale.md5SlicePos($"user_id", 0, 2).as("arm")
+
+  /** Σ c over the rows of arm `a`, zero over the other arm. The caller
+    * picks the product form: a long product (ANSI-checked) cast to
+    * decimal afterwards, or a decimal product that cannot overflow.
+    */
+  private def armSum(a: Long, c: Column): Column = sum(when($"arm" === a, c).otherwise(0L))
+
+  private def mean(s1: Column, n: Column): Column = s1.cast("double") / n
+
+  /** Sample covariance from exact sums, (s12 − s1·s2/n)/(n − 1), in double
+    * space with the association order of the oracle text.
+    */
+  private def scov(s1: Column, s2: Column, s12: Column, n: Column): Column =
+    (s12.cast("double") - s1.cast("double") * s2 / n) / (n - lit(1L))
+
+  private def svar(s1: Column, s2: Column, n: Column): Column = scov(s1, s1, s2, n)
+
+  /** The exact 1-row arm-moment frame of purchase values: per arm (n, Σvm,
+    * Σvm²) on the micro-unit grid, as n_a, s1_a, s2_a, n_b, s1_b, s2_b.
+    * q192's z, q237's always-valid p, q279's MDE and q283's TOST derive
+    * from these six scalars alone. Under ANSI both the per-row vm² and
+    * the long sums throw on overflow instead of wrapping.
+    */
+  private def msprtArmMoments(events: DataFrame): DataFrame =
+    events.filter($"event_type" === "purchase")
+      .select(userArm, valueMicro.as("vm"))
+      .agg(
+        armSum(0L, lit(1L)).as("n_a"), armSum(0L, $"vm").as("s1_a"),
+        armSum(0L, $"vm" * $"vm").as("s2_a"),
+        armSum(1L, lit(1L)).as("n_b"), armSum(1L, $"vm").as("s1_b"),
+        armSum(1L, $"vm" * $"vm").as("s2_b"))
+
+  /** Welch's squared standard error of mean_b − mean_a on the arm-moment
+    * frame.
+    */
+  private def welchSe2: Column =
+    svar($"s1_a", $"s2_a", $"n_a") / $"n_a" + svar($"s1_b", $"s2_b", $"n_b") / $"n_b"
+
+  /** The per-user pre/post panel of q232 and q250: every user the events
+    * saw (the assignment universe, not just converters), with its arm and
+    * its exact micro-unit purchase value before (x) and from (y) the
+    * corpus midpoint day; a user with no purchases contributes (0, 0).
+    */
+  private def prePostUsers(events: DataFrame): DataFrame = {
+    val ev = events.select($"user_id", expr(s"ts div $NsPerDay").as("day"),
+      $"event_type", valueMicro.as("vm"))
+    val mid = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
+    val perUser = ev.filter($"event_type" === "purchase")
+      .crossJoin(broadcast(mid))
+      .groupBy($"user_id")
+      .agg(sum(when($"day" < $"mid", $"vm").otherwise(0L)).as("x"),
+        sum(when($"day" >= $"mid", $"vm").otherwise(0L)).as("y"))
+    ev.select($"user_id").distinct()
+      .join(perUser, Seq("user_id"), "left_outer")
+      .select(userArm, coalesce($"x", lit(0L)).as("x"), coalesce($"y", lit(0L)).as("y"))
+  }
 
   /** Tumbling-window aggregation: events per (hour, event_type); one
     * shuffle on the composite key.
@@ -217,8 +290,6 @@ object Events {
         $"n".as("n_prev"))
       .orderBy($"event_id")
   }
-
-  private val NsPerDay = 86400L * 1000000000L
 
   /** Cohort retention matrix: users grouped by first-seen day (cohort),
     * counted as active on each later day they appear — the classic
@@ -529,8 +600,7 @@ object Events {
     */
   def quantileTreatmentEffect(events: DataFrame): DataFrame = {
     val byVal = events
-      .select($"event_type", Scale.md5SlicePos($"user_id", 0, 2).as("arm"),
-        round($"value" * 10000, 0).cast("long").as("vm"))
+      .select($"event_type", userArm, valueMicro.as("vm"))
       .groupBy($"event_type", $"arm", $"vm").agg(count(lit(1)).as("c"))
     val w = Window.partitionBy($"event_type", $"arm").orderBy($"vm")
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -745,11 +815,11 @@ object Events {
   /** Two-sample A/B significance test on a value metric (q192): split
     * USERS 50/50 by the deterministic md5 arm draw (`Scale.md5SlicePos`
     * parity — the same coin every sampling operator here flips) and
-    * Welch-z-test the arms' `metricType` event values ("average order
-    * value" for purchases). On the fixture the split is a true A/A (no
-    * treatment exists), so |z| should sit inside the 1.96 line — which
-    * is itself the test's calibration check; the operator is the
-    * experiment-analysis endpoint a feature-rollout pipeline runs daily.
+    * Welch-z-test the arms' purchase values ("average order value"). On
+    * the fixture the split is a true A/A (no treatment exists), so |z|
+    * should sit inside the 1.96 line — which is itself the test's
+    * calibration check; the operator is the experiment-analysis endpoint
+    * a feature-rollout pipeline runs daily.
     * (A binary-conversion variant would be the natural twin, but the
     * fixture converts EVERY user — the value metric is the one with
     * variance to test.)
@@ -766,40 +836,24 @@ object Events {
     * oversized feed fails loudly rather than yielding a wrong z;
     * spec-asserted with an overflowing synthetic feed.)
     *
-    * Scale shape: one filtered scan into a 1-row conditional moment
-    * aggregate (map-side combined); the arm column is a scalar md5 of
-    * the row's own user_id — no user table, no join, nothing
-    * corpus-proportional after the scan.
+    * Scale shape: rides [[msprtArmMoments]], one filtered scan into a
+    * 1-row conditional moment aggregate (map-side combined); the arm
+    * column is a scalar md5 of the row's own user_id — no user table, no
+    * join, nothing corpus-proportional after the scan.
     */
   def abValueTest(events: DataFrame): DataFrame = {
-    val metricType = "purchase"
-    val counts = events.filter($"event_type" === metricType)
-      .select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"),
-        round($"value" * 10000, 0).cast("long").as("vm"))
-      .agg(
-        sum(when($"arm" === 0L, 1L).otherwise(0L)).as("n_a"),
-        sum(when($"arm" === 0L, $"vm").otherwise(0L)).as("s1_a"),
-        sum(when($"arm" === 0L, $"vm" * $"vm").otherwise(0L)).as("s2_a"),
-        sum(when($"arm" === 1L, 1L).otherwise(0L)).as("n_b"),
-        sum(when($"arm" === 1L, $"vm").otherwise(0L)).as("s1_b"),
-        sum(when($"arm" === 1L, $"vm" * $"vm").otherwise(0L)).as("s2_b"))
-    def mean(s1: Column, n: Column): Column = s1.cast("double") / n
-    // sample variance from exact moments, evaluated in double space with
-    // the same association order as the oracle text
-    def svar(s1: Column, s2: Column, n: Column): Column =
-      (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
     val mA = mean($"s1_a", $"n_a"); val mB = mean($"s1_b", $"n_b")
     val vA = svar($"s1_a", $"s2_a", $"n_a"); val vB = svar($"s1_b", $"s2_b", $"n_b")
     // degenerate-input guards (n<2 in an arm, or zero pooled variance):
     // null instead of an ANSI divide-by-zero throw, so a tiny input or
     // one whose users all hash into a single arm still returns its one
     // row; never triggered on the fixture corpus
-    counts.select(
+    msprtArmMoments(events).select(
       $"n_a", $"n_b",
       when($"n_a" > 0L, round(mA / 1e4, 4)).as("mean_a"),
       when($"n_b" > 0L, round(mB / 1e4, 4)).as("mean_b"),
       when($"n_a" >= 2L && $"n_b" >= 2L && (vA + vB) > 0.0,
-        round((mA - mB) / sqrt(vA / $"n_a" + vB / $"n_b"), 4)).as("z_score"))
+        round((mA - mB) / sqrt(welchSe2), 4)).as("z_score"))
   }
 
   /** Kaplan–Meier time-to-conversion curve (q235; Kaplan & Meier 1958 —
@@ -899,14 +953,13 @@ object Events {
     val perUser = signup
       .join(firstPurch, Seq("user_id"), "left_outer")
       .crossJoin(broadcast(mx))
-      .select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"),
+      .select(userArm,
         when($"p_ts".isNotNull, expr(s"(p_ts - s_ts) div $NsPerDay"))
           .otherwise(expr(s"(mx - s_ts) div $NsPerDay")).as("t"),
         $"p_ts".isNotNull.cast("long").as("churned"))
     val byT = perUser.groupBy($"t").agg(
       count(lit(1)).as("n_t"), sum($"churned").as("d"),
-      sum(when($"arm" === 0L, 1L).otherwise(0L)).as("n_ta"),
-      sum(when($"arm" === 0L, $"churned").otherwise(0L)).as("d_a"))
+      armSum(0L, lit(1L)).as("n_ta"), armSum(0L, $"churned").as("d_a"))
     val wPrev = Window.orderBy($"t")
       .rowsBetween(Window.unboundedPreceding, -1)
     val tot = byT.agg(sum($"n_t").as("tot"), sum($"n_ta").as("tot_a"))
@@ -958,35 +1011,26 @@ object Events {
     */
   def ratioMetricDelta(events: DataFrame): DataFrame = {
     val perUser = events.groupBy($"user_id").agg(
-      sum(when($"event_type" === "purchase",
-        round($"value" * 10000, 0).cast("long")).otherwise(0L)).as("y"),
+      sum(when($"event_type" === "purchase", valueMicro).otherwise(0L)).as("y"),
       sum(when($"event_type" === "click", 1L).otherwise(0L)).as("x"))
-    val um = perUser.select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"), $"y", $"x")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def aSum(a: Long, c: Column): Column = sum(when($"arm" === a, c).otherwise(0L))
+    val um = perUser.select(userArm, $"y", $"x")
     // second moments multiply as DECIMAL so no per-user total can
     // overflow the product (long·long would throw under ANSI)
-    def aDec(a: Long, c: Column): Column =
-      sum(when($"arm" === a, c).otherwise(dec(lit(0L))))
     val m = um.agg(
-      aSum(0L, lit(1L)).as("n_a"), aSum(0L, $"y").as("sy_a"), aSum(0L, $"x").as("sx_a"),
-      aDec(0L, dec($"y") * dec($"y")).as("syy_a"),
-      aDec(0L, dec($"x") * dec($"x")).as("sxx_a"),
-      aDec(0L, dec($"x") * dec($"y")).as("sxy_a"),
-      aSum(1L, lit(1L)).as("n_b"), aSum(1L, $"y").as("sy_b"), aSum(1L, $"x").as("sx_b"),
-      aDec(1L, dec($"y") * dec($"y")).as("syy_b"),
-      aDec(1L, dec($"x") * dec($"x")).as("sxx_b"),
-      aDec(1L, dec($"x") * dec($"y")).as("sxy_b"))
-    def nD(n: Column): Column = n.cast("double")
-    // sample (co)variance from exact sums: (s12 − s1·s2/n)/(n−1)
-    def sv(s12: Column, s1: Column, s2: Column, n: Column): Column =
-      (s12.cast("double") - s1.cast("double") * s2.cast("double") / nD(n)) / (n - 1L)
+      armSum(0L, lit(1L)).as("n_a"), armSum(0L, $"y").as("sy_a"), armSum(0L, $"x").as("sx_a"),
+      armSum(0L, dec($"y") * dec($"y")).as("syy_a"),
+      armSum(0L, dec($"x") * dec($"x")).as("sxx_a"),
+      armSum(0L, dec($"x") * dec($"y")).as("sxy_a"),
+      armSum(1L, lit(1L)).as("n_b"), armSum(1L, $"y").as("sy_b"), armSum(1L, $"x").as("sx_b"),
+      armSum(1L, dec($"y") * dec($"y")).as("syy_b"),
+      armSum(1L, dec($"x") * dec($"x")).as("sxx_b"),
+      armSum(1L, dec($"x") * dec($"y")).as("sxy_b"))
     def varR(n: Column, sy: Column, sx: Column, syy: Column, sxx: Column,
         sxy: Column): Column = {
       val r = sy.cast("double") / sx.cast("double")
-      val xbar = sx.cast("double") / nD(n)
-      (sv(syy, sy, sy, n) - lit(2.0) * r * sv(sxy, sx, sy, n)
-        + r * r * sv(sxx, sx, sx, n)) / (nD(n) * xbar * xbar)
+      val xbar = sx.cast("double") / n.cast("double")
+      (scov(sy, sy, syy, n) - lit(2.0) * r * scov(sx, sy, sxy, n)
+        + r * r * scov(sx, sx, sxx, n)) / (n.cast("double") * xbar * xbar)
     }
     val rA = $"sy_a".cast("double") / $"sx_a".cast("double")
     val rB = $"sy_b".cast("double") / $"sx_b".cast("double")
@@ -1022,57 +1066,34 @@ object Events {
     * per user per period — ANSI throws loudly beyond, the q192
     * posture) summed in DECIMAL(38,0), so every input to the final
     *1-row finisher is engine-exact; the double expressions mirror the
-    * oracle operation-for-operation. Shape: one corpus scan into a
-    * per-user agg (map-side combined), one distinct-user frame, then a
-    * 1-row moment aggregate — nothing corpus-proportional afterwards.
+    * oracle operation-for-operation. Shape: one corpus scan into the
+    * [[prePostUsers]] panel (a per-user agg, map-side combined, over one
+    * distinct-user frame), then a 1-row moment aggregate — nothing
+    * corpus-proportional afterwards.
     */
   def cupedAbTest(events: DataFrame): DataFrame = {
-    val NsPerDay = 24L * NsPerHour
-    val ev = events.select($"user_id", expr(s"ts div $NsPerDay").as("day"),
-      $"event_type", round($"value" * 10000, 0).cast("long").as("vm"))
-    val mid = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-    val perUser = ev.filter($"event_type" === "purchase")
-      .crossJoin(broadcast(mid))
-      .groupBy($"user_id")
-      .agg(sum(when($"day" < $"mid", $"vm").otherwise(0L)).as("x"),
-        sum(when($"day" >= $"mid", $"vm").otherwise(0L)).as("y"))
-    // the assignment universe is every user the experiment saw, not just
-    // converters — a user with no purchases contributes (0, 0)
-    val um = ev.select($"user_id").distinct()
-      .join(perUser, Seq("user_id"), "left_outer")
-      .select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"),
-        coalesce($"x", lit(0L)).as("x"), coalesce($"y", lit(0L)).as("y"))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def armSum(a: Long, c: Column): Column = sum(when($"arm" === a, c).otherwise(0L))
-    def armDec(a: Long, c: Column): Column =
-      sum(dec(when($"arm" === a, c).otherwise(0L)))
-    val m = um.agg(
+    val m = prePostUsers(events).agg(
       count(lit(1)).as("n"), sum($"x").as("sx"), sum($"y").as("sy"),
       sum(dec($"x" * $"y")).as("sxy"), sum(dec($"x" * $"x")).as("sxx"),
       armSum(0L, lit(1L)).as("n_a"), armSum(0L, $"x").as("sx_a"),
-      armSum(0L, $"y").as("sy_a"), armDec(0L, $"x" * $"x").as("sxx_a"),
-      armDec(0L, $"y" * $"y").as("syy_a"), armDec(0L, $"x" * $"y").as("sxy_a"),
+      armSum(0L, $"y").as("sy_a"), armSum(0L, dec($"x" * $"x")).as("sxx_a"),
+      armSum(0L, dec($"y" * $"y")).as("syy_a"), armSum(0L, dec($"x" * $"y")).as("sxy_a"),
       armSum(1L, lit(1L)).as("n_b"), armSum(1L, $"x").as("sx_b"),
-      armSum(1L, $"y").as("sy_b"), armDec(1L, $"x" * $"x").as("sxx_b"),
-      armDec(1L, $"y" * $"y").as("syy_b"), armDec(1L, $"x" * $"y").as("sxy_b"))
+      armSum(1L, $"y").as("sy_b"), armSum(1L, dec($"x" * $"x")).as("sxx_b"),
+      armSum(1L, dec($"y" * $"y")).as("syy_b"), armSum(1L, dec($"x" * $"y")).as("sxy_b"))
     val theta = when(
       (dec($"n") * $"sxx" - dec($"sx") * dec($"sx")).cast("double") > 0.0,
       (dec($"n") * $"sxy" - dec($"sx") * dec($"sy")).cast("double") /
         (dec($"n") * $"sxx" - dec($"sx") * dec($"sx")).cast("double"))
-    val xbar = $"sx".cast("double") / $"n"
-    def mn(s: Column, n: Column): Column = s.cast("double") / n
-    def svar(s1: Column, s2: Column, n: Column): Column =
-      (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
-    def scov(sx: Column, sy: Column, sxy: Column, n: Column): Column =
-      (sxy.cast("double") - sx.cast("double") * sy / n) / (n - lit(1L))
-    val (mA, mB) = (mn($"sy_a", $"n_a"), mn($"sy_b", $"n_b"))
+    val xbar = mean($"sx", $"n")
+    val (mA, mB) = (mean($"sy_a", $"n_a"), mean($"sy_b", $"n_b"))
     val (vA, vB) = (svar($"sy_a", $"syy_a", $"n_a"), svar($"sy_b", $"syy_b", $"n_b"))
     val (vxA, vxB) = (svar($"sx_a", $"sxx_a", $"n_a"), svar($"sx_b", $"sxx_b", $"n_b"))
     val cA = scov($"sx_a", $"sy_a", $"sxy_a", $"n_a")
     val cB = scov($"sx_b", $"sy_b", $"sxy_b", $"n_b")
     val thc = col("th")
-    val mAdjA = mA - thc * (mn($"sx_a", $"n_a") - xbar)
-    val mAdjB = mB - thc * (mn($"sx_b", $"n_b") - xbar)
+    val mAdjA = mA - thc * (mean($"sx_a", $"n_a") - xbar)
+    val mAdjB = mB - thc * (mean($"sx_b", $"n_b") - xbar)
     val vAdjA = vA - lit(2.0) * thc * cA + thc * thc * vxA
     val vAdjB = vB - lit(2.0) * thc * cB + thc * thc * vxB
     m.withColumn("th", theta).select(
@@ -1108,17 +1129,12 @@ object Events {
     */
   def msprtMonitor(events: DataFrame): DataFrame = {
     val tauMicro = 50000.0
-    def mean(s1: Column, n: Column): Column = s1.cast("double") / n
-    def svar(s1: Column, s2: Column, n: Column): Column =
-      (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
-    val mA = mean($"s1_a", $"n_a"); val mB = mean($"s1_b", $"n_b")
-    val vA = svar($"s1_a", $"s2_a", $"n_a"); val vB = svar($"s1_b", $"s2_b", $"n_b")
-    val th = mB - mA
-    val se2 = vA / $"n_a" + vB / $"n_b"
+    val th = mean($"s1_b", $"n_b") - mean($"s1_a", $"n_a")
+    val se2 = welchSe2
     val t2 = lit(tauMicro * tauMicro)
     val lam = sqrt(se2 / (se2 + t2)) *
       exp(th * th * t2 / (lit(2.0) * se2 * (se2 + t2)))
-    msprtArmMoments(events, "purchase").select(
+    msprtArmMoments(events).select(
       $"n_a", $"n_b",
       // guarded like se/lambda/p: an empty arm must render NULL on BOTH
       // engines (Spark nulls a zero-divisor double division, DuckDB
@@ -1145,16 +1161,12 @@ object Events {
     * expression renders the absolute and relative MDE.
     */
   def mdeReadout(events: DataFrame): DataFrame = {
-    val m = msprtArmMoments(events, "purchase")
-    def svar(s1: Column, s2: Column, n: Column): Column =
-      (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
-    val se = sqrt(svar($"s1_a", $"s2_a", $"n_a") / $"n_a"
-      + svar($"s1_b", $"s2_b", $"n_b") / $"n_b")
+    val se = sqrt(welchSe2)
     // 2.8016 = z_{0.025} + z_{0.20} as ONE literal (a double sum of the
     // two constants can differ from the parsed literal by an ulp)
     val mde = lit(2.8016) * se
-    val pooledMean = ($"s1_a" + $"s1_b").cast("double") / ($"n_a" + $"n_b")
-    m.select($"n_a", $"n_b",
+    val pooledMean = mean($"s1_a" + $"s1_b", $"n_a" + $"n_b")
+    msprtArmMoments(events).select($"n_a", $"n_b",
       when($"n_a" > 1L && $"n_b" > 1L, round(se / 10000.0, 4)).as("se"),
       when($"n_a" > 1L && $"n_b" > 1L, round(mde / 10000.0, 4)).as("mde_abs"),
       when($"n_a" > 1L && $"n_b" > 1L && pooledMean > 0.0,
@@ -1179,8 +1191,6 @@ object Events {
     * 1-row finisher.
     */
   def tostEquivalence(events: DataFrame): DataFrame = {
-    def svar(s1: Column, s2: Column, n: Column): Column =
-      (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
     def tail(x: Column): Column =
       when(x >= 0.0, Inference.upperTail(x))
         .otherwise(lit(1.0) - Inference.upperTail(-x))
@@ -1192,14 +1202,12 @@ object Events {
     // subexpression elimination) and the generated method outgrows
     // Janino's 64 KB limit, which drops the stage to interpreted
     // evaluation.
-    msprtArmMoments(events, "purchase")
+    msprtArmMoments(events)
       .select($"n_a", $"n_b",
-        when($"n_a" >= 1L, $"s1_a".cast("double") / $"n_a").as("m_a"),
-        when($"n_b" >= 1L, $"s1_b".cast("double") / $"n_b").as("m_b"),
-        when(ok, sqrt(svar($"s1_a", $"s2_a", $"n_a") / $"n_a"
-          + svar($"s1_b", $"s2_b", $"n_b") / $"n_b")).as("se"),
-        when(ok, lit(0.05) *
-          (($"s1_a" + $"s1_b").cast("double") / ($"n_a" + $"n_b"))).as("delta"))
+        when($"n_a" >= 1L, mean($"s1_a", $"n_a")).as("m_a"),
+        when($"n_b" >= 1L, mean($"s1_b", $"n_b")).as("m_b"),
+        when(ok, sqrt(welchSe2)).as("se"),
+        when(ok, lit(0.05) * mean($"s1_a" + $"s1_b", $"n_a" + $"n_b")).as("delta"))
       .withColumn("diff", $"m_b" - $"m_a")
       .withColumn("z_l", when(tested, ($"diff" + $"delta") / $"se"))
       .withColumn("z_u", when(tested, ($"delta" - $"diff") / $"se"))
@@ -1238,7 +1246,7 @@ object Events {
     */
   def hillTailIndex(events: DataFrame): DataFrame = {
     val byV = events.filter($"event_type" === "purchase")
-      .select(round($"value" * 10000, 0).cast("long").as("vm"))
+      .select(valueMicro.as("vm"))
       .groupBy($"vm").agg(count(lit(1)).as("c"))
       .filter($"vm" >= 1L)
     val tot = byV.agg(sum($"c").as("n"))
@@ -1447,8 +1455,7 @@ object Events {
     val perUser = events.groupBy($"user_id").agg(
       count(lit(1)).as("n_ev"),
       sum(when($"event_type" === "error", 1L).otherwise(0L)).as("e"),
-      sum(when($"event_type" === "purchase",
-        round($"value" * 10000, 0).cast("long")).otherwise(0L)).as("y"))
+      sum(when($"event_type" === "purchase", valueMicro).otherwise(0L)).as("y"))
       .withColumn("t", ($"e" * 5L > $"n_ev").cast("long"))
     val byB = perUser
       // exact integer log2 via binary-string length (the q264 device —
@@ -1487,24 +1494,6 @@ object Events {
       .orderBy($"bucket")
   }
 
-  /** The monitor's exact 1-row arm-moment frame: per md5 arm, (n, Σvm,
-    * Σvm²) on the integer micro-unit grid. θ̂, se, Λ and the always-valid
-    * p of q237 derive from these six scalars alone; q279's MDE and q283's
-    * TOST ride the same frame.
-    */
-  private[graft] def msprtArmMoments(events: DataFrame,
-      metricType: String): DataFrame =
-    events.filter($"event_type" === metricType)
-      .select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"),
-        round($"value" * 10000, 0).cast("long").as("vm"))
-      .agg(
-        sum(when($"arm" === 0L, 1L).otherwise(0L)).as("n_a"),
-        sum(when($"arm" === 0L, $"vm").otherwise(0L)).as("s1_a"),
-        sum(when($"arm" === 0L, $"vm" * $"vm").otherwise(0L)).as("s2_a"),
-        sum(when($"arm" === 1L, 1L).otherwise(0L)).as("n_b"),
-        sum(when($"arm" === 1L, $"vm").otherwise(0L)).as("s1_b"),
-        sum(when($"arm" === 1L, $"vm" * $"vm").otherwise(0L)).as("s2_b"))
-
   /** Session-entry attribution (q195): credit every purchase to the
     * event type that OPENED its session — first-touch attribution at
     * session grain, the marketing-analytics consumer of q33's
@@ -1527,7 +1516,7 @@ object Events {
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val sess = events
       .select($"user_id", $"event_id", $"ts", $"event_type",
-        round($"value" * 10000, 0).cast("long").as("vm"))
+        valueMicro.as("vm"))
       .withColumn("prev_ts", lag($"ts", 1).over(byUser))
       .withColumn("new_session",
         when($"prev_ts".isNull || ($"ts" - $"prev_ts") > 1800L * NsPerSecond, 1)
@@ -1664,11 +1653,10 @@ object Events {
     * distinct-slope histogram, not a global sort.
     */
   def trendTest(events: DataFrame): DataFrame = {
-    val NsPerDay = 24L * NsPerHour
     val daily = events
       .groupBy(expr(s"ts div $NsPerDay").as("d"))
       .agg(count(lit(1)).as("n_events"),
-        sum(round($"value" * 10000, 0).cast("long")).as("s1"))
+        sum(valueMicro).as("s1"))
       .select($"d", expr("(10000 * s1) div n_events").as("xm"))
       .localCheckpoint() // reused by pairs, ties, and the count
     val pairs = daily.select($"d".as("di"), $"xm".as("xi"))
@@ -1729,11 +1717,10 @@ object Events {
     */
   def cusumDriftDays(events: DataFrame): DataFrame = {
     val h = 50000L
-    val NsPerDay = 24L * NsPerHour
     val moments = events
       .groupBy((expr(s"ts div $NsPerDay") * 86400).as("day_epoch"))
       .agg(count(lit(1)).as("n_events"),
-        sum(round($"value" * 10000, 0).cast("long")).as("s1"))
+        sum(valueMicro).as("s1"))
     // reference level k from the RAW exact moments (not from xm, whose
     // per-day floor already lost sub-unit mass)
     val kRef = moments.agg(expr("(10000 * sum(s1)) div sum(n_events)").as("k"))
@@ -1867,7 +1854,7 @@ object Events {
     */
   def srmCheck(events: DataFrame): DataFrame = {
     val arms = events
-      .select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"), $"user_id")
+      .select(userArm, $"user_id")
       .groupBy($"arm")
       .agg(countDistinct($"user_id").as("n_users"), count(lit(1)).as("n_events"))
     val w = Window.partitionBy() // 2 arm rows
@@ -1945,7 +1932,6 @@ object Events {
     */
   def lateArrivalAudit(events: DataFrame, injectedDelayNs: Long = 7200L * NsPerSecond): DataFrame = {
     val watermarkDelayNs = 3600L * NsPerSecond
-    val NsPerDay = 86400L * NsPerSecond
     val arr = events.select($"event_type", $"ts", $"event_id",
         ($"ts" + when($"user_id" % 17L === 3L,
           injectedDelayNs).otherwise(0L)).as("arrival"))
@@ -2076,38 +2062,19 @@ object Events {
     * event-level SEs — the classic underestimate — is exactly what this
     * shape avoids).
     *
-    * Same frame discipline as q232: per-user exact micro-unit pre/post
-    * sums over the distinct-user universe (non-converters contribute
-    * (0, 0)), one 1-row moment aggregate with decimal(38,0) squares,
-    * mirrored double finisher. On the A/A fixture DiD ≈ 0 with |z|
+    * Same [[prePostUsers]] frame as q232: per-user exact micro-unit
+    * pre/post sums over the distinct-user universe (non-converters
+    * contribute (0, 0)), one 1-row moment aggregate with decimal(38,0)
+    * squares, mirrored double finisher. On the A/A fixture DiD ≈ 0 with |z|
     * inside 1.96 — the design's null gate.
     */
   def didEstimate(events: DataFrame): DataFrame = {
-    val NsPerDay = 24L * NsPerHour
-    val ev = events.select($"user_id", expr(s"ts div $NsPerDay").as("day"),
-      $"event_type", round($"value" * 10000, 0).cast("long").as("vm"))
-    val mid = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-    val perUser = ev.filter($"event_type" === "purchase")
-      .crossJoin(broadcast(mid))
-      .groupBy($"user_id")
-      .agg(sum(when($"day" < $"mid", $"vm").otherwise(0L)).as("x"),
-        sum(when($"day" >= $"mid", $"vm").otherwise(0L)).as("y"))
-    val um = ev.select($"user_id").distinct()
-      .join(perUser, Seq("user_id"), "left_outer")
-      .select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"),
-        (coalesce($"y", lit(0L)) - coalesce($"x", lit(0L))).as("d"))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val m = um.agg(
-      sum(when($"arm" === 0L, 1L).otherwise(0L)).as("n_a"),
-      sum(when($"arm" === 0L, $"d").otherwise(0L)).as("s_a"),
-      sum(dec(when($"arm" === 0L, $"d" * $"d").otherwise(0L))).as("ss_a"),
-      sum(when($"arm" === 1L, 1L).otherwise(0L)).as("n_b"),
-      sum(when($"arm" === 1L, $"d").otherwise(0L)).as("s_b"),
-      sum(dec(when($"arm" === 1L, $"d" * $"d").otherwise(0L))).as("ss_b"))
-    def mn(s: Column, n: Column): Column = s.cast("double") / n
-    def svar(s1: Column, s2: Column, n: Column): Column =
-      (s2.cast("double") - s1.cast("double") * s1 / n) / (n - lit(1L))
-    val (mA, mB) = (mn($"s_a", $"n_a"), mn($"s_b", $"n_b"))
+    val m = prePostUsers(events).select($"arm", ($"y" - $"x").as("d")).agg(
+      armSum(0L, lit(1L)).as("n_a"), armSum(0L, $"d").as("s_a"),
+      armSum(0L, dec($"d" * $"d")).as("ss_a"),
+      armSum(1L, lit(1L)).as("n_b"), armSum(1L, $"d").as("s_b"),
+      armSum(1L, dec($"d" * $"d")).as("ss_b"))
+    val (mA, mB) = (mean($"s_a", $"n_a"), mean($"s_b", $"n_b"))
     val (vA, vB) = (svar($"s_a", $"ss_a", $"n_a"), svar($"s_b", $"ss_b", $"n_b"))
     val did = mB - mA
     m.select($"n_a", $"n_b",
@@ -2138,7 +2105,6 @@ object Events {
     * is day-frame-sized.
     */
   def seasonalNaiveEval(events: DataFrame): DataFrame = {
-    val NsPerDay = 24L * NsPerHour
     val daily = events
       .groupBy(expr(s"ts div $NsPerDay").as("d"))
       .agg(count(lit(1)).as("c"))
@@ -2407,7 +2373,6 @@ object Events {
       .crossJoin(broadcast(periods))
     val twoPi = 6.283185307179586
     val ang = lit(twoPi) * pmod($"t", $"p").cast("double") / $"p"
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val sums = grid.groupBy($"p").agg(
       sum(dec($"y" * round(cos(ang) * 1e9, 0).cast("long"))).as("c9"),
       sum(dec($"y" * round(sin(ang) * 1e9, 0).cast("long"))).as("s9"))
@@ -2462,7 +2427,6 @@ object Events {
       .join(daily, Seq("d"), "left_outer")
       .select($"d", coalesce($"xa", lit(0L)).as("xa"),
         coalesce($"xb", lit(0L)).as("xb"))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val tot = series.agg(count(lit(1)).as("tt"),
       sum($"xa").as("sa"), sum($"xb").as("sb"))
     val cent = series.crossJoin(broadcast(tot))
@@ -2536,7 +2500,6 @@ object Events {
     val sIdx = t1.groupBy($"phase")
       .agg(sum($"d6").as("sd6"), count(lit(1)).as("np"))
       .withColumn("s6", round($"sd6".cast("double") / $"np", 0).cast("long"))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val t2 = t1.join(broadcast(sIdx.select($"phase", $"s6")), Seq("phase"))
       .withColumn("r6", $"d6" - $"s6")
       .withColumn("tr6", $"x" * 1000000L - $"s6")
@@ -2618,8 +2581,7 @@ object Events {
     * and se are single mirrored double expressions.
     */
   def captureRecapture(events: DataFrame): DataFrame = {
-    val NsPerDayL = 86400L * 1000000000L
-    val ev = events.select($"user_id", expr(s"ts div $NsPerDayL").as("day"))
+    val ev = events.select($"user_id", expr(s"ts div $NsPerDay").as("day"))
     val mid = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
     val perUser = ev.crossJoin(broadcast(mid))
       .groupBy($"user_id").agg(
@@ -2656,7 +2618,6 @@ object Events {
     val users = events.select($"user_id").distinct().count()
     val perUT = events.groupBy($"event_type", $"user_id")
       .agg(count(lit(1)).as("c"))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val byT = perUT.groupBy($"event_type").agg(
       sum($"c").as("s1"), sum(dec($"c" * $"c")).as("s2"))
     val uD = lit(users).cast("double")
@@ -2801,7 +2762,7 @@ object Events {
     */
   def medianCi(events: DataFrame): DataFrame = {
     val byVal = events
-      .select($"event_type", round($"value" * 10000, 0).cast("long").as("vm"))
+      .select($"event_type", valueMicro.as("vm"))
       .groupBy($"event_type", $"vm").agg(count(lit(1)).as("c"))
     val w = Window.partitionBy($"event_type").orderBy($"vm")
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -2853,19 +2814,16 @@ object Events {
   def permutationTest(events: DataFrame): DataFrame = {
     val b = 64
     val perUser = events.groupBy($"user_id").agg(
-      sum(when($"event_type" === "purchase",
-        round($"value" * 10000, 0).cast("long")).otherwise(0L)).as("vm"))
+      sum(when($"event_type" === "purchase", valueMicro).otherwise(0L)).as("vm"))
       .localCheckpoint() // users-sized; read by the observed + B passes
     def armAgg(df: DataFrame, grp: Seq[Column]): DataFrame =
       df.groupBy(grp: _*).agg(
-        sum(when($"arm" === 0L, 1L).otherwise(0L)).as("na"),
-        sum(when($"arm" === 0L, $"vm").otherwise(0L)).as("sa"),
-        sum(when($"arm" === 1L, 1L).otherwise(0L)).as("nb"),
-        sum(when($"arm" === 1L, $"vm").otherwise(0L)).as("sb"))
+        armSum(0L, lit(1L)).as("na"), armSum(0L, $"vm").as("sa"),
+        armSum(1L, lit(1L)).as("nb"), armSum(1L, $"vm").as("sb"))
     def dAbs: Column = when($"na" > 0L && $"nb" > 0L,
       abs($"sa".cast("double") / $"na" - $"sb".cast("double") / $"nb"))
     val obs = armAgg(perUser
-        .select(Scale.md5SlicePos($"user_id", 0, 2).as("arm"), $"vm"),
+        .select(userArm, $"vm"),
         Seq.empty)
       .withColumn("d_obs", dAbs)
     val perms = armAgg(perUser
@@ -2923,12 +2881,11 @@ object Events {
       sum(when($"event_type" === "purchase", 1L).otherwise(0L)).as("np"))
     val rows = perUser.select(
       (length(bin($"c")) - 1).cast("long").as("stratum"),
-      Scale.md5SlicePos($"user_id", 0, 2).as("arm"),
+      userArm,
       when($"np" > 0L, 1L).otherwise(0L).as("conv"))
     val per = rows.groupBy($"stratum").agg(
-      sum(when($"arm" === 0L, 1L).otherwise(0L)).as("n1"),
-      sum(when($"arm" === 1L, 1L).otherwise(0L)).as("n2"),
-      sum(when($"arm" === 0L, $"conv").otherwise(0L)).as("a"),
+      armSum(0L, lit(1L)).as("n1"), armSum(1L, lit(1L)).as("n2"),
+      armSum(0L, $"conv").as("a"),
       sum($"conv").as("m1"))
     val nk = $"n1" + $"n2"
     val e = $"n1".cast("double") * $"m1" / nk

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Events, Inference}
@@ -1131,6 +1132,25 @@ class InferenceSpec extends GraftSuite {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("q192, q237, q279 and q283 read one arm-moment frame: equal n, means and se") {
+    // no tolerance: the four readouts share one moment aggregate and one
+    // mean/variance expression, so their common outputs are the same doubles
+    def one(df: DataFrame) = df.collect() match { case Array(r) => r }
+    val ab = one(Events.abValueTest(events))
+    val ms = one(Events.msprtMonitor(events))
+    val mde = one(Events.mdeReadout(events))
+    val tost = one(Events.tostEquivalence(events))
+    def ns(r: Row) = (r.getAs[Long]("n_a"), r.getAs[Long]("n_b"))
+    assert(ns(ab)._1 > 1L && ns(ab)._2 > 1L, "the fixture must populate both arms")
+    for (r <- Seq(ms, mde, tost)) assert(ns(r) == ns(ab))
+    for (c <- Seq("mean_a", "mean_b")) {
+      assert(!ab.isNullAt(ab.fieldIndex(c)))
+      assert(tost.getAs[Double](c) == ab.getAs[Double](c), c)
+    }
+    assert(!mde.isNullAt(mde.fieldIndex("se")))
+    assert(tost.getAs[Double]("se") == mde.getAs[Double]("se"))
   }
 
   test("labelerAgreement equals brute force; self-agreement kappa=1; directional disagreement rejects (q284)") {

@@ -21,8 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Scale.hexFraction`, the centroid structs only in
   * `Similarity.assignCells` and `probeCellsExpr`, the md5-ordered
   * coreset draw only in `Similarity.md5Coreset`, the shingle-set
-  * intersection only in `Dedup.verifyOverlap` and the df-ranked gram
-  * order only in `Dedup.rarestPrefix`.
+  * intersection only in `Dedup.verifyOverlap`, the df-ranked gram
+  * order only in `Dedup.rarestPrefix`, the A/B arm coin only in
+  * `Events.userArm` and the per-arm sum only in `Events.armSum`.
   */
 class RegisteredSurfaceSpec extends AnyFunSuite {
 
@@ -151,6 +152,20 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
           ("""count\(\s*lit\(\s*1\s*\)\s*\)\s*\.over\(\s*""" +
             """(?:[\w.]+\.)?Window\.partitionBy\(\s*\$"h"\s*\)""").r, Set("rarestPrefix"))
     if (offenders.nonEmpty) fail("call the helper in Dedup instead:\n" + offenders.mkString("\n"))
+  }
+
+  test("drift guard: one A/B arm kernel in src/main") {
+    // every two-arm readout takes its arm from the one md5 coin column and
+    // sums per arm through armSum; srmCheck's signed difference over its
+    // two arm rows is the one other arm predicate; both needles read the
+    // `$"user_id"` / `$"arm"` literals, so comments alone are stripped
+    val files = sources("src/main/scala", keepLiterals = true)
+    val offenders =
+      strays(files, """md5SlicePos\(\s*(?:\$"user_id"|col\("user_id"\))\s*,\s*0\s*,\s*2\s*\)""".r,
+        Set("userArm")) ++
+        strays(files, """when\(\s*(?:\$"arm"|col\("arm"\))\s*===""".r, Set("armSum", "srmCheck"))
+    if (offenders.nonEmpty) fail("use the A/B kernel in Events instead:\n" +
+      offenders.mkString("\n"))
   }
 
   /** Index one past the bracket that closes `text(open)`. */
