@@ -1206,18 +1206,98 @@ object Curation {
       .orderBy($"source")
   }
 
+  // ---- quality classifier (q143 family) ---------------------------------------
+
+  /** The one classifier every q143-family query trains and scores: label
+    * `lang == TargetLang`, `Buckets` md5-slice token bins, `Rounds`
+    * full-batch steps at `LearningRate` = 2^-10.
+    */
+  private val TargetLang = "en"
+  private val Buckets = 64
+  private val Rounds = 4
+  private val LearningRate = 0.0009765625
+
+  /** The classifier's 0/1 label column `y`. */
+  private def label: Column = when($"lang" === TargetLang, 1L).otherwise(0L).as("y")
+
+  /** round(1e6·sigmoid(zm/1e6)) as a long: a micro-unit margin's score
+    * quantized to micro-units (round ≥ 0, so HALF_UP is DuckDB's
+    * half-away-from-zero).
+    */
+  private def microSigmoid(zm: Column): Column =
+    round(lit(1e6) / (lit(1.0) + exp(-(zm / lit(1e6)))), 0).cast("long")
+
+  /** The acceptance coin of q145/q147: md5(doc_id) sliced to an integer in
+    * [0, 1e6), compared against a micro-unit score.
+    */
+  private def acceptCoin: Column =
+    conv(substring(md5($"doc_id".cast("string")), 1, 5), 16, 10).cast("bigint") % 1000000L
+
+  /** Session-scoped trained-weights cache: the classifier family
+    * (q143 weights / q144 eval / q145 sampling) analyzes the SAME model,
+    * and training — `Rounds` driver-synchronized gradient passes — is by
+    * far its dominant cost, so it runs once per corpus plan per session
+    * (the driver-value analog of `Dedup.pairIndex`; the cached value is
+    * just the (Buckets+1)-row weight vector, so cache memory is trivially
+    * bounded — the cap guards entry COUNT, not size).
+    */
+  private val Weights = new SessionArtifacts.Kind[Seq[(Long, Long)]]
+
+  /** Session-scoped PERSISTED feature-frame cache, keyed by (session,
+    * corpus plan), like the weights. Caching the frame beside the weights
+    * means a weights-cache hit (q144/q145 after q143) scores against the
+    * already-tokenized, already-persisted frame instead of re-scanning
+    * the corpus: the whole family pays ONE tokenize+hash pass per corpus
+    * per session. Entries are persist()-backed, so the registry
+    * unpersists them on eviction (see [[SessionArtifacts]]).
+    */
+  private val FeatureFrames = new SessionArtifacts.Kind[DataFrame]
+
+  private def cachedFeatureFrame(documents: DataFrame): DataFrame =
+    SessionArtifacts.getOrBuild(FeatureFrames, documents)(featureFrame(documents).persist())
+
+  /** Hashed feature counts (doc_id, b, c) of a (doc_id, tok) token frame:
+    * per-doc token counts in `Buckets` md5-slice bins, plus the bias
+    * feature at bucket -1 for every document of `documents`.
+    */
+  private def bucketCounts(tokens: DataFrame, documents: DataFrame): DataFrame =
+    tokens
+      .select($"doc_id", Scale.md5SlicePos($"tok", 0, Buckets).as("b"))
+      .groupBy($"doc_id", $"b").agg(count(lit(1)).as("c"))
+      .unionAll(documents.select($"doc_id", lit(-1L).as("b"), lit(1L).as("c")))
+
+  /** Hashed feature frame: the corpus's `bucketCounts`.
+    *
+    * Persisted HASH-PARTITIONED BY doc_id (r14, guide §2.4): the
+    * bias-row union destroys the aggregation's partitioning, so every
+    * training round's margin aggregation and gradient join used to
+    * re-exchange the whole frame by doc_id — 3 corpus-sized exchanges
+    * per round. One explicit repartition before persist makes every
+    * per-round groupBy(doc_id)/join(doc_id) partition-local; the only
+    * per-round exchange left is the (Buckets+1)-row gradient one.
+    */
+  private def featureFrame(documents: DataFrame): DataFrame =
+    bucketCounts(documents.select($"doc_id", explode(split($"text", " ")).as("tok")), documents)
+      // width = cores exactly (r15): an explicit REPARTITION_BY_NUM is
+      // not AQE-coalescible, so every downstream scan of the persisted
+      // frame pays the full task count — x2 bought no spread the cores
+      // don't already give, and doubled per-scan scheduling overhead on
+      // every consumer (the q240/q241 anti-scaling trail)
+      .repartition(documents.sparkSession.sparkContext.defaultParallelism,
+        $"doc_id")
+
   /** Shared trainer for the discriminative quality classifier (q143/q144):
     * full-batch logistic regression on HASHED bag-of-words features — the
     * GPT-3/LLaMA-style "does this look like the reference corpus?" filter,
     * the discriminative complement of q98's generative DSIR ratio. Label:
-    * `lang == targetLang`. Features: token counts hashed into `buckets`
+    * `lang == TargetLang`. Features: token counts hashed into `Buckets`
     * md5-slice bins (q72's engine-independent hash family) plus a bias
-    * feature at bucket -1. `rounds` gradient-descent steps at `lr` (a
-    * POWER OF TWO, so the scaling multiply is exact in IEEE doubles;
-    * default 2^-10 — small enough that raw-count features cannot drive
-    * the logit into saturation in a few rounds: at lr = 0.5 the model
-    * diverged to a degenerate all-positive classifier on the registered
-    * corpus).
+    * feature at bucket -1. `Rounds` gradient-descent steps at
+    * `LearningRate` (a POWER OF TWO, so the scaling multiply is exact in
+    * IEEE doubles; 2^-10 — small enough that raw-count features cannot
+    * drive the logit into saturation in a few rounds: at lr = 0.5 the
+    * model diverged to a degenerate all-positive classifier on the
+    * registered corpus).
     *
     * On the synthetic corpus the lang label carries NO lexical signal
     * (31 shared tokens, near-identical per-lang frequencies and
@@ -1230,90 +1310,33 @@ object Curation {
     * live in integer MICRO-UNITS, so the per-doc margin z and the
     * per-bucket gradient are exact integer sums (order-free under any
     * partitioning); sigmoid is the one transcendental and is quantized to
-    * micro-units immediately (round >= 0, so HALF_UP == DuckDB's
-    * half-away-from-zero); the weight step uses floor() (identical in
-    * both engines), never a .5-boundary round. RESIDUAL RISK (the
-    * classifier cousin of the DP release's 1-ulp ln() caveat): the
-    * sigmoid quantization itself is a .5-boundary round, so a doc whose
-    * unrounded 1e6·sigmoid(z) landed within ~1 ulp of a .5 micro-unit
-    * boundary could round differently if Spark's and DuckDB's exp()
-    * differ there, and one flipped pm compounds through later rounds.
-    * This is a per-dataset property, not a structural invariant like the
-    * integer paths — CurationSpec asserts every fixture doc's unrounded
-    * score sits > 1e-6 micro-units from the nearest boundary in every
-    * round (4+ orders above the ~1e-10 1-ulp exp() jitter at the 1e6
+    * micro-units immediately (`microSigmoid`); the weight step uses
+    * floor() (identical in both engines), never a .5-boundary round.
+    * RESIDUAL RISK (the classifier cousin of the DP release's 1-ulp ln()
+    * caveat): the sigmoid quantization itself is a .5-boundary round, so
+    * a doc whose unrounded 1e6·sigmoid(z) landed within ~1 ulp of a .5
+    * micro-unit boundary could round differently if Spark's and DuckDB's
+    * exp() differ there, and one flipped pm compounds through later
+    * rounds. This is a per-dataset property, not a structural invariant
+    * like the integer paths — CurationSpec asserts every fixture doc's
+    * unrounded score sits > 1e-6 micro-units from the nearest boundary in
+    * every round (4+ orders above the ~1e-10 1-ulp exp() jitter at the 1e6
     * scale), and the sf0.01/sf0.1 oracle gates are the empirical check
     * on the registered corpora.
     *
     * Scale shape: each round is two map-side-combined aggregations over
     * the cached feature frame — doc-dimension (margin) then
     * feature-dimension (gradient) — and the driver holds only the
-    * (buckets+1)-row weight vector between rounds: exactly what it must
+    * (Buckets+1)-row weight vector between rounds: exactly what it must
     * broadcast anyway (the Lloyd/k-means pattern). Rounds are O(rounds)
     * driver synchronizations, independent of corpus size.
     */
-  /** Session-scoped trained-weights cache: the classifier family
-    * (q143 weights / q144 eval / q145 sampling) analyzes the SAME model,
-    * and training — `rounds` driver-synchronized gradient passes — is by
-    * far its dominant cost, so it runs once per (corpus plan, targetLang,
-    * buckets, rounds, lr) per session (the driver-value analog of
-    * `Dedup.pairIndex`; the cached value is just the (buckets+1)-row
-    * weight vector, so cache memory is trivially bounded — the cap
-    * guards entry COUNT, not size).
-    */
-  private val Weights = new SessionArtifacts.Kind[Seq[(Long, Long)]]
-
-  /** Session-scoped PERSISTED feature-frame cache, keyed by (session,
-    * corpus plan, buckets) — coarser than the weights key because the
-    * frame is model-independent. Caching the frame beside the weights
-    * means a weights-cache hit (q144/q145 after q143) scores against the
-    * already-tokenized, already-persisted frame instead of re-scanning
-    * the corpus: the whole family pays ONE tokenize+hash pass per
-    * (corpus, buckets) per session. Entries are persist()-backed, so the
-    * registry unpersists them on eviction (see [[SessionArtifacts]]).
-    */
-  private val FeatureFrames = new SessionArtifacts.Kind[DataFrame]
-
-  private def cachedFeatureFrame(documents: DataFrame, buckets: Int): DataFrame =
-    SessionArtifacts.getOrBuild(FeatureFrames, documents, buckets)(
-      featureFrame(documents, buckets).persist())
-
-  /** Hashed feature frame: (doc_id, bucket, count) token counts in
-    * `buckets` md5-slice bins plus the bias feature at bucket -1.
-    *
-    * Persisted HASH-PARTITIONED BY doc_id (r14, guide §2.4): the
-    * bias-row union destroys the aggregation's partitioning, so every
-    * training round's margin aggregation and gradient join used to
-    * re-exchange the whole frame by doc_id — 3 corpus-sized exchanges
-    * per round. One explicit repartition before persist makes every
-    * per-round groupBy(doc_id)/join(doc_id) partition-local; the only
-    * per-round exchange left is the (buckets+1)-row gradient one.
-    */
-  private def featureFrame(documents: DataFrame, buckets: Int): DataFrame =
-    documents
-      .select($"doc_id", explode(split($"text", " ")).as("tok"))
-      .select($"doc_id", Scale.md5SlicePos($"tok", 0, buckets).as("b"))
-      .groupBy($"doc_id", $"b").agg(count(lit(1)).as("c"))
-      .unionAll(documents.select($"doc_id", lit(-1L).as("b"), lit(1L).as("c")))
-      // width = cores exactly (r15): an explicit REPARTITION_BY_NUM is
-      // not AQE-coalescible, so every downstream scan of the persisted
-      // frame pays the full task count — x2 bought no spread the cores
-      // don't already give, and doubled per-scan scheduling overhead on
-      // every consumer (the q240/q241 anti-scaling trail)
-      .repartition(documents.sparkSession.sparkContext.defaultParallelism,
-        $"doc_id")
-
-  private[graft] def trainQualityWeights(documents: DataFrame,
-      targetLang: String, buckets: Int, rounds: Int,
-      lr: Double): (DataFrame, Seq[(Long, Long)]) = {
-    // the folded first round below assumes at least one training step
-    require(rounds >= 1, s"trainQualityWeights: rounds=$rounds must be >= 1")
-    val fx = cachedFeatureFrame(documents, buckets)
-    val ws = SessionArtifacts.getOrBuild(Weights, documents, targetLang, buckets, rounds, lr) {
+  private[graft] def trainQualityWeights(documents: DataFrame): (DataFrame, Seq[(Long, Long)]) = {
+    val fx = cachedFeatureFrame(documents)
+    val ws = SessionArtifacts.getOrBuild(Weights, documents) {
       // (doc_id, y) label projection — corpus-linear, the Lloyd bound.
       // Co-partitioned with fx so the pivot join below is exchange-free.
-      val labels = documents.select($"doc_id",
-        when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
+      val labels = documents.select($"doc_id", label)
         .repartition(documents.sparkSession.sparkContext
           .defaultParallelism, $"doc_id")
       // r15 (§2.4): pivot the co-partitioned frame ONCE to one row per
@@ -1323,7 +1346,7 @@ object Curation {
       // label join = 3 stages and a broadcast per round); with the
       // features and label in the SAME row, a round is one narrow
       // pass: per-doc margin from the array against the broadcast-ish
-      // weight-map literal, explode, one (buckets+1)-key map-side-
+      // weight-map literal, explode, one (Buckets+1)-key map-side-
       // combined rollup. Zero joins, zero doc-dimension shuffles per
       // round, at any scale. The pivot itself rides fx's doc_id
       // partitioning (the groupBy and the label join are exchange-free).
@@ -1352,36 +1375,48 @@ object Curation {
           g: Array[org.apache.spark.sql.Row]): Map[Long, Long] =
         w ++ g.map { r =>
           val (b, gm) = (r.getLong(0), r.getLong(1))
-          b -> (w.getOrElse(b, 0L) - math.floor(lr * gm / nDocs).toLong)
+          b -> (w.getOrElse(b, 0L) - math.floor(LearningRate * gm / nDocs).toLong)
         }
       var w: Map[Long, Long] = step(Map.empty, g1)
-      for (_ <- 2 to rounds) {
+      for (_ <- 2 to Rounds) {
         // single MapType literal (not per-entry lit()s): the weight
         // values land in the codegen references array instead of the
         // generated source, so every round reuses one compiled plan
         val wMap = typedlit(w)
         val zm = aggregate($"feats", lit(0L),
           (acc, f) => acc + f.getField("c") * element_at(wMap, f.getField("b")))
-        val pm = round(lit(1e6) / (lit(1.0) + exp(-(zm / lit(1e6)))), 0)
-          .cast("long")
-        w = step(w, gradient(pm - $"y" * lit(1000000L)))
+        w = step(w, gradient(microSigmoid(zm) - $"y" * lit(1000000L)))
       }
       w.toSeq.sortBy(_._1)
     }
     (fx, ws)
   }
 
-  /** Trained classifier weights (q143): the (buckets+1)-row weight table
-    * after `rounds` full-batch steps — see [[trainQualityWeights]] for the
+  /** Per-doc (doc_id, zm): the integer micro-unit margin Σ c·w of each
+    * doc's feature counts `fx` under the weights `w` — one broadcast of
+    * the weight vector, one doc-dimension aggregate.
+    */
+  private def margins(fx: DataFrame, w: Seq[(Long, Long)]): DataFrame =
+    fx.join(broadcast(fx.sparkSession.createDataFrame(w).toDF("b", "wm")), Seq("b"))
+      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
+
+  /** Per-doc (doc_id, zm, y) labelled margin frame — the q143 model's one
+    * scoring pass over the cached feature frame, which every eval-family
+    * readout builds on.
+    */
+  private[graft] def docMargins(documents: DataFrame): DataFrame = {
+    val (fx, w) = trainQualityWeights(documents)
+    margins(fx, w).join(documents.select($"doc_id", label), Seq("doc_id"))
+  }
+
+  /** Trained classifier weights (q143): the (Buckets+1)-row weight table
+    * after `Rounds` full-batch steps — see [[trainQualityWeights]] for the
     * training contract and scale shape. Output: hash bucket (-1 = bias),
     * the integer micro-unit weight, and its double rendering.
     */
   def qualityClassifierWeights(documents: DataFrame): DataFrame = {
-    val buckets = 64
-    val rounds = 4
-    val spark = documents.sparkSession
-    val (_, w) = trainQualityWeights(documents, "en", buckets, rounds, 0.0009765625)
-    spark.createDataFrame(w).toDF("b", "w_micro")
+    val (_, w) = trainQualityWeights(documents)
+    documents.sparkSession.createDataFrame(w).toDF("b", "w_micro")
       .select($"b", $"w_micro", round($"w_micro" / 1e6, 6).as("weight"))
       .orderBy($"b")
   }
@@ -1399,18 +1434,9 @@ object Curation {
     * inference sweep would run.
     */
   def qualityClassifierEval(documents: DataFrame): DataFrame = {
-    val targetLang = "en"
-    val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
-    val labels = documents.select($"doc_id",
-      when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
-    val scored = fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
-      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
-      .join(labels, Seq("doc_id"))
+    val scored = docMargins(documents)
       .select($"y", when($"zm" >= 0L, 1L).otherwise(0L).as("pred"))
       .groupBy($"y", $"pred").agg(count(lit(1)).as("n_docs"))
-    // fx stays session-cached (SessionArtifacts owns its lifecycle) —
-    // the scoring pass below reads the persisted frame, not a rebuild
     val byLabel = Window.partitionBy($"y")
     scored
       .select($"y", $"pred", $"n_docs",
@@ -1435,19 +1461,12 @@ object Curation {
     * expected-token-budget planner needs.
     */
   def classifierSample(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, "en", 64, 4, 0.0009765625)
-    val scored = fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
-      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
-      .select($"doc_id",
-        round(lit(1e6) / (lit(1.0) + exp(-($"zm" / lit(1e6)))), 0)
-          .cast("long").as("pm"))
+    val (fx, w) = trainQualityWeights(documents)
     // fx stays session-cached (SessionArtifacts owns its lifecycle)
-    scored
+    margins(fx, w)
+      .select($"doc_id", microSigmoid($"zm").as("pm"))
       .join(documents.select($"doc_id", $"source"), Seq("doc_id"))
-      .select($"source", $"pm",
-        (conv(substring(md5($"doc_id".cast("string")), 1, 5), 16, 10)
-          .cast("bigint") % 1000000L).as("u"))
+      .select($"source", $"pm", acceptCoin.as("u"))
       .groupBy($"source")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -1477,7 +1496,7 @@ object Curation {
     * a bucket-sized rollup.
     */
   def classifierCalibration(documents: DataFrame): DataFrame =
-    marginBuckets(documents, "en", 64, 4, 0.0009765625)
+    marginBuckets(documents)
       .select($"mbucket", $"n_docs", $"n_pos",
         round($"n_pos" / $"n_docs", 6).as("pos_rate"))
       .orderBy($"mbucket")
@@ -1486,21 +1505,13 @@ object Curation {
     * out so q263's isotonic fit rides the identical scoring pass (and
     * the session weight/feature caches) instead of re-deriving it.
     */
-  private[graft] def marginBuckets(documents: DataFrame, targetLang: String,
-      buckets: Int, rounds: Int, lr: Double): DataFrame = {
-    val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, buckets, rounds, lr)
-    val labels = documents.select($"doc_id",
-      when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
-    fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
-      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
-      .join(labels, Seq("doc_id"))
+  private[graft] def marginBuckets(documents: DataFrame): DataFrame =
+    docMargins(documents)
       .select($"y",
         (when($"zm" >= 0L, 1L).otherwise(-1L) *
           (length(bin(abs($"zm") + 1)) - 1)).as("mbucket"))
       .groupBy($"mbucket")
       .agg(count(lit(1)).as("n_docs"), sum($"y").as("n_pos"))
-  }
 
   /** Isotonic (monotone) calibration of the q160 reliability curve via
     * the MINIMAX characterization of the weighted PAV fit (q263;
@@ -1523,8 +1534,7 @@ object Curation {
     * classic O(n²)-sequential-PAV made distribution-safe.
     */
   def isotonicCalibration(documents: DataFrame): DataFrame = {
-    val buckets = 64
-    val b = marginBuckets(documents, "en", buckets, 4, 0.0009765625)
+    val b = marginBuckets(documents)
     val wOrd = Window.orderBy($"mbucket")
       .rowsBetween(Window.unboundedPreceding, 0)
     val cum = b
@@ -1553,6 +1563,31 @@ object Curation {
       .orderBy($"mbucket")
   }
 
+  /** The conformal frame of q240/q241, checkpointed once for the q̂ and
+    * test passes: `docMargins` plus the calibration coin `is_calib` (md5
+    * slice 1, independent of every slice-0 draw) and the nonconformity
+    * `s_true`, the margin toward the wrong side (y=1 → −zm, y=0 → +zm).
+    */
+  private def conformalScored(documents: DataFrame): DataFrame =
+    docMargins(documents)
+      .withColumn("is_calib", Scale.md5SlicePos($"doc_id", 1, 2) === 0L)
+      .withColumn("s_true", when($"y" === 1L, -$"zm").otherwise($"zm"))
+      .localCheckpoint()
+
+  /** q̂_α of the `nCal` calibration rows `calib`: the ⌈(n+1)(1−α)⌉-th
+    * smallest `s_true`, as the max of the bottom k through the salted
+    * two-stage `topKPerGroup` (never a global sort). `slice` names the
+    * calibration slice in the too-few-points failure.
+    */
+  private def conformalQhat(calib: DataFrame, nCal: Long, alpha: Double,
+      slice: String): Long = {
+    val k = math.ceil((nCal + 1) * (1 - alpha)).toLong
+    require(k <= nCal, s"alpha=$alpha$slice needs $k calibration points, have $nCal")
+    Scale.topKPerGroup(calib.select(lit(0L).as("g"), $"s_true".as("s")),
+        group = $"g", rankKey = $"s", tie = $"s", saltSource = $"s", k = k.toInt)
+      .agg(max($"s")).collect()(0).getLong(0)
+  }
+
   /** Split-conformal prediction sets for the quality classifier (q240;
     * Vovk's conformal framework, split form per Papadopoulos 2002 /
     * Angelopoulos & Bates 2023): the distribution-free finite-sample
@@ -1578,30 +1613,11 @@ object Curation {
     * ratios are the only floats.
     */
   def conformalQuality(documents: DataFrame): DataFrame = {
-    val targetLang = "en"
-    val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
-    val labels = documents.select($"doc_id",
-      when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
-    val scored = fx
-      .join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
-      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
-      .join(labels, Seq("doc_id"))
-      .withColumn("is_calib", Scale.md5SlicePos($"doc_id", 1, 2) === 0L)
-      .withColumn("s_true", when($"y" === 1L, -$"zm").otherwise($"zm"))
-      .localCheckpoint() // scored once; read by q-hat and per-alpha passes
+    val scored = conformalScored(documents)
     val nCal = scored.filter($"is_calib").count()
     val test = scored.filter(!$"is_calib")
     Seq(0.05, 0.1, 0.2).map { alpha =>
-      val k = math.ceil((nCal + 1) * (1 - alpha)).toLong
-      require(k <= nCal,
-        s"alpha=$alpha needs ${k} calibration points, have $nCal")
-      val qhat = Scale.topKPerGroup(
-          scored.filter($"is_calib")
-            .select(lit(alpha).as("alpha"), $"s_true".as("s")),
-          group = $"alpha", rankKey = $"s", tie = $"s", saltSource = $"s",
-          k = k.toInt)
-        .agg(max($"s")).collect()(0).getLong(0)
+      val qhat = conformalQhat(scored.filter($"is_calib"), nCal, alpha, "")
       test.agg(count(lit(1)).as("n_test"),
           sum(when($"s_true" <= qhat, 1L).otherwise(0L)).as("cov"),
           sum(when(-$"zm" <= qhat, 1L).otherwise(0L) +
@@ -1632,34 +1648,16 @@ object Curation {
     * scalar per (α, label) crosses the driver.
     */
   def mondrianConformal(documents: DataFrame): DataFrame = {
-    val targetLang = "en"
-    val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
-    val labels = documents.select($"doc_id",
-      when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
-    val scored = fx
-      .join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
-      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
-      .join(labels, Seq("doc_id"))
-      .withColumn("is_calib", Scale.md5SlicePos($"doc_id", 1, 2) === 0L)
-      .withColumn("s_true", when($"y" === 1L, -$"zm").otherwise($"zm"))
-      .localCheckpoint() // shared by the per-class q-hat and test passes
+    val scored = conformalScored(documents)
     val nCalByY = scored.filter($"is_calib").groupBy($"y").count()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val test = scored.filter(!$"is_calib")
     (for (alpha <- Seq(0.1, 0.2); y <- Seq(0L, 1L)) yield {
       // getOrElse: a class absent from the calibration slice must fail
-      // through the descriptive require below, not a bare Map.apply
+      // through conformalQhat's descriptive require, not a bare Map.apply
       val nCal = nCalByY.getOrElse(y, 0L)
-      val k = math.ceil((nCal + 1) * (1 - alpha)).toLong
-      require(k <= nCal && nCal > 0L,
-        s"alpha=$alpha label=$y needs $k calibration points, have $nCal")
-      val qhat = Scale.topKPerGroup(
-          scored.filter($"is_calib" && $"y" === y)
-            .select(lit(y).as("g"), $"s_true".as("s")),
-          group = $"g", rankKey = $"s", tie = $"s", saltSource = $"s",
-          k = k.toInt)
-        .agg(max($"s")).collect()(0).getLong(0)
+      val qhat = conformalQhat(scored.filter($"is_calib" && $"y" === y), nCal, alpha,
+        s" label=$y")
       test.filter($"y" === y)
         .agg(count(lit(1)).as("n_test"),
           sum(when($"s_true" <= qhat, 1L).otherwise(0L)).as("cov"))
@@ -1691,18 +1689,8 @@ object Curation {
     * is a `Scale.rangePrefixSums` over score. No global window, no
     * driver fold; the final aggregate is one row.
     */
-  def classifierAuc(documents: DataFrame, parts: Int = 32): DataFrame = {
-    val targetLang = "en"
-    val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
-    val labels = documents.select($"doc_id",
-      when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
-    val byScore = fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
-      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
-      .join(labels, Seq("doc_id"))
-      .groupBy($"zm")
-      .agg(sum($"y").as("np"), sum(lit(1L) - $"y").as("nn"))
-    Scale.rangePrefixSums(byScore, Seq($"zm"), Seq("nn"), parts)
+  def classifierAuc(documents: DataFrame, parts: Int = 32): DataFrame =
+    Scale.rangePrefixSums(scoreTies(documents), Seq($"zm"), Seq("nn"), parts)
       // negatives with a strictly LOWER score than this tie group
       .withColumn("cum_nn", $"cum_nn" - $"nn")
       .agg(
@@ -1711,21 +1699,13 @@ object Curation {
       .select(
         round($"num2".cast("double") / (lit(2.0) * $"n_pos" * $"n_neg"), 6).as("auc"),
         $"n_pos", $"n_neg")
-  }
 
-  /** Per-doc (doc_id, zm, y) margin frame — the shared q143 scoring
-    * pass, exposed for the eval-family brute-force specs.
+  /** The distinct-score tie frame of q189/q266: per integer margin zm,
+    * its positive and negative doc counts (np, nn).
     */
-  private[graft] def docMargins(documents: DataFrame): DataFrame = {
-    val targetLang = "en"
-    val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
-    val labels = documents.select($"doc_id",
-      when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
-    fx.join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
-      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
-      .join(labels, Seq("doc_id"))
-  }
+  private def scoreTies(documents: DataFrame): DataFrame =
+    docMargins(documents).groupBy($"zm")
+      .agg(sum($"y").as("np"), sum(lit(1L) - $"y").as("nn"))
 
   /** DeLong confidence interval for the q189 AUC (q266; DeLong, DeLong
     * & Clarke-Pearson 1988): the AUC is the mean of per-positive
@@ -1745,20 +1725,9 @@ object Curation {
     * positive total are one `Scale.rangePrefixSums` — no global window.
     */
   def aucDelong(documents: DataFrame): DataFrame = {
-    val targetLang = "en"
-    val spark = documents.sparkSession
-    val (fx, w) = trainQualityWeights(documents, targetLang, 64, 4, 0.0009765625)
-    val labels = documents.select($"doc_id",
-      when($"lang" === targetLang, 1L).otherwise(0L).as("y"))
-    val byScore = fx
-      .join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
-      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
-      .join(labels, Seq("doc_id"))
-      .groupBy($"zm")
-      .agg(sum($"y").as("np"), sum(lit(1L) - $"y").as("nn"))
     // inclusive sums: cum_nn - nn negatives score strictly lower,
     // tot_np - cum_np positives strictly higher
-    val cum = Scale.rangePrefixSums(byScore, Seq($"zm"), Seq("nn", "np"), 32)
+    val cum = Scale.rangePrefixSums(scoreTies(documents), Seq($"zm"), Seq("nn", "np"), 32)
       .withColumn("d10", lit(2L) * ($"cum_nn" - $"nn") + $"nn")
       .withColumn("d01", lit(2L) * ($"tot_np" - $"cum_np") + $"np")
     val agg = cum.agg(
@@ -1866,8 +1835,6 @@ object Curation {
     val width = 8
     val minDocs = 3
     val k = 8
-    val buckets = 64
-    val spark = documents.sparkSession
     // stage 1: boilerplate-cleaned text (q142's segmentation + frequency
     // rule; docs whose every segment is boilerplate drop out here and
     // re-enter the accounting as zero-token docs via the left joins below)
@@ -1907,19 +1874,10 @@ object Curation {
     // fully-boilerplate docs still get a bias-only score, as the oracle
     // states); unknown-bucket tokens cannot occur — cleaned tokens are a
     // subset of the training corpus — and the inner join states that
-    val fx2 = keptToks
-      .select($"doc_id", Scale.md5SlicePos($"tok", 0, buckets).as("b"))
-      .groupBy($"doc_id", $"b").agg(count(lit(1)).as("c"))
-      .unionAll(documents.select($"doc_id", lit(-1L).as("b"), lit(1L).as("c")))
-    val (_, w) = trainQualityWeights(documents, "en", buckets, 4, 0.0009765625)
-    val accepted = fx2
-      .join(broadcast(spark.createDataFrame(w).toDF("b", "wm")), Seq("b"))
-      .groupBy($"doc_id").agg(sum($"c" * $"wm").as("zm"))
-      .select($"doc_id",
-        round(lit(1e6) / (lit(1.0) + exp(-($"zm" / lit(1e6)))), 0)
-          .cast("long").as("pm"))
-      .filter((conv(substring(md5($"doc_id".cast("string")), 1, 5), 16, 10)
-        .cast("bigint") % 1000000L) < $"pm")
+    val (_, w) = trainQualityWeights(documents)
+    val accepted = margins(bucketCounts(keptToks, documents), w)
+      .select($"doc_id", microSigmoid($"zm").as("pm"))
+      .filter(acceptCoin < $"pm")
       .select($"doc_id")
       // consumed three times (pair restriction + rollup + final anti-join)
       .localCheckpoint()

@@ -599,30 +599,8 @@ object Events {
     * with prefix counts; arms join back side-by-side on the type.
     */
   def quantileTreatmentEffect(events: DataFrame): DataFrame = {
-    val byVal = events
-      .select($"event_type", userArm, valueMicro.as("vm"))
-      .groupBy($"event_type", $"arm", $"vm").agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy($"event_type", $"arm").orderBy($"vm")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = byVal
-      .withColumn("cc", sum($"c").over(w))
-      .withColumn("n",
-        sum($"c").over(Window.partitionBy($"event_type", $"arm")))
-    val half = lit(1.96) * sqrt($"n".cast("double"))
-    val kMed = ceil($"n".cast("double") / lit(2.0)).cast("long")
-    val kLo = greatest(floor(($"n".cast("double") - half) / lit(2.0))
-      .cast("long"), lit(1L))
-    val kHi = least(ceil(lit(1.0) + ($"n".cast("double") + half) / lit(2.0))
-      .cast("long"), $"n")
-    def pick(k: Column): Column =
-      min(when($"cc" >= k, $"vm"))
-        .over(Window.partitionBy($"event_type", $"arm"))
-    val perArm = cum
-      .select($"event_type", $"arm", $"n",
-        pick(kMed).as("med_m"), pick(kLo).as("lo_m"), pick(kHi).as("hi_m"))
-      .groupBy($"event_type", $"arm")
-      .agg(max($"n").as("n"), max($"med_m").as("med_m"),
-        max($"lo_m").as("lo_m"), max($"hi_m").as("hi_m"))
+    val perArm = medianOrderStats(
+      events.select($"event_type", userArm, valueMicro.as("vm")), Seq("event_type", "arm"))
     val a0 = perArm.filter($"arm" === 0L)
       .select($"event_type", $"n".as("n0"), $"med_m".as("med_m0"),
         $"lo_m".as("lo_m0"), $"hi_m".as("hi_m0"))
@@ -856,6 +834,29 @@ object Events {
         round((mA - mB) / sqrt(welchSe2), 4)).as("z_score"))
   }
 
+  /** Per-user time to conversion of q235/q281: every signed-up user with
+    * t, the whole days from its first signup to its first later purchase,
+    * or, with no purchase by the corpus frontier (max ts), to the frontier,
+    * censored; `churned` is 1 for a conversion and 0 for a censored user.
+    */
+  private def timeToConversion(events: DataFrame): DataFrame = {
+    val signup = events.filter($"event_type" === "signup")
+      .groupBy($"user_id").agg(min($"ts").as("s_ts"))
+    val firstPurch = events.filter($"event_type" === "purchase")
+      .select($"user_id", $"ts")
+      .join(signup, Seq("user_id"))
+      .filter($"ts" > $"s_ts")
+      .groupBy($"user_id").agg(min($"ts").as("p_ts"))
+    val mx = events.agg(max($"ts").as("mx"))
+    signup
+      .join(firstPurch, Seq("user_id"), "left_outer")
+      .crossJoin(broadcast(mx))
+      .select($"user_id",
+        when($"p_ts".isNotNull, expr(s"(p_ts - s_ts) div $NsPerDay"))
+          .otherwise(expr(s"(mx - s_ts) div $NsPerDay")).as("t"),
+        $"p_ts".isNotNull.cast("long").as("churned"))
+  }
+
   /** Kaplan–Meier time-to-conversion curve (q235; Kaplan & Meier 1958 —
     * the product-limit estimator): S(t) = P(still unconverted t days
     * after signup), over each user's first signup → first subsequent
@@ -878,22 +879,7 @@ object Events {
     * over the bounded distinct-day frame — days, not users, wide.
     */
   def survivalCurve(events: DataFrame): DataFrame = {
-    val signup = events.filter($"event_type" === "signup")
-      .groupBy($"user_id").agg(min($"ts").as("s_ts"))
-    val firstPurch = events.filter($"event_type" === "purchase")
-      .select($"user_id", $"ts")
-      .join(signup, Seq("user_id"))
-      .filter($"ts" > $"s_ts")
-      .groupBy($"user_id").agg(min($"ts").as("p_ts"))
-    val mx = events.agg(max($"ts").as("mx"))
-    val perUser = signup
-      .join(firstPurch, Seq("user_id"), "left_outer")
-      .crossJoin(broadcast(mx))
-      .select($"user_id",
-        when($"p_ts".isNotNull, expr(s"(p_ts - s_ts) div $NsPerDay"))
-          .otherwise(expr(s"(mx - s_ts) div $NsPerDay")).as("t"),
-        $"p_ts".isNotNull.cast("long").as("churned"))
-    val byT = perUser.groupBy($"t")
+    val byT = timeToConversion(events).groupBy($"t")
       .agg(count(lit(1)).as("n_t"), sum($"churned").as("d"))
     val wOrd = Window.orderBy($"t")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -942,24 +928,10 @@ object Events {
     * corpus-proportional after the user aggregate.
     */
   def logrankTest(events: DataFrame): DataFrame = {
-    val signup = events.filter($"event_type" === "signup")
-      .groupBy($"user_id").agg(min($"ts").as("s_ts"))
-    val firstPurch = events.filter($"event_type" === "purchase")
-      .select($"user_id", $"ts")
-      .join(signup, Seq("user_id"))
-      .filter($"ts" > $"s_ts")
-      .groupBy($"user_id").agg(min($"ts").as("p_ts"))
-    val mx = events.agg(max($"ts").as("mx"))
-    val perUser = signup
-      .join(firstPurch, Seq("user_id"), "left_outer")
-      .crossJoin(broadcast(mx))
-      .select(userArm,
-        when($"p_ts".isNotNull, expr(s"(p_ts - s_ts) div $NsPerDay"))
-          .otherwise(expr(s"(mx - s_ts) div $NsPerDay")).as("t"),
-        $"p_ts".isNotNull.cast("long").as("churned"))
-    val byT = perUser.groupBy($"t").agg(
-      count(lit(1)).as("n_t"), sum($"churned").as("d"),
-      armSum(0L, lit(1L)).as("n_ta"), armSum(0L, $"churned").as("d_a"))
+    val byT = timeToConversion(events).select(userArm, $"t", $"churned")
+      .groupBy($"t")
+      .agg(count(lit(1)).as("n_t"), sum($"churned").as("d"),
+        armSum(0L, lit(1L)).as("n_ta"), armSum(0L, $"churned").as("d_a"))
     val wPrev = Window.orderBy($"t")
       .rowsBetween(Window.unboundedPreceding, -1)
     val tot = byT.agg(sum($"n_t").as("tot"), sum($"n_ta").as("tot_a"))
@@ -2760,15 +2732,30 @@ object Events {
     * median at k = ⌈n/2⌉), so all three outputs come from one
     * windowed pass over the value frame.
     */
-  def medianCi(events: DataFrame): DataFrame = {
-    val byVal = events
-      .select($"event_type", valueMicro.as("vm"))
-      .groupBy($"event_type", $"vm").agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy($"event_type").orderBy($"vm")
-      .rowsBetween(Window.unboundedPreceding, 0)
+  def medianCi(events: DataFrame): DataFrame =
+    medianOrderStats(events.select($"event_type", valueMicro.as("vm")), Seq("event_type"))
+      .select($"event_type", $"n",
+        round($"med_m" / lit(10000.0), 4).as("median"),
+        round($"lo_m" / lit(10000.0), 4).as("lo95"),
+        round($"hi_m" / lit(10000.0), 4).as("hi95"))
+      .orderBy($"event_type")
+
+  /** The median and its distribution-free 95% order-statistic CI per
+    * group of `keys` over the micro-unit values `vm` of `rows`, as (keys,
+    * n, med_m, lo_m, hi_m): the order statistics X₍ₖ₎ at the lower-median
+    * rank k = ⌈n/2⌉ and at kl = ⌊(n − 1.96√n)/2⌋, ku = ⌈1 + (n + 1.96√n)/2⌉,
+    * clamped into [1, n]. Each is the first distinct value whose prefix
+    * count reaches its rank, one windowed pass over the per-group
+    * distinct-value frame.
+    */
+  private def medianOrderStats(rows: DataFrame, keys: Seq[String]): DataFrame = {
+    val g = keys.map(col)
+    val byGroup = Window.partitionBy(g: _*)
+    val byVal = rows.groupBy(g :+ $"vm": _*).agg(count(lit(1)).as("c"))
     val cum = byVal
-      .withColumn("cc", sum($"c").over(w))
-      .withColumn("n", sum($"c").over(Window.partitionBy($"event_type")))
+      .withColumn("cc", sum($"c").over(byGroup.orderBy($"vm")
+        .rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("n", sum($"c").over(byGroup))
     // integer-safe ranks: 1.96·√n rendered once in double, floored and
     // ceiled into exact ranks, clamped into [1, n]
     val half = lit(1.96) * sqrt($"n".cast("double"))
@@ -2777,18 +2764,14 @@ object Events {
       .cast("long"), lit(1L))
     val kHi = least(ceil(lit(1.0) + ($"n".cast("double") + half) / lit(2.0))
       .cast("long"), $"n")
-    def pick(k: Column, name: String): Column =
-      min(when($"cc" >= k, $"vm")).over(Window.partitionBy($"event_type"))
-        .as(name)
+    val picks = Seq(kMed -> "med_m", kLo -> "lo_m", kHi -> "hi_m").map { case (k, name) =>
+      min(when($"cc" >= k, $"vm")).over(byGroup).as(name)
+    }
     cum
-      .select($"event_type", $"n",
-        pick(kMed, "med_m"), pick(kLo, "lo_m"), pick(kHi, "hi_m"))
-      .groupBy($"event_type")
-      .agg(max($"n").as("n"),
-        round(max($"med_m") / lit(10000.0), 4).as("median"),
-        round(max($"lo_m") / lit(10000.0), 4).as("lo95"),
-        round(max($"hi_m") / lit(10000.0), 4).as("hi95"))
-      .orderBy($"event_type")
+      .select(g ++ ($"n" +: picks): _*)
+      .groupBy(g: _*)
+      .agg(max($"n").as("n"), max($"med_m").as("med_m"),
+        max($"lo_m").as("lo_m"), max($"hi_m").as("hi_m"))
   }
 
   // ---- seeded permutation test (q267) ----------------------------------------

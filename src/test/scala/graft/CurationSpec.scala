@@ -1412,6 +1412,28 @@ class CurationSpec extends GraftSuite {
     assert(g.getDouble(4) <= g.getDouble(2) && g.getDouble(2) <= g.getDouble(5))
   }
 
+  test("q144, q160, q189, q266, q240 and q241 read one scorer: equal label totals and n_calib") {
+    val cm = Curation.qualityClassifierEval(docs).collect()
+    def labelTotal(y: Long): Long =
+      cm.filter(_.getAs[Long]("y") == y).map(_.getAs[Long]("n_docs")).sum
+    val (nPos, nNeg) = (labelTotal(1L), labelTotal(0L))
+    assert(nPos > 0L && nNeg > 0L, "the fixture holds both labels")
+    val auc = Curation.classifierAuc(docs).collect()(0)
+    assert((auc.getAs[Long]("n_pos"), auc.getAs[Long]("n_neg")) === ((nPos, nNeg)))
+    val delong = Curation.aucDelong(docs).collect()(0)
+    assert((delong.getAs[Long]("n_pos"), delong.getAs[Long]("n_neg")) === ((nPos, nNeg)))
+    val cal = Curation.classifierCalibration(docs).collect()
+    assert((cal.map(_.getAs[Long]("n_docs")).sum, cal.map(_.getAs[Long]("n_pos")).sum) ===
+      ((nPos + nNeg, nPos)))
+    // q240's marginal calibration slice is the union of q241's per-label ones
+    val nCal = Curation.conformalQuality(docs).collect()
+      .filter(_.getAs[Double]("alpha") == 0.1).map(_.getAs[Long]("n_calib"))
+    val nCalByLabel = Curation.mondrianConformal(docs).collect()
+      .filter(_.getAs[Double]("alpha") == 0.1).map(_.getAs[Long]("n_calib"))
+    assert(nCalByLabel.length === 2)
+    assert(nCal.toSeq === Seq(nCalByLabel.sum))
+  }
+
   test("brierDecomposition: Murphy identity and brute force over the isofit frame (q268)") {
     val iso = Curation.isotonicCalibration(docs).collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getDouble(4)))

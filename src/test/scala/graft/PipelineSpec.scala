@@ -2136,7 +2136,7 @@ class PipelineSpec extends GraftSuite {
 
   test("classifierAuc equals brute-force pairwise Mann-Whitney; partition invariant") {
     import graft.operators.Curation
-    val (fx, w) = Curation.trainQualityWeights(docs, "en", 64, 4, 0.0009765625)
+    val (fx, w) = Curation.trainQualityWeights(docs)
     val wm = w.toMap
     val zm = fx.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("b"), r.getAs[Long]("c")))

@@ -23,14 +23,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * coreset draw only in `Similarity.md5Coreset`, the shingle-set
   * intersection only in `Dedup.verifyOverlap`, the df-ranked gram
   * order only in `Dedup.rarestPrefix`, the A/B arm coin only in
-  * `Events.userArm` and the per-arm sum only in `Events.armSum`.
+  * `Events.userArm`, the per-arm sum only in `Events.armSum`, the
+  * per-user time to conversion only in `Events.timeToConversion`, the
+  * median order-statistic ranks only in `Events.medianOrderStats`, the
+  * classifier's weight join only in `Curation.margins` and its micro-unit
+  * sigmoid only in `Curation.microSigmoid`.
   */
 class RegisteredSurfaceSpec extends AnyFunSuite {
 
   /** Members only specs call, on purpose. */
   private val testOnly = Map(
     "wordGrams" -> "the reference the native word_grams is checked against",
-    "docMargins" -> "brute-force input for the eval-family specs",
     "lshBucket" -> "Column reference for the fused native bucket form",
     "neardupBucket" -> "Column reference for the fused native bucket form",
     "embeddingNearDupExact" -> "O(n^2) ground truth for the near-dup specs",
@@ -165,6 +168,24 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
         Set("userArm")) ++
         strays(files, """when\(\s*(?:\$"arm"|col\("arm"\))\s*===""".r, Set("armSum", "srmCheck"))
     if (offenders.nonEmpty) fail("use the A/B kernel in Events instead:\n" +
+      offenders.mkString("\n"))
+  }
+
+  test("drift guard: one quality-classifier scorer and one time-to-event and median-CI frame") {
+    // the trained weight vector meets feature counts only in Curation's
+    // margins and the sigmoid is quantized only in microSigmoid; Events
+    // builds the censored per-user time to conversion only in
+    // timeToConversion and picks median order statistics only in
+    // medianOrderStats; the needles read the `"wm"`, `$"cc"` and
+    // interpolated-string literals, so comments alone are stripped
+    val files = sources("src/main/scala", keepLiterals = true)
+    val offenders =
+      strays(files, """toDF\(\s*"b"\s*,\s*"wm"\s*\)""".r, Set("margins")) ++
+        strays(files, """lit\(\s*1e6\s*\)\s*/\s*\(\s*lit\(\s*1\.0\s*\)\s*\+\s*exp\(""".r,
+          Set("microSigmoid")) ++
+        strays(files, """\(\s*mx\s*-\s*s_ts\s*\)\s*div""".r, Set("timeToConversion")) ++
+        strays(files, """min\(\s*when\(\s*\$"cc"\s*>=""".r, Set("medianOrderStats"))
+    if (offenders.nonEmpty) fail("use the shared kernel in Curation / Events instead:\n" +
       offenders.mkString("\n"))
   }
 
