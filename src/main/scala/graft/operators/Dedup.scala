@@ -98,7 +98,7 @@ object Dedup {
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism * 2, $"doc_id")
       .select($"doc_id", shingle_hashes($"text", n).as("hs"))
-      .localCheckpoint()
+      .localCheckpoint() // ROADMAP item 4 (c): two verify joins (and a prefix) read it
 
   /** `shingleSets` of the documents a candidate frame (id1, id2, …) names:
     * the corpus is SEMI-JOINED down to the candidate ids BEFORE shingling,
@@ -184,7 +184,7 @@ object Dedup {
   def minhashLshPairs(documents: DataFrame): DataFrame =
     pairIndex(documents).orderBy($"id1", $"id2")
 
-  private val PairIndexes = new SessionArtifacts.Kind[DataFrame]
+  private val PairIndexes = new SessionArtifacts.Kind[(DataFrame, DataFrame)]
 
   /** Session-scoped materialized pair index: the verified near-dup pairs of
     * a corpus, computed once per (corpus plan, threshold) per session and
@@ -192,14 +192,22 @@ object Dedup {
     * selection, q83's source matrix, and q84's capstone all analyze the SAME
     * pair set, and a production curation run materializes it once for
     * exactly this reason (it is the in-session analog of the persisted
-    * `bandBuckets` incremental-ingest index). Entries hold
-    * localCheckpointed near-linear pair sets, so cache memory is
-    * pair-proportional, never corpus-proportional; keys and eviction follow
-    * [[SessionArtifacts]].
+    * `bandBuckets` incremental-ingest index). The one localCheckpointed
+    * artifact holds (id1, id2, jaccard, i, sz1, sz2), the overlap counts
+    * `verifyOverlap` computed, which q120 reads instead of re-shingling;
+    * this is its (id1, id2, jaccard) projection, one frame per entry.
+    * Cache memory is pair-proportional, never corpus-proportional; keys
+    * and eviction follow [[SessionArtifacts]].
     */
   def pairIndex(documents: DataFrame, threshold: Double = 0.6): DataFrame =
-    SessionArtifacts.getOrBuild(PairIndexes, documents, threshold)(
-      minhashLshPairsUnordered(documents, ShingleLen, threshold).localCheckpoint())
+    pairArtifact(documents, threshold)._2
+
+  private def pairArtifact(documents: DataFrame, threshold: Double): (DataFrame, DataFrame) =
+    SessionArtifacts.getOrBuild(PairIndexes, documents, threshold) {
+      val o = minhashLshPairsUnordered(documents, ShingleLen, threshold)
+        .localCheckpoint() // ROADMAP item 4 (c): the session's index consumers share it
+      (o, o.select($"id1", $"id2", $"jaccard"))
+    }
 
   /** Restrict a corpus pair index to a sub-corpus: near-dup pairs of a
     * SUBSET equal the full-corpus pairs with both endpoints in the subset —
@@ -218,9 +226,9 @@ object Dedup {
       .select($"id1", $"id2")
   }
 
-  /** The pair pipeline without the final canonical sort — for consumers
-    * (connected components) that immediately re-shuffle the pairs and would
-    * pay the global sort for nothing.
+  /** The pair pipeline without the final canonical sort: the verified
+    * pairs (id1, id2, jaccard) with `verifyOverlap`'s i, sz1 and sz2, the
+    * frame [[pairIndex]] checkpoints.
     */
   private[graft] def minhashLshPairsUnordered(
       documents: DataFrame, n: Int, threshold: Double): DataFrame = {
@@ -242,10 +250,8 @@ object Dedup {
     // self-join branches); this shape computes signatures once and shuffles
     // once on the bucket key. Bucket members are tiny by LSH design, so
     // the in-memory K^2 expansion per bucket is bounded.
-    // Candidates are near-linear by LSH design — materialize them once
-    // (localCheckpoint) so the id-extraction branch and the two verification
-    // joins below don't each re-execute the signature pipeline through the
-    // lineage.
+    // Candidates are near-linear by LSH design — materialize them once so
+    // the id semi-join and both verify joins don't each re-run signatures.
     val candidates = buckets
       .groupBy($"band", $"bh")
       .agg(collect_list($"doc_id").as("ids"))
@@ -255,12 +261,12 @@ object Dedup {
       .select(explode(graft.functions.MinHashFunctions.pair_combinations($"ids")).as("p"))
       .select($"p.id1".as("id1"), $"p.id2".as("id2"))
       .distinct()
-      .localCheckpoint()
+      .localCheckpoint() // ROADMAP item 4 (c): the id semi-join and the verify join read it
     // exact-Jaccard verification over the candidate slice; identical
     // jaccard values up to 64-bit hash collisions (the string-gram
     // brute-force spec would surface one)
     verifyOverlap(candidates, candidateSets(documents, candidates, n))
-      .select($"id1", $"id2", overlapJaccard)
+      .select($"id1", $"id2", overlapJaccard, $"i", $"sz1", $"sz2")
       .filter($"jaccard" >= threshold)
   }
 
@@ -272,20 +278,18 @@ object Dedup {
     * a curation run treats differently from a mutual near-duplicate
     * (cut the span, don't drop the document; q97/q99 are that path).
     *
-    * Shape: rides the cached pair index; the shingle-set join touches
-    * candidate ids only (the verification pattern) — pair-proportional
-    * end to end. Discovery of containment pairs OUTSIDE the Jaccard
-    * candidate set needs asymmetric (bottom-k one-sided) sketching — by
-    * design not offered here; this op refines what the index found.
+    * Shape: a projection of the session pair index, whose verified i, sz1
+    * and sz2 depend on each document's own text only — no shingle set is
+    * built and no join runs. Discovery of containment pairs OUTSIDE the
+    * Jaccard candidate set needs asymmetric (bottom-k one-sided) sketching
+    * — by design not offered here; this op refines what the index found.
     */
-  def containmentRefine(documents: DataFrame): DataFrame = {
-    val pairs = pairIndex(documents)
-    verifyOverlap(pairs, candidateSets(documents, pairs, ShingleLen))
+  def containmentRefine(documents: DataFrame): DataFrame =
+    pairArtifact(documents, 0.6)._1
       .select($"id1", $"id2", $"jaccard",
         round($"i" / least($"sz1", $"sz2"), 6).as("containment"),
         round(least($"sz1", $"sz2") / greatest($"sz1", $"sz2"), 6).as("size_ratio"))
       .orderBy($"id1", $"id2")
-  }
 
   /** Weighted-Jaccard refinement of the near-dup pair set: for every
     * verified pair, the TOKEN-MULTISET similarity
@@ -322,7 +326,7 @@ object Dedup {
       .groupBy($"doc_id")
       .agg(map_from_entries(collect_list(struct($"tok", $"tf"))).as("m"),
         sum($"tf").as("tot"))
-      .localCheckpoint() // candidate-proportional; referenced twice below
+      .localCheckpoint() // ROADMAP item 4 (c): both map joins below read it
     pairs
       .join(docTf.select($"doc_id".as("id1"), $"m".as("m1"), $"tot".as("tot1"))
         .hint("shuffle_hash"), Seq("id1"))
@@ -400,13 +404,12 @@ object Dedup {
     */
   private def buildComponentLabels(pairSet: DataFrame): DataFrame = {
     val pairs = pairSet.select($"id1", $"id2")
-    // undirected edges both ways; materialize once — every propagation
-    // round joins against edges, and without the checkpoint each round
-    // would re-execute the pair pipeline through the lineage
+    // undirected edges both ways, materialized once rather than re-run
+    // from the pair set's lineage in every round
     val edges = pairs
       .union(pairs.select($"id2", $"id1"))
       .toDF("src", "dst")
-      .localCheckpoint()
+      .localCheckpoint() // ROADMAP item 4 (c): every propagation round joins it
     // Init = the first propagation round, folded into one aggregation:
     // label(v) = min(v, min direct neighbor) — no join needed because the
     // both-direction edge list already carries every neighbor of v as
@@ -416,7 +419,7 @@ object Dedup {
       .groupBy($"src")
       .agg(min($"dst").as("nbr_min"))
       .select($"src".as("node"), least($"src", $"nbr_min").as("label"))
-      .localCheckpoint()
+      .localCheckpoint() // ROADMAP item 4 (b): the loop's first labels
     var changed = 1L
     while (changed > 0) {
       // Each node adopts the min label among itself, its neighbors, and
@@ -436,7 +439,7 @@ object Dedup {
           $"label" === $"lbl_node")
         .select($"node",
           least($"label", $"nbr_label", $"lbl_label").as("next_label"), $"label")
-        .localCheckpoint()
+        .localCheckpoint() // ROADMAP item 4 (b): cuts the round's plan growth
       changed = next.filter($"next_label" =!= $"label").count()
       labels = next.select($"node", $"next_label".as("label"))
     }
@@ -499,27 +502,24 @@ object Dedup {
     * threshold is sound (banding recall only improves with similarity);
     * sweeping below it would undercount and is deliberately not offered.
     *
-    * Shape: rides the cached pair index; the sweep is a 4-row broadcast
-    * cross join over the near-linear pair set — pair-proportional work
-    * per threshold, with a left join keeping empty thresholds as zeros.
+    * Shape: one aggregation pass over the cached pair index: k_t = each
+    * endpoint's incident pairs with J ≥ t, then one global row with
+    * n_docs(t) = #docs with k_t > 0 and n_pairs(t) = Σ k_t / 2 (two
+    * endpoints per pair); a threshold no pair reaches reads zeros.
     */
   def thresholdSweep(documents: DataFrame): DataFrame = {
     val thresholds = Seq(0.6, 0.7, 0.8, 0.9)
-    val spark = documents.sparkSession
-    // selective import: the full implicits._ would make a second `$`
-    // interpolator ambiguous with the package-level one
-    import spark.implicits.{localSeqToDatasetHolder, newDoubleEncoder}
-    val pairs = pairIndex(documents, thresholds.min)
-    val th = thresholds.toDF("threshold")
-    val f = pairs.crossJoin(broadcast(th)).filter($"jaccard" >= $"threshold")
-    val np = f.groupBy($"threshold").agg(count(lit(1)).as("p"))
-    val nd = f.select($"threshold", $"id1".as("d"))
-      .union(f.select($"threshold", $"id2"))
-      .groupBy($"threshold").agg(countDistinct($"d").as("dd"))
-    th.join(np, Seq("threshold"), "left")
-      .join(nd, Seq("threshold"), "left")
-      .select($"threshold", coalesce($"p", lit(0L)).as("n_pairs"),
-        coalesce($"dd", lit(0L)).as("n_docs"))
+    val k = pairIndex(documents, thresholds.min)
+      .select(explode(array($"id1", $"id2")).as("doc_id"), $"jaccard")
+      .groupBy($"doc_id")
+      .agg(array(thresholds.map(t => count(when($"jaccard" >= t, 1))): _*).as("k"))
+    k.agg(array(thresholds.indices.map { j =>
+        struct(lit(thresholds(j)).as("threshold"),
+          (coalesce(sum($"k"(j)), lit(0L)) / 2).cast("long").as("n_pairs"),
+          count(when($"k"(j) > 0, 1)).as("n_docs"))
+      }: _*).as("rows"))
+      .select(explode($"rows").as("r"))
+      .select($"r.threshold", $"r.n_pairs", $"r.n_docs")
       .orderBy($"threshold")
   }
 
@@ -565,7 +565,7 @@ object Dedup {
       .join(oldBuckets, Seq("band", "bh"))
       .select($"new_id".as("id1"), $"old_id".as("id2"))
       .distinct()
-      .localCheckpoint() // candidate-proportional; consumed by 3 joins below
+      .localCheckpoint() // ROADMAP item 4 (c): the id semi-join and the verify join read it
     verifyOverlap(candidates, candidateSets(documents, candidates, ShingleLen))
       .select($"id1".as("new_id"), $"id2".as("old_id"), overlapJaccard)
       .filter($"jaccard" >= 0.6)
@@ -865,7 +865,7 @@ object Dedup {
       .select(least($"contained_id", $"container_id").as("id1"),
         greatest($"contained_id", $"container_id").as("id2"))
       .distinct()
-      .localCheckpoint()
+      .localCheckpoint() // ROADMAP item 4 (d): one consumer; removal not yet measured
     def dir(a: Column, b: Column, sza: Column) =
       struct(a.as("contained_id"), b.as("container_id"),
         round($"i" / sza, 6).as("containment"), overlapJaccard)

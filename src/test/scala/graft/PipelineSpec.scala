@@ -1786,6 +1786,24 @@ class PipelineSpec extends GraftSuite {
     assert(got.head._2 > 0, "sweep must be non-vacuous at the design point")
   }
 
+  test("thresholdSweep keeps every threshold: zeros where no pair reaches it") {
+    // the only near-dup pair sits at J in [0.6, 0.7) among unrelated
+    // random texts, so 0.7, 0.8 and 0.9 have no pair and no document
+    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
+    val rnd = new scala.util.Random(7)
+    def text(n: Int) = Seq.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
+    val a = text(200)
+    // 196 shared 5-grams, 100 more in the second doc: J = 196 / 296
+    val corpus = ((1L, a) +: (2L, a + text(100)) +: (3L to 6L).map(id => (id, text(200))))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.pairIndex(corpus).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(pairs === Seq((1L, 2L, 0.662162)), "the planted pair is the only pair")
+    val got = Dedup.thresholdSweep(corpus).collect()
+      .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got === Seq((0.6, 1L, 2L), (0.7, 0L, 0L), (0.8, 0L, 0L), (0.9, 0L, 0L)))
+  }
+
   test("clusterSizeDistribution equals the survivors rollup and conserves members") {
     val members = Dedup.nearDupSurvivors(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq

@@ -21,7 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Scale.hexFraction`, the centroid structs only in
   * `Similarity.assignCells` and `probeCellsExpr`, the md5-ordered
   * coreset draw only in `Similarity.md5Coreset`, the shingle-set
-  * intersection only in `Dedup.verifyOverlap`, the df-ranked gram
+  * intersection only in `Dedup.verifyOverlap` (called only by the
+  * candidate generators and the prefix-filter joins, never by a
+  * pair-index rider), the df-ranked gram
   * order only in `Dedup.rarestPrefix`, the A/B arm coin only in
   * `Events.userArm`, the per-arm sum only in `Events.armSum`, the
   * per-user time to conversion only in `Events.timeToConversion`, the
@@ -104,13 +106,18 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
       s"and from testOnly: $unused")
   }
 
-  /** Where `needle` matches in `files` outside the members `homes`. */
+  // a member of a top-level object: its `def` line is indented two spaces
+  private val Member = """(?m)^  (?:[\w\[\]]+[ \t]+)*def\s+([A-Za-z_]\w*)""".r
+
+  /** Where `needle` matches in `files` outside the members `homes` (a local
+    * `def` inside a member counts as that member).
+    */
   private def strays(files: List[(Path, String)], needle: Regex,
       homes: Set[String]): List[String] =
     for {
       (p, text) <- files
       m <- needle.findAllMatchIn(text).toList
-      owner = Def.findAllMatchIn(text.substring(0, m.start)).toSeq.lastOption.map(_.group(1))
+      owner = Member.findAllMatchIn(text.substring(0, m.start)).toSeq.lastOption.map(_.group(1))
       if !owner.exists(homes)
     } yield s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}: " +
       s"`${m.matched.linesIterator.next()}` in ${owner.getOrElse("?")}, " +
@@ -155,6 +162,21 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
           ("""count\(\s*lit\(\s*1\s*\)\s*\)\s*\.over\(\s*""" +
             """(?:[\w.]+\.)?Window\.partitionBy\(\s*\$"h"\s*\)""").r, Set("rarestPrefix"))
     if (offenders.nonEmpty) fail("call the helper in Dedup instead:\n" + offenders.mkString("\n"))
+  }
+
+  test("drift guard: pair-index riders read the index, never re-shingle its pairs") {
+    // candidate slices are shingled only by the two candidate generators,
+    // and overlaps are verified only there and in the two prefix-filter
+    // joins; a pairIndex consumer needing |A∩B| or a set size reads the
+    // index's i, sz1 and sz2 instead of rebuilding them
+    val files = sources("src/main/scala")
+    val generators = Set("minhashLshPairsUnordered", "incrementalNearDupPairs")
+    val offenders =
+      strays(files, """(?<!def )\bcandidateSets\s*\(""".r, generators) ++
+        strays(files, """(?<!def )\bverifyOverlap\s*\(""".r,
+          generators ++ Set("ngramJaccardPairs", "containmentDiscover"))
+    if (offenders.nonEmpty) fail("read Dedup's pair index instead of re-verifying:\n" +
+      offenders.mkString("\n"))
   }
 
   test("drift guard: one A/B arm kernel in src/main") {

@@ -504,10 +504,11 @@ class ScaleSpec extends GraftSuite {
     }
     // the raw (un-checkpointed) builders — the public entry points cache
     // and localCheckpoint the pair set, which hides the verify join
-    // behind a Scan ExistingRDD in the inspected plan. ALL SIX pinned
-    // sites from the round-9 fix are asserted (the manual sibling sweep
-    // that found q74/q95/q120, made permanent): a new verify join added
-    // without its pin belongs in this list.
+    // behind a Scan ExistingRDD in the inspected plan. Every pinned verify
+    // join is asserted (the round-9 manual sibling sweep that found
+    // q74/q95/q120, made permanent): a new verify join added without its
+    // pin belongs in this list. q120 (containmentRefine) has no verify
+    // join any more; it is asserted join-free below.
     val embs = Tables.embeddings(spark, sf)
     val docs = Tables.documents(spark, sf)
     val builders: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
@@ -518,8 +519,6 @@ class ScaleSpec extends GraftSuite {
           embs, graft.operators.Similarity.hyperplaneBucketRows(embs))),
       "minhashLshPairsUnordered" -> (() =>
         graft.operators.Dedup.minhashLshPairsUnordered(docs, 5, 0.6)),
-      "containmentRefine" -> (() =>
-        graft.operators.Dedup.containmentRefine(docs)),
       "weightedJaccardRefine" -> (() =>
         graft.operators.Dedup.weightedJaccardRefine(docs)),
       "incrementalNearDupPairs" -> (() =>
@@ -533,6 +532,19 @@ class ScaleSpec extends GraftSuite {
       assert(!plan.contains("BroadcastHashJoin"),
         s"$name must not broadcast any side of a pair-verify join:\n" + plan)
     }
+    // containmentRefine reads |A∩B|, |A| and |B| from the pair index: once
+    // the index exists, building it runs no job (no shingle sets are
+    // checkpointed) and its executed plan holds no join and no shingle pass
+    graft.operators.Dedup.pairIndex(docs)
+    val sc = spark.sparkContext
+    sc.setJobGroup("containmentRefine-construct", "construction only")
+    val refine = try graft.operators.Dedup.containmentRefine(docs) finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("containmentRefine-construct").isEmpty,
+      "containmentRefine must not run a job while it is built")
+    val plan = finalPlan(refine)
+    assert(!plan.contains("Join") && !plan.contains("CartesianProduct"),
+      "containmentRefine must not join:\n" + plan)
+    assert(!plan.contains("shingle_hashes"), "containmentRefine must not shingle:\n" + plan)
   }
 
   test("UNIVERSAL sweep: no registered query's static plan broadcasts a pair-expansion build or runs an unpartitioned window over an unbounded frame") {
