@@ -251,7 +251,7 @@ object Dedup {
     // once on the bucket key. Bucket members are tiny by LSH design, so
     // the in-memory K^2 expansion per bucket is bounded.
     // Candidates are near-linear by LSH design — materialize them once so
-    // the id semi-join and both verify joins don't each re-run signatures.
+    // the id semi-join and the verify join do not each re-run signatures.
     val candidates = buckets
       .groupBy($"band", $"bh")
       .agg(collect_list($"doc_id").as("ids"))
@@ -509,11 +509,11 @@ object Dedup {
     */
   def thresholdSweep(documents: DataFrame): DataFrame = {
     val thresholds = Seq(0.6, 0.7, 0.8, 0.9)
-    val k = pairIndex(documents, thresholds.min)
+    pairIndex(documents, thresholds.min)
       .select(explode(array($"id1", $"id2")).as("doc_id"), $"jaccard")
       .groupBy($"doc_id")
       .agg(array(thresholds.map(t => count(when($"jaccard" >= t, 1))): _*).as("k"))
-    k.agg(array(thresholds.indices.map { j =>
+      .agg(array(thresholds.indices.map { j =>
         struct(lit(thresholds(j)).as("threshold"),
           (coalesce(sum($"k"(j)), lit(0L)) / 2).cast("long").as("n_pairs"),
           count(when($"k"(j) > 0, 1)).as("n_docs"))
