@@ -41,12 +41,12 @@ object Similarity {
     */
   private val NQueries = 5
 
-  /** Exact top-k cosine neighbors for each query vector (vec_id < NQueries).
-    * The tiny query side broadcasts; ranking is per-query via a window over
-    * k*NQueries rows only (rank on already-reduced data).
+  /** Exact top-k cosine neighbors for each query vector (vec_id < NQueries),
+    * in the served shape ([[servedTopK]]). The tiny query side broadcasts
+    * onto one corpus scan.
     */
   def cosineTopK(embeddings: DataFrame, k: Int = 5): DataFrame =
-    cosineTopKWith(cosine)(embeddings, k)
+    cosineTopKWith(cosine)(embeddings.select($"vec_id", asDouble($"embedding").as("v")), k)
 
   /** cosineTopK scored by the native fused-loop Catalyst expression
     * (graft.functions.CosineSimilarity) instead of the compositional
@@ -54,23 +54,18 @@ object Similarity {
     * pair.
     */
   def cosineTopKNative(embeddings: DataFrame): DataFrame =
-    cosineTopKWith(graft.functions.VectorFunctions.cosine_sim)(embeddings, 5)
+    cosineTopKWith(graft.functions.VectorFunctions.cosine_sim)(
+      embeddings.select($"vec_id", asDouble($"embedding").as("v")), 5)
 
+  /** The exact top-k kernel over a `(vec_id, v)` corpus, scored by `scorer`. */
   private def cosineTopKWith(scorer: (Column, Column) => Column)(
-      embeddings: DataFrame, k: Int): DataFrame = {
-    val corpus  = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
+      corpus: DataFrame, k: Int): DataFrame = {
     val queries = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
-    val scored = corpus
+    servedTopK(corpus
       .join(broadcast(queries), $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("neighbor_id"),
-        round(scorer($"qv", $"v"), 6).as("cos"))
-    val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
-      .select($"query_id", $"neighbor_id", $"cos", $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
+        round(scorer($"qv", $"v"), 6).as("cos")), "query_id", k)
   }
 
   /** Hard-negative mining for contrastive training: per anchor vector,
@@ -93,18 +88,13 @@ object Similarity {
     val hi = 0.45
     import graft.functions.VectorFunctions.cosine_sim
     val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-    val anchors = corpus.filter($"vec_id" < 5)
+    val anchors = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("anchor_id"), $"v".as("av"))
-    val w = Window.partitionBy($"anchor_id").orderBy($"cos".desc, $"neighbor_id")
-    corpus
+    servedTopK(corpus
       .join(broadcast(anchors), $"vec_id" =!= $"anchor_id")
       .select($"anchor_id", $"vec_id".as("neighbor_id"),
         round(cosine_sim($"av", $"v"), 6).as("cos"))
-      .filter($"cos" >= lo && $"cos" < hi)
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
-      .select($"anchor_id", $"neighbor_id", $"cos", $"rnk".cast("int").as("rnk"))
-      .orderBy($"anchor_id", $"rnk")
+      .filter($"cos" >= lo && $"cos" < hi), "anchor_id", k)
   }
 
   /** Contrastive training-set construction: one table of (anchor, other,
@@ -137,14 +127,12 @@ object Similarity {
     val anchors = positives.select($"anchor_id").distinct()
       .join(corpus, $"anchor_id" === $"vec_id")
       .select($"anchor_id", $"v".as("av"))
-    val w = Window.partitionBy($"anchor_id").orderBy($"cos".desc, $"other_id")
-    val negatives = corpus
+    val band = corpus
       .join(broadcast(anchors), $"vec_id" =!= $"anchor_id")
       .select($"anchor_id", $"vec_id".as("other_id"),
         round(cosine_sim($"av", $"v"), 6).as("cos"))
       .filter($"cos" >= lo && $"cos" < hi)
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
+    val negatives = rankTopK(band, Seq($"anchor_id"), $"cos", $"other_id", k)
       .select($"anchor_id", $"other_id", lit(0).as("label"), $"cos")
     positives.union(negatives)
       .orderBy($"anchor_id", $"label".desc, $"cos".desc, $"other_id")
@@ -180,12 +168,10 @@ object Similarity {
     val nn = Scale.topKPerGroup(scored,
       group = $"anchor_id", rankKey = -$"cos", tie = $"neighbor_id",
       saltSource = $"neighbor_id", k = k)
-    val wv = Window.partitionBy($"anchor_id").orderBy($"c".desc, $"nb_label")
-    val pred = nn
+    val votes = nn
       .groupBy($"anchor_id", $"true_label", $"nb_label")
       .agg(count(lit(1)).as("c"))
-      .withColumn("vr", row_number().over(wv)).filter($"vr" === 1)
-    pred
+    rankTopK(votes, Seq($"anchor_id"), $"c", $"nb_label", 1)
       .groupBy($"true_label")
       .agg(count(lit(1)).as("n_anchors"),
         sum(when($"nb_label" === $"true_label", 1L).otherwise(0L)).as("n_correct"))
@@ -242,7 +228,8 @@ object Similarity {
       kCells: Int): DataFrame = {
     val cells = resolveCells(embeddings, kCells)
     SessionArtifacts.getOrBuild(KnnGraphs, embeddings, k, cells)(
-      buildCellKnnGraph(embeddings, k, cells).localCheckpoint())
+      buildCellKnnGraph(embeddings, k, cells)
+        .localCheckpoint()) // ROADMAP item 4 (c): the kNN-graph consumers share it
   }
 
   private def buildCellKnnGraph(embeddings: DataFrame, k: Int,
@@ -287,7 +274,7 @@ object Similarity {
     val labels = embeddings
       .select($"vec_id", $"label".cast("long").as("y"))
       .withColumn("hidden", Scale.md5SlicePos($"vec_id", 0, 2) === 1L)
-      .localCheckpoint() // joined every round + in the final report
+      .localCheckpoint() // ROADMAP item 4 (c): every round and the final report join it
     val knn = cellKnnGraph(embeddings, k, kCells).select($"id", $"nb")
     var cur = labels.select($"vec_id",
       when($"hidden", lit(null).cast("long")).otherwise($"y").as("cur"))
@@ -404,7 +391,7 @@ object Similarity {
       .filter($"id" =!= $"nb")
       .select($"id", $"nb", round(cosine_sim($"v", $"nv"), 6).as("cos"))
       .filter($"cos" >= eps)
-      .localCheckpoint() // consumed by the count pass AND the border probe
+      .localCheckpoint() // ROADMAP item 4 (c): the count pass and the border probe read it
     val counts = neigh.groupBy($"id").agg(count(lit(1)).as("n_eps"))
     val ids = embeddings.select($"vec_id", $"label".cast("long").as("label"))
     val classed = ids
@@ -499,7 +486,7 @@ object Similarity {
     val cont = assignCells(a.select($"vec_id", $"v", $"cid".as("ca")), centsB)
       .select($"ca", $"cid".as("cb"))
       .groupBy($"ca", $"cb").agg(count(lit(1)).as("nij")) // <= k² rows
-      .localCheckpoint()
+      .localCheckpoint() // ROADMAP item 4 (c): three marginal sums read it
     val p1 = cont.agg(
       sum(expr("nij * (nij - 1) div 2")).as("sij"), sum($"nij").as("n"))
     val p2 = cont.groupBy($"ca").agg(sum($"nij").as("na"))
@@ -558,7 +545,7 @@ object Similarity {
         group = $"g", rankKey = md5($"vec_id".cast("string")), tie = $"vec_id",
         saltSource = $"vec_id", k = 32)
       .select($"vec_id", $"v", proj($"v").as("p"))
-      .localCheckpoint() // tiny fixed-size sample; self-joined below
+      .localCheckpoint() // ROADMAP item 4 (c): both sides of the self-join read it
     sampled.as("a").join(sampled.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(
         round(cosine_sim(col("a.v"), col("b.v")), 6).as("cos"),
@@ -585,7 +572,7 @@ object Similarity {
     *
     * Shape: ONE scored pass — the dims panel cross-joins as a broadcast
     * |dims|-row frame and each row slices the already-loaded vector (no
-    * re-scan per width); rank windows are per (dims, query) partitions.
+    * re-scan per width); the approximate top-k ranks per (dims, query).
     * Like q29/q63 an EVAL op over a bounded query sample: cost is
     * NQueries·|dims|·corpus, never corpus².
     */
@@ -595,26 +582,20 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits.{localSeqToDatasetHolder, newIntEncoder}
     val e = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-      .localCheckpoint() // feeds the truth pass and the per-dim pass
+      .localCheckpoint() // ROADMAP item 4 (c): the truth pass and the per-dim pass read it
     val q = e.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
     val dimsDf = dims.toDF("dims")
     val pairs = e.crossJoin(broadcast(q)).where($"vec_id" =!= $"query_id")
-    val wTruth = Window.partitionBy($"query_id")
-      .orderBy(round(cosine_sim($"qv", $"v"), 6).desc, $"vec_id")
-    val truth = pairs
-      .withColumn("rnk", row_number().over(wTruth)).filter($"rnk" <= k)
+    val truth = rankTopK(pairs, Seq($"query_id"), round(cosine_sim($"qv", $"v"), 6), $"vec_id", k)
       .select($"query_id", $"vec_id")
     val scored = pairs.crossJoin(broadcast(dimsDf))
       .select($"dims", $"query_id", $"vec_id",
         round(cosine_sim($"qv", $"v"), 6).as("cf"),
         round(cosine_sim(slice($"qv", lit(1), $"dims"),
           slice($"v", lit(1), $"dims")), 6).as("cd"))
-      .localCheckpoint() // feeds the rank pass and the distortion rollup
-    val wApprox = Window.partitionBy($"dims", $"query_id")
-      .orderBy($"cd".desc, $"vec_id")
-    val approx = scored
-      .withColumn("rnk", row_number().over(wApprox)).filter($"rnk" <= k)
+      .localCheckpoint() // ROADMAP item 4 (c): the rank pass and the distortion rollup read it
+    val approx = rankTopK(scored, Seq($"dims", $"query_id"), $"cd", $"vec_id", k)
       .select($"dims", $"query_id", $"vec_id")
     // distortion over ALL scored pairs, exact micro-units (q116's form)
     val distortion = scored
@@ -664,18 +645,13 @@ object Similarity {
       .select($"vec_id", $"v", projectArray($"v").as("pv"))
     val queries = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"pv".as("qpv"))
-    val wc = Window.partitionBy($"query_id").orderBy($"pcos".desc, $"neighbor_id")
-    val wr = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
-    val approx = corpus
+    val projected = corpus
       .join(broadcast(queries), $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("neighbor_id"), $"qv", $"v",
         round(cosine_sim($"qpv", $"pv"), 6).as("pcos"))
-      .withColumn("crnk", row_number().over(wc))
-      .filter($"crnk" <= k * overfetch)
-      .select($"query_id", $"neighbor_id",
-        round(cosine_sim($"qv", $"v"), 6).as("cos"))
-      .withColumn("rnk", row_number().over(wr))
-      .filter($"rnk" <= k)
+    val candidates = rankTopK(projected, Seq($"query_id"), $"pcos", $"neighbor_id", k * overfetch)
+      .select($"query_id", $"neighbor_id", round(cosine_sim($"qv", $"v"), 6).as("cos"))
+    val approx = rankTopK(candidates, Seq($"query_id"), $"cos", $"neighbor_id", k)
       .select($"query_id", $"neighbor_id")
     recallAgainstTruth(cosineTopK(embeddings, k), approx, k)
   }
@@ -747,15 +723,10 @@ object Similarity {
     val queries = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"),
         explode(array(masks.map(m => $"bucket".bitwiseXOR(lit(m))): _*)).as("qbucket"))
-    val scored = corpus
+    servedTopK(corpus
       .join(broadcast(queries), $"bucket" === $"qbucket" && $"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id".as("neighbor_id"), round(cosine($"qv", $"v"), 6).as("cos"))
-    val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
-      .select($"query_id", $"neighbor_id", $"cos", $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
+      .select($"query_id", $"vec_id".as("neighbor_id"), round(cosine($"qv", $"v"), 6).as("cos")),
+      "query_id", k)
   }
 
   /** Recall@k report for the multi-probe LSH ANN against the exact
@@ -851,9 +822,9 @@ object Similarity {
     * (|q| <= 127, small dims), which makes the quantized scores
     * bit-exact across engines.
     *
-    * Output: recall@k of the quantized ranking against the float truth,
-    * per query — the accuracy/bandwidth trade made measurable (same
-    * report shape as `annRecall`).
+    * Output: recall@k of the quantized ranking (the exact top-k kernel
+    * run over the int8 corpus) against the float truth, per query — the
+    * accuracy/bandwidth trade made measurable (`annRecall`'s report).
     *
     * Plan note: the quantization projection uses HOF lambdas (interpreted,
     * not codegen) — acceptable because at scale it is a ONE-TIME
@@ -871,17 +842,8 @@ object Similarity {
         when($"m" > 0,
           transform($"v", x => (x * 127.0 / $"m").cast("long").cast("double")))
           .otherwise(transform($"v", x => lit(0.0))))
-      .select($"vec_id", $"qv")
-    val qqueries = qcorpus.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("query_id"), $"qv".as("qqv"))
-    val scored = qcorpus
-      .join(broadcast(qqueries), $"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id".as("neighbor_id"),
-        round(graft.functions.VectorFunctions.cosine_sim($"qqv", $"qv"), 6).as("cos"))
-    val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
-    val approx = scored
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
+      .select($"vec_id", $"qv".as("v"))
+    val approx = cosineTopKWith(graft.functions.VectorFunctions.cosine_sim)(qcorpus, k)
       .select($"query_id", $"neighbor_id")
     recallAgainstTruth(cosineTopK(embeddings, k), approx, k)
   }
@@ -961,9 +923,11 @@ object Similarity {
   private def pqModelFor(embeddings: DataFrame): PqModel =
     SessionArtifacts.getOrBuild(PqModels, embeddings) {
       val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-        .localCheckpoint() // scanned per Lloyd round + encode + re-rank
+        .localCheckpoint() // ROADMAP item 4 (c): the Lloyd rounds, encode and re-rank read it
       val (codesLong, adcTables, books) = pqModel(corpus)
-      PqModel(corpus, codesLong.localCheckpoint(), adcTables, books)
+      PqModel(corpus,
+        codesLong.localCheckpoint(), // ROADMAP item 4 (c): q148, q149 and writePqIndex scan it
+        adcTables, books)
     }
 
   /** One trained PQ model over `corpus` (which the caller should have
@@ -1080,17 +1044,14 @@ object Similarity {
   }
 
   /** The PQ serving tail shared by the full-scan and IVF-pruned paths:
-    * top-`shortlist` per query by (adc desc, id), then exact rounded
-    * cosine re-rank of the shortlist only — floats touched for
+    * the top-`shortlist` per query by ADC score, then an exact cosine
+    * re-rank of the shortlist only — floats touched for
     * shortlist×NQueries vectors, never the whole corpus. Returns the
     * approx (query_id, neighbor_id) top-k set.
     */
   private def pqShortlistRerank(corpus: DataFrame, adcScores: DataFrame,
       shortlist: Int, k: Int): DataFrame = {
-    val wAdc = Window.partitionBy($"query_id").orderBy($"adc".desc, $"neighbor_id")
-    val short = adcScores
-      .withColumn("rnk", row_number().over(wAdc))
-      .filter($"rnk" <= shortlist)
+    val short = rankTopK(adcScores, Seq($"query_id"), $"adc", $"neighbor_id", shortlist)
       .select($"query_id", $"neighbor_id")
     val queries = corpus.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
@@ -1099,10 +1060,7 @@ object Similarity {
       .join(broadcast(queries), "query_id")
       .select($"query_id", $"neighbor_id",
         round(graft.functions.VectorFunctions.cosine_sim($"qv", $"v"), 6).as("cos"))
-    val wCos = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
-    rer
-      .withColumn("rnk", row_number().over(wCos))
-      .filter($"rnk" <= k)
+    rankTopK(rer, Seq($"query_id"), $"cos", $"neighbor_id", k)
       .select($"query_id", $"neighbor_id")
   }
 
@@ -1246,18 +1204,38 @@ object Similarity {
       .select($"vec_id".as("query_id"), $"v".as("qv"))
       .select($"query_id", $"qv",
         explode(probeCellsExpr(cents, $"qv", nProbe)).as("centroid_id"))
-    val scored = assigned
+    servedTopK(assigned
       .join(broadcast(queries), Seq("centroid_id"))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("neighbor_id"),
-        round(cosine_sim($"qv", $"v"), 6).as("cos"))
-    val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
-      .select($"query_id", $"neighbor_id", $"cos", $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
+        round(cosine_sim($"qv", $"v"), 6).as("cos")), "query_id", k)
   }
+
+  // ---- the per-query top-k ranker --------------------------------------------
+  //
+  // Every per-query and per-anchor top-k in this file ranks in rankTopK:
+  // score descending, ties by ascending id, rnk <= k, the order each
+  // oracle's row_number() reproduces (q114's label vote is its k = 1).
+  // The served paths (q29/q37, q30, q55/q168) and q103 return it through
+  // servedTopK, the one served shape. Each caller keeps its own candidate
+  // join and scorer.
+
+  /** The `k` best rows of each `keys` group of `scored` by `score`
+    * descending, ties by ascending `id`, numbered from 1 in `rnk`.
+    */
+  private def rankTopK(scored: DataFrame, keys: Seq[Column], score: Column, id: Column,
+      k: Int): DataFrame =
+    scored
+      .withColumn("rnk", row_number().over(Window.partitionBy(keys: _*).orderBy(score.desc, id)))
+      .filter($"rnk" <= k)
+
+  /** The served top-k of `scored(key, neighbor_id, cos)`:
+    * (key, neighbor_id, cos, rnk:int) ordered by (key, rnk).
+    */
+  private def servedTopK(scored: DataFrame, key: String, k: Int): DataFrame =
+    rankTopK(scored, Seq(col(key)), $"cos", $"neighbor_id", k)
+      .select(col(key), $"neighbor_id", $"cos", $"rnk".cast("int").as("rnk"))
+      .orderBy(col(key), $"rnk")
 
   // ---- the k-means / IVF cell kernel -----------------------------------------
   //
@@ -1417,9 +1395,10 @@ object Similarity {
   private def kmeansModel(embeddings: DataFrame, k: Int): KMeansModel =
     SessionArtifacts.getOrBuild(KMeansModels, embeddings, k) {
       val corpus = embeddings.select($"vec_id", asDouble($"embedding").as("v"))
-        .localCheckpoint() // scanned once per Lloyd round + the assignment pass
+        .localCheckpoint() // ROADMAP item 4 (c): each Lloyd round and the assignment pass read it
       val cents = trainCentroids(corpus, md5Coreset(corpus, k))
-      KMeansModel(cents, assignCells(corpus, cents).localCheckpoint())
+      KMeansModel(cents, assignCells(corpus, cents)
+        .localCheckpoint()) // ROADMAP item 4 (c): the cell consumers share it
     }
 
   /** Lloyd-iteration k-means over the embedding corpus (cosine metric) —
@@ -1537,7 +1516,7 @@ object Similarity {
     val tau = 0.45
     val a = kmeansModel(embeddings, k).assignments
       .select($"vec_id", $"v", $"cid")
-      .localCheckpoint() // self-joined + aggregated below
+      .localCheckpoint() // ROADMAP item 4 (c): the droppee self-join and the member count read it
     a.groupBy($"cid").agg(count(lit(1)).as("n_members"))
       .join(semanticDroppees(a, tau).groupBy($"cid").agg(count(lit(1)).as("n_dropped")),
         Seq("cid"), "left")
@@ -1709,13 +1688,15 @@ object Similarity {
   def hyperplaneIndex(embeddings: DataFrame, tables: Int = NeardupTables,
       bits: Int = NeardupBits): DataFrame =
     SessionArtifacts.getOrBuild(BucketIndexes, embeddings, tables, bits)(
-      hyperplaneBucketRows(embeddings, tables, bits).localCheckpoint())
+      hyperplaneBucketRows(embeddings, tables, bits)
+        .localCheckpoint()) // ROADMAP item 4 (c): the session's index probes share it
 
   /** The session-cached verified near-dup pair set of a corpus. */
   def embeddingPairIndex(embeddings: DataFrame, threshold: Double = 0.9,
       tables: Int = NeardupTables, bits: Int = NeardupBits): DataFrame =
     SessionArtifacts.getOrBuild(PairIndexes, embeddings, threshold, tables, bits)(
-      embeddingNearDupUnordered(embeddings, threshold, tables, bits).localCheckpoint())
+      embeddingNearDupUnordered(embeddings, threshold, tables, bits)
+        .localCheckpoint()) // ROADMAP item 4 (c): the session's pair-index consumers share it
 
   /** The pair pipeline without the final canonical sort (consumers that
     * re-shuffle immediately would pay the global sort for nothing).
@@ -1769,7 +1750,7 @@ object Similarity {
         .select(explode(graft.functions.MinHashFunctions.pair_combinations($"ids")).as("p"))
         .select($"p.id1".as("id1"), $"p.id2".as("id2"))
         .distinct() // a pair can collide in several tables
-        .localCheckpoint() // near-linear; consumed by the 2 joins below
+        .localCheckpoint() // ROADMAP item 4 (d): one consumer; removal not yet measured
       // The corpus sides carry a SHUFFLE_HASH hint — a scale-safety fix
       // measured in round 9 (SURVEY §6.11): the candidates frame's size
       // ESTIMATE descends from explode(pair_combinations(...)), whose
@@ -1834,7 +1815,7 @@ object Similarity {
       .join(oldBuckets, Seq("t", "bk"))
       .select($"new_id", $"old_id")
       .distinct() // a pair can collide in several tables
-      .localCheckpoint() // candidate-proportional; consumed by 2 joins below
+      .localCheckpoint() // ROADMAP item 4 (d): one consumer; removal not yet measured
     // shuffle_hash: same defect class as embeddingNearDupUnordered's
     // measured ×30 broadcast-of-candidates failure (SURVEY §6.11) — the
     // post-bucket-join candidate estimate is blind to in-bucket expansion,
@@ -1933,7 +1914,7 @@ object Similarity {
       .agg(vecSum($"v").as("s"), count(lit(1)).as("n"))
       .select($"label", $"n",
         transform($"s", x => round(x / $"n", 6)).as("cv"))
-      .localCheckpoint() // one row per label; reused by three consumers
+      .localCheckpoint() // ROADMAP item 4 (c): three consumers read it
     val intra = e.join(broadcast(cents.select($"label", $"cv")), Seq("label"))
       .select($"label", round(cosine($"v", $"cv"), 6).as("c"))
       .groupBy($"label").agg(round(avg($"c"), 6).as("intra_mean"))
@@ -1955,7 +1936,7 @@ object Similarity {
         embeddings.select($"vec_id", $"label", asDouble($"embedding").as("v")),
         group = $"label", rankKey = md5($"vec_id".cast("string")), tie = $"vec_id",
         saltSource = $"vec_id", k = 16)
-      .localCheckpoint() // tiny fixed-size sample; self-joined below
+      .localCheckpoint() // ROADMAP item 4 (c): both sides of the self-join read it
     sampled.as("a")
       .join(sampled.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(

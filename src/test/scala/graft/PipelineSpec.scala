@@ -216,6 +216,27 @@ class PipelineSpec extends GraftSuite {
       math.abs(top(0).getDouble(2) - 1.0) < 1e-6)
   }
 
+  test("served top-k paths break an exact score tie by ascending neighbor id") {
+    // two exact copies of query 0 (ids 9998 and 9999) tie at cos 1: every
+    // served path ranks the lower id first, as every oracle's row_number()
+    // does, and hard-negative mining anchors on the same query set
+    val planted = embs.unionByName(embs.filter($"vec_id" === 0)
+      .select(explode(array(lit(9998L), lit(9999L))).as("vec_id"), $"embedding", $"label"))
+    def top2(df: org.apache.spark.sql.DataFrame) =
+      df.filter($"query_id" === 0 && $"rnk" <= 2).orderBy($"rnk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
+    for ((name, served) <- Seq(
+        "cosineTopK" -> Similarity.cosineTopK(planted),
+        "cosineTopKNative" -> Similarity.cosineTopKNative(planted),
+        "lshCosineTopK" -> Similarity.lshCosineTopK(planted),
+        "ivfCosineTopK" -> Similarity.ivfCosineTopK(planted)))
+      assert(top2(served) === Seq((0L, 9998L, 1.0, 1), (0L, 9999L, 1.0, 2)), name)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.distinct().collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(Similarity.hardNegatives(planted).select($"anchor_id")) ===
+      ids(Similarity.cosineTopK(planted).select($"query_id")))
+  }
+
   test("embedding near-dup: LSH candidates subset of exact; planted duplicate found at 0.9") {
     // fixture embeddings are random (max cos ~0.55) => both paths empty at 0.9
     assert(Similarity.embeddingNearDupExact(embs).count() === 0)

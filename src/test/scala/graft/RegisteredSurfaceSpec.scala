@@ -24,7 +24,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * intersection only in `Dedup.verifyOverlap` (called only by the
   * candidate generators and the prefix-filter joins, never by a
   * pair-index rider), the df-ranked gram
-  * order only in `Dedup.rarestPrefix`, the A/B arm coin only in
+  * order only in `Dedup.rarestPrefix`, the per-query and per-anchor rank
+  * window only in `Similarity.rankTopK` and the served rank column only
+  * in `servedTopK`, the A/B arm coin only in
   * `Events.userArm`, the per-arm sum only in `Events.armSum`, the
   * per-user time to conversion only in `Events.timeToConversion`, the
   * median order-statistic ranks only in `Events.medianOrderStats`, the
@@ -208,6 +210,19 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
         strays(files, """\(\s*mx\s*-\s*s_ts\s*\)\s*div""".r, Set("timeToConversion")) ++
         strays(files, """min\(\s*when\(\s*\$"cc"\s*>=""".r, Set("medianOrderStats"))
     if (offenders.nonEmpty) fail("use the shared kernel in Curation / Events instead:\n" +
+      offenders.mkString("\n"))
+  }
+
+  test("drift guard: one per-query top-k ranker and one served shape in src/main") {
+    // a rank window partitioned by query or anchor lives only in
+    // Similarity.rankTopK, and the served rnk:int column only in servedTopK;
+    // both needles read string literals, so comments alone are stripped
+    val files = sources("src/main/scala", keepLiterals = true)
+    val offenders =
+      strays(files, """Window\.partitionBy\(\s*(?:\$|col\(\s*)?"(?:query_id|anchor_id)"""".r,
+        Set("rankTopK")) ++
+        strays(files, """"rnk"\s*\)?\s*\.cast\(\s*"int"\s*\)""".r, Set("servedTopK"))
+    if (offenders.nonEmpty) fail("rank through Similarity.rankTopK / servedTopK instead:\n" +
       offenders.mkString("\n"))
   }
 
