@@ -28,7 +28,7 @@ object Curation {
     * non-LSH queries in the bench (q60 ~20 s vs ~2 s native at sf0.1).
     */
   def wordGrams(text: Column, n: Int): Column = {
-    val ws = split(text, " ")
+    val ws = TextAnalysis.tokens(text)
     when(size(ws) >= n,
       transform(sequence(lit(1), size(ws) - (n - 1)),
         i => concat_ws(" ", (0 until n).map(k => element_at(ws, i + k)): _*)))
@@ -91,7 +91,7 @@ object Curation {
       // >= 3 tokens <=> at least one 3-gram (hence also a 2-gram): the
       // cheap token-count predicate keeps filter pushdown from duplicating
       // the stats expressions into the Filter node
-      .filter(size(split($"text", " ")) >= 3)
+      .filter(size(TextAnalysis.tokens($"text")) >= 3)
       .select($"doc_id",
         word_ngram_stats($"text", 2).as("s2"),
         word_ngram_stats($"text", 3).as("s3"))
@@ -116,7 +116,7 @@ object Curation {
     val groups = documents
       .groupBy($"lang", $"source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(split($"text", " ")).cast("long")).as("tokens"))
+        sum(size(TextAnalysis.tokens($"text")).cast("long")).as("tokens"))
     val w = Window.partitionBy() // bounded by stratum count, not corpus rows
     groups
       .select($"lang", $"source", $"n_docs", $"tokens",
@@ -166,7 +166,7 @@ object Curation {
       .join(dropped, Seq("doc_id"), "left_anti")
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(split($"text", " ")).cast("long")).as("tokens"))
+        sum(size(TextAnalysis.tokens($"text")).cast("long")).as("tokens"))
       .orderBy($"lang")
   }
 
@@ -220,7 +220,7 @@ object Curation {
     val n = 3
     import graft.functions.TextFunctions.word_grams
     documents
-      .filter(size(split($"text", " ")) >= n)
+      .filter(size(TextAnalysis.tokens($"text")) >= n)
       .select($"doc_id", explode(word_grams($"text", n)).as("g"))
       .groupBy($"g")
       .agg(count(lit(1)).as("occ"), countDistinct($"doc_id").as("n_docs"))
@@ -253,7 +253,7 @@ object Curation {
     val w = Window.partitionBy() // language-count rows only
     val langStats = documents
       .groupBy($"lang")
-      .agg(sum(size(split($"text", " ")).cast("long")).as("tokens"))
+      .agg(sum(size(TextAnalysis.tokens($"text")).cast("long")).as("tokens"))
       .select($"lang", $"tokens", sum($"tokens").over(w).as("total_tokens"),
         ($"tokens" / sum($"tokens").over(w)).as("share"))
       .select($"lang", $"tokens", $"total_tokens", sqrt($"share").as("pa"))
@@ -264,7 +264,7 @@ object Curation {
     val u = Scale.hexFraction(md5($"doc_id".cast("string")))
     documents
       .select($"doc_id", $"lang",
-        size(split($"text", " ")).cast("long").as("tok"), u.as("u"))
+        size(TextAnalysis.tokens($"text")).cast("long").as("tok"), u.as("u"))
       .join(broadcast(langStats), Seq("lang"))
       .filter($"u" < $"p_keep")
       .groupBy($"lang")
@@ -313,7 +313,7 @@ object Curation {
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_spans"), sum($"e" - $"s" + 1L).as("dup_tokens"))
       .join(documents.select($"doc_id",
-        size(split($"text", " ")).cast("long").as("n_tokens")), Seq("doc_id"))
+        size(TextAnalysis.tokens($"text")).cast("long").as("n_tokens")), Seq("doc_id"))
       .select($"doc_id", $"n_spans", $"dup_tokens", $"n_tokens",
         round($"dup_tokens" / $"n_tokens", 6).as("dup_fraction"))
       .orderBy($"doc_id")
@@ -335,7 +335,7 @@ object Curation {
     // a hot duplicated gram in one partition, which is exactly the key
     // distribution this operator hunts, so the agg + join form stays.
     val grams = documents
-      .filter(size(split($"text", " ")) >= k)
+      .filter(size(TextAnalysis.tokens($"text")) >= k)
       .select($"doc_id", posexplode(word_grams($"text", k)))
       .select($"doc_id", $"pos", md5($"col").as("h"))
       .localCheckpoint(eager = false)
@@ -372,7 +372,7 @@ object Curation {
     val covered = dupSpanIslands(documents, 8)
       .select($"doc_id", explode(sequence($"s", $"e")).as("pos"))
     val kept = documents
-      .select($"doc_id", posexplode(split($"text", " ")))
+      .select($"doc_id", posexplode(TextAnalysis.tokens($"text")))
       .select($"doc_id", $"pos".cast("long").as("pos"), $"col".as("tok"))
       .join(covered, Seq("doc_id", "pos"), "left_anti")
       .groupBy($"doc_id")
@@ -381,7 +381,7 @@ object Curation {
           transform(array_sort(collect_list(struct($"pos", $"tok"))),
             x => x.getField("tok")))).as("kept_checksum"))
     documents
-      .select($"doc_id", size(split($"text", " ")).cast("long").as("n_tokens"))
+      .select($"doc_id", size(TextAnalysis.tokens($"text")).cast("long").as("n_tokens"))
       .join(kept, Seq("doc_id"), "left")
       .select($"doc_id", $"n_tokens",
         coalesce($"kept_tokens", lit(0L)).as("kept_tokens"),
@@ -419,7 +419,7 @@ object Curation {
     val buckets = 1024
     val topk = 50
     val toks = documents
-      .select($"doc_id", $"lang", explode(split($"text", " ")).as("tok"))
+      .select($"doc_id", $"lang", explode(TextAnalysis.tokens($"text")).as("tok"))
       .select($"doc_id", $"lang", Scale.md5SlicePos($"tok", 0, buckets).as("b"))
     val bucketStats = toks
       .groupBy($"b")
@@ -457,7 +457,7 @@ object Curation {
     def sig(df: DataFrame, pfx: String) = df.select(
       $"doc_id",
       md5($"text").as(s"${pfx}_sum"),
-      size(split($"text", " ")).cast("long").as(s"${pfx}_toks"))
+      size(TextAnalysis.tokens($"text")).cast("long").as(s"${pfx}_toks"))
     sig(oldSnap, "old")
       .join(sig(newSnap, "new"), Seq("doc_id"), "full_outer")
       .select(
@@ -486,7 +486,7 @@ object Curation {
     val w = Window.partitionBy() // bounded by language count
     documents
       .groupBy($"lang")
-      .agg(sum(size(split($"text", " ")).cast("long")).as("tokens"))
+      .agg(sum(size(TextAnalysis.tokens($"text")).cast("long")).as("tokens"))
       // exact integer share denominator; smoothing on the raw double share
       .select($"lang", $"tokens", ($"tokens" / sum($"tokens").over(w)).as("share"))
       .select($"lang", $"tokens", $"share", sqrt($"share").as("pa"))
@@ -681,7 +681,7 @@ object Curation {
   def paretoFrontier(documents: DataFrame): DataFrame = {
     val s = documents.select($"doc_id",
       TextAnalysis.qualityCol($"text").as("quality"),
-      size(split($"text", " ")).cast("long").as("toks"))
+      size(TextAnalysis.tokens($"text")).cast("long").as("toks"))
     val groups = s.groupBy($"quality").agg(min($"toks").as("tmin"))
     val wPrev = Window.orderBy($"quality".desc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -721,7 +721,7 @@ object Curation {
     */
   def budgetWaterFill(documents: DataFrame, budgetTokens: Long = 24000L): DataFrame = {
     val caps = documents.groupBy($"source")
-      .agg(sum(size(split($"text", " ")).cast("long")).as("capacity"))
+      .agg(sum(size(TextAnalysis.tokens($"text")).cast("long")).as("capacity"))
     val w = Window.orderBy($"capacity", $"source")
     val wAll = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -768,7 +768,7 @@ object Curation {
       parts: Int = 32): DataFrame = {
     val scored = documents
       .select($"doc_id", TextAnalysis.qualityCol($"text").as("quality"),
-        size(split($"text", " ")).cast("long").as("toks"))
+        size(TextAnalysis.tokens($"text")).cast("long").as("toks"))
     Scale.rangePrefixSums(scored, Seq($"quality".desc, $"doc_id"), Seq("toks"), parts)
       .filter($"cum_toks" <= budgetTokens)
       .select($"doc_id", $"quality", $"toks", $"cum_toks")
@@ -817,7 +817,7 @@ object Curation {
     val w = Window.partitionBy() // langs x sources rows
     documents
       .select($"lang", $"source",
-        size(split($"text", " ")).cast("long").as("nw"),
+        size(TextAnalysis.tokens($"text")).cast("long").as("nw"),
         round(TextAnalysis.qualityCol($"text") * 10000, 0).cast("long").as("q4"))
       .groupBy($"lang", $"source")
       .agg(count(lit(1)).as("n_docs"), sum($"nw").as("n_tokens"), sum($"q4").as("q4s"))
@@ -856,7 +856,7 @@ object Curation {
     */
   def datasheetPartials(documents: DataFrame): DataFrame = documents
     .select($"lang", $"source",
-      size(split($"text", " ")).cast("long").as("nw"),
+      size(TextAnalysis.tokens($"text")).cast("long").as("nw"),
       round(TextAnalysis.qualityCol($"text") * 10000, 0).cast("long").as("q4"))
     .groupBy($"lang", $"source")
     .agg(count(lit(1)).as("n_docs"), sum($"nw").as("n_tokens"), sum($"q4").as("q4s"))
@@ -926,7 +926,7 @@ object Curation {
     import graft.functions.TextFunctions.word_ngram_stats
     val flagged = documents
       .select(
-        size(split($"text", " ")).cast("long").as("nw"),
+        size(TextAnalysis.tokens($"text")).cast("long").as("nw"),
         TextAnalysis.qualityCol($"text").as("quality"),
         word_ngram_stats($"text", 2).as("s2"),
         $"lang")
@@ -1013,7 +1013,7 @@ object Curation {
     */
   def curriculumStages(documents: DataFrame): DataFrame = {
     val scored = documents.select($"doc_id",
-      size(split($"text", " ")).cast("long").as("nw"),
+      size(TextAnalysis.tokens($"text")).cast("long").as("nw"),
       TextAnalysis.qualityCol($"text").as("quality"))
     // all three stage boundaries from ONE histogram pass (the per-cut
     // form rescanned and rescored the corpus three times)
@@ -1051,7 +1051,7 @@ object Curation {
     */
   def effectiveTokenMass(documents: DataFrame): DataFrame =
     documents
-      .select($"doc_id", $"source", size(split($"text", " ")).cast("long").as("nt"))
+      .select($"doc_id", $"source", size(TextAnalysis.tokens($"text")).cast("long").as("nt"))
       .join(duplicatedSpans(documents).select($"doc_id", $"dup_tokens"),
         Seq("doc_id"), "left")
       .groupBy($"source")
@@ -1174,7 +1174,7 @@ object Curation {
   def boilerplateSegments(documents: DataFrame, width: Int = 8,
       minDocs: Int = 3): DataFrame = {
     val segs = documents
-      .select($"doc_id", $"source", split($"text", " ").as("ws"))
+      .select($"doc_id", $"source", TextAnalysis.tokens($"text").as("ws"))
       .select($"doc_id", $"source",
         explode(transform(
           sequence(lit(0), floor((size($"ws") - 1) / width).cast("int")),
@@ -1277,7 +1277,8 @@ object Curation {
     * per-round exchange left is the (Buckets+1)-row gradient one.
     */
   private def featureFrame(documents: DataFrame): DataFrame =
-    bucketCounts(documents.select($"doc_id", explode(split($"text", " ")).as("tok")), documents)
+    bucketCounts(
+      documents.select($"doc_id", explode(TextAnalysis.tokens($"text")).as("tok")), documents)
       // width = cores exactly (r15): an explicit REPARTITION_BY_NUM is
       // not AQE-coalescible, so every downstream scan of the persisted
       // frame pays the full task count — x2 bought no spread the cores
@@ -1839,7 +1840,7 @@ object Curation {
     // rule; docs whose every segment is boilerplate drop out here and
     // re-enter the accounting as zero-token docs via the left joins below)
     val segs = documents
-      .select($"doc_id", split($"text", " ").as("ws"))
+      .select($"doc_id", TextAnalysis.tokens($"text").as("ws"))
       .select($"doc_id",
         posexplode(transform(
           sequence(lit(0), floor((size($"ws") - 1) / width).cast("int")),
@@ -1864,7 +1865,7 @@ object Curation {
     val covered = dupSpanIslands(cleaned, k)
       .select($"doc_id", explode(sequence($"s", $"e")).as("pos"))
     val keptToks = cleaned
-      .select($"doc_id", posexplode(split($"text", " ")))
+      .select($"doc_id", posexplode(TextAnalysis.tokens($"text")))
       .select($"doc_id", $"pos".cast("long").as("pos"), $"col".as("tok"))
       .join(covered, Seq("doc_id", "pos"), "left_anti")
       // consumed twice (feature counts + final token mass)
@@ -1937,7 +1938,7 @@ object Curation {
       s"overlap $overlapTokens must be in [0, chunkTokens=$chunkTokens)")
     val stride = chunkTokens - overlapTokens
     val chunks = documents
-      .select($"doc_id", split($"text", " ").as("ts"))
+      .select($"doc_id", TextAnalysis.tokens($"text").as("ts"))
       .withColumn("n_tok", size($"ts"))
       .filter($"n_tok" >= 1)
       // 1 + ceil((n_tok - chunk) / stride) via integer div, >= 1 always
@@ -1984,7 +1985,7 @@ object Curation {
     val bins = 16
     val k = 20
     val feats = documents.select($"doc_id", $"n_chars".as("x"),
-      size(split($"text", " ")).cast("long").as("y"))
+      size(TextAnalysis.tokens($"text")).cast("long").as("y"))
     val ext = feats.agg(min($"x").as("x0"), max($"x").as("x1"),
       min($"y").as("y0"), max($"y").as("y1"), count(lit(1)).as("n"))
     val binned = feats.crossJoin(broadcast(ext))

@@ -319,12 +319,10 @@ object Dedup {
     val parts = documents.sparkSession.sparkContext.defaultParallelism * 2
     val pairs = pairIndex(documents, threshold)
     val ids = pairs.select(explode(array($"id1", $"id2")).as("doc_id")).distinct()
-    val docTf = documents.join(ids, Seq("doc_id"), "left_semi")
-      .repartition(parts, $"doc_id")
-      .select($"doc_id", explode(split($"text", " ")).as("tok"))
-      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
+    val docTf = TextAnalysis.termFrequencies(
+        documents.join(ids, Seq("doc_id"), "left_semi").repartition(parts, $"doc_id"))
       .groupBy($"doc_id")
-      .agg(map_from_entries(collect_list(struct($"tok", $"tf"))).as("m"),
+      .agg(map_from_entries(collect_list(struct($"term", $"tf"))).as("m"),
         sum($"tf").as("tot"))
       .localCheckpoint() // ROADMAP item 4 (c): both map joins below read it
     pairs

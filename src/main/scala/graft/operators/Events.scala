@@ -834,27 +834,37 @@ object Events {
         round((mA - mB) / sqrt(welchSe2), 4)).as("z_score"))
   }
 
+  /** The one signup→purchase conversion of q222, q235 and q281: every
+    * signed-up user's first signup `s_ts`, and for the users who convert,
+    * `lat_ns` from it to their first purchase strictly after it — a
+    * purchase at the signup instant does not count.
+    */
+  private def conversions(events: DataFrame): (DataFrame, DataFrame) = {
+    val signups = events.filter($"event_type" === "signup")
+      .groupBy($"user_id").agg(min($"ts").as("s_ts"))
+    val converted = events.filter($"event_type" === "purchase")
+      .select($"user_id", $"ts")
+      .join(signups, Seq("user_id"))
+      .filter($"ts" > $"s_ts")
+      .groupBy($"user_id").agg(min($"ts" - $"s_ts").as("lat_ns"))
+    (signups, converted)
+  }
+
   /** Per-user time to conversion of q235/q281: every signed-up user with
     * t, the whole days from its first signup to its first later purchase,
     * or, with no purchase by the corpus frontier (max ts), to the frontier,
     * censored; `churned` is 1 for a conversion and 0 for a censored user.
     */
   private def timeToConversion(events: DataFrame): DataFrame = {
-    val signup = events.filter($"event_type" === "signup")
-      .groupBy($"user_id").agg(min($"ts").as("s_ts"))
-    val firstPurch = events.filter($"event_type" === "purchase")
-      .select($"user_id", $"ts")
-      .join(signup, Seq("user_id"))
-      .filter($"ts" > $"s_ts")
-      .groupBy($"user_id").agg(min($"ts").as("p_ts"))
+    val (signups, converted) = conversions(events)
     val mx = events.agg(max($"ts").as("mx"))
-    signup
-      .join(firstPurch, Seq("user_id"), "left_outer")
+    signups
+      .join(converted, Seq("user_id"), "left_outer")
       .crossJoin(broadcast(mx))
       .select($"user_id",
-        when($"p_ts".isNotNull, expr(s"(p_ts - s_ts) div $NsPerDay"))
+        when($"lat_ns".isNotNull, expr(s"lat_ns div $NsPerDay"))
           .otherwise(expr(s"(mx - s_ts) div $NsPerDay")).as("t"),
-        $"p_ts".isNotNull.cast("long").as("churned"))
+        $"lat_ns".isNotNull.cast("long").as("churned"))
   }
 
   /** Kaplan–Meier time-to-conversion curve (q235; Kaplan & Meier 1958 —
@@ -1847,26 +1857,21 @@ object Events {
     * quantile panel) that turn q76's conversion RATE into an activation
     * SLA ("half convert within pXX hours"). One row.
     *
-    * Shape: two filtered per-user aggregations joined on user (purchase
-    * rows join the broadcast-or-shuffle signup frame, both user-keyed),
-    * then the whole percentile panel from ONE histogram pass over the
-    * users-sized latency frame (integer-second domain — state bounded by
-    * the time range, not by users).
+    * Shape: `conversions`, the per-user frames q235 and q281 read (two
+    * filtered per-user aggregations joined on user), then the whole
+    * percentile panel from ONE histogram pass over the users-sized
+    * latency frame (integer-second domain — state bounded by the time
+    * range, not by users).
     */
   def conversionLatency(events: DataFrame): DataFrame = {
-    val firstSignup = events.filter($"event_type" === "signup")
-      .groupBy($"user_id").agg(min($"ts").as("s_ts"))
-    val conv = events.filter($"event_type" === "purchase")
-      .select($"user_id", $"ts")
-      .join(firstSignup, Seq("user_id"))
-      .filter($"ts" >= $"s_ts")
-      .groupBy($"user_id").agg(min($"ts" - $"s_ts").as("lat_ns"))
+    val (signups, converted) = conversions(events)
+    val conv = converted
       .select(expr(s"lat_ns div $NsPerSecond").cast("double").as("lat_s"))
       .localCheckpoint() // feeds the count and the histogram pass
     val panel = Scale.quantilePanel(conv.select(lit("all").as("g"), $"lat_s".as("v")),
         "g", "v", Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75", 0.9 -> "p90"))
       .drop("g")
-    firstSignup.agg(count(lit(1)).as("n_signup_users"))
+    signups.agg(count(lit(1)).as("n_signup_users"))
       .crossJoin(broadcast(conv.agg(count(lit(1)).as("n_converted"))))
       // LEFT join, not crossJoin: with zero conversions the panel frame is
       // EMPTY (groupBy of an empty input) and a crossJoin would annihilate

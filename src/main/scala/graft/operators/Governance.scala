@@ -44,25 +44,20 @@ object Governance {
   }
 
   /** q163: BM25 ranking under erasure tombstones applied at the INDEX-ROW
-    * grain — the delete list anti-joins the postings-shaped (doc_id, term,
-    * tf) frame and the doclen frame, NOT the raw text, exactly as a
-    * serving tier would treat a persisted index it cannot rebuild. The
-    * ranking core is `TextAnalysis.bm25Rank` — the same code path as q79
-    * — so df/N/avgdl recompute from surviving rows and the result is
-    * bit-identical to re-ingesting the filtered corpus (which is what the
-    * DuckDB oracle computes).
+    * grain — the delete list anti-joins the bag-of-words index's
+    * `TextAnalysis.termFrequencies` and `docLengths` frames, NOT the raw
+    * text, exactly as a serving tier would treat a persisted index it
+    * cannot rebuild. The ranking core is `TextAnalysis.bm25Rank` — the
+    * same code path as q79 — so df/N/avgdl recompute from surviving rows
+    * and the result is bit-identical to re-ingesting the filtered corpus
+    * (which is what the DuckDB oracle computes).
     */
   def erasureBm25(documents: DataFrame, deletes: DataFrame): DataFrame = {
     val del = broadcast(deletes.select($"doc_id"))
-    val dl = documents
-      .select($"doc_id", size(split($"text", " ")).cast("long").as("dl"))
+    val dl = TextAnalysis.docLengths(documents).join(del, Seq("doc_id"), "left_anti")
+    val tf = TextAnalysis.termFrequencies(documents)
+      .filter($"term".isin(TextAnalysis.Bm25SeedQuery: _*))
       .join(del, Seq("doc_id"), "left_anti")
-    val tf = documents
-      .select($"doc_id", explode(split($"text", " ")).as("term"))
-      .filter($"term".isin("table", "data", "row"))
-      .join(del, Seq("doc_id"), "left_anti")
-      .groupBy($"doc_id", $"term")
-      .agg(count(lit(1)).as("tf"))
     TextAnalysis.bm25Rank(tf, dl, 20)
   }
 
@@ -97,7 +92,7 @@ object Governance {
   def erasureAudit(documents: DataFrame, deletes: DataFrame): DataFrame = {
     val del = broadcast(deletes.select($"doc_id").withColumn("del1", lit(1L)))
     documents
-      .select($"source", $"doc_id", size(split($"text", " ")).cast("long").as("toks"))
+      .select($"source", $"doc_id", size(TextAnalysis.tokens($"text")).cast("long").as("toks"))
       .join(del, Seq("doc_id"), "left_outer")
       .select($"source", $"toks", coalesce($"del1", lit(0L)).as("del"))
       .groupBy($"source")
@@ -233,7 +228,7 @@ object Governance {
       .select($"source",
         conv(substring(md5(concat($"doc_id".cast("string"), lit(":"), $"text")), 1, 15),
           16, 10).cast("long").as("h"),
-        size(split($"text", " ")).cast("long").as("toks"))
+        size(TextAnalysis.tokens($"text")).cast("long").as("toks"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
         sum($"toks").as("n_tokens"),
@@ -315,7 +310,7 @@ object Governance {
   def sourceConcentration(documents: DataFrame): DataFrame = {
     val strata = documents
       .groupBy($"lang", $"source")
-      .agg(sum(size(split($"text", " ")).cast("long")).as("tokens"))
+      .agg(sum(size(TextAnalysis.tokens($"text")).cast("long")).as("tokens"))
     val w = Window.partitionBy($"lang").orderBy($"tokens", $"source")
     strata
       .withColumn("i", row_number().over(w).cast("long"))

@@ -277,7 +277,7 @@ object Inference {
     */
   def spearmanRho(documents: DataFrame): DataFrame = {
     val d = documents.select($"n_chars".as("x"),
-      size(split($"text", " ")).cast("long").as("y"))
+      size(TextAnalysis.tokens($"text")).cast("long").as("y"))
     def rankMap(c: String): DataFrame =
       doubledRanks(d.groupBy(col(c).as("v")).agg(count(lit(1)).as("t")))
         .select($"v".as(c), $"r2".as(s"r$c"))
@@ -544,7 +544,7 @@ object Inference {
   def labelerAgreement(documents: DataFrame): DataFrame = {
     val labeled = documents.select(
       ($"n_chars" >= 300L).cast("long").as("a"),
-      (size(split($"text", " ")) >= 60L).cast("long").as("b"))
+      (size(TextAnalysis.tokens($"text")) >= 60L).cast("long").as("b"))
     val m = labeled.agg(
       count(lit(1)).as("n"),
       sum($"a" * $"b").as("n11"),
@@ -637,7 +637,7 @@ object Inference {
   def rdGateAudit(documents: DataFrame): DataFrame = {
     val cutoff = 300L
     val bandwidth = 150L
-    val words = size(split($"text", " "))
+    val words = size(TextAnalysis.tokens($"text"))
     val stops = TextAnalysis.occurrences(
       concat(lit(" "), lower($"text"), lit(" ")), " the ") +
       TextAnalysis.occurrences(

@@ -45,7 +45,7 @@ object Matching {
   def fuzzyNameMatch(part: DataFrame): DataFrame = {
     val maxDist = 3
     val names = part.groupBy($"p_name").agg(count(lit(1)).as("n_parts"))
-    val toks = names.select($"p_name", explode(split($"p_name", " ")).as("tok"))
+    val toks = names.select($"p_name", explode(TextAnalysis.tokens($"p_name")).as("tok"))
     val cand = toks.as("a")
       .join(toks.as("b"), $"a.tok" === $"b.tok" && $"a.p_name" < $"b.p_name")
       .select($"a.p_name".as("name_a"), $"b.p_name".as("name_b"))
@@ -67,7 +67,7 @@ object Matching {
   private def fsCandidates(part: DataFrame): DataFrame = {
     val recs = part.select($"p_partkey", $"p_name", $"p_brand", $"p_type",
       $"p_size", floor($"p_retailprice" / 100).as("pb"),
-      array_distinct(split($"p_name", " ")).as("toks"))
+      array_distinct(TextAnalysis.tokens($"p_name")).as("toks"))
     recs.as("a")
       .join(recs.as("b"),
         col("a.p_brand") === col("b.p_brand") &&
@@ -262,26 +262,18 @@ object Matching {
     *     (round(1e6·w·w') per term — the PSI trick), so the sums are
     *     order-free exact integers; one final double division + round(4).
     *
-    * Shape: tf/df/N are the q67 aggregations; the inverted index carries
-    * only (doc, term, w) for top-`k` terms — k·N rows regardless of
-    * document length; candidate generation and both scoring joins are
+    * Shape: the weights are the bag-of-words index's
+    * `TextAnalysis.tfidfWeights`, the ones q67 ranks; the inverted index
+    * carries only (doc, term, w) for top-`k` terms — k·N rows regardless
+    * of document length; candidate generation and both scoring joins are
     * hash equi-joins on term/doc_id. Nothing is ever all-pairs.
     */
   def tfidfCosinePairs(documents: DataFrame): DataFrame = {
     val k = 8
     val dfCapPerMille = 64
     val tau = 0.7
-    val tf = documents
-      .select($"doc_id", explode(split($"text", " ")).as("term"))
-      .groupBy($"doc_id", $"term")
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    val nDocs = documents.agg(count(lit(1)).as("n_docs"))
-    val scored = tf
-      .join(df, Seq("term"))
-      .crossJoin(broadcast(nDocs))
-      .select($"doc_id", $"term", $"df",
-        round($"tf" * log($"n_docs" / $"df"), 4).as("w"),
+    val scored = TextAnalysis.tfidfWeights(documents, TextAnalysis.termFrequencies(documents))
+      .select($"doc_id", $"term", $"df", $"tfidf".as("w"),
         expr(s"n_docs * $dfCapPerMille div 1000").as("df_cap"))
     // r14 (guide §2.4/§5): topw is consumed FIVE times below (the rare
     // self-join's two branches, norms, and the two dot-product probes);

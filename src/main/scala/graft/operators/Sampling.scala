@@ -113,7 +113,7 @@ object Sampling {
   def trainTestSplit(documents: DataFrame): DataFrame =
     documents
       .select($"doc_id",
-        size(split($"text", " ")).cast("bigint").as("tok"),
+        size(TextAnalysis.tokens($"text")).cast("bigint").as("tok"),
         when(substring(md5($"doc_id".cast("string")), 1, 2) < "0d", "test")
           .otherwise("train").as("split"))
       .groupBy($"split")
@@ -135,7 +135,7 @@ object Sampling {
     val comps = Dedup.survivorsOverPairs(Dedup.pairIndex(documents))
       .select($"doc_id", $"cluster_rep")
     documents
-      .select($"doc_id", size(split($"text", " ")).cast("bigint").as("tok"))
+      .select($"doc_id", size(TextAnalysis.tokens($"text")).cast("bigint").as("tok"))
       .join(comps, Seq("doc_id"), "left")
       .select($"doc_id", $"tok", coalesce($"cluster_rep", $"doc_id").as("rep"))
       .select($"tok",
@@ -175,7 +175,7 @@ object Sampling {
     // this relation, and without the checkpoint each would re-scan and
     // re-tokenize the corpus through the lineage
     val toks = documents.select($"doc_id",
-      size(split($"text", " ")).cast("bigint").as("tok"))
+      size(TextAnalysis.tokens($"text")).cast("bigint").as("tok"))
       .withColumn("bkt", expr(s"doc_id div $bucketWidth"))
       .localCheckpoint()
     // level 1: per-range totals; level 2: per-super-range running bases.
@@ -230,7 +230,7 @@ object Sampling {
     val nChunks = when(nws <= chunkSize, lit(1L))
       .otherwise(ceil((nws - chunkSize).cast("double") / stride).cast("bigint") + 1L)
     documents
-      .select($"doc_id", split($"text", " ").as("ws"))
+      .select($"doc_id", TextAnalysis.tokens($"text").as("ws"))
       .select($"doc_id",
         posexplode(transform(sequence(lit(0L), nChunks - 1L),
           k => slice($"ws", (k * stride + 1L).cast("int"), lit(chunkSize)))))
@@ -392,7 +392,7 @@ object Sampling {
     */
   private[graft] def vocabCdf(documents: DataFrame, parts: Int): DataFrame = {
     val vocab = documents
-      .select(explode(split($"text", " ")).as("tok"))
+      .select(explode(TextAnalysis.tokens($"text")).as("tok"))
       .groupBy($"tok").agg(count(lit(1)).as("n"))
       .select($"tok", $"n",
         round(pow($"n", 0.75) * 1e6, 0).cast("long").as("w6"))

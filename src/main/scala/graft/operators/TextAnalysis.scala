@@ -19,12 +19,55 @@ object TextAnalysis {
   def occurrences(s: Column, marker: String): Column =
     ((length(s) - length(replace(s, lit(marker), lit("")))) / marker.length).cast("int")
 
+  /** The one whitespace tokenizer: `text` split on a single space with
+    * empty tokens kept — the oracles' `string_split(text, ' ')`, and
+    * Java's `String.split(" ", -1)`.
+    */
+  def tokens(text: Column): Column = split(text, " ")
+
+  /** The bag-of-words index every lexical operator reads: one
+    * `(doc_id, term, tf)` row per distinct token of a document, tf its
+    * raw in-document count — one explode into a map-side-combined
+    * aggregation. Filters and semi/anti-joins on `term` or `doc_id`
+    * above it are pushed below the aggregate by Catalyst.
+    */
+  def termFrequencies(documents: DataFrame): DataFrame =
+    documents
+      .select($"doc_id", explode(tokens($"text")).as("term"))
+      .groupBy($"doc_id", $"term")
+      .agg(count(lit(1)).as("tf"))
+
+  /** Each document's token count `(doc_id, dl)` — BM25's document length. */
+  def docLengths(documents: DataFrame): DataFrame =
+    documents.select($"doc_id", size(tokens($"text")).cast("long").as("dl"))
+
+  /** The tf-idf weights `(doc_id, term, df, n_docs, tfidf)` of the `tf`
+    * rows, `termFrequencies(documents)` or its rows for some documents:
+    * df per term and N over the whole corpus, N as a one-row scalar
+    * broadcast (a BroadcastNestedLoopJoin whose build side is a ONE-ROW
+    * aggregate — constant memory, no shuffle; a corpus-wide window would
+    * single-partition the frame) and tfidf = round(tf · ln(N/df), 4).
+    * A caller that weights a few documents restricts `tf` itself: Catalyst
+    * does not push a semi-join below the computed tfidf projection.
+    */
+  def tfidfWeights(documents: DataFrame, tf: DataFrame): DataFrame = {
+    val df = termFrequencies(documents).groupBy($"term").agg(count(lit(1)).as("df"))
+    val nDocs = documents.agg(count(lit(1)).as("n_docs"))
+    tf.join(df, Seq("term"))
+      .crossJoin(broadcast(nDocs))
+      .select($"doc_id", $"term", $"df", $"n_docs",
+        round($"tf" * log($"n_docs" / $"df"), 4).as("tfidf"))
+  }
+
+  /** The BM25 seed query of q79, q138 and q163. */
+  val Bm25SeedQuery: Seq[String] = Seq("table", "data", "row")
+
   /** Per-document stats: char/word counts, avg word length, punctuation and
     * stopword ratios, plus a composite quality score. Pure projection —
     * pipelines with the scan, shuffle-free.
     */
   def textStats(documents: DataFrame): DataFrame = {
-    val words = size(split($"text", " "))
+    val words = size(tokens($"text"))
     val letters = length(regexp_replace($"text", "[^a-z]", ""))
     // lowercase before marker counting (consistent with langId and the
     // oracle's padded-lower form)
@@ -49,7 +92,7 @@ object TextAnalysis {
     */
   /** The q21 quality formula as a reusable column (rounded to 4). */
   def qualityCol(text: Column): Column = {
-    val words = size(split(text, " "))
+    val words = size(tokens(text))
     // lowercase before marker counting (consistent with langId and the
     // oracle's padded-lower form)
     val padded = concat(lit(" "), lower(text), lit(" "))
@@ -148,7 +191,7 @@ object TextAnalysis {
   def tokenCounts(documents: DataFrame): DataFrame =
     documents.select(
       $"doc_id",
-      size(split($"text", " ")).cast("bigint").as("ws_tokens"),
+      size(tokens($"text")).cast("bigint").as("ws_tokens"),
       // regexp_count avoids materializing the match array
       regexp_count(lower($"text"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]"))
         .cast("bigint").as("bpe_tokens"))
@@ -161,26 +204,21 @@ object TextAnalysis {
     * 1 = all tokens distinct). Low entropy flags keyword-stuffing and
     * template spam that length/stopword ratios miss.
     *
-    * Shape: explode → (doc, token) counts → per-doc fold — two map-side-
-    * combined aggregations, the same vocabulary-keyed shuffle as tf-idf's
-    * term frequency; nothing corpus-global anywhere. Entropy is rounded to
-    * 4 (the one place doubles meet libm logs; same convention as the
-    * tf-idf/BM25 oracles).
+    * Shape: a per-doc fold of the `termFrequencies` index — two
+    * map-side-combined aggregations; nothing corpus-global anywhere.
+    * Entropy is rounded to 4 (the one place doubles meet libm logs; same
+    * convention as the tf-idf/BM25 oracles).
     */
   def tokenEntropy(documents: DataFrame): DataFrame = {
-    val counts = documents
-      .select($"doc_id", explode(split($"text", " ")).as("w"))
-      .groupBy($"doc_id", $"w")
-      .agg(count(lit(1)).as("c"))
-    counts
+    termFrequencies(documents)
       .groupBy($"doc_id")
-      .agg(sum($"c").as("n_tokens"), count(lit(1)).as("n_types"),
-        // log2(c) quantized to integer micro-units: the per-doc weighted
+      .agg(sum($"tf").as("n_tokens"), count(lit(1)).as("n_types"),
+        // log2(tf) quantized to integer micro-units: the per-doc weighted
         // sum is then exact integer arithmetic, order-independent under
         // any partitioning (a float sum over n_types terms can land
         // either side of the round-4 boundary depending on reduction
         // order — the q98 lesson)
-        sum($"c" * round(log2($"c") * 1e6, 0).cast("long")).as("s6"))
+        sum($"tf" * round(log2($"tf") * 1e6, 0).cast("long")).as("s6"))
       .select($"doc_id", $"n_tokens", $"n_types",
         (log2($"n_tokens") - $"s6" / 1e6 / $"n_tokens").as("h"))
       .select($"doc_id", $"n_tokens", $"n_types",
@@ -198,7 +236,7 @@ object TextAnalysis {
     */
   def tokenTopK(documents: DataFrame, k: Int = 30): DataFrame =
     documents
-      .select(explode(split($"text", " ")).as("token"))
+      .select(explode(tokens($"text")).as("token"))
       .groupBy($"token")
       .agg(count(lit(1)).as("n"))
       .orderBy($"n".desc, $"token")
@@ -207,32 +245,15 @@ object TextAnalysis {
   /** Per-document top-`k` terms by tf-idf (tf = raw in-doc count, idf =
     * ln(N/df)) — the classic salient-term extraction over a corpus.
     *
-    * Scale shape: per-(doc, term) counts and per-term document frequencies
-    * are two map-side-combined aggregations; N arrives via a broadcast
-    * 1-row frame (never a driver round-trip); the per-doc top-k runs
-    * through the salted two-stage rank (`Scale.topKPerGroup`), so neither
-    * the vocabulary join nor the ranking funnels a hot key through one
-    * reducer. Ranking compares the ROUNDED score (then term) so the order
-    * is reproducible across engines to the last ulp.
-    *
-    * Plan note: the `crossJoin(broadcast(nDocs))` surfaces as a
-    * BroadcastNestedLoopJoin whose build side is a ONE-ROW aggregate —
-    * that is the scalar-broadcast pattern (constant memory, no shuffle),
-    * not an O(n²) nested loop; the alternative (a corpus-wide window)
-    * would single-partition the frame.
+    * Scale shape: the scores are the index's `tfidfWeights`; the per-doc
+    * top-k runs through the salted two-stage rank (`Scale.topKPerGroup`),
+    * so neither the vocabulary join nor the ranking funnels a hot key
+    * through one reducer. Ranking compares the ROUNDED score (then term)
+    * so the order is reproducible across engines to the last ulp.
     */
   def tfidfTopTerms(documents: DataFrame, k: Int = 3): DataFrame = {
-    val tf = documents
-      .select($"doc_id", explode(split($"text", " ")).as("term"))
-      .groupBy($"doc_id", $"term")
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    val nDocs = documents.agg(count(lit(1)).as("n_docs"))
-    val scored = tf
-      .join(df, Seq("term"))
-      .crossJoin(broadcast(nDocs))
-      .select($"doc_id", $"term",
-        round($"tf" * log($"n_docs" / $"df"), 4).as("tfidf"))
+    val scored = tfidfWeights(documents, termFrequencies(documents))
+      .select($"doc_id", $"term", $"tfidf")
     Scale.topKPerGroup(scored, group = $"doc_id", rankKey = -$"tfidf",
         tie = $"term", saltSource = $"term", k = k)
       .withColumn("rnk",
@@ -260,7 +281,7 @@ object TextAnalysis {
     val w = 1024
     val topk = 10
     val cells = documents
-      .select(explode(split($"text", " ")).as("token"))
+      .select(explode(tokens($"text")).as("token"))
       .select(posexplode(array((0 until d).map(j => Scale.md5SlicePos($"token", j, w)): _*)))
       .groupBy($"pos".as("j"), $"col".as("cell"))
       .agg(count(lit(1)).as("c"))
@@ -291,7 +312,7 @@ object TextAnalysis {
     * transcendental, quantized far above libm jitter).
     */
   def collocations(documents: DataFrame, minCount: Long = 20): DataFrame = {
-    val toks = documents.select(split($"text", " ").as("ts"))
+    val toks = documents.select(tokens($"text").as("ts"))
     val bigrams = toks
       .filter(size($"ts") >= 2)
       .select(explode(expr(
@@ -321,26 +342,21 @@ object TextAnalysis {
     * set (Lucene-form idf, k1 = 1.2, b = 0.75) and return the global top-k —
     * the lexical-retrieval half of a RAG pipeline, beside the ANN ops.
     *
-    * Shape: term frequencies only for the |Q| query terms (the explode is
-    * filtered before aggregation, so state is query-proportional); df is
-    * a |Q|-row broadcast; corpus stats (N, avgdl) are a 1-row broadcast
-    * (scalar-broadcast pattern, see tfidfTopTerms); the final top-k is
-    * TakeOrderedAndProject. Scores are ranked ROUNDED (then doc_id) so
-    * cross-engine ordering is stable; every input to the formula is an
-    * exact integer or an exactly-representable constant, so per-term
-    * scores are bit-identical across engines and only the <=|Q|-term sum
-    * order rides on the rounding.
+    * Shape: the `termFrequencies` and `docLengths` index frames; Catalyst
+    * pushes the term filter below the index's aggregate, so state is
+    * query-proportional; df is a |Q|-row broadcast; corpus stats (N,
+    * avgdl) are a 1-row broadcast (scalar-broadcast pattern, see
+    * tfidfWeights); the final top-k is TakeOrderedAndProject. Scores are
+    * ranked ROUNDED (then doc_id) so cross-engine ordering is stable;
+    * every input to the formula is an exact integer or an
+    * exactly-representable constant, so per-term scores are bit-identical
+    * across engines and only the <=|Q|-term sum order rides on the
+    * rounding.
     */
-  def bm25TopDocs(documents: DataFrame, query: Seq[String] = Seq("table", "data", "row"),
-      topk: Int = 20): DataFrame = {
-    val dl = documents.select($"doc_id", size(split($"text", " ")).cast("long").as("dl"))
-    val tf = documents
-      .select($"doc_id", explode(split($"text", " ")).as("term"))
-      .filter($"term".isin(query: _*))
-      .groupBy($"doc_id", $"term")
-      .agg(count(lit(1)).as("tf"))
-    bm25Rank(tf, dl, topk)
-  }
+  def bm25TopDocs(documents: DataFrame, query: Seq[String] = Bm25SeedQuery,
+      topk: Int = 20): DataFrame =
+    bm25Rank(termFrequencies(documents).filter($"term".isin(query: _*)),
+      docLengths(documents), topk)
 
   /** Shared BM25 ranking core: identical expressions whether `tf`/`dl`
     * come from a live corpus scan (q79, q138's expanded query) or from
@@ -375,13 +391,13 @@ object TextAnalysis {
     * without containing the literal seed terms).
     *
     * Shape: the seed pass is q79's query-proportional plan; feedback
-    * terms come from the (fbDocs·fbTerms)-row restriction of the q67
-    * frame; the expanded term set (a ≤|Q|+fbDocs·fbTerms-row frame)
-    * broadcast-semi-joins the token explode, so the re-score pass stays
-    * expanded-query-proportional. Same rounding discipline as q79.
+    * terms come from the (fbDocs·fbTerms)-row restriction of the index's
+    * `tfidfWeights`; the expanded term set (a ≤|Q|+fbDocs·fbTerms-row
+    * frame) broadcast-semi-joins `termFrequencies`, so the re-score pass
+    * stays expanded-query-proportional. Same rounding discipline as q79.
     */
   def prfExpandedRetrieval(documents: DataFrame): DataFrame = {
-    val query = Seq("table", "data", "row")
+    val query = Bm25SeedQuery
     val fbDocs = 3
     val fbTerms = 2
     val spark = documents.sparkSession
@@ -393,26 +409,16 @@ object TextAnalysis {
     // cost), while the corpus-wide salted rank q67 runs is skipped for
     // the (fbDocs)-partition restriction (ranks within a doc are
     // unaffected by dropping other docs' partitions)
-    val tfAll = documents
-      .select($"doc_id", explode(split($"text", " ")).as("term"))
-      .groupBy($"doc_id", $"term")
-      .agg(count(lit(1)).as("tf"))
-    val dfAll = tfAll.groupBy($"term").agg(count(lit(1)).as("df"))
-    val nDocs = documents.agg(count(lit(1)).as("n_docs"))
     val fbW = org.apache.spark.sql.expressions.Window
       .partitionBy($"doc_id").orderBy($"tfidf".desc, $"term")
-    val fb = tfAll
-      .join(broadcast(seedTop), Seq("doc_id"), "left_semi")
-      .join(dfAll, Seq("term"))
-      .crossJoin(broadcast(nDocs))
-      .select($"doc_id", $"term",
-        round($"tf" * log($"n_docs" / $"df"), 4).as("tfidf"))
+    val tfAll = termFrequencies(documents)
+    val fb = tfidfWeights(documents, tfAll.join(broadcast(seedTop), Seq("doc_id"), "left_semi"))
       .withColumn("r", row_number().over(fbW))
       .filter($"r" <= fbTerms)
       .select($"term")
     val expanded = query.toDF("term").unionAll(fb).distinct()
-    val dl = documents.select($"doc_id", size(split($"text", " ")).cast("long").as("dl"))
-    bm25Rank(tfAll.join(broadcast(expanded), Seq("term"), "left_semi"), dl, 10, "bm25x")
+    bm25Rank(tfAll.join(broadcast(expanded), Seq("term"), "left_semi"), docLengths(documents),
+      10, "bm25x")
   }
 
   /** Document-length histogram: fixed-width bins over `n_chars` with doc
@@ -423,7 +429,7 @@ object TextAnalysis {
     val width = 50
     documents
       .select((floor($"n_chars" / width) * width).cast("bigint").as("bin"),
-        size(split($"text", " ")).cast("bigint").as("nw"))
+        size(tokens($"text")).cast("bigint").as("nw"))
       .groupBy($"bin")
       .agg(count(lit(1)).as("n_docs"), sum($"nw").as("total_words"))
       .orderBy($"bin")
@@ -497,7 +503,7 @@ object TextAnalysis {
   private def trainBpeMerges(documents: DataFrame,
       nMerges: Int): Seq[(Int, String, String, Long)] = {
     var seqs = documents
-      .select(explode(split($"text", " ")).as("w"))
+      .select(explode(tokens($"text")).as("w"))
       .filter(length($"w") > 0)
       .groupBy($"w").agg(count(lit(1)).as("freq"))
       .select($"freq", concat(regexp_replace($"w", "(.)", "$1 "), lit("</w>")).as("seq"))
@@ -507,7 +513,7 @@ object TextAnalysis {
     while (merges.size < nMerges && !exhausted) {
       val remaining = nMerges - merges.size
       val counts = seqs
-        .select($"freq", split($"seq", " ").as("ss"))
+        .select($"freq", tokens($"seq").as("ss"))
         // fully-merged single-symbol words contribute no pairs — and MUST
         // be filtered before the transform: Spark's sequence(1, 0) is the
         // DESCENDING [1, 0], so element_at(ss, 2) on a 1-symbol word is an
@@ -520,7 +526,7 @@ object TextAnalysis {
         .localCheckpoint() // pair-table-sized; referenced 3x below
       // a pair's (distinct) symbols; the independence test keys on them
       val sym = counts.select($"p", $"c",
-        explode(array_distinct(split($"p", " "))).as("s"))
+        explode(array_distinct(tokens($"p"))).as("s"))
       // dominated = shares a symbol with ANY strictly higher-ranked pair
       val dominated = sym.as("x")
         .join(sym.as("y"), col("x.s") === col("y.s") &&
@@ -603,7 +609,7 @@ object TextAnalysis {
     */
   def lengthProfile(documents: DataFrame): DataFrame = {
     val lens = documents
-      .select($"source", size(split($"text", " ")).cast("double").as("nw"))
+      .select($"source", size(tokens($"text")).cast("double").as("nw"))
     // one histogram pass for the whole percentile panel (the per-p form
     // rescanned the corpus four times)
     val cuts = Scale.quantilePanel(lens, "source", "nw",
@@ -642,7 +648,7 @@ object TextAnalysis {
       .select($"pair", $"merged").collect()
       .map(r => (r.getString(0), r.getString(1)))
     val vocab = documents
-      .select($"lang", explode(split($"text", " ")).as("w"))
+      .select($"lang", explode(tokens($"text")).as("w"))
       .filter(length($"w") > 0)
       .groupBy($"lang", $"w").agg(count(lit(1)).as("freq"))
     // chars + </w>, space-separated, then one single-pass rewrite per merge
@@ -655,7 +661,7 @@ object TextAnalysis {
     }
     vocab
       .select($"lang", $"freq", length($"w").cast("long").as("chars"),
-        size(split(encoded, " ")).cast("long").as("toks"))
+        size(tokens(encoded)).cast("long").as("toks"))
       .groupBy($"lang")
       .agg(
         sum($"freq").as("n_words"),
@@ -693,7 +699,7 @@ object TextAnalysis {
     */
   def bigramSurprisal(documents: DataFrame): DataFrame = {
     val topk = 30
-    val toks = documents.select($"doc_id", split($"text", " ").as("ts"))
+    val toks = documents.select($"doc_id", tokens($"text").as("ts"))
     val bd = toks
       .filter(size($"ts") >= 2)
       .select($"doc_id", explode(expr(
@@ -743,7 +749,7 @@ object TextAnalysis {
   def textrankKeywords(documents: DataFrame): DataFrame = {
     val minCount = 5L
     val iters = 4
-    val toks = documents.select(split($"text", " ").as("ts"))
+    val toks = documents.select(tokens($"text").as("ts"))
     val cooc = toks.filter(size($"ts") >= 2)
       .select(explode(expr(
         "transform(sequence(1, size(ts) - 1), i -> struct(element_at(ts, i) AS w1, element_at(ts, i + 1) AS w2))")).as("bg"))
@@ -751,7 +757,7 @@ object TextAnalysis {
       .filter($"w1" =!= $"w2")
       .select(least($"w1", $"w2").as("a"), greatest($"w1", $"w2").as("b"))
       .groupBy($"a", $"b").agg(count(lit(1)).as("w"))
-    val keep = documents.select(explode(split($"text", " ")).as("tok"))
+    val keep = documents.select(explode(tokens($"text")).as("tok"))
       .groupBy($"tok").agg(count(lit(1)).as("c"))
       .filter($"c" >= minCount).select($"tok")
     val kept = cooc
@@ -807,7 +813,7 @@ object TextAnalysis {
     val words = phrase.split(" ")
     require(words.length >= 2, s"phraseSearch wants a multi-word phrase, got '$phrase'")
     val post = documents
-      .select($"doc_id", posexplode(split($"text", " ")).as(Seq("pos", "tok")))
+      .select($"doc_id", posexplode(tokens($"text")).as(Seq("pos", "tok")))
     var anchors = post.filter($"tok" === words(0)).select($"doc_id", $"pos")
     for (i <- 1 until words.length)
       anchors = anchors.join(
@@ -843,7 +849,7 @@ object TextAnalysis {
   def heldOutPerplexity(documents: DataFrame): DataFrame = {
     val coin = Scale.md5SlicePos($"doc_id", 0, 2)
     val toks = documents
-      .select($"doc_id", $"lang", (coin === 0L).as("is_train"), split($"text", " ").as("ts"))
+      .select($"doc_id", $"lang", (coin === 0L).as("is_train"), tokens($"text").as("ts"))
     val bd = toks
       .filter(size($"ts") >= 2)
       .select($"doc_id", $"lang", $"is_train", explode(expr(
@@ -907,7 +913,7 @@ object TextAnalysis {
     * Lloyd/BPE bounded-collect pattern); both passes are corpus-linear.
     */
   def heavyHitters(documents: DataFrame, k: Int = 49): DataFrame = {
-    val toks = documents.select(explode(split($"text", " ")).as("token"))
+    val toks = documents.select(explode(tokens($"text")).as("token"))
     val mgAgg = udaf(new graft.functions.Aggregators.MisraGries(k))
     val row = toks.agg(mgAgg($"token").as("mg"))
       .select($"mg.n", $"mg.toks").head()
@@ -935,7 +941,7 @@ object TextAnalysis {
     // grouped pass 1 collects NULL as its own group (SQL GROUP BY
     // semantics), and a plain equi-join would then silently drop every
     // one of its heavy hitters. <=> keys still plan as hash equi-joins.
-    val toks = documents.select($"source", explode(split($"text", " ")).as("token"))
+    val toks = documents.select($"source", explode(tokens($"text")).as("token"))
     val mgAgg = udaf(new graft.functions.Aggregators.MisraGries(k))
     val sums = toks.groupBy($"source").agg(mgAgg($"token").as("mg"))
       .select($"source", $"mg.n".as("n_total"), $"mg.toks".as("cand"))
@@ -1006,7 +1012,7 @@ object TextAnalysis {
     val buckets = 10
     import org.apache.spark.sql.expressions.Window
     val n = documents.agg((max($"doc_id") + 1).as("n"))
-    val toks = documents.select($"doc_id", explode(split($"text", " ")).as("token"))
+    val toks = documents.select($"doc_id", explode(tokens($"text")).as("token"))
     def decile(id: String): Column =
       least(lit(buckets - 1L), expr(s"$id * $buckets div n"))
     val newTypes = toks.groupBy($"token").agg(min($"doc_id").as("fd"))
@@ -1053,7 +1059,7 @@ object TextAnalysis {
   def lexicalJsDivergence(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val st = documents
-      .select($"source", explode(split($"text", " ")).as("token"))
+      .select($"source", explode(tokens($"text")).as("token"))
       .groupBy($"source", $"token").agg(count(lit(1)).as("c"))
     val tk = st.groupBy($"token").agg(sum($"c").as("ct"))
     val tot = tk.agg(sum($"ct").as("n"))
@@ -1108,7 +1114,7 @@ object TextAnalysis {
     val coin = Scale.md5SlicePos($"doc_id", 0, 2)
     val toks = documents
       .select($"doc_id", $"lang", (coin === 0L).as("is_train"),
-        split($"text", " ").as("ts"))
+        tokens($"text").as("ts"))
     val bd = toks
       .filter(size($"ts") >= 2)
       .select($"doc_id", $"lang", $"is_train", explode(expr(
@@ -1172,7 +1178,7 @@ object TextAnalysis {
     */
   def unseenMass(documents: DataFrame): DataFrame = {
     val tokCounts = documents
-      .select($"source", explode(split($"text", " ")).as("token"))
+      .select($"source", explode(tokens($"text")).as("token"))
       .groupBy($"source", $"token").agg(count(lit(1)).as("c"))
     tokCounts.groupBy($"source").agg(
         sum($"c").as("n_tokens"),
@@ -1202,19 +1208,17 @@ object TextAnalysis {
     * longs. Output = the `topN` most bursty tokens with df ≥ `minDf`
     * (rare tokens' dispersion is noise), ordered by (rounded
     * dispersion desc, token) — a total order both engines sort. Shape:
-    * one explode → (token, doc) counts (corpus-proportional, map-side
-    * combined), then a vocabulary-bounded frame.
+    * the `termFrequencies` index without its empty token, then a
+    * vocabulary-bounded frame.
     */
   def tokenBurstiness(documents: DataFrame, minDf: Long = 50L): DataFrame = {
     val topN = 25
     val n = documents.agg(count(lit(1)).as("n"))
-    val perDoc = documents
-      .select($"doc_id", explode(split($"text", " ")).as("token"))
-      .filter(length($"token") > 0)
-      .groupBy($"token", $"doc_id").agg(count(lit(1)).as("c"))
-    val byTok = perDoc.groupBy($"token").agg(
-      count(lit(1)).as("df"), sum($"c").as("s1"),
-      sum($"c" * $"c").as("s2"))
+    val byTok = termFrequencies(documents)
+      .filter(length($"term") > 0)
+      .groupBy($"term".as("token")).agg(
+        count(lit(1)).as("df"), sum($"tf").as("s1"),
+        sum($"tf" * $"tf").as("s2"))
     val disp = ($"s2".cast("double") -
       $"s1".cast("double") * $"s1".cast("double") / $"n") / $"s1"
     byTok.filter($"df" >= minDf).crossJoin(broadcast(n))

@@ -1059,7 +1059,7 @@ private[graft] object EventsQueries extends QueryFamily {
         |  SELECT p.user_id,
         |    CAST(min(epoch_ns(p.ts) - epoch_ns(s.s_ts)) // 1000000000 AS DOUBLE) AS lat_s
         |  FROM events p JOIN s USING (user_id)
-        |  WHERE p.event_type = 'purchase' AND p.ts >= s.s_ts
+        |  WHERE p.event_type = 'purchase' AND p.ts > s.s_ts
         |  GROUP BY p.user_id
         |),
         |n1 AS (SELECT count(*) AS n_signup_users FROM s),

@@ -672,7 +672,7 @@ class MatchingSpec extends GraftSuite {
 
   test("prfExpandedRetrieval equals composing the library's own stages; expansion widens terms") {
     import graft.operators.TextAnalysis
-    val seed = Seq("table", "data", "row")
+    val seed = TextAnalysis.Bm25SeedQuery
     val fbIds = TextAnalysis.bm25TopDocs(docs, topk = 3).collect().map(_.getLong(0)).toSet
     val fbTerms = TextAnalysis.tfidfTopTerms(docs, k = 2).collect()
       .filter(r => fbIds.contains(r.getLong(0))).map(_.getString(1)).toSet
@@ -1244,7 +1244,7 @@ class MatchingSpec extends GraftSuite {
     val firstSignup = rows.filter(_._3 == "signup").groupBy(_._1)
       .view.mapValues(_.map(_._2).min).toMap
     val lats = rows.filter(_._3 == "purchase").flatMap { case (u, ts, _) =>
-      firstSignup.get(u).filter(ts >= _).map(s => (u, ts - s))
+      firstSignup.get(u).filter(ts > _).map(s => (u, ts - s))
     }.groupBy(_._1).values.map(g => (g.map(_._2).min / 1000000000L).toDouble).toSeq
     val expected = (
       firstSignup.size.toLong, lats.size.toLong,
@@ -1262,6 +1262,26 @@ class MatchingSpec extends GraftSuite {
       ev.filter(col("event_type") =!= "purchase")).collect()
     assert(noPurchase.length === 1)
     assert(noPurchase(0).getLong(1) === 0L && noPurchase(0).isNullAt(3))
+  }
+
+  test("a purchase at the signup instant converts in neither q222 nor q235") {
+    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
+    val NsDay = 86400L * 1000000000L
+    // user 1 purchases only at its signup instant; user 3 also purchases
+    // there, so its first later purchase is the one two days on
+    val ev = Seq(
+      (1L, "signup", 0L), (1L, "purchase", 0L),
+      (2L, "signup", 0L), (2L, "purchase", 1L * NsDay),
+      (3L, "signup", 0L), (3L, "purchase", 0L), (3L, "purchase", 2L * NsDay),
+      (9L, "click", 10L * NsDay)
+    ).map { case (u, t, ts) => (u, 0L, t, ts, 0.0) }
+      .toDF("user_id", "event_id", "event_type", "ts", "value")
+    val lat = Events.conversionLatency(ev).collect().head
+    val kmConverted = Events.survivalCurve(ev).agg(sum(col("n_converted"))).head.getLong(0)
+    assert((lat.getLong(0), lat.getLong(1)) === (3L, 2L))
+    assert(lat.getLong(1) === kmConverted)
+    // latencies of 1 and 2 days: p25 and p90 interpolate between them
+    assert(lat.getDouble(3) === 108000.0 && lat.getDouble(6) === 164160.0)
   }
 
   test("rateOutliers equals brute force over per-user median gaps") {

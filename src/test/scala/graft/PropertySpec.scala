@@ -114,6 +114,11 @@ class PropertySpec extends GraftSuite {
     } yield toks.mkString(" ")
     samples(Gen.listOfN(20, textGen), 5).foreach { texts =>
       val df = texts.toDF("text")
+      // the one tokenizer every lexical operator and oracle shares keeps
+      // empty tokens, as `String.split(" ", -1)` does
+      val toks = df.select(graft.operators.TextAnalysis.tokens($"text"))
+        .collect().map(_.getSeq[String](0).toSeq).toSeq
+      assert(toks === texts.map(_.split(" ", -1).toSeq))
       for (ng <- Seq(2, 3)) {
         val got = df.select(TextFunctions.word_grams($"text", ng).as("g"))
           .collect().map(_.getSeq[String](0).toSeq).toSeq

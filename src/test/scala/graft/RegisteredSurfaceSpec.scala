@@ -31,7 +31,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-user time to conversion only in `Events.timeToConversion`, the
   * median order-statistic ranks only in `Events.medianOrderStats`, the
   * classifier's weight join only in `Curation.margins` and its micro-unit
-  * sigmoid only in `Curation.microSigmoid`.
+  * sigmoid only in `Curation.microSigmoid`, and the bag-of-words index
+  * only in `TextAnalysis`: the space tokenizer in `tokens`, the
+  * per-(document, token) count in `termFrequencies`, the ln(N/df) weight
+  * in `tfidfWeights` and the BM25 seed query in `Bm25SeedQuery`.
   */
 class RegisteredSurfaceSpec extends AnyFunSuite {
 
@@ -108,8 +111,8 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
       s"and from testOnly: $unused")
   }
 
-  // a member of a top-level object: its `def` line is indented two spaces
-  private val Member = """(?m)^  (?:[\w\[\]]+[ \t]+)*def\s+([A-Za-z_]\w*)""".r
+  // a member of a top-level object: its `def` or `val` line is indented two spaces
+  private val Member = """(?m)^  (?:[\w\[\]]+[ \t]+)*(?:def|val)\s+([A-Za-z_]\w*)""".r
 
   /** Where `needle` matches in `files` outside the members `homes` (a local
     * `def` inside a member counts as that member).
@@ -223,6 +226,22 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
         Set("rankTopK")) ++
         strays(files, """"rnk"\s*\)?\s*\.cast\(\s*"int"\s*\)""".r, Set("servedTopK"))
     if (offenders.nonEmpty) fail("rank through Similarity.rankTopK / servedTopK instead:\n" +
+      offenders.mkString("\n"))
+  }
+
+  test("drift guard: one bag-of-words index in TextAnalysis") {
+    // a space split, a per-(document, token) count, a tf-idf weight or the
+    // BM25 seed terms anywhere else is a hand-copied index; the needles
+    // read string literals, so comments alone are stripped
+    val files = sources("src/main/scala", keepLiterals = true)
+    val offenders =
+      strays(files, """(?<![\w.])split\([^\n]*?,\s*" "\s*\)""".r, Set("tokens")) ++
+        strays(files, ("""groupBy\(\s*\$"(?:doc_id"\s*,\s*\$"(?:term|tok|token|w)|""" +
+          """(?:term|tok|token|w)"\s*,\s*\$"doc_id)"\s*\)""").r, Set("termFrequencies")) ++
+        strays(files, """log\(\s*(?:\$"n_docs"|col\("n_docs"\))\s*/""".r,
+          Set("tfidfWeights")) ++
+        strays(files, """"table"\s*,\s*"data"\s*,\s*"row"""".r, Set("Bm25SeedQuery"))
+    if (offenders.nonEmpty) fail("read the bag-of-words index in TextAnalysis instead:\n" +
       offenders.mkString("\n"))
   }
 
