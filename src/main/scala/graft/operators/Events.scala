@@ -97,6 +97,104 @@ object Events {
       .select(userArm, coalesce($"x", lit(0L)).as("x"), coalesce($"y", lit(0L)).as("y"))
   }
 
+  // ---- count-series kernel -----------------------------------------------------
+
+  /** Rows per `width`-ns bucket of `ts` and per `keys`, as (keys…, d, c)
+    * with d = ts div width, beside the `more` per-bucket aggregates. It is
+    * the one corpus-proportional pass of every count series here (map-side
+    * combined); all later work is bucket-sized. A bucket no row reached is
+    * absent: q252, q255, q259, q261, q275 and q276 run on the observed
+    * buckets, the rest on [[zeroFilled]].
+    */
+  private def bucketCounts(events: DataFrame, width: Long, keys: Seq[Column],
+      more: Column*): DataFrame =
+    events.groupBy(keys :+ expr(s"ts div $width").as("d"): _*)
+      .agg(count(lit(1)).as("c"), more: _*)
+
+  private def dailyCounts(events: DataFrame): DataFrame = bucketCounts(events, NsPerDay, Nil)
+
+  /** The per-day value moments (d, n_events, s1) on the micro-unit grid,
+    * with the daily level xm = (10⁴·s1) div n_events: floor division of
+    * exact long sums, so every level is an engine-exact integer.
+    */
+  private def dailyMoments(events: DataFrame): DataFrame =
+    bucketCounts(events, NsPerDay, Nil, sum(valueMicro).as("s1"))
+      .select($"d", $"c".as("n_events"), $"s1", expr("(10000 * s1) div c").as("xm"))
+
+  /** The series on its complete calendar [min d, max d]: a bucket no row
+    * reached reads 0 in each of `cols`, a real zero of the load curve and
+    * not a gap to skip.
+    */
+  private def zeroFilled(counts: DataFrame, cols: String*): DataFrame =
+    counts.agg(min($"d").as("d0"), max($"d").as("d1"))
+      .select(explode(sequence($"d0", $"d1")).as("d"))
+      .join(counts, Seq("d"), "left_outer")
+      .select($"d" +: cols.map(c => coalesce(col(c), lit(0L)).as(c)): _*)
+
+  /** The series centred in integers, y_c = n·c − Σc for each of `cols`
+    * (the mean scaled by n, so no float mean enters), beside n, each Σc
+    * as s_c and the first bucket d0.
+    */
+  private def centred(series: DataFrame, cols: String*): DataFrame = {
+    val stats = series.agg(count(lit(1)).as("n"),
+      cols.map(c => sum(col(c)).as(s"s_$c")) :+ min($"d").as("d0"): _*)
+    series.crossJoin(broadcast(stats)).select(Seq($"d", $"n", $"d0") ++
+      cols.map(c => col(s"s_$c")) ++
+      cols.map(c => ($"n" * col(c) - col(s"s_$c")).as(s"y_$c")): _*)
+  }
+
+  /** Σ a(t)·b(t+lag) for each lag in [lo, hi] over a (d, a, b) frame, as
+    * (lag, num, n_pairs): every product an ANSI-checked long, summed exact
+    * in DECIMAL(38,0), over the pairs whose both buckets are in the frame.
+    * The lag join is on bucket arithmetic, so a missing bucket never pairs
+    * with a shifted neighbour. A lag with no pair has no row.
+    */
+  private def lagProducts(y: DataFrame, a: String, b: String, lo: Long, hi: Long): DataFrame =
+    y.crossJoin(broadcast(y.sparkSession.range(lo, hi + 1).toDF("lag")))
+      .select(($"d" + $"lag").as("d"), $"lag", col(a).as("ya"))
+      .join(y.select($"d", col(b).as("yb")), Seq("d"))
+      .groupBy($"lag")
+      .agg(sum(dec($"ya" * $"yb")).as("num"), count(lit(1)).as("n_pairs"))
+
+  /** The single-changepoint scan of each `keys` series of (keys…, d, c)
+    * counts, by the standardized CUSUM supremum: for each split k,
+    * C_k = |T·S_k − k·S_T| / (σ̂·√(k(T−k)T)). The numerator is an exact
+    * long on the prefix sums, σ̂ the population sd of exact integer
+    * moments, and a constant series (σ̂ = 0, numerator 0) scores 0 by
+    * convention, never a 0/0 NaN. Under H₀ sup_k C_k tends to the
+    * supremum of a Brownian bridge, whose tail is the Kolmogorov
+    * distribution. One row per series, the split maximizing C_k rounded
+    * to 6 with the earlier day as tiebreak, so the pick is engine-stable.
+    */
+  private def changepointBest(daily: DataFrame, keys: Column*): DataFrame = {
+    val byKey = Window.partitionBy(keys: _*).orderBy($"d")
+    val w = byKey.rowsBetween(Window.unboundedPreceding, 0)
+    val wAll = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val sigma = sqrt(($"sst".cast("double")
+      - $"st".cast("double") * $"st" / $"t") / $"t")
+    val num = abs($"t" * $"sk" - $"k" * $"st")
+    val ck = num.cast("double") /
+      (sqrt(($"k" * ($"t" - $"k") * $"t").cast("double")) * sigma)
+    val statG = when(sigma > 0.0, ck).otherwise(lit(0.0))
+    daily
+      .withColumn("k", count(lit(1)).over(w))
+      .withColumn("sk", sum($"c").over(w))
+      .withColumn("t", count(lit(1)).over(wAll))
+      .withColumn("st", sum($"c").over(wAll))
+      .withColumn("sst", sum(dec($"c" * $"c")).over(wAll))
+      .filter($"k" < $"t")
+      .withColumn("stat_raw", statG)
+      .withColumn("stat", round(statG, 6))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(keys: _*).orderBy($"stat".desc, $"d")))
+      .filter($"rn" === 1)
+      .select(keys ++ Seq($"d".as("split_day"), $"k".as("n_before"),
+        ($"t" - $"k").as("n_after"), round($"stat_raw", 4).as("cusum_stat"),
+        round($"sk".cast("double") / $"k", 4).as("mean_before"),
+        round(($"st" - $"sk").cast("double") / ($"t" - $"k"), 4).as("mean_after"),
+        round(Inference.kolmogorovTail($"stat_raw"), 6).as("p_value")): _*)
+  }
+
   /** Tumbling-window aggregation: events per (hour, event_type); one
     * shuffle on the composite key.
     */
@@ -368,13 +466,13 @@ object Events {
   def madOutliers(events: DataFrame): DataFrame = {
     val k = 3.0
     val vals = events.select($"event_type", round($"value", 2).as("v"))
-      .localCheckpoint() // feeds the median pass and the deviation pass
+      .localCheckpoint() // ROADMAP item 4 (c): the median pass and the deviation pass read it
     val med = Scale.exactQuantileByGroup(vals, "event_type", "v", 0.5)
       .select($"event_type", round($"cut", 4).as("med"))
     val dev = vals
       .join(broadcast(med), Seq("event_type"))
       .select($"event_type", $"v", $"med", round(abs($"v" - $"med"), 4).as("d"))
-      .localCheckpoint() // feeds the MAD pass and the outlier filter
+      .localCheckpoint() // ROADMAP item 4 (c): the MAD pass and the outlier filter read it
     val mad = Scale.exactQuantileByGroup(
         dev.select($"event_type", $"d".as("v")), "event_type", "v", 0.5)
       .select($"event_type", round($"cut", 4).as("mad"))
@@ -443,7 +541,7 @@ object Events {
     val du = events
       .select(expr(s"ts div $NsPerDay").as("day"), $"user_id")
       .distinct()
-      .localCheckpoint() // feeds sketch, day-list, and truth branches
+      .localCheckpoint() // ROADMAP item 4 (c): the sketch, day-list and truth branches read it
     val days = du.select($"day").distinct()
     val dailySketch = Scale.topKPerGroup(
       du.select($"day", md5($"user_id".cast("string")).as("h")),
@@ -683,53 +781,36 @@ object Events {
       .orderBy($"event_type", $"next_type")
   }
 
-  /** Autocorrelation of the hourly event-count series at lags 1..`maxLag`
+  /** Autocorrelation of the hourly event-count series at lags 1..24
     * (q191) — the seasonality diagnostic behind every drift monitor: a
     * daily-cycled workload shows a peak at lag 24, a flat ACF says the
     * q80/q127 baselines can ignore time-of-day. Missing hours count as 0
     * (the series is COMPLETE over [min hour, max hour] — an absent hour
     * is a real zero of the load curve, not a gap to skip).
     *
-    * Determinism: with y_t = n·x_t − Σx (integer), ACF(k) =
-    * Σ y_t·y_{t+k} / Σ y_t² — the n²-scaled centered products, exact
-    * integer sums on both engines, one rounded division at the boundary.
-    * (Long bound: |y| ≤ n·max(x), so the den terms stay exact while
-    * hours·(n·max_rate)² < 2⁶³ — ~3 years at 10⁸ events/hour; beyond
-    * that, pre-aggregate to coarser buckets.)
+    * Determinism: on the count-series kernel's integer-centred hours y,
+    * ACF(k) = Σ y_t·y_{t+k} / Σ y_t² — n²-scaled centred products, exact
+    * DECIMAL sums on both engines, one rounded division at the boundary.
+    * (A product of two y stays an exact long while n·max(x) < 3·10⁹ —
+    * ~3 years of hours at 10⁵ events/hour; beyond that, pre-aggregate to
+    * coarser buckets.)
     *
     * Scale shape: the per-hour count is the ONLY corpus-proportional
-    * pass (map-side combined); everything downstream operates on the
-    * hours-count-sized series (26k rows for 3 years), so the lag
-    * expansion (×maxLag), the self-join on shifted hour, and the final
-    * 1-row-per-lag aggregate are all aggregate-scale at any event
-    * volume.
+    * pass; everything downstream (the ×24 lag join and the 1-row-
+    * per-lag aggregate) runs on the hours-count-sized series, 26k rows
+    * for 3 years, at any event volume.
     */
   def hourlyAutocorrelation(events: DataFrame): DataFrame = {
-    val maxLag = 24
-    val spark = events.sparkSession
-    val hourly = events
-      .groupBy(expr(s"ts div $NsPerHour").as("h"))
-      .agg(count(lit(1)).as("x"))
-    val series = hourly.agg(min($"h").as("h0"), max($"h").as("h1"))
-      .select(explode(expr("sequence(h0, h1)")).as("h"))
-      .join(hourly, Seq("h"), "left_outer")
-      .select($"h", coalesce($"x", lit(0L)).as("x"))
-    val stats = series.agg(count(lit(1)).as("n"), sum($"x").as("s"))
-    val y = series.crossJoin(broadcast(stats))
-      .select($"h", ($"n" * $"x" - $"s").as("y"))
-    val den = y.agg(sum($"y" * $"y").as("den"))
-    val lags = spark.range(1, maxLag + 1).toDF("lag")
-    y.crossJoin(broadcast(lags))
-      .select(($"h" + $"lag").as("h"), $"lag", $"y".as("yp"))
-      .join(y, Seq("h"))
-      .groupBy($"lag")
-      .agg(sum($"yp" * $"y").as("num"), count(lit(1)).as("n_pairs"))
+    val y = centred(zeroFilled(bucketCounts(events, NsPerHour, Nil), "c"), "c")
+    val den = y.agg(sum(dec($"y_c" * $"y_c")).as("den"))
+    lagProducts(y, "y_c", "y_c", 1, 24)
       .crossJoin(broadcast(den))
       .select($"lag".cast("int").as("lag"), $"n_pairs",
         // a perfectly constant series has zero centered energy: ACF is
         // undefined there — null, not an ANSI divide-by-zero crash in
         // the nightly monitor (the abValueTest cold-start discipline)
-        when($"den" > 0L, round($"num".cast("double") / $"den", 6)).as("acf"))
+        when($"den" > 0L, round($"num".cast("double") / $"den".cast("double"), 6))
+          .as("acf"))
       .orderBy($"lag")
   }
 
@@ -742,43 +823,28 @@ object Events {
     * Var(x̄) = (γ̂₀ + 2Σ_{l≤L}(1−l/(L+1))·γ̂_l)/T is PSD by the Bartlett
     * weights, and the se ratio is the honesty factor to apply.
     *
-    * Exact arithmetic end-to-end: centering via y_t = T·x_t − S (the
-    * q191 trick — integer, no float mean), lag products Σy_t·y_{t+l}
-    * as exact longs, and the Bartlett weights cleared of fractions by
-    * multiplying through by (L+1):
+    * Exact arithmetic end-to-end on the count-series kernel's zero-filled,
+    * integer-centred days y_t = T·x_t − S: its lag products Σy_t·y_{t+l}
+    * are exact DECIMAL sums, and the Bartlett weights are cleared of
+    * fractions by multiplying through by (L+1):
     * intNum = (L+1)·num₀ + 2·Σ(L+1−l)·num_l, so
-    * Var_NW(x̄) = intNum/((L+1)·T⁴) with ONE double division chain.
-    * The lag joins run on the calendar-bounded zero-filled day frame
-    * (the q191 shape, days instead of hours).
+    * Var_NW(x̄) = intNum/((L+1)·T⁴) with ONE double division chain. One
+    * day has no sample variance: se_naive and se_ratio are null there.
     */
   def neweyWestSe(events: DataFrame): DataFrame = {
     val maxLag = 7
-    val spark = events.sparkSession
-    val daily = events
-      .groupBy(expr(s"ts div $NsPerDay").as("d"))
-      .agg(count(lit(1)).as("x"))
-    val series = daily.agg(min($"d").as("d0"), max($"d").as("d1"))
-      .select(explode(expr("sequence(d0, d1)")).as("d"))
-      .join(daily, Seq("d"), "left_outer")
-      .select($"d", coalesce($"x", lit(0L)).as("x"))
-      .localCheckpoint() // feeds the stats pass and both lag-join sides
-    val stats = series.agg(count(lit(1)).as("n"), sum($"x").as("s"))
-    val y = series.crossJoin(broadcast(stats))
-      .select($"d", $"n", $"s", ($"n" * $"x" - $"s").as("y"))
-    val num0 = y.agg(max($"n").as("n"), max($"s").as("s"),
-      sum(($"y" * $"y").cast("decimal(38,0)")).as("num0"))
-    val lags = spark.range(1, maxLag + 1).toDF("lag")
-    val numL = y.crossJoin(broadcast(lags))
-      .select(($"d" + $"lag").as("d"), $"lag", $"y".as("yp"))
-      .join(y.select($"d", $"y"), Seq("d"))
-      .groupBy($"lag")
-      .agg(sum(($"yp" * $"y").cast("decimal(38,0)")).as("numl"))
-      .agg(sum((lit(2L * (maxLag + 1)) * $"numl"
-        - lit(2L) * $"lag" * $"numl").cast("decimal(38,0)")).as("wsum"))
+    val series = zeroFilled(dailyCounts(events), "c")
+      .localCheckpoint() // ROADMAP item 4 (c): the stats pass and both lag-join sides read it
+    val y = centred(series, "c")
+    val num0 = y.agg(max($"n").as("n"), max($"s_c").as("s"),
+      sum(dec($"y_c" * $"y_c")).as("num0"))
+    val numL = lagProducts(y, "y_c", "y_c", 1, maxLag)
+      .agg(sum(dec(lit(2L * (maxLag + 1)) * $"num" - lit(2L) * $"lag" * $"num"))
+        .as("wsum"))
     val joined = num0.crossJoin(broadcast(numL))
     val td = $"n".cast("double")
     val l1 = lit((maxLag + 1).toDouble)
-    val varNaive = $"num0".cast("double") / (td * td * ($"n" - 1L)) / td
+    val varNaive = when($"n" > 1L, $"num0".cast("double") / (td * td * ($"n" - 1L)) / td)
     val varNw = greatest(
       (lit((maxLag + 1).toDouble) * $"num0".cast("double")
         + $"wsum".cast("double")) / (l1 * td * td * td * td), lit(0.0))
@@ -1596,7 +1662,7 @@ object Events {
         sum($"new_session").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select($"user_id", $"session_seq", $"event_type")
       .distinct()
-      .localCheckpoint() // reused: totals, per-type counts, pair join
+      .localCheckpoint() // ROADMAP item 4 (c): the totals, per-type counts and pair join read it
     val nSessions = basket.select($"user_id", $"session_seq").distinct().count()
     val perType = basket.groupBy($"event_type").agg(count(lit(1)).as("n_t"))
     val pairs = basket.select($"user_id", $"session_seq", $"event_type".as("type_a"))
@@ -1622,7 +1688,7 @@ object Events {
     * immune to outlier days). The monitoring trio q191/q193/q201 is
     * what a metrics pipeline runs nightly.
     *
-    * Determinism: daily levels are the q193 integer micro-units; S and
+    * Determinism: daily levels are [[dailyMoments]]' integer levels; S and
     * the tie adjustment are pure integer arithmetic over ordered day
     * pairs; each pairwise slope quantizes by an exact double floor
     * (values ≪ 2⁵³) and the median rides `Scale.exactQuantileByGroup`
@@ -1635,12 +1701,8 @@ object Events {
     * distinct-slope histogram, not a global sort.
     */
   def trendTest(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr(s"ts div $NsPerDay").as("d"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(valueMicro).as("s1"))
-      .select($"d", expr("(10000 * s1) div n_events").as("xm"))
-      .localCheckpoint() // reused by pairs, ties, and the count
+    val daily = dailyMoments(events).select($"d", $"xm")
+      .localCheckpoint() // ROADMAP item 4 (c): the pairs, ties and count passes read it
     val pairs = daily.select($"d".as("di"), $"xm".as("xi"))
       .join(daily.select($"d".as("dj"), $"xm".as("xj")), $"di" < $"dj")
       .select(
@@ -1691,25 +1753,22 @@ object Events {
     * any event volume, so the un-partitioned window here is a window
     * over a dimension frame, not a scale hazard).
     *
-    * Integer discipline: daily level xm = (10⁴·Σv) div n and reference
-    * k = (10⁴·Σv) div n over the whole window — floor division on exact
-    * long sums, so deviations, prefix sums, mins, and both CUSUM tracks
-    * are engine-exact integers; `h` is the alarm threshold in the same
-    * micro-units.
+    * Integer discipline: daily level xm from [[dailyMoments]] and
+    * reference k = (10⁴·Σv) div n over the whole window — floor division
+    * on exact long sums, so deviations, prefix sums, mins, and both
+    * CUSUM tracks are engine-exact integers; `h` is the alarm threshold
+    * in the same micro-units.
     */
   def cusumDriftDays(events: DataFrame): DataFrame = {
     val h = 50000L
-    val moments = events
-      .groupBy((expr(s"ts div $NsPerDay") * 86400).as("day_epoch"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(valueMicro).as("s1"))
+    val moments = dailyMoments(events)
     // reference level k from the RAW exact moments (not from xm, whose
     // per-day floor already lost sub-unit mass)
     val kRef = moments.agg(expr("(10000 * sum(s1)) div sum(n_events)").as("k"))
     val w = Window.orderBy($"day_epoch")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     moments
-      .select($"day_epoch", $"n_events", expr("(10000 * s1) div n_events").as("xm"))
+      .select(($"d" * 86400).as("day_epoch"), $"n_events", $"xm")
       .crossJoin(broadcast(kRef))
       .withColumn("dev", $"xm" - $"k")
       .withColumn("p", sum($"dev").over(w))
@@ -1800,7 +1859,7 @@ object Events {
             .filter($"ts" > $"f" && $"ts" - $"f" <= horizonNs)
             .groupBy($"user_id").agg(min($"ts").as("f"))
         }
-        Some(reached.localCheckpoint()) // feeds the count and the next step
+        Some(reached.localCheckpoint()) // ROADMAP item 4 (b): cuts the step loop's plan growth
     }.flatten
     val counts = frames.zip(steps).zipWithIndex.map { case ((df, t), i) =>
       df.agg(count(lit(1)).as("n_users"))
@@ -1867,7 +1926,7 @@ object Events {
     val (signups, converted) = conversions(events)
     val conv = converted
       .select(expr(s"lat_ns div $NsPerSecond").cast("double").as("lat_s"))
-      .localCheckpoint() // feeds the count and the histogram pass
+      .localCheckpoint() // ROADMAP item 4 (c): the count and the histogram pass read it
     val panel = Scale.quantilePanel(conv.select(lit("all").as("g"), $"lat_s".as("v")),
         "g", "v", Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75", 0.9 -> "p90"))
       .drop("g")
@@ -1962,7 +2021,7 @@ object Events {
   def winsorizedValueStats(events: DataFrame): DataFrame = {
     val vals = events
       .select($"event_type", round($"value" * 100, 0).cast("long").as("c"))
-      .localCheckpoint() // feeds the cut pass and the clamp pass
+      .localCheckpoint() // ROADMAP item 4 (c): the cut pass and the clamp pass read it
     val cuts = Scale.quantilePanel(
         vals.select($"event_type", $"c".cast("double").as("v")),
         "event_type", "v", Seq(0.05 -> "plo", 0.95 -> "phi"))
@@ -2013,7 +2072,7 @@ object Events {
         expr("percentile(gap, 0.5D)").as("med"),
         (max($"sec") - min($"sec")).as("span_s"))
       .filter($"n_events" >= 8L)
-      .localCheckpoint() // feeds the population-cut pass and the flag pass
+      .localCheckpoint() // ROADMAP item 4 (c): the population-cut and flag passes read it
     val cut = Scale.exactQuantileByGroup(
         users.select(lit("all").as("g"), $"med".as("v")), "g", "v", pCut)
       .select($"cut".as("_cut"))
@@ -2082,10 +2141,8 @@ object Events {
     * is day-frame-sized.
     */
   def seasonalNaiveEval(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr(s"ts div $NsPerDay").as("d"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // both sides of the lag join + the frontier
+    val daily = dailyCounts(events)
+      .localCheckpoint() // ROADMAP item 4 (c): both lag-join sides and the frontier read it
     val lagged = daily.select($"d", $"c")
       .join(daily.select(($"d" + 7L).as("d"), $"c".as("f")), Seq("d"))
     val mx = daily.agg(max($"d").as("mx"))
@@ -2136,10 +2193,7 @@ object Events {
     * in pow/sqrt must not flip a verdict).
     */
   def ewmaControl(events: DataFrame): DataFrame =
-    ewmaFromDailyCounts(
-      events.groupBy(expr(s"ts div $NsPerDay").as("d"))
-        .agg(count(lit(1)).as("c")),
-      0.2, 3.0)
+    ewmaFromDailyCounts(dailyCounts(events), 0.2, 3.0)
 
   /** The EWMA finisher over a (d, c) daily count frame — split from
     * [[ewmaControl]] so a spec can drive the chart with a planted
@@ -2181,59 +2235,14 @@ object Events {
 
   /** Single changepoint detection in the daily count series via the
     * standardized CUSUM supremum (binary-segmentation statistic; the
-    * at-most-one-change model): for each split k,
-    * C_k = |S_k − k·S_T/T| / (σ̂·√(k(T−k)/T)), and under H₀ (no change)
-    * sup_k C_k converges to the supremum of a Brownian bridge — whose
-    * tail IS the Kolmogorov distribution, so the p-value reuses q253's
-    * [[Inference.kolmogorovTail]] chain. The RETROSPECTIVE complement to
-    * q193's sequential CUSUM monitor: q193 answers "has it drifted as of
-    * now", this answers "when did it change" over a closed window.
-    *
-    * The numerator is EXACT integer arithmetic per split:
-    * |T·S_k − k·S_T| on long prefix sums over the calendar-bounded day
-    * frame (the q253 integer-supremum discipline — no float ECDF/CUSUM
-    * accumulation); σ̂ (population, from exact integer moments) and ONE
-    * division render each C_k, and the argmax orders by C_k ROUNDED to 6
-    * with the split day as tiebreak, so the selection is engine-stable.
+    * at-most-one-change model), scanned by [[changepointBest]] over the
+    * observed days; the p-value reuses q253's [[Inference.kolmogorovTail]]
+    * chain. The RETROSPECTIVE complement to q193's sequential CUSUM
+    * monitor: q193 answers "has it drifted as of now", this answers "when
+    * did it change" over a closed window.
     */
-  def changepointScan(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr(s"ts div $NsPerDay").as("d"))
-      .agg(count(lit(1)).as("c"))
-    val w = Window.orderBy($"d").rowsBetween(Window.unboundedPreceding, 0)
-    val wk = Window.orderBy($"d").rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val pre = daily
-      .withColumn("k", count(lit(1)).over(w))
-      .withColumn("sk", sum($"c").over(w))
-      .withColumn("t", count(lit(1)).over(wk))
-      .withColumn("st", sum($"c").over(wk))
-      .withColumn("sst",
-        sum(($"c" * $"c").cast("decimal(38,0)")).over(wk))
-    val sigma = sqrt(($"sst".cast("double")
-      - $"st".cast("double") * $"st" / $"t") / $"t")
-    val num = abs($"t" * $"sk" - $"k" * $"st")
-    val ck = num.cast("double") /
-      (sqrt(($"k" * ($"t" - $"k") * $"t").cast("double")) * sigma)
-    // a constant series has sigma = 0 and num = 0 — the statistic is 0
-    // by convention (p pins to 1), never a 0/0 NaN
-    val statG = when(sigma > 0.0, ck).otherwise(lit(0.0))
-    val scored = pre
-      .filter($"k" < $"t")
-      .withColumn("stat_raw", statG)
-      .withColumn("stat", round(statG, 6))
-      .withColumn("rn",
-        row_number().over(Window.orderBy($"stat".desc, $"d")))
-      .filter($"rn" === 1)
-    // means on each side of the split — exact integer sums, one division
-    scored.select(
-      $"d".as("split_day"), $"k".as("n_before"), ($"t" - $"k").as("n_after"),
-      round($"stat_raw", 4).as("cusum_stat"),
-      round($"sk".cast("double") / $"k", 4).as("mean_before"),
-      round(($"st" - $"sk").cast("double") / ($"t" - $"k"), 4)
-        .as("mean_after"),
-      round(Inference.kolmogorovTail($"stat_raw"), 6).as("p_value"))
-  }
+  def changepointScan(events: DataFrame): DataFrame =
+    changepointBest(dailyCounts(events))
 
   // ---- per-type changepoint panel with BH (q275) ------------------------------
 
@@ -2244,39 +2253,12 @@ object Events {
     * series changed, and when" is answered at a controlled false-
     * discovery rate — scanning m series and acting on the single best
     * raw p is the multiple-comparisons trap q246 exists for, now in
-    * the time domain. All q259 disciplines carry over per type: exact
-    * integer numerators |T·S_k − k·S_T|, argmax on the rounded stat
-    * with the day tiebreak, windows PARTITIONED BY TYPE over the
-    * calendar-bounded (type × day) frame.
+    * the time domain. Each type's scan is the one [[changepointBest]],
+    * keyed by type.
     */
   def changepointPanel(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy($"event_type", expr(s"ts div $NsPerDay").as("d"))
-      .agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy($"event_type").orderBy($"d")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wAll = Window.partitionBy($"event_type").rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val pre = daily
-      .withColumn("k", count(lit(1)).over(w))
-      .withColumn("sk", sum($"c").over(w))
-      .withColumn("t", count(lit(1)).over(wAll))
-      .withColumn("st", sum($"c").over(wAll))
-      .withColumn("sst", sum(($"c" * $"c").cast("decimal(38,0)")).over(wAll))
-    val sigma = sqrt(($"sst".cast("double")
-      - $"st".cast("double") * $"st" / $"t") / $"t")
-    val num = abs($"t" * $"sk" - $"k" * $"st")
-    val ck = num.cast("double") /
-      (sqrt(($"k" * ($"t" - $"k") * $"t").cast("double")) * sigma)
-    // the q259 zero-variance convention: a constant series scores 0
-    val statG = when(sigma > 0.0, ck).otherwise(lit(0.0))
-    val best = pre
-      .filter($"k" < $"t")
-      .withColumn("stat_raw", statG)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"event_type").orderBy(round(statG, 6).desc, $"d")))
-      .filter($"rn" === 1)
-      .withColumn("p_value", round(Inference.kolmogorovTail($"stat_raw"), 6))
+    val best = changepointBest(
+        bucketCounts(events, NsPerDay, Seq($"event_type")), $"event_type")
       .withColumn("m", count(lit(1)).over(Window.partitionBy()))
     val ranked = best.withColumn("p_rank",
       row_number().over(Window.partitionBy().orderBy($"p_value", $"event_type")))
@@ -2285,12 +2267,8 @@ object Events {
       .over(Window.partitionBy())
     ranked
       .withColumn("significant", $"p_rank" <= coalesce(kStar, lit(0L)))
-      .select($"event_type", $"d".as("split_day"), $"k".as("n_before"),
-        ($"t" - $"k").as("n_after"), round($"stat_raw", 4).as("cusum_stat"),
-        round($"sk".cast("double") / $"k", 4).as("mean_before"),
-        round(($"st" - $"sk").cast("double") / ($"t" - $"k"), 4)
-          .as("mean_after"),
-        $"p_value", $"p_rank", $"significant")
+      .select($"event_type", $"split_day", $"n_before", $"n_after", $"cusum_stat",
+        $"mean_before", $"mean_after", $"p_value", $"p_rank", $"significant")
       .orderBy($"event_type")
   }
 
@@ -2307,9 +2285,7 @@ object Events {
     * calendar-bounded day frame.
     */
   def weekdayEffect(events: DataFrame): DataFrame =
-    Inference.kruskalWallisOn(
-      events.groupBy(expr(s"ts div $NsPerDay").as("d"))
-        .agg(count(lit(1)).as("c"))
+    Inference.kruskalWallisOn(dailyCounts(events)
         .select(concat(lit("phase"), ($"d" % 7L).cast("string")).as("source"),
           $"c".as("v")))
       .select($"source".as("phase"), $"n_docs".as("n_days"), $"mean_rank",
@@ -2324,8 +2300,8 @@ object Events {
     * rhythm detector behind q252's lag-7 choice — "is there a cycle,
     * and at what period?" asked of the data instead of assumed.
     *
-    * Determinism: the series is exactly centered in integers
-    * (y_t = T·x_t − Σx, the q277 device; missing days are real zeros);
+    * Determinism: the series is the count-series kernel's zero-filled,
+    * integer-centred days (y_t = T·x_t − Σx);
     * per-(t, p) trig factors quantize to 1e-9 BEFORE the multiply
     * (trig is the one libm call — and the angle is 2π·(t mod p)/p, the
     * exact integer mod keeping it inside [0, 2π) where libm argument
@@ -2335,18 +2311,9 @@ object Events {
     * — a calendar-bounded grid, never corpus-proportional.
     */
   def periodogram(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val daily = events.groupBy(expr(s"ts div $NsPerDay").as("d"))
-      .agg(count(lit(1)).as("x"))
-    val cal = daily.agg(min($"d").as("d0"), max($"d").as("d1"))
-    val series = cal.select(explode(expr("sequence(d0, d1)")).as("d"))
-      .join(daily, Seq("d"), "left_outer")
-      .select($"d", coalesce($"x", lit(0L)).as("x"))
-    val tot = series.agg(count(lit(1)).as("tt"), sum($"x").as("sx"),
-      min($"d").as("dmin"))
-    val periods = spark.range(2, 30 + 1).toDF("p")
-    val grid = series.crossJoin(broadcast(tot))
-      .select((($"d" - $"dmin")).as("t"), ($"tt" * $"x" - $"sx").as("y"))
+    val periods = events.sparkSession.range(2, 30 + 1).toDF("p")
+    val grid = centred(zeroFilled(dailyCounts(events), "c"), "c")
+      .select(($"d" - $"d0").as("t"), $"y_c".as("y"))
       .crossJoin(broadcast(periods))
     val twoPi = 6.283185307179586
     val ang = lit(twoPi) * pmod($"t", $"p").cast("double") / $"p"
@@ -2375,13 +2342,11 @@ object Events {
     * direction screen run before q250's DiD picks its periods. A peak
     * at positive k means A leads B by k days.
     *
-    * Determinism: both series are integer-centered over the SHARED
-    * zero-filled calendar (y = T·x − Σx, the q191/q277 device); each
-    * lag's numerator is an exact DECIMAL sum of long products over the
-    * overlapping days (the lag join on day arithmetic — a missing day
-    * is a real zero, never a silently shifted neighbor); denominators
-    * are the full-series exact sums of squares; one double division +
-    * sqrt renders each lag. Peak = max |ccf| (rounded 6), ties to the
+    * Determinism: both series are integer-centred by the count-series
+    * kernel over their SHARED zero-filled calendar, and each lag's
+    * numerator is its exact DECIMAL lag-product sum over the overlapping
+    * days; denominators are the full-series exact sums of squares; one
+    * double division + sqrt renders each lag. Peak = max |ccf| (rounded 6), ties to the
     * smallest |k| then k asc — an exact packed ordering. Shape: one
     * corpus scan into the per-(day, type) counts; everything after
     * runs on the calendar-bounded day frame × (2·maxLag+1) lags.
@@ -2393,31 +2358,17 @@ object Events {
     // (2·maxLag+1) must stay under Long.MaxValue
     require(maxLag >= 0 && maxLag <= 1000000,
       s"leadLagCcf: maxLag must be in [0, 1000000], got $maxLag")
-    val spark = events.sparkSession
-    val daily = events
-      .filter($"event_type" === typeA || $"event_type" === typeB)
-      .groupBy(expr(s"ts div $NsPerDay").as("d"))
-      .agg(sum(when($"event_type" === typeA, 1L).otherwise(0L)).as("xa"),
-        sum(when($"event_type" === typeB, 1L).otherwise(0L)).as("xb"))
-    val cal = daily.agg(min($"d").as("d0"), max($"d").as("d1"))
-    val series = cal.select(explode(expr("sequence(d0, d1)")).as("d"))
-      .join(daily, Seq("d"), "left_outer")
-      .select($"d", coalesce($"xa", lit(0L)).as("xa"),
-        coalesce($"xb", lit(0L)).as("xb"))
-    val tot = series.agg(count(lit(1)).as("tt"),
-      sum($"xa").as("sa"), sum($"xb").as("sb"))
-    val cent = series.crossJoin(broadcast(tot))
-      .select($"d", ($"tt" * $"xa" - $"sa").as("ya"),
-        ($"tt" * $"xb" - $"sb").as("yb"))
-      .localCheckpoint() // both sides of the lag join + the denominators
-    val den = cent.agg(sum(dec($"ya" * $"ya")).as("daa"),
-      sum(dec($"yb" * $"yb")).as("dbb"))
-    val lags = spark.range(-maxLag.toLong, maxLag + 1L).toDF("k")
-    // numerator: join B shifted by k onto A's day (overlap-only terms)
-    val numJoin = cent.select($"d", $"ya").crossJoin(broadcast(lags))
-      .join(cent.select($"d".as("db"), $"yb"),
-        $"db" === $"d" + $"k")
-      .groupBy($"k").agg(sum(dec($"ya" * $"yb")).as("nab"))
+    val daily = bucketCounts(
+      events.filter($"event_type" === typeA || $"event_type" === typeB), NsPerDay, Nil,
+      sum(when($"event_type" === typeA, 1L).otherwise(0L)).as("a"),
+      sum(when($"event_type" === typeB, 1L).otherwise(0L)).as("b"))
+    val cent = centred(zeroFilled(daily, "a", "b"), "a", "b").select($"d", $"y_a", $"y_b")
+      .localCheckpoint() // ROADMAP item 4 (c): both lag-join sides and the denominators read it
+    val den = cent.agg(sum(dec($"y_a" * $"y_a")).as("daa"),
+      sum(dec($"y_b" * $"y_b")).as("dbb"))
+    val lags = events.sparkSession.range(-maxLag.toLong, maxLag + 1L).toDF("k")
+    val numJoin = lagProducts(cent, "y_a", "y_b", -maxLag, maxLag)
+      .select($"lag".as("k"), $"num".as("nab"))
     val t2 = lags.join(numJoin, Seq("k"), "left_outer")
       .crossJoin(broadcast(den))
       .withColumn("ccf", when($"daa" > 0L && $"dbb" > 0L,
@@ -2456,30 +2407,24 @@ object Events {
     * exact long differences, and all variances come from exact
     * long/DECIMAL moments (squares multiply as DECIMAL — residuals can
     * square past the long ceiling) with one double render each. Shape:
-    * everything after the daily aggregate runs on the calendar-bounded
-    * day frame; the output is the 7-row phase frame.
+    * everything after the daily count runs on its zero-filled calendar;
+    * the output is the 7-row phase frame.
     */
   def seasonalDecomposition(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(expr(s"ts div $NsPerDay").as("d"))
-      .agg(count(lit(1)).as("x"))
-    val cal = daily.agg(min($"d").as("d0"), max($"d").as("d1"))
-    val series = cal.select(explode(expr("sequence(d0, d1)")).as("d"))
-      .join(daily, Seq("d"), "left_outer")
-      .select($"d", coalesce($"x", lit(0L)).as("x"))
     val w7 = Window.orderBy($"d").rowsBetween(-3, 3)
-    val t1 = series
-      .withColumn("t7", sum($"x").over(w7))
+    val t1 = zeroFilled(dailyCounts(events), "c")
+      .withColumn("t7", sum($"c").over(w7))
       .withColumn("nw", count(lit(1)).over(w7))
       .filter($"nw" === 7L)
       .withColumn("d6",
-        round(($"x" * 7L - $"t7").cast("double") / 7.0 * 1e6, 0).cast("long"))
+        round(($"c" * 7L - $"t7").cast("double") / 7.0 * 1e6, 0).cast("long"))
       .withColumn("phase", pmod($"d", lit(7L)))
     val sIdx = t1.groupBy($"phase")
       .agg(sum($"d6").as("sd6"), count(lit(1)).as("np"))
       .withColumn("s6", round($"sd6".cast("double") / $"np", 0).cast("long"))
     val t2 = t1.join(broadcast(sIdx.select($"phase", $"s6")), Seq("phase"))
       .withColumn("r6", $"d6" - $"s6")
-      .withColumn("tr6", $"x" * 1000000L - $"s6")
+      .withColumn("tr6", $"c" * 1000000L - $"s6")
     val m = t2.agg(count(lit(1)).as("n"),
       sum($"r6").as("sr"), sum(dec($"r6") * dec($"r6")).as("srr"),
       sum($"d6").as("sd"), sum(dec($"d6") * dec($"d6")).as("sdd"),
@@ -2803,7 +2748,7 @@ object Events {
     val b = 64
     val perUser = events.groupBy($"user_id").agg(
       sum(when($"event_type" === "purchase", valueMicro).otherwise(0L)).as("vm"))
-      .localCheckpoint() // users-sized; read by the observed + B passes
+      .localCheckpoint() // ROADMAP item 4 (c): the observed pass and the B passes read it
     def armAgg(df: DataFrame, grp: Seq[Column]): DataFrame =
       df.groupBy(grp: _*).agg(
         armSum(0L, lit(1L)).as("na"), armSum(0L, $"vm").as("sa"),
@@ -2928,10 +2873,7 @@ object Events {
     val horizon = 7
     val al = lit(alpha); val oma = lit(1.0 - alpha)
     val be = lit(beta); val omb = lit(1.0 - beta)
-    val daily = events
-      .groupBy(expr(s"ts div $NsPerDay").as("d"))
-      .agg(count(lit(1)).as("c"))
-    val packed = daily.agg(
+    val packed = dailyCounts(events).agg(
       array_sort(collect_list(struct($"d", $"c"))).as("a"),
       count(lit(1)).as("t"))
       .withColumn("cs", transform($"a", e => e.getField("c").cast("double")))

@@ -467,6 +467,13 @@ class InferenceSpec extends GraftSuite {
     assert(r.getLong(0) == 19L, "split day = last pre-change day")
     assert(r.getDouble(6) < 0.001, "planted step must reject")
     assert(r.getDouble(4) == 100.0 && r.getDouble(5) == 200.0)
+    // gap days: the scan runs on the observed days, so the split counts
+    // add up to the days with events, not to the calendar span
+    val gapped = (for (d <- 0 until 30 if d % 7 != 3; j <- 0 until (if (d < 20) 100 else 200))
+      yield d * NsDay + j).toDF("ts")
+    val gr = Events.changepointScan(gapped).collect()(0)
+    assert(gr.getLong(0) == 19L)
+    assert(gr.getLong(1) + gr.getLong(2) == (0 until 30).count(_ % 7 != 3))
   }
 
   test("overdispersionPanel equals brute-force moments; bursty frame flags (q260)") {
@@ -876,6 +883,17 @@ class InferenceSpec extends GraftSuite {
     val alternating = mk((0 until 32).map(d => if (d % 2 == 0) 150 else 50))
     val ra = Events.neweyWestSe(alternating).collect()(0).getDouble(4)
     assert(ra < 0.8, s"alternation must deflate the se: $ra")
+    // one day has no sample variance: the naive se and the ratio are
+    // null, not an ANSI divide-by-zero, and the HAC se is 0
+    val one = Events.neweyWestSe(mk(Seq(5))).collect()(0)
+    assert(one.getLong(0) == 1L && one.isNullAt(2) && one.getDouble(3) == 0.0 && one.isNullAt(4))
+    // gap days: the series spans the calendar, and a missing day is a zero
+    val gapCounts = (0 until 20).map(d => if (Set(3, 4, 11)(d)) 0 else 40 + 7 * (d % 5))
+    val (gt, gmu, gseN, gseW) = nw(gapCounts.map(_.toLong))
+    val gapped = Events.neweyWestSe(mk(gapCounts)).collect()(0)
+    assert(gapped.getLong(0) == 20L && gt == 20L)
+    assert(gapped.getDouble(1) == roundN(gmu, 4))
+    assert(gapped.getDouble(2) == roundN(gseN, 6) && gapped.getDouble(3) == roundN(gseW, 6))
   }
 
   test("medianCi equals brute-force order statistics; interval brackets; uniform closed form (q271)") {

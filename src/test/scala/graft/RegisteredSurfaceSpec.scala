@@ -34,7 +34,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * sigmoid only in `Curation.microSigmoid`, and the bag-of-words index
   * only in `TextAnalysis`: the space tokenizer in `tokens`, the
   * per-(document, token) count in `termFrequencies`, the ln(N/df) weight
-  * in `tfidfWeights` and the BM25 seed query in `Bm25SeedQuery`.
+  * in `tfidfWeights` and the BM25 seed query in `Bm25SeedQuery`, and the
+  * count series only in `Events`' kernel: the ts-bucket count in
+  * `bucketCounts`, the zero-filled calendar in `zeroFilled`, the integer
+  * centring in `centred`, the lag join in `lagProducts` and the CUSUM
+  * numerator in `changepointBest`.
   */
 class RegisteredSurfaceSpec extends AnyFunSuite {
 
@@ -242,6 +246,23 @@ class RegisteredSurfaceSpec extends AnyFunSuite {
           Set("tfidfWeights")) ++
         strays(files, """"table"\s*,\s*"data"\s*,\s*"row"""".r, Set("Bm25SeedQuery"))
     if (offenders.nonEmpty) fail("read the bag-of-words index in TextAnalysis instead:\n" +
+      offenders.mkString("\n"))
+  }
+
+  test("drift guard: one count-series kernel in Events") {
+    // a ts-bucket count, a [d0, d1] calendar, an n·x − Σx centring, a lag
+    // join or a CUSUM numerator anywhere else is a hand-copied series
+    // step; the needles read string literals, so comments alone are
+    // stripped
+    val files = sources("src/main/scala", keepLiterals = true)
+    val col = """(?:\$"\w+"|col\([^()]*\))"""
+    val offenders =
+      strays(files, """groupBy\([^\n]*ts div""".r, Set("bucketCounts")) ++
+        strays(files, """sequence\(\s*(?:\$"|col\("|")?[dh]0\b""".r, Set("zeroFilled")) ++
+        strays(files, s"""\\(\\s*$col\\s*\\*\\s*$col\\s*-\\s*$col\\s*\\)""".r, Set("centred")) ++
+        strays(files, """\+\s*(?:\$"|col\(")(?:lag|k)"""".r, Set("lagProducts")) ++
+        strays(files, """abs\(\s*\$"t"\s*\*\s*\$"sk"""".r, Set("changepointBest"))
+    if (offenders.nonEmpty) fail("use the count-series kernel in Events instead:\n" +
       offenders.mkString("\n"))
   }
 
